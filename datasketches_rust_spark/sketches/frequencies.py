@@ -226,7 +226,7 @@ class FrequentItemsSketch:
         if flags & cls._EMPTY_FLAG_MASK:
             if pre != cls._PRE_EMPTY:
                 raise serde.SketchDecodeError(f"bad preamble_longs {pre}")
-            return cls(1 << max(lg_max, cls._LG_MIN))
+            return cls(1 << max(lg_max, cls._LG_MIN), lg_cur=lg_cur)
         if pre != cls._PRE_NONEMPTY:
             raise serde.SketchDecodeError(f"bad preamble_longs {pre}")
         if item_type is None:

@@ -127,8 +127,12 @@ class TDigest:
         if self.k != other.k:
             raise serde.SketchDecodeError("incompatible t-digest k")
         out = TDigest(self.k)
-        out.means = np.concatenate([self.means, other.means])
-        out.weights = np.concatenate([self.weights, other.weights])
+        # _compress skips a small, buffer-free centroid list, so the
+        # concatenation must be put in mean order here
+        means = np.concatenate([self.means, other.means])
+        order = np.argsort(means, kind="stable")
+        out.means = means[order]
+        out.weights = np.concatenate([self.weights, other.weights])[order]
         out.min_val = min(self.min_val, other.min_val)
         out.max_val = max(self.max_val, other.max_val)
         out._buffer = [*self._buffer, *other._buffer]

@@ -172,6 +172,12 @@ class TestFrequenciesWire:
         back = FrequentItemsSketch.deserialize(buf)
         assert back.max_map_size == 64 and not back.counts
 
+    def test_empty_keeps_grown_lg_cur(self):
+        # an empty blob whose map had grown (lg_cur 5 > LG_MIN 3) must
+        # re-encode byte for byte, as the non-empty path does
+        buf = bytes([1, 1, 10, 6, 5, 5])
+        assert FrequentItemsSketch.deserialize(buf).serialize() == buf
+
     def test_nonempty_layout_hand_assembled(self):
         sk = FrequentItemsSketch(64)
         sk.update_counts(["a", "bb", "a"], [1, 2, 3])

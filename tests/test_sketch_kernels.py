@@ -347,6 +347,22 @@ class TestTDigest:
         for q in [0.1, 0.5, 0.9]:
             assert abs(m.quantile(q) - direct.quantile(q)) < 0.1
 
+    @pytest.mark.parametrize("parts", [2, 4])
+    def test_merge_small_partials_sorted(self, parts):
+        # small buffer-free partials skip _compress, so merge itself must
+        # leave the centroids in mean order; ranks checked to 0.02, the
+        # tolerance of test_rank_cdf_pmf
+        rng = np.random.default_rng(17)
+        chunks = [rng.lognormal(size=10_000) for _ in range(parts)]
+        m = TDigest(k=200).update_values(chunks[0]).freeze()
+        for c in chunks[1:]:
+            m = m.merge(TDigest(k=200).update_values(c).freeze())
+        assert np.all(np.diff(m.means) >= 0)
+        vals = np.concatenate(chunks)
+        for q in [0.25, 0.5, 0.95]:
+            lo, hi = np.quantile(vals, [q - 0.02, q + 0.02])
+            assert lo <= m.quantile(q) <= hi, q
+
     def test_rank_cdf_pmf(self):
         td = TDigest().update_values(np.arange(10_000, dtype=np.float64))
         assert abs(td.rank(5000) - 0.5) < 0.02

@@ -44,6 +44,16 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def _id_below(plan: str, lower: str, upper: str) -> bool:
+    """True when the first ``lower`` node has a smaller operator id than
+    the first ``upper`` node (it sits below it in the scan-first
+    numbering). A missing node fails the check instead of raising."""
+    def first(op: str, missing: float) -> float:
+        return min((int(m) for m in re.findall(rf"\((\d+)\) {op}", plan)),
+                   default=missing)
+    return first(lower, float("inf")) < first(upper, -1)
+
+
 def audit(name: str, df, checks: dict[str, bool],
           execute: bool = False) -> list[str]:
     if execute:
@@ -1116,9 +1126,7 @@ def main() -> None:
         # so the partial (map-side) aggregate below the first exchange
         # has a smaller id — the scan(1)->HashAgg(2)->Exchange(3) chain
         "corpus collapses map-side (partial agg below the exchange)":
-            lambda p: min(int(m) for m in re.findall(
-                r"\((\d+)\) HashAggregate", p))
-            < min(int(m) for m in re.findall(r"\((\d+)\) Exchange", p)),
+            lambda p: _id_below(p, "HashAggregate", "Exchange"),
         "orders scan pruned to custkey+orderdate":
             lambda p: "o_totalprice" not in p and "o_orderstatus"
             not in p,
@@ -1301,9 +1309,7 @@ def main() -> None:
     ew = Q.q_ewma_daily_revenue(spark, SF_DIR)
     failures += audit("ewma_daily_revenue", ew, {
         "corpus collapses map-side (partial agg below the exchange)":
-            lambda p: min(int(m) for m in re.findall(
-                r"\((\d+)\) HashAggregate", p))
-            < min(int(m) for m in re.findall(r"\((\d+)\) Exchange", p)),
+            lambda p: _id_below(p, "HashAggregate", "Exchange"),
         "term array broadcast back (1-row build side)":
             lambda p: "BroadcastNestedLoopJoin" in p
             or "BroadcastExchange" in p,
@@ -1315,11 +1321,8 @@ def main() -> None:
     failures += audit("forecast_backtest_naive7", fb, {
         "lag joins run on the aggregated day table (no corpus "
         "self-join: partial agg below every join by operator id)":
-            lambda p: min(int(m) for m in re.findall(
-                r"\((\d+)\) HashAggregate", p))
-            < min(int(m) for m in re.findall(
-                r"\((\d+)\) (?:SortMergeJoin|BroadcastHashJoin|"
-                r"ShuffledHashJoin)", p)),
+            lambda p: _id_below(p, "HashAggregate", "(?:SortMergeJoin|"
+                                 "BroadcastHashJoin|ShuffledHashJoin)"),
         "no cartesian / nested-loop join":
             lambda p: "CartesianProduct" not in p
             and "BroadcastNestedLoopJoin" not in p,
@@ -1332,9 +1335,7 @@ def main() -> None:
         "exactly one exchange (the source rollup)":
             lambda p: _n_nodes(p, "Exchange") == 1,
         "partial aggregation below the exchange":
-            lambda p: min(int(m) for m in re.findall(
-                r"\((\d+)\) HashAggregate", p))
-            < min(int(m) for m in re.findall(r"\((\d+)\) Exchange", p)),
+            lambda p: _id_below(p, "HashAggregate", "Exchange"),
         "regex counts are JVM (no Python UDF)":
             lambda p: "EvalPython" not in p,
         "text never shuffles (counts computed in the scan stage)":
@@ -1376,9 +1377,7 @@ def main() -> None:
     hl = Q.q_holt_linear_daily(spark, SF_DIR)
     failures += audit("holt_linear_daily", hl, {
         "corpus collapses map-side (partial agg below the exchange)":
-            lambda p: min(int(m) for m in re.findall(
-                r"\((\d+)\) HashAggregate", p))
-            < min(int(m) for m in re.findall(r"\((\d+)\) Exchange", p)),
+            lambda p: _id_below(p, "HashAggregate", "Exchange"),
         "struct-accumulator fold is JVM (no Python UDF)":
             lambda p: "EvalPython" not in p,
     })
@@ -1387,11 +1386,8 @@ def main() -> None:
     failures += audit("revenue_autocorr", ac, {
         "lag joins run on the aggregated day table (partial agg "
         "below every join by operator id)":
-            lambda p: min(int(m) for m in re.findall(
-                r"\((\d+)\) HashAggregate", p))
-            < min(int(m) for m in re.findall(
-                r"\((\d+)\) (?:SortMergeJoin|BroadcastHashJoin|"
-                r"ShuffledHashJoin)", p)),
+            lambda p: _id_below(p, "HashAggregate", "(?:SortMergeJoin|"
+                                 "BroadcastHashJoin|ShuffledHashJoin)"),
         "lags dimension broadcasts":
             lambda p: "BroadcastExchange" in p
             or "BroadcastNestedLoopJoin" in p,

@@ -222,8 +222,8 @@ def merge(n: int) -> dict:
                 f"{levels[cpus]['n']}, merge asked for n={n} — pass the "
                 "same n the levels ran with")
     out = {
-        "job": "embedding_dup_pairs (cosine_pairs_lsh, threshold 0.45, "
-               "96 bits x 24 bands, dim 64, star cap 4096)",
+        "job": "embedding_dup_pairs (cosine_pairs_lsh, threshold 0.9, "
+               "384 bits x 16 bands, dim 64, star cap 4096)",
         "n_vectors": n,
         "input": INPUT_DIR,
         "protocol": (f"1 cold + {WARM_TRIALS} warm trials per level, "
