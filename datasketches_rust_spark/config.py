@@ -99,10 +99,11 @@ def spark_session(app: str = "datasketches-rust-spark", cpus: int | None = None,
         # AQE stays on by default (runtime coalescing + skew-join splits
         # are part of the 100 TB story). SPARK_GRAFT_AQE=false exists for
         # local-mode measurement: AQE materializes every query stage as
-        # its own job, and on this sandbox each job carries ~1.6 s fixed
-        # overhead — ~30 sequential stages put ~60-100 s of pure latency
-        # on the critical path that a real cluster never sees. Skew is
-        # independently handled by the explicit hot-bucket star degrade.
+        # its own job, and each job's tasks carry a fixed cost (measured
+        # ~0.11 CPU-s per Python task on a 4-core VM, with the worker
+        # daemon's zip-directory cache) — sequential stages put that on
+        # the critical path. Skew is independently handled by the
+        # explicit hot-bucket star degrade.
         .config("spark.sql.adaptive.enabled",
                 os.environ.get("SPARK_GRAFT_AQE", "true"))
         # preload numpy/pandas/pyarrow + kernels in the daemon so forked

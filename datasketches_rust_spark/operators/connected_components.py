@@ -23,7 +23,7 @@ clustering.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 class ConvergenceError(RuntimeError):
@@ -42,7 +42,7 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     ``assign_clusters`` to fold them back in with a single join.
     """
     from pyspark.storagelevel import StorageLevel
-    from datasketches_rust_spark.cache import release_tracked, track
+    from datasketches_rust_spark.cache import release_tracked
 
     sym = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
            .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))))
@@ -61,7 +61,8 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
 
     # initial labels stay lazy: they derive from the checkpointed edge set
     # (or a plain vertex scan), so materializing them separately would only
-    # add a job — on this environment each job costs ~1.6s of fixed overhead
+    # add a job and its fixed per-task cost (measured ~0.11 CPU-s per
+    # Python task on a 4-core VM)
     if vertices is None:
         labels = None  # identity labels: round 1 reads them off sym directly
     else:
@@ -140,42 +141,75 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
                          F.col("label").alias("cluster_id"))
 
 
-def assign_clusters(vertices: DataFrame, edges: DataFrame,
-                    id_col: str = "id", src: str = "id_a",
-                    dst: str = "id_b", max_iter: int = 50) -> DataFrame:
-    """Cluster ids for EVERY vertex: label propagation runs only on the
+def assign_clusters(items: DataFrame, edges_fn, id_col: str = "id"
+                    ) -> DataFrame:
+    """DataFrame[id_col, cluster_id] for EVERY row of ``items`` —
+    cluster_id = min member id; the one cluster-assignment path of the
+    modality pipelines.
+
+    ``edges_fn(df, id_col)`` returns DataFrame[id_a, id_b] over the
+    LONG column ``df[id_col]``. Label propagation runs only on the
     edge-touched subgraph (dup candidates), then one left join assigns
-    singletons their own id. This keeps the iterative shuffles proportional
-    to the number of duplicate candidates, not the table size."""
-    cc = connected_components(edges, None, id_col=id_col, src=src, dst=dst,
-                              max_iter=max_iter)
-    return (vertices.select(F.col(id_col))
-            .join(cc, id_col, "left")
-            .withColumn("cluster_id",
-                        F.coalesce(F.col("cluster_id"), F.col(id_col)))
-            .select(id_col, "cluster_id"))
+    singletons their own id, so the iterative shuffles stay
+    proportional to the number of duplicate candidates, not the table
+    size. String ids take assign_clusters_string_ids."""
+    if dict(items.dtypes)[id_col] == "string":
+        return assign_clusters_string_ids(items, edges_fn, id_col)
+    cc = connected_components(edges_fn(items, id_col), None, id_col=id_col)
+    return _fold_in_singletons(items, cc, id_col)
 
 
-def assign_clusters_string_ids(items: DataFrame, edges_from_long_ids,
+def _id_hash(id_col: str) -> Column:
+    """The long that stands in for a string id through the
+    shuffle-heavy middle of every pipeline."""
+    return F.xxhash64(F.col(id_col))
+
+
+def assign_clusters_string_ids(items: DataFrame, edges_fn,
                                id_col: str) -> DataFrame:
-    """Cluster assignments for STRING-keyed items whose edge generation
-    wants LONG ids (the shuffle-heavy middle of every modality
-    pipeline rides xxhash64 longs; the min-STRING representative is
-    recovered at the end — the image-axis discipline, CLAUDE.md).
+    """assign_clusters for STRING ids: the shuffle-heavy middle (band
+    self-joins, verify joins, label propagation) rides 8-byte
+    ``__lid = _id_hash(id)`` longs instead of variable-length UTF8, and
+    the min-STRING representative is recovered at the end with one
+    groupBy + join over only the edge-touched vertices (measured: the
+    string rows inflated shuffle-stage task time ~1.5x at 8 cores).
 
-    ``edges_from_long_ids(df_with___lid)`` must return
-    DataFrame[id_a, id_b] over the ``__lid`` column the items get.
-    Singletons map to themselves. Shared by the audio clip, audio
-    frame, and video pipelines (was three identical inline copies)."""
-    lids = items.withColumn("__lid", F.xxhash64(F.col(id_col)))
-    edges = edges_from_long_ids(lids)
-    cc = connected_components(edges, None, id_col="__lid")
-    idmap = items.select(F.col(id_col),
-                         F.xxhash64(F.col(id_col)).alias("__lid"))
+    An edge-touched ``__lid`` shared by two string ids would silently
+    merge two clusters (expected ~n^2/2^65 times over n ids: ~0.03 at
+    10^9, ~3 at 10^10). The executors raise instead, when the output is
+    evaluated: Spark's runtime exception with ``IdHashCollisionError``,
+    the ``__lid`` and two of its ids in the message."""
+    lid = _id_hash(id_col)
+    cc = connected_components(
+        edges_fn(items.withColumn("__lid", lid), "__lid"), None,
+        id_col="__lid")
+    idmap = items.select(F.col(id_col), lid.alias("__lid"))
     members = (cc.join(idmap, "__lid")
                .select(F.col(id_col), F.col("cluster_id").alias("__cl")))
     reps = members.groupBy("__cl").agg(F.min(id_col).alias("cluster_id"))
-    assigned = members.join(reps, "__cl").select(id_col, "cluster_id")
+    # collision check: ids sharing a __lid share a __cl too, so a window
+    # keyed on (__cl, __lid) runs in the partitions a sort-merge join
+    # below already shuffled on __cl (a local sort, no exchange; only a
+    # broadcast of a small reps side leaves it one small exchange), and
+    # the raise rides the projection the output evaluates anyway: no job
+    lo, hi = F.col("__lo"), F.col("__hi")
+    collision = F.raise_error(F.concat(
+        F.lit("IdHashCollisionError: __lid "), lid.cast("string"),
+        F.lit(" is the hash of both "), lo, F.lit(" and "), hi))
+    by_lid = Window.partitionBy("__cl", lid)
+    assigned = (members.join(reps, "__cl")
+                .withColumns({"__lo": F.min(id_col).over(by_lid),
+                              "__hi": F.max(id_col).over(by_lid)})
+                .select(F.when(lo != hi, collision)
+                        .otherwise(F.col(id_col)).alias(id_col),
+                        "cluster_id"))
+    return _fold_in_singletons(items, assigned, id_col)
+
+
+def _fold_in_singletons(items: DataFrame, assigned: DataFrame,
+                        id_col: str) -> DataFrame:
+    """Every id of ``items`` with its cluster_id from ``assigned``
+    (edge-touched ids only); the rest are their own cluster."""
     return (items.select(F.col(id_col))
             .join(assigned, id_col, "left")
             .withColumn("cluster_id",

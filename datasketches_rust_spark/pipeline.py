@@ -112,19 +112,12 @@ def dedup_pairs(df: DataFrame, cfg: DedupConfig, id_col: str,
 
 
 def cluster_assignments(df: DataFrame, cfg: DedupConfig, id_col: str,
-                        text_col: str,
-                        extra_edges: DataFrame | None = None) -> DataFrame:
+                        text_col: str) -> DataFrame:
     """DataFrame[id, cluster_id] for every input row (singletons included).
-    cluster_id = min member id of the connected component. ``extra_edges``
-    (e.g. visual SimHash edges) are unioned in before clustering."""
-    edges = dedup_pairs(df, cfg, id_col, text_col).select("id_a", "id_b")
-    if extra_edges is not None:
-        # no distinct: min-label propagation is idempotent to duplicate
-        # edges, so a pair found by both the caption and the visual path
-        # just sends one redundant (tiny) message per round
-        edges = edges.unionByName(extra_edges.select("id_a", "id_b"))
-    vertices = df.select(F.col(id_col))
-    return assign_clusters(vertices, edges, id_col=id_col)
+    cluster_id = min member id of the connected component."""
+    def edges(d: DataFrame, c: str) -> DataFrame:
+        return dedup_pairs(d, cfg, c, text_col).select("id_a", "id_b")
+    return assign_clusters(df, edges, id_col)
 
 
 def dedup_keep_canonical(df: DataFrame, cfg: DedupConfig, id_col: str,

@@ -26,7 +26,8 @@ Scale discipline, inherited from the image/text axes:
   precision after closure are 1.0 at the 2k gate (verify margin dup
   >= 0.9997 vs colliding-distinct <= 0.876, threshold 0.95).
 - CC is one job per round; string clip ids ride as xxhash64 longs
-  through the shuffle-heavy middle like image_cluster_assignments.
+  through the shuffle-heavy middle (connected_components.assign_clusters,
+  the one cluster-assignment path of every modality).
 """
 
 from __future__ import annotations
@@ -156,23 +157,14 @@ def audio_edges(sk: DataFrame, id_col: str = "clip_id",
 def audio_cluster_assignments(clips: DataFrame, cfg: DedupConfig
                               | None = None, id_col: str = "clip_id"
                               ) -> DataFrame:
-    """DataFrame[clip_id, cluster_id(string)] — cluster_id = min member
+    """DataFrame[clip_id, cluster_id] — cluster_id = min member
     clip_id; singletons map to themselves (never enter the iteration)."""
-    from datasketches_rust_spark.operators.connected_components import (
-        assign_clusters,
-        assign_clusters_string_ids,
-    )
+    from datasketches_rust_spark.operators.connected_components import \
+        assign_clusters
 
-    if dict(clips.dtypes)[id_col] == "string":
-        return assign_clusters_string_ids(
-            clips,
-            lambda lclips: audio_edges(
-                audio_sketch_table(lclips, "__lid"), "__lid"),
-            id_col)
-    sk = audio_sketch_table(clips, id_col)
-    edges = audio_edges(sk, id_col)
-    return assign_clusters(clips.select(F.col(id_col)), edges,
-                           id_col=id_col)
+    return assign_clusters(
+        clips, lambda df, c: audio_edges(audio_sketch_table(df, c), c),
+        id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -316,8 +308,8 @@ def audio_frame_edges(clips: DataFrame, id_col: str = "clip_id",
                       quorum: float = AUDIO_FRAME_QUORUM) -> DataFrame:
     """DataFrame[id_a, id_b] — clip pairs whose distinct matched
     INFORMATIVE frames reach the fractional quorum (see the constants'
-    comment; id_col must be LONG — string ids map through xxhash64 in
-    audio_frame_cluster_assignments). The vote side is the least-id
+    comment; id_col must be LONG — assign_clusters maps string ids to
+    longs first). The vote side is the least-id
     clip and the quorum scales with ITS informative-frame count, so
     trimming the copy lowers its own bar; clips made entirely of
     over-popular codes produce no votes (nothing about them is
@@ -356,19 +348,9 @@ def audio_frame_edges(clips: DataFrame, id_col: str = "clip_id",
 
 def audio_frame_cluster_assignments(clips: DataFrame,
                                     id_col: str = "clip_id") -> DataFrame:
-    """DataFrame[clip_id, cluster_id(string)] — min member clip_id;
+    """DataFrame[clip_id, cluster_id] — min member clip_id;
     singletons map to themselves (the video pipeline's id plumbing)."""
-    from datasketches_rust_spark.operators.connected_components import (
-        assign_clusters,
-        assign_clusters_string_ids,
-    )
+    from datasketches_rust_spark.operators.connected_components import \
+        assign_clusters
 
-    if dict(clips.dtypes)[id_col] == "string":
-        return assign_clusters_string_ids(
-            clips,
-            lambda lclips: audio_frame_edges(
-                lclips.select("__lid", "bytes"), "__lid"),
-            id_col)
-    edges = audio_frame_edges(clips, id_col)
-    return assign_clusters(clips.select(F.col(id_col)), edges,
-                           id_col=id_col)
+    return assign_clusters(clips, audio_frame_edges, id_col)

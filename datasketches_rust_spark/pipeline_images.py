@@ -13,13 +13,12 @@ Scale notes: both the caption and the visual path shuffle (band_key,
 id) pairs — 16 bytes/row, the band index mixed into the key and string
 image ids mapped to xxhash64 longs for the whole internal pipeline.
 The heavy `bytes` column is never shuffled: phash is computed at scan time
-(mapInPandas over the binary column) and only the 8-byte fingerprint
+(a pandas UDF over the binary column) and only the 8-byte fingerprint
 travels. Cluster ids come from connected components over the merged edges.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType
@@ -49,8 +48,7 @@ def phash_from_bytes_udf():
 
 
 def image_sketch_table(images: DataFrame, cfg: DedupConfig,
-                       id_col: str = "image_id",
-                       phash_source: str = "auto") -> DataFrame:
+                       id_col: str = "image_id") -> DataFrame:
     """ONE scan computes every per-row sketch the dedup pipeline needs —
     DataFrame[id, bands array<long>, phash long], cached and materialized.
 
@@ -61,22 +59,26 @@ def image_sketch_table(images: DataFrame, cfg: DedupConfig,
     round-trip (Spark evaluates independent pandas UDFs in a projection
     as a single ArrowEvalPython node). At 100 TB this halves the scan
     bill; the cached result is the per-partition signature table the
-    north_star checkpoints to Iceberg."""
+    north_star checkpoints to Iceberg.
+
+    phash comes from the columns: with `bytes` + `fmt` it is DERIVED
+    from the decoded pixels in the scan stage (the north_star mode);
+    otherwise the stored `phash` column is trusted (pre-sketched input,
+    e.g. a checkpointed signature table). The fixture stores
+    phash64(decoded) (FIXTURES F1), so both yield bit-identical
+    fingerprints there — pinned by tests/test_images.py."""
     from datasketches_rust_spark.cache import track
     from datasketches_rust_spark.functions.text import minhash_struct_udf
     from datasketches_rust_spark.pipeline import ensure_parallelism
 
-    if phash_source == "auto":
-        phash_source = ("bytes" if {"bytes", "fmt"} <= set(images.columns)
-                        else "stored")
+    from_bytes = {"bytes", "fmt"} <= set(images.columns)
     mh = minhash_struct_udf(cfg)
-    in_cols = [id_col, "caption"] + (["bytes", "fmt"]
-                                     if phash_source == "bytes"
+    in_cols = [id_col, "caption"] + (["bytes", "fmt"] if from_bytes
                                      else ["phash"])
     narrow = ensure_parallelism(images.select(*in_cols))
     cols = [F.col(id_col),
             mh(F.lower(F.col("caption"))).getField("bands").alias("bands")]
-    if phash_source == "bytes":
+    if from_bytes:
         ph = phash_from_bytes_udf()
         cols.append(ph(F.col("bytes"), F.col("fmt")).alias("phash"))
     else:
@@ -88,117 +90,32 @@ def image_sketch_table(images: DataFrame, cfg: DedupConfig,
     return sk
 
 
-def visual_edges(images: DataFrame, cfg: DedupConfig,
-                 id_col: str = "image_id",
-                 phash_col: str = "phash",
-                 phash_source: str = "auto") -> DataFrame:
-    """DataFrame[id_a, id_b] — phash Hamming <= cfg.simhash_hamming.
-
-    phash_source:
-      "bytes"  — decode the binary column and compute the DCT phash in the
-                 scan stage (the north_star pipeline: fingerprints are
-                 DERIVED from pixels, not trusted from a column).
-      "stored" — trust the table's phash column (pre-sketched input, e.g.
-                 the checkpointed signature table on re-runs).
-      "auto"   — "bytes" when bytes+fmt columns exist, else "stored".
-    The fixture stores phash64(decoded) (FIXTURES F1), so both paths yield
-    bit-identical fingerprints there — pinned by tests/test_images.py."""
-    if phash_source == "auto":
-        phash_source = ("bytes" if {"bytes", "fmt"} <= set(images.columns)
-                        else "stored")
-    if phash_source == "bytes":
-        ph = phash_from_bytes_udf()
-        # the fingerprint table feeds 3 subtrees in simhash_pairs (bucket
-        # sizes, star join, cold self-join) — persist it so the image
-        # decode runs exactly once per row, not once per consumer. Tiny
-        # (id + 8 bytes); released by the next CC/pipeline invocation.
-        # The count() materializes the cache in ONE full-parallelism job:
-        # without it, AQE's concurrent leaf stages first-touch the cached
-        # partitions under per-partition locks, and the blocked consumer
-        # tasks occupy task slots while a handful of lock-holders decode —
-        # observed as every stage stuck at N-1/N tasks with the machine
-        # 80% idle.
-        from datasketches_rust_spark.cache import track
-        fps = track(images.select(F.col(id_col),
-                                  ph(F.col("bytes"), F.col("fmt"))
-                                  .alias(phash_col)))
-        fps.count()
-    else:
-        fps = images.select(F.col(id_col), F.col(phash_col))
-    return (simhash_pairs(fps, id_col, phash_col,
-                          max_hamming=cfg.simhash_hamming)
-            .select("id_a", "id_b"))
-
-
-def caption_edges(images: DataFrame, cfg: DedupConfig,
-                  id_col: str = "image_id",
-                  caption_col: str = "caption") -> DataFrame:
-    return (dedup_pairs(images, cfg, id_col, caption_col)
-            .select("id_a", "id_b"))
+def image_edges(images: DataFrame, cfg: DedupConfig,
+                id_col: str) -> DataFrame:
+    """DataFrame[id_a, id_b] — caption edges (MinHash/LSH/exact
+    Jaccard) ∪ visual edges (phash Hamming <= cfg.simhash_hamming),
+    both read off the one fused sketch table. No distinct: min-label
+    propagation is idempotent to duplicate edges, so a pair found by
+    both paths just sends one redundant (tiny) message per round."""
+    sk = image_sketch_table(images, cfg, id_col)
+    return (dedup_pairs(images, cfg, id_col, "caption",
+                        sigs=sk.select(id_col, "bands"))
+            .select("id_a", "id_b")
+            .unionByName(
+                simhash_pairs(sk.select(id_col, "phash"), id_col, "phash",
+                              max_hamming=cfg.simhash_hamming)
+                .select("id_a", "id_b")))
 
 
 def image_cluster_assignments(images: DataFrame, cfg: DedupConfig,
-                              id_col: str = "image_id",
-                              phash_source: str = "auto") -> DataFrame:
-    """DataFrame[image_id, cluster_id(string)] — connected components over
-    caption ∪ visual edges; cluster_id = min member image_id.
-
-    String ids run the shuffle-heavy middle (band self-joins, pair
-    dedup, verify joins, label propagation) in LONG space: __lid =
-    xxhash64(image_id) is derived once at the scan, every internal row
-    carries 8-byte ids instead of variable-length UTF8, and the string
-    cluster_id (min member image_id) is recovered afterwards with one
-    groupBy + join over only the edge-touched vertices. Measured on this
-    box the string rows inflate shuffle-stage task time ~1.5x at 8 cores
-    (DRAM-bound machinery moving twice the bytes); at 10^12 rows the same
-    bytes dominate the shuffle bill. xxhash64 collisions would need ~2^32
-    ids to matter (birthday bound) — at that scale swap in a 128-bit
-    (two-column) key."""
-    if dict(images.dtypes)[id_col] == "string":
-        limgs = images.withColumn("__lid", F.xxhash64(F.col(id_col)))
-        sk = image_sketch_table(limgs, cfg, "__lid",
-                                phash_source=phash_source)
-        edges = (dedup_pairs(limgs, cfg, "__lid", "caption",
-                             sigs=sk.select("__lid", "bands"))
-                 .select("id_a", "id_b")
-                 .unionByName(
-                     simhash_pairs(sk.select("__lid", "phash"), "__lid",
-                                   "phash",
-                                   max_hamming=cfg.simhash_hamming)
-                     .select("id_a", "id_b")))
-        from datasketches_rust_spark.operators.connected_components import \
-            connected_components
-        cc = connected_components(edges, None, id_col="__lid")
-        idmap = images.select(F.col(id_col),
-                              F.xxhash64(F.col(id_col)).alias("__lid"))
-        members = cc.join(idmap, "__lid") \
-            .select(F.col(id_col), F.col("cluster_id").alias("__cl"))
-        reps = members.groupBy("__cl").agg(F.min(id_col).alias("cluster_id"))
-        assigned = members.join(reps, "__cl").select(id_col, "cluster_id")
-        return (images.select(F.col(id_col))
-                .join(assigned, id_col, "left")
-                .withColumn("cluster_id",
-                            F.coalesce(F.col("cluster_id"), F.col(id_col)))
-                .select(id_col, "cluster_id"))
-    sk = image_sketch_table(images, cfg, id_col, phash_source=phash_source)
-    edges = (dedup_pairs(images, cfg, id_col, "caption",
-                         sigs=sk.select(id_col, "bands"))
-             .select("id_a", "id_b")
-             .unionByName(
-                 simhash_pairs(sk.select(id_col, "phash"), id_col, "phash",
-                               max_hamming=cfg.simhash_hamming)
-                 .select("id_a", "id_b")))
-    vertices = images.select(F.col(id_col))
-    return assign_clusters(vertices, edges, id_col=id_col)
-
-
-def image_dedup_keep_canonical(images: DataFrame, cfg: DedupConfig,
-                               id_col: str = "image_id") -> DataFrame:
-    clusters = image_cluster_assignments(images, cfg, id_col)
-    keep = (clusters.groupBy("cluster_id")
-            .agg(F.min(id_col).alias(id_col),
-                 F.count("*").alias("cluster_size")))
-    return images.join(keep, id_col, "inner")
+                              id_col: str = "image_id") -> DataFrame:
+    """DataFrame[image_id, cluster_id] — connected components over
+    caption ∪ visual edges (image_edges); cluster_id = min member
+    image_id. String ids ride xxhash64 longs through the shuffle-heavy
+    middle, with a collision check on the edge-touched ids
+    (operators/connected_components.assign_clusters_string_ids)."""
+    return assign_clusters(
+        images, lambda df, c: image_edges(df, cfg, c), id_col)
 
 
 def image_dedup_keep_best(images: DataFrame, cfg: DedupConfig,

@@ -83,8 +83,9 @@ def video_edges(videos: DataFrame, id_col: str = "video_id",
                 min_frame_matches: int = VIDEO_MIN_FRAME_MATCHES
                 ) -> DataFrame:
     """DataFrame[id_a, id_b] — video pairs sharing >= min_frame_matches
-    near-dup frames. id_col must be LONG here (the pipeline maps string
-    ids through xxhash64 first)."""
+    near-dup frames. id_col must be LONG here: assign_clusters, the
+    caller in video_cluster_assignments, maps string ids to longs
+    first."""
     from datasketches_rust_spark.cache import track
     from datasketches_rust_spark.operators.visual import simhash_pairs
 
@@ -125,19 +126,9 @@ def video_edges(videos: DataFrame, id_col: str = "video_id",
 
 def video_cluster_assignments(videos: DataFrame,
                               id_col: str = "video_id") -> DataFrame:
-    """DataFrame[video_id, cluster_id(string)] — min member video_id;
+    """DataFrame[video_id, cluster_id] — min member video_id;
     singletons map to themselves."""
-    from datasketches_rust_spark.operators.connected_components import (
-        assign_clusters,
-        assign_clusters_string_ids,
-    )
+    from datasketches_rust_spark.operators.connected_components import \
+        assign_clusters
 
-    if dict(videos.dtypes)[id_col] == "string":
-        return assign_clusters_string_ids(
-            videos,
-            lambda lvids: video_edges(
-                lvids.select("__lid", "bytes"), "__lid"),
-            id_col)
-    edges = video_edges(videos, id_col)
-    return assign_clusters(videos.select(F.col(id_col)), edges,
-                           id_col=id_col)
+    return assign_clusters(videos, video_edges, id_col)

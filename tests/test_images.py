@@ -98,12 +98,26 @@ class TestFixture:
         assert sizes.max() <= 8
 
 
+def _long_ids(df):
+    """The same rows re-keyed deterministically to LONG ids
+    (img_0000000042 -> 42)."""
+    import pyspark.sql.functions as F
+    return df.withColumn("image_id",
+                         F.substring("image_id", 5, 10).cast("long"))
+
+
 @pytest.mark.slow
 class TestImagePipeline:
-    def test_recall_vs_truth(self, spark):
+    @pytest.mark.parametrize("rekey", [None, _long_ids],
+                             ids=["string_ids", "long_ids"])
+    def test_recall_vs_truth(self, spark, rekey):
+        """Both id dtypes of assign_clusters: string ids ride hashed
+        longs and are recovered at the end; long ids go straight to CC."""
         from datasketches_rust_spark.pipeline_images import \
             image_cluster_assignments
         df, truth_df = images_spark_df(spark, 1000, seed=42, partitions=8)
+        if rekey is not None:
+            df, truth_df = rekey(df), rekey(truth_df)
         got = {r["image_id"]: r["cluster_id"] for r in
                image_cluster_assignments(df, CFG).collect()}
         truth = {r["image_id"]: r["cluster_id"] for r in truth_df.collect()}
@@ -125,17 +139,22 @@ class TestImagePipeline:
                 .where(F.col("ph2") != F.col("phash")).count()
         assert bad == 0
 
-    def test_visual_edges_bytes_equals_stored(self, spark):
-        """The north_star mode (phash DERIVED from pixels in the scan
-        stage) must yield the identical edge set as trusting the stored
-        column — the fixture stores phash64(decoded)."""
-        from datasketches_rust_spark.pipeline_images import visual_edges
+    def test_sketch_table_bytes_equals_stored(self, spark):
+        """image_sketch_table picks its phash source from the columns:
+        DERIVED from pixels in the scan stage when bytes+fmt are present
+        (the north_star mode), the stored column otherwise. Both must
+        yield identical fingerprints — the fixture stores
+        phash64(decoded)."""
+        from datasketches_rust_spark.pipeline_images import \
+            image_sketch_table
         df, _ = images_spark_df(spark, 400, seed=11, partitions=4)
-        from_bytes = {(r.id_a, r.id_b) for r in
-                      visual_edges(df, CFG, phash_source="bytes").collect()}
-        stored = {(r.id_a, r.id_b) for r in
-                  visual_edges(df, CFG, phash_source="stored").collect()}
-        assert from_bytes == stored and stored
+        from_bytes = {(r.image_id, r.phash) for r in
+                      image_sketch_table(df.drop("phash"), CFG)
+                      .select("image_id", "phash").collect()}
+        stored = {(r.image_id, r.phash) for r in
+                  image_sketch_table(df.drop("bytes", "fmt"), CFG)
+                  .select("image_id", "phash").collect()}
+        assert from_bytes == stored and len(stored) == 400
 
 
 def test_phash_batch_matches_scalar():

@@ -167,24 +167,35 @@ def main() -> None:
                                     r"BroadcastHashJoin|NestedLoop", p),
     })
 
-    # 6. image pipeline: bytes never read (phash column suffices)
+    # 6. image pipeline: bytes never read (phash column suffices). The
+    #    visual edges are simhash_pairs over the fused sketch table, as
+    #    image_edges runs them; the cached table's plan (and its scan's
+    #    ReadSchema) prints inside the consumer's InMemoryRelation.
     imgs, _ = images_spark_df(spark, 500, seed=1, partitions=4)
     imgs_parquet = "/tmp/dsrs_plan_audit_images"
     imgs.write.mode("overwrite").parquet(imgs_parquet)
     stored = spark.read.parquet(imgs_parquet)
-    from datasketches_rust_spark.pipeline_images import visual_edges
-    ve = visual_edges(stored, cfg, phash_source="stored")
-    failures += audit("visual_edges (stored phash)", ve, {
+    from datasketches_rust_spark.operators.visual import simhash_pairs
+    from datasketches_rust_spark.pipeline_images import image_sketch_table
+
+    def _visual_edges(images):
+        sk = image_sketch_table(images, cfg)
+        return simhash_pairs(sk.select("image_id", "phash"), "image_id",
+                             "phash", max_hamming=cfg.simhash_hamming)
+    ve = _visual_edges(stored.drop("bytes", "fmt"))
+    failures += audit("visual edges over image_sketch_table (stored phash)",
+                      ve, {
         "bytes column pruned out of scan":
             lambda p: "bytes" not in p,
-        "ReadSchema only image_id+phash":
-            r"ReadSchema: struct<image_id:string,phash:bigint>",
+        "ReadSchema only image_id+caption+phash":
+            r"ReadSchema: struct<image_id:string,caption:string,"
+            r"phash:bigint>",
     })
 
     # 6b. north_star mode: phash DERIVED from pixels — bytes may appear in
     #     the scan + ArrowEvalPython stage but must never reach a shuffle
     #     (only the 8-byte fingerprint shuffles)
-    veb = visual_edges(stored, cfg, phash_source="bytes")
+    veb = _visual_edges(stored)
 
     def _bytes_never_shuffled(p: str) -> bool:
         # formatted plans list each Exchange node's Arguments with the
@@ -192,7 +203,8 @@ def main() -> None:
         return not any("bytes" in ln for ln in p.splitlines()
                        if "Exchange" in ln or "Arguments: hashpartitioning"
                        in ln)
-    failures += audit("visual_edges (phash from bytes)", veb, {
+    failures += audit("visual edges over image_sketch_table "
+                      "(phash from bytes)", veb, {
         "decode runs as ArrowEvalPython in the scan stage":
             r"ArrowEvalPython",
         "bytes column never reaches an Exchange":
