@@ -8,18 +8,26 @@ commutative + associative (hll/union.rs:449, bloom/sketch.rs:174,
 countmin/sketch.rs:246).
 
 Execution shape (scale rationale):
-  1. PARTIAL — ``mapInPandas`` over the scan: each Arrow batch is reduced
-     to one serialized sketch per group key **before any shuffle** (map-side
-     combine). What travels through the exchange is O(#groups x #partitions)
-     sketch blobs, never raw rows — the same serialize/move/deserialize seam
-     the reference acknowledges as its only process boundary
-     (SURVEY.md §3.2 step 1).
-  2. (optional) SALTED INTERMEDIATE — for low-cardinality keys at very high
-     partition counts, a two-level groupBy((key, salt)) -> groupBy(key)
-     treeReduce keeps any single reducer from absorbing all partials.
-  3. FINAL — ``applyInPandas`` per key: deserialize + fold merge + emit
-     either the serialized union (for further merging / checkpointing) or
-     the finished estimate.
+  1. PARTIAL — one ``mapInArrow`` pass over the scan's own partitions:
+     each partition is reduced to one serialized sketch per group key
+     **before any shuffle** (map-side combine). Nulls are dropped in
+     Arrow and the kernels get a typed column, so an integer column stays
+     integer when a batch holds a null. What travels through the exchange
+     is O(#groups x #partitions) sketch blobs, never raw rows — the same
+     serialize/move/deserialize seam the reference acknowledges as its
+     only process boundary (SURVEY.md §3.2 step 1).
+  2. (optional) SALTED INTERMEDIATE — for a global aggregate at very high
+     partition counts, the partials first merge in ``salt_buckets``
+     partitions, so no single reducer deserializes every partial.
+  3. FINAL — one exchange (``repartition(1)`` for a global aggregate,
+     ``repartition(*key_cols)`` for a grouped one), then one
+     ``mapInArrow`` pass that folds every partial of each key the
+     partition holds and emits the serialized union. Finishers
+     (``estimate_udf`` and friends) run on that one row per key.
+
+Probes (``bloom_contains_udf``, ``countmin_estimate_udf``) close over one
+collected sketch blob instead of joining it onto every probe row: the
+blob ships once per task inside the UDF.
 
 All sketch configs are fixed at plan time and closed over by the UDFs, so
 every executor builds byte-compatible states (seed-hash checked at merge,
@@ -32,19 +40,19 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (BinaryType, DoubleType, LongType, StructField,
                                StructType)
 
 from datasketches_rust_spark.hashing import (DEFAULT_SEED, encode_values,
-                                             hash_bytes_list,
-                                             murmur128_bytes_list)
+                                             key_groups,
+                                             murmur3_x64_128_matrix)
 from datasketches_rust_spark.sketches.bloom import BloomFilter
 from datasketches_rust_spark.sketches.countmin import CountMinSketch
 from datasketches_rust_spark.sketches.cpc import CpcSketch
 from datasketches_rust_spark.sketches.frequencies import FrequentItemsSketch
-from datasketches_rust_spark.sketches.hll import HllSketch, coupons_from_keys
-from datasketches_rust_spark.sketches.minhash import merge as mh_merge
+from datasketches_rust_spark.sketches.hll import HllSketch
 from datasketches_rust_spark.sketches.tdigest import TDigest
 from datasketches_rust_spark.sketches.theta import ThetaSketch
 from datasketches_rust_spark.sketches.util import clz64
@@ -53,7 +61,9 @@ SKETCH_COL = "sketch"
 
 
 # ---------------------------------------------------------------------------
-# per-kind (build, update_series, merge, deserialize) drivers
+# per-kind (build, update, deserialize) drivers. ``update`` takes a
+# null-free array of values: a numpy array of the column's own dtype for
+# numeric columns (see ``column_values``), Python objects otherwise.
 # ---------------------------------------------------------------------------
 
 class _Kind:
@@ -64,55 +74,71 @@ class _Kind:
         self.deserialize = deserialize
 
 
-def _theta_update(sk: ThetaSketch, values: pd.Series) -> None:
-    vals = values.dropna()
-    if len(vals):
-        sk.update_hashes(hash_bytes_list(encode_values(vals), sk.seed))
+def column_values(arr: pa.Array):
+    """A null-free Arrow column as the values the update kernels take:
+    integer, bool and float columns as numpy arrays of their own dtype,
+    anything else as the Python objects ``mapInPandas`` would hand over
+    (tz-aware timestamps as wall-clock time in their zone)."""
+    t = arr.type
+    if pa.types.is_integer(t) or pa.types.is_floating(t) or \
+            pa.types.is_boolean(t):
+        return arr.to_numpy(zero_copy_only=False)
+    s = arr.to_pandas()
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        s = s.dt.tz_localize(None)
+    return s.to_numpy(dtype=object)
 
 
-def _cpc_update(sk: CpcSketch, values: pd.Series) -> None:
-    vals = values.dropna()
-    if len(vals):
-        h1, h2 = murmur128_bytes_list(encode_values(vals), sk.seed)
-        sk.update_hashes(h1, h2)
+def _murmur128(values, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """(h1, h2) of every value, in input order."""
+    h1 = np.empty(len(values), dtype=np.uint64)
+    h2 = np.empty(len(values), dtype=np.uint64)
+    for grp, mat in key_groups(values):
+        h1[grp], h2[grp] = murmur3_x64_128_matrix(mat, seed)
+    return h1, h2
 
 
-def _hll_update(sk: HllSketch, values: pd.Series) -> None:
-    vals = values.dropna()
-    if not len(vals):
+def _theta_update(sk: ThetaSketch, values) -> None:
+    if len(values):
+        h1, _ = _murmur128(values, sk.seed)
+        sk.update_hashes(h1 >> np.uint64(1))
+
+
+def _cpc_update(sk: CpcSketch, values) -> None:
+    if len(values):
+        sk.update_hashes(*_murmur128(values, sk.seed))
+
+
+def _hll_update(sk: HllSketch, values) -> None:
+    if not len(values):
         return
-    h1, h2 = murmur128_bytes_list(encode_values(vals), sk.seed)
+    h1, h2 = _murmur128(values, sk.seed)
     slots = (h1 & np.uint64(sk.k - 1)).astype(np.int64)
     v = np.minimum(clz64(h2), 62).astype(np.uint8) + np.uint8(1)
     sk.update_coupons(slots, v)
 
 
-def _bloom_update(sk: BloomFilter, values: pd.Series) -> None:
-    vals = values.dropna()
-    if not len(vals):
-        return
-    from datasketches_rust_spark.hashing import _grouped_by_length
-    for grp, mat in _grouped_by_length(encode_values(vals)):
+def _bloom_update(sk: BloomFilter, values) -> None:
+    for _, mat in key_groups(values):
         sk.insert_keys(mat)
 
 
-def _countmin_update(sk: CountMinSketch, values: pd.Series) -> None:
-    vals = values.dropna()
-    if len(vals):
+def _countmin_update(sk: CountMinSketch, values) -> None:
+    if len(values):
         # raw byte items, NOT a pre-hash: the sketch hashes them with its
         # per-row murmur seeds, so the state is bit-identical to a
         # reference sketch updated with the same items
-        sk.update_keys(encode_values(vals))
+        sk.update_keys(encode_values(values))
 
 
-def _freq_update(sk: FrequentItemsSketch, values: pd.Series) -> None:
-    counts = values.dropna().value_counts()  # batch pre-reduction
+def _freq_update(sk: FrequentItemsSketch, values) -> None:
+    counts = pd.Series(values).value_counts()  # batch pre-reduction
     if len(counts):
         sk.update_counts(list(counts.index), counts.to_numpy())
 
 
-def _tdigest_update(sk: TDigest, values: pd.Series) -> None:
-    sk.update_values(values.dropna().to_numpy(dtype=np.float64))
+def _tdigest_update(sk: TDigest, values) -> None:
+    sk.update_values(np.asarray(values, dtype=np.float64))
 
 
 def sketch_kind(kind: str, **kw) -> _Kind:
@@ -166,45 +192,86 @@ def _merge_two(kind_name: str, a, b):
 # distributed aggregation
 # ---------------------------------------------------------------------------
 
+_NAN = float("nan")
+
+
+def _fold_key(key: tuple) -> tuple:
+    """A group key as Spark groups it, usable as a dict key: -0.0 becomes
+    0.0, and every NaN becomes the one object ``_NAN``. Containers compare
+    identity before equality, so NaN keys meet although NaN != NaN."""
+    return tuple(_NAN if v != v else v + 0.0 if isinstance(v, float) else v
+                 for v in key)
+
+
+def _emit(slots: dict, key_fields: list[pa.Field],
+          sketch_col: str) -> pa.RecordBatch:
+    """One row per (key, sketch) slot."""
+    cols = [pa.array([key[i] for key in slots], type=f.type)
+            for i, f in enumerate(key_fields)]
+    cols.append(pa.array([bytes(sk.serialize()) for sk in slots.values()],
+                         type=pa.binary()))
+    return pa.RecordBatch.from_arrays(
+        cols, names=[f.name for f in key_fields] + [sketch_col])
+
+
+def row_groups(batch: pa.RecordBatch, key_cols: list[str]):
+    """(key tuple, row indices) for every distinct key of ``batch``'s
+    ``key_cols``, null keys included (an Acero hash group-by)."""
+    groups = (pa.Table.from_batches([batch.select(key_cols)])
+              .append_column("__row", pa.array(np.arange(batch.num_rows)))
+              .group_by(key_cols, use_threads=False)
+              .aggregate([("__row", "list")]))
+    rows = groups.column("__row_list").combine_chunks()
+    offsets = rows.offsets.to_numpy()
+    flat = rows.values.to_numpy()
+    keys = zip(*(groups.column(c).to_pylist() for c in key_cols))
+    for j, key in enumerate(keys):
+        yield key, flat[offsets[j]:offsets[j + 1]]
+
+
+def _blob_schema(df: DataFrame, key_cols: list[str],
+                 sketch_col: str) -> StructType:
+    return StructType([df.schema[c] for c in key_cols]
+                      + [StructField(sketch_col, BinaryType(), False)])
+
+
 def sketch_agg(df: DataFrame, key_cols: list[str], value_col: str,
                kind: str, salt_buckets: int = 0, **sketch_kw) -> DataFrame:
     """GroupBy-aggregate ``value_col`` into one sketch per key.
 
     Returns DataFrame[key_cols..., sketch: binary]. ``key_cols`` may be
     empty for a global aggregate. ``salt_buckets`` > 0 inserts the
-    treeReduce intermediate level.
+    treeReduce intermediate level. Null values are skipped; a key whose
+    values are all null gets an empty sketch.
     """
     knd = sketch_kind(kind, **dict(sketch_kw))
-    kind_name = kind
+    keyed = df.select(*key_cols, F.col(value_col).alias("__v"))
 
-    from datasketches_rust_spark.pipeline import ensure_parallelism
-    keyed = ensure_parallelism(
-        df.select(*key_cols, F.col(value_col).alias("__v")))
-    key_fields = [keyed.schema[c] for c in key_cols]
-    partial_schema = StructType(
-        list(key_fields) + [StructField(SKETCH_COL, BinaryType(), False)])
-
-    const_key = not key_cols
-
-    def partial_iter(batches):
-        for pdf in batches:
-            if pdf.empty:
+    def partial_pass(batches):
+        slots: dict = {}
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            if const_key:
-                sk = knd.build()
-                knd.update(sk, pdf["__v"])
-                yield pd.DataFrame({SKETCH_COL: [sk.serialize()]})
+            key_fields = list(batch.schema)[:len(key_cols)]
+            v = batch.column(len(key_cols))
+            if not key_cols:
+                if () not in slots:
+                    slots[()] = knd.build()
+                knd.update(slots[()], column_values(v.drop_null()))
                 continue
-            rows = []
-            for key, sub in pdf.groupby(key_cols, dropna=False, sort=False):
-                if not isinstance(key, tuple):
-                    key = (key,)
-                sk = knd.build()
-                knd.update(sk, sub["__v"])
-                rows.append((*key, sk.serialize()))
-            yield pd.DataFrame(rows, columns=[*key_cols, SKETCH_COL])
+            valid = v.is_valid().to_numpy(zero_copy_only=False)
+            vals = column_values(v.drop_null())
+            rank = np.cumsum(valid) - 1  # row -> position in ``vals``
+            for key, idx in row_groups(batch, key_cols):
+                key = _fold_key(key)
+                if key not in slots:
+                    slots[key] = knd.build()
+                knd.update(slots[key], vals[rank[idx[valid[idx]]]])
+        if slots:
+            yield _emit(slots, key_fields, SKETCH_COL)
 
-    partials = keyed.mapInPandas(partial_iter, schema=partial_schema)
+    partials = keyed.mapInArrow(
+        partial_pass, _blob_schema(keyed, key_cols, SKETCH_COL))
     return merge_sketch_col(partials, key_cols, kind,
                             salt_buckets=salt_buckets, **sketch_kw)
 
@@ -212,59 +279,47 @@ def sketch_agg(df: DataFrame, key_cols: list[str], value_col: str,
 def merge_sketch_col(df: DataFrame, key_cols: list[str], kind: str,
                      sketch_col: str = SKETCH_COL, salt_buckets: int = 0,
                      **sketch_kw) -> DataFrame:
-    """Merge a binary sketch column down to one sketch per key."""
+    """Merge a binary sketch column down to one sketch per key: one
+    exchange (by key; to a single partition for a global merge), then one
+    Python pass that folds every partial of each key its partition holds.
+    ``salt_buckets`` > 1 puts a salted merge level before a global one."""
     knd = sketch_kind(kind, **dict(sketch_kw))
-    kind_name = kind
+    blobs = df.select(*key_cols, sketch_col)
+    schema = _blob_schema(blobs, key_cols, sketch_col)
 
-    out_fields = ([df.schema[c] for c in key_cols]
-                  + [StructField(sketch_col, BinaryType(), False)])
-    out_schema = StructType(out_fields)
+    def merge_pass(batches):
+        slots: dict = {}
+        for batch in batches:
+            key_fields = list(batch.schema)[:len(key_cols)]
+            for *key, blob in zip(*(c.to_pylist() for c in batch.columns)):
+                sk = knd.deserialize(blob)
+                key = _fold_key(key)
+                prev = slots.get(key)
+                slots[key] = sk if prev is None else \
+                    _merge_two(kind, prev, sk)
+        if slots:
+            yield _emit(slots, key_fields, sketch_col)
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for blob in pdf[sketch_col]:
-            sk = knd.deserialize(bytes(blob))
-            acc = sk if acc is None else _merge_two(kind_name, acc, sk)
-        head = pdf.iloc[[0]][key_cols].reset_index(drop=True)
-        head[sketch_col] = [acc.serialize()]
-        return head
+    if key_cols:
+        return blobs.repartition(*key_cols).mapInArrow(merge_pass, schema)
+    if salt_buckets > 1:
+        blobs = (blobs.withColumn("__salt",
+                                  F.spark_partition_id() % salt_buckets)
+                 .repartition(salt_buckets, "__salt").drop("__salt")
+                 .mapInArrow(merge_pass, schema))
+    return blobs.repartition(1).mapInArrow(merge_pass, schema)
 
-    if not key_cols:
-        # global: constant key; optionally tree-reduce through a salt level
-        work = df.withColumn("__k", F.lit(0))
-        if salt_buckets > 1:
-            salted = work.withColumn(
-                "__salt", F.spark_partition_id() % salt_buckets)
-            lvl1_schema = StructType(
-                [StructField("__k", LongType(), False),
-                 StructField("__salt", LongType(), False),
-                 StructField(sketch_col, BinaryType(), False)])
 
-            def merge_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-                acc = None
-                for blob in pdf[sketch_col]:
-                    sk = knd.deserialize(bytes(blob))
-                    acc = sk if acc is None else _merge_two(kind_name, acc, sk)
-                return pd.DataFrame({"__k": [0], "__salt": [pdf["__salt"].iloc[0]],
-                                     sketch_col: [acc.serialize()]})
-
-            work = salted.groupBy("__k", "__salt").applyInPandas(
-                merge_salted, lvl1_schema).drop("__salt")
-        final_schema = StructType(
-            [StructField("__k", LongType(), False),
-             StructField(sketch_col, BinaryType(), False)])
-
-        def merge_global(pdf: pd.DataFrame) -> pd.DataFrame:
-            acc = None
-            for blob in pdf[sketch_col]:
-                sk = knd.deserialize(bytes(blob))
-                acc = sk if acc is None else _merge_two(kind_name, acc, sk)
-            return pd.DataFrame({"__k": [0], sketch_col: [acc.serialize()]})
-
-        return work.groupBy("__k").applyInPandas(
-            merge_global, final_schema).drop("__k")
-
-    return df.groupBy(*key_cols).applyInPandas(merge_group, out_schema)
+def sketch_blob(df: DataFrame, value_col: str, kind: str,
+                **sketch_kw) -> bytes:
+    """The global sketch of ``value_col`` as bytes on the driver; an empty
+    sketch when ``df`` has no rows. Fetched with ``collect()``, never a
+    limit (``first``/``head``/``take``): a limit stops reading the Python
+    merge pass before its output ends, and Spark kills that worker."""
+    rows = sketch_agg(df, [], value_col, kind, **sketch_kw).collect()
+    if rows:
+        return bytes(rows[0][0])
+    return bytes(sketch_kind(kind, **sketch_kw).build().serialize())
 
 
 # ---------------------------------------------------------------------------
@@ -315,54 +370,48 @@ def theta_set_op_udf(op: str, seed: int = DEFAULT_SEED, as_long: bool = False):
     return _udf
 
 
-def countmin_estimate_udf(seed: int = DEFAULT_SEED):
-    """pandas UDF: (item, sketch) -> frequency estimate (long)."""
-    from pyspark.sql.functions import pandas_udf
+def _probe_udf(ret, dtype, probe):
+    """arrow UDF: item -> ``probe(null-free item values)`` per Arrow batch;
+    a null item probes as null, never as the '' item (``encode_values``
+    maps None to b'', the empty string's encoding)."""
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf(LongType())
-    def _udf(items: pd.Series, blobs: pd.Series) -> pd.Series:
-        out = np.empty(len(items), dtype=np.int64)
-        cache: dict[bytes, CountMinSketch] = {}
-        for i, (item, blob) in enumerate(zip(items, blobs)):
-            blob = bytes(blob)
-            cm = cache.get(blob)
-            if cm is None:
-                cm = cache[blob] = CountMinSketch.deserialize(blob, seed)
-            out[i] = int(cm.estimate_keys(encode_values([item]))[0])
-        return pd.Series(out)
+    @arrow_udf(ret)
+    def _udf(items: pa.Array) -> pa.Array:
+        valid = items.is_valid().to_numpy(zero_copy_only=False)
+        out = np.zeros(len(items), dtype=dtype)
+        out[valid] = probe(column_values(items.drop_null()))
+        return pa.array(out, mask=~valid)
 
     return _udf
 
 
-def bloom_contains_udf(seed: int = DEFAULT_SEED):
-    """pandas UDF: (item, sketch) -> bool membership probe (no false
-    negatives, bloom/sketch.rs:71-78). Typical use: broadcast one bloom
-    blob as a literal column and pre-filter a huge fact table before an
-    exact semi-join kills the false positives."""
-    from pyspark.sql.functions import pandas_udf
+def countmin_estimate_udf(blob: bytes, seed: int = DEFAULT_SEED):
+    """arrow UDF: item -> frequency estimate (long) in the count-min
+    sketch ``blob``. The blob is closed over (shipped once per task) and
+    deserialized once per Arrow batch."""
+    def probe(values):
+        cm = CountMinSketch.deserialize(blob, seed)
+        return cm.estimate_keys(encode_values(values)) if len(values) \
+            else []
+    return _probe_udf(LongType(), np.int64, probe)
+
+
+def bloom_contains_udf(blob: bytes, seed: int = DEFAULT_SEED):
+    """arrow UDF: item -> bool membership probe of the bloom filter
+    ``blob`` (no false negatives, bloom/sketch.rs:71-78). Typical use:
+    collect one bloom blob and pre-filter a huge fact table before an
+    exact semi-join kills the false positives. The blob is closed over
+    (shipped once per task) and deserialized once per Arrow batch."""
     from pyspark.sql.types import BooleanType
-    from datasketches_rust_spark.hashing import _grouped_by_length
 
-    @pandas_udf(BooleanType())
-    def _udf(items: pd.Series, blobs: pd.Series) -> pd.Series:
-        out = np.zeros(len(items), dtype=bool)
-        encoded = encode_values(items)
-        # group rows by blob via dict identity (each distinct blob is
-        # hashed once by the dict, not memcmp'd per row); every group is
-        # then probed with ONE deserialize + vectorized contains_keys —
-        # the broadcast-literal case degenerates to a single group
-        groups: dict[bytes, list[int]] = {}
-        for i, b in enumerate(blobs):
-            groups.setdefault(bytes(b), []).append(i)
-        for blob, idxs in groups.items():
-            bf = BloomFilter.deserialize(blob, seed)
-            idx = np.asarray(idxs)
-            sub = [encoded[i] for i in idxs]
-            for grp, mat in _grouped_by_length(sub):
-                out[idx[grp]] = bf.contains_keys(mat)
-        return pd.Series(out)
-
-    return _udf
+    def probe(values):
+        bf = BloomFilter.deserialize(blob, seed)
+        hits = np.zeros(len(values), dtype=bool)
+        for grp, mat in key_groups(values):
+            hits[grp] = bf.contains_keys(mat)
+        return hits
+    return _probe_udf(BooleanType(), bool, probe)
 
 
 def tdigest_quantile_udf(quantile: float, k: int = 200):
@@ -459,7 +508,7 @@ def register_sql_udfs(spark, lg_k: int = 16, seed: int = DEFAULT_SEED,
         @pandas_udf(BinaryType(), PandasUDFType.GROUPED_AGG)
         def _agg(v: pd.Series) -> bytes:
             sk = kd.build()
-            kd.update(sk, v)
+            kd.update(sk, v.dropna())
             return bytes(sk.serialize())
 
         return _agg

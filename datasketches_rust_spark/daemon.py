@@ -1,7 +1,7 @@
 """Custom PySpark worker daemon: remove the fixed costs of a Python task.
 
 Python workers are forked from the daemon process per task slot, and a
-forked worker is reused across tasks. Two costs would otherwise be paid
+forked worker is reused across tasks. Three costs would otherwise be paid
 before a UDF touches a row:
 
 - **Module import, once per worker.** A fresh worker imports
@@ -12,6 +12,11 @@ before a UDF touches a row:
   here, in the daemon, means every forked worker inherits the
   already-imported modules (copy-on-write, code pages shared): worker
   init drops to milliseconds.
+- **Acero set-up, once per worker.** The first ``Table.group_by`` in a
+  process (the grouped sketch partial pass) costs ~30 ms more than the
+  next. With 8 workers taking tasks in turn, that lands in whichever
+  task first groups a batch on each worker, so a query's cost drifts
+  over its first runs. ``_warm_kernels`` pays it here, before forking.
 - **The zip re-read, once per task.** ``pyspark.worker`` calls
   ``importlib.invalidate_caches()`` at the start of every task (in
   ``worker_util.setup_spark_files``). On CPython 3.11 that makes every
@@ -72,7 +77,19 @@ def _cache_zip_directories() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+def _warm_kernels() -> None:
+    """Pay here, once, the set-up a process does on its first Acero
+    group-by (the grouped partial pass, ``agg.row_groups``). On a 4-core
+    VM a forked worker's first group-by took ~35 ms without this and
+    ~4 ms with it (later ones under 1 ms), so no worker pays the set-up
+    in whichever task it first groups a batch."""
+    batch = pyarrow.record_batch({"k": ["a", None, "a"]})
+    for _ in agg.row_groups(batch, ["k"]):
+        pass
+
+
 if __name__ == "__main__":
+    _warm_kernels()
     _cache_zip_directories()
     # one read per archive here, so forked workers inherit warm stamps
     importlib.invalidate_caches()

@@ -183,6 +183,38 @@ def _grouped_by_length(keys: list[bytes]):
             yield grp, np.frombuffer(buf, dtype=np.uint8).reshape(-1, length)
 
 
+_CANONICAL_NAN = np.uint64(0x7FF8000000000000)
+
+
+def key_groups(values):
+    """Yield the same (group_indices, (G, L) uint8 matrix) groups as
+    ``_grouped_by_length(encode_values(values))``, without building one
+    ``bytes`` object per value when ``values`` is a numeric array.
+
+    Integer and bool arrays are cast to 8-byte ``<i8`` keys (the
+    sign_extend convention); float arrays become their canonical f64 bits
+    (-0.0 -> +0.0, every NaN -> 0x7ff8...). Everything else takes the
+    per-value path. ``values`` must hold no nulls."""
+    kind = getattr(getattr(values, "dtype", None), "kind", None)
+    if kind in ("b", "i", "u", "f"):
+        arr = np.asarray(values)
+        n = len(arr)
+        if not n:
+            return
+        if kind == "f":
+            f = arr.astype("<f8")
+            nan = np.isnan(f)
+            f[f == 0.0] = 0.0
+            words = f.view("<u8")
+            words[nan] = _CANONICAL_NAN
+        else:
+            words = arr.astype("<i8")
+        yield np.arange(n), words.view(np.uint8).reshape(n, 8)
+        return
+    if len(values):
+        yield from _grouped_by_length(encode_values(values))
+
+
 def murmur128_bytes_list(keys: list[bytes], seed: int = DEFAULT_SEED
                          ) -> tuple[np.ndarray, np.ndarray]:
     """(h1, h2) for variable-length byte keys (grouped-by-length batches)."""

@@ -174,12 +174,11 @@ def q_freq_top_event_types(spark, sf_dir):
 
 def q_countmin_event_counts(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    sk = agg.sketch_agg(ev, [], "event_type", "countmin",
-                        num_hashes=5, num_buckets=8192)
+    blob = agg.sketch_blob(ev, "event_type", "countmin",
+                           num_hashes=5, num_buckets=8192)
     types = ev.select(F.col("event_type").alias("item")).distinct()
-    cm_est = agg.countmin_estimate_udf()
-    return (types.crossJoin(F.broadcast(sk))
-            .select("item", cm_est("item", "sketch").alias("est")))
+    cm_est = agg.countmin_estimate_udf(blob)
+    return types.select("item", cm_est("item").alias("est"))
 
 
 def q_tdigest_price_stats(spark, sf_dir):
@@ -208,12 +207,11 @@ def q_bloom_semijoin_parts(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part")
     dim = part.where(F.col("p_size") > 25)
-    sk = agg.sketch_agg(dim, [], "p_partkey", "bloom",
-                        num_bits=1 << 17, num_hashes=7)
-    probe = agg.bloom_contains_udf()
+    blob = agg.sketch_blob(dim, "p_partkey", "bloom",
+                           num_bits=1 << 17, num_hashes=7)
+    probe = agg.bloom_contains_udf(blob)
     filtered = (li.where(F.col("l_returnflag") == "R")
-                .crossJoin(F.broadcast(sk))
-                .where(probe(F.col("l_partkey"), F.col("sketch"))))
+                .where(probe(F.col("l_partkey"))))
     exact = filtered.join(F.broadcast(dim),
                           filtered.l_partkey == dim.p_partkey, "left_semi")
     return exact.select(
@@ -1624,14 +1622,16 @@ def q_contamination_check(spark, sf_dir):
 
 def q_contamination_check_bloom(spark, sf_dir):
     """The sketch-accelerated decontamination path: the eval 4-gram set
-    becomes ONE broadcast bloom blob (vs broadcasting the full gram
-    dim), the corpus side pre-filters its exploded grams through the
-    probe, and the exact broadcast join runs only on the survivors to
+    becomes ONE bloom blob (vs broadcasting the full gram dim), the
+    corpus side pre-filters its exploded grams through the probe, and
+    the exact broadcast join runs only on the survivors to
     kill false positives. No false negatives (bloom/sketch.rs:71-78), so
     the result is IDENTICAL to contamination_check — same oracle SQL,
     hash-matched. At 100 TB this is the shape that matters: the bloom
     blob is KBs where the gram dim is GBs, and the probe prunes the
-    corpus explode before any join machinery."""
+    corpus explode before any join machinery. The blob is collected to
+    the driver and closed over by the probe, so it ships once per task
+    rather than once per corpus gram."""
     docs = _t(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     grams = F.array_distinct(F.transform(
@@ -1640,12 +1640,11 @@ def q_contamination_check_bloom(spark, sf_dir):
     ex = docs.select("doc_id", F.explode(grams).alias("g"))
     eval_grams = (ex.where(F.col("doc_id") % 10 == 0)
                   .select("g").distinct())
-    blob = agg.sketch_agg(eval_grams, [], "g", "bloom",
-                          num_bits=1 << 17, num_hashes=7)
-    probe = agg.bloom_contains_udf()
+    blob = agg.sketch_blob(eval_grams, "g", "bloom",
+                           num_bits=1 << 17, num_hashes=7)
+    probe = agg.bloom_contains_udf(blob)
     survivors = (ex.where(F.col("doc_id") % 10 != 0)
-                 .crossJoin(F.broadcast(blob))
-                 .where(probe(F.col("g"), F.col("sketch"))))
+                 .where(probe(F.col("g"))))
     return (survivors.join(F.broadcast(eval_grams), "g")
             .groupBy("doc_id")
             .agg(F.count_distinct("g").alias("n_contaminated")))
@@ -3134,8 +3133,8 @@ def q_theta_monthly_rollup(spark, sf_dir):
     the fact scan happens once at ingest, and any coarser rollup
     (month, quarter, arbitrary date range) is a merge over a few
     kilobyte-sized blobs instead of a full rescan + re-distinct. Scale
-    shape: the per-day partial agg is map-side-combined mapInPandas,
-    the month merge groups ~#days blob rows, and n_days comes from the
+    shape: the per-day partial agg is one map-side mapInArrow pass, the
+    month merge groups ~#days blob rows, and n_days comes from the
     SAME daily partial table (one tiny join of two day-level
     aggregates). lg_k=16 keeps every sketch in exact mode at fixture
     NDV, so the estimates hash-match the exact COUNT(DISTINCT) oracle."""

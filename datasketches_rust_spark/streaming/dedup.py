@@ -227,7 +227,7 @@ def stateful_sketch_estimates(stream_df: DataFrame, key_cols: list[str],
         else:
             sk, rows_seen = kd.build(), 0
         for pdf in pdfs:
-            kd.update(sk, pdf[value_col])
+            kd.update(sk, pdf[value_col].dropna())
             rows_seen += len(pdf)
         blob = bytearray(sk.serialize())
         state.update((blob, rows_seen))
@@ -406,7 +406,7 @@ def windowed_quantiles(stream_df: DataFrame, key_cols: list[str],
         else:
             sk, n = kd.build(), 0
         for pdf in pdfs:
-            kd.update(sk, pdf[value_col])
+            kd.update(sk, pdf[value_col].dropna())
             n += len(pdf)
         state.update((bytearray(sk.serialize()), n))
         state.setTimeoutTimestamp(_epoch_ms(end))
@@ -509,7 +509,7 @@ def windowed_sketch_estimates(stream_df: DataFrame, key_cols: list[str],
         else:
             sk, rows_seen = kd.build(), 0
         for pdf in pdfs:
-            kd.update(sk, pdf[value_col])
+            kd.update(sk, pdf[value_col].dropna())
             rows_seen += len(pdf)
         state.update((bytearray(sk.serialize()), rows_seen))
         # the window closes when the event-time watermark passes its end
@@ -640,7 +640,7 @@ def windowed_topk(stream_df: DataFrame, key_cols: list[str],
         else:
             sk = kd.build()
         for pdf in pdfs:
-            kd.update(sk, pdf[item_col])
+            kd.update(sk, pdf[item_col].dropna())
         state.update((bytearray(sk.serialize()),))
         state.setTimeoutTimestamp(_epoch_ms(end))
         out = rows(sk, False)

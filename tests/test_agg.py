@@ -207,3 +207,124 @@ def test_sql_udf_blob_consumers_null_semantics(spark):
         "       tdigest_quantile(CAST(NULL AS BINARY), 0.5) AS tq"
     ).first()
     assert row2["fe"] is None and row2["bc"] is None and row2["tq"] is None
+
+
+def test_null_keeps_integer_column_integer(spark):
+    """One null in an Arrow batch must not turn a bigint column into
+    doubles: the doubles hash differently, so every partition that holds
+    the null would count its values a second time."""
+    df = spark.range(0, 20000, numPartitions=4).select(
+        F.when(F.col("id") == 5, None).otherwise(F.col("id") % 1000)
+        .alias("v"))
+    sk = agg.sketch_agg(df, [], "v", "theta", lg_k=12)
+    est = sk.select(agg.estimate_udf("theta", as_long=True)(
+        "sketch").alias("e")).collect()[0]["e"]
+    assert est == df.select(F.countDistinct("v")).collect()[0][0] == 1000
+
+
+def test_probes_with_null_items(spark):
+    """A null item in the probe batch leaves every other key found (no
+    false negatives) and probes as null itself, never as the '' item."""
+    keys = spark.range(1, 100, numPartitions=1).select(
+        F.col("id").alias("k"))
+    bloom = agg.sketch_blob(keys, "k", "bloom", num_bits=1 << 12,
+                            num_hashes=5)
+    cm = agg.sketch_blob(keys, "k", "countmin", num_hashes=3,
+                         num_buckets=256)
+    probe = keys.select("k").union(spark.sql("SELECT CAST(NULL AS BIGINT)")) \
+        .coalesce(1)
+    rows = probe.select(
+        "k", agg.bloom_contains_udf(bloom)("k").alias("hit"),
+        agg.countmin_estimate_udf(cm)("k").alias("n")).collect()
+    assert len(rows) == 100
+    for r in rows:
+        if r["k"] is None:
+            assert r["hit"] is None and r["n"] is None
+        else:
+            assert r["hit"] is True and r["n"] >= 1
+    strs = spark.createDataFrame([("",), ("x",)], "s string")
+    bloom = agg.sketch_blob(strs, "s", "bloom", num_bits=1 << 12,
+                            num_hashes=5)
+    got = spark.createDataFrame([(None,), ("y",)], "s string").coalesce(1) \
+        .select(agg.bloom_contains_udf(bloom)("s").alias("hit")).collect()
+    assert got[0]["hit"] is None
+
+
+def _reference_sketch(kind, values):
+    """The per-value path: encode every non-null value to bytes, hash the
+    byte keys, update one sketch."""
+    from datasketches_rust_spark.hashing import (_grouped_by_length,
+                                                 encode_values,
+                                                 hash_bytes_list,
+                                                 murmur128_bytes_list)
+    from datasketches_rust_spark.sketches.util import clz64
+    import numpy as np
+    sk = agg.sketch_kind(kind, **_PARITY_KW[kind]).build()
+    keys = encode_values(v for v in values if v is not None)
+    if kind == "theta":
+        sk.update_hashes(hash_bytes_list(keys, sk.seed))
+    elif kind == "cpc":
+        sk.update_hashes(*murmur128_bytes_list(keys, sk.seed))
+    elif kind == "hll":
+        h1, h2 = murmur128_bytes_list(keys, sk.seed)
+        sk.update_coupons((h1 & np.uint64(sk.k - 1)).astype(np.int64),
+                          np.minimum(clz64(h2), 62).astype(np.uint8)
+                          + np.uint8(1))
+    else:
+        for _, mat in _grouped_by_length(keys):
+            sk.insert_keys(mat)
+    return bytes(sk.serialize())
+
+
+_PARITY_KW = {"theta": {"lg_k": 12}, "hll": {"lg_k": 10},
+              "cpc": {"lg_k": 10},
+              "bloom": {"num_bits": 1 << 12, "num_hashes": 5}}
+
+
+@pytest.mark.parametrize("kind", sorted(_PARITY_KW))
+def test_sketch_agg_matches_per_value_encoding(spark, kind):
+    """Sketches built through sketch_agg (typed Arrow columns, the numeric
+    fast path) serialize byte-identically to sketches built from the
+    per-value byte encodings of the same rows."""
+    import struct
+    payload_nan = struct.unpack("<d", struct.pack("<Q", 0x7FF8DEADBEEF0001))[0]
+    n = 3000
+    rows = [(i * 7 - 5000 if i % 11 else None,
+             [0.0, -0.0, float("nan"), payload_nan, i / 8][i % 5],
+             None if i % 13 == 0 else f"s{i % 911}")
+            for i in range(n)]
+    df = spark.createDataFrame(rows, "i long, f double, s string") \
+        .coalesce(1)
+    for col, idx in (("i", 0), ("f", 1), ("s", 2)):
+        got = agg.sketch_blob(df, col, kind, **_PARITY_KW[kind])
+        assert got == _reference_sketch(kind, [r[idx] for r in rows]), col
+
+
+def test_grouped_null_and_nan_keys(spark):
+    """A null key and a NaN key are one group each, as in groupBy, however
+    many partitions and partials hold them."""
+    rows = ([(None, i) for i in range(40)]
+            + [(float("nan"), i % 25) for i in range(60)]
+            + [(1.0, i) for i in range(20)])
+    df = spark.createDataFrame(rows, "k double, v long").repartition(4)
+    sk = agg.sketch_agg(df, ["k"], "v", "theta", lg_k=12)
+    got = sk.select("k", agg.estimate_udf("theta", as_long=True)(
+        "sketch").alias("e")).collect()
+    want = df.groupBy("k").agg(F.countDistinct("v").alias("e")).collect()
+
+    assert len(got) == len(want) == 3
+    assert {str(r["k"]): r["e"] for r in got} == \
+        {str(r["k"]): r["e"] for r in want} == \
+        {"None": 40, "nan": 25, "1.0": 20}
+
+
+def test_row_groups_one_group_per_key():
+    """``row_groups`` puts every row of a batch in exactly one group per
+    distinct key tuple, null keys included."""
+    import pyarrow as pa
+    batch = pa.record_batch({"k": ["a", None, "b", "a", None],
+                             "j": [1, 1, 1, 1, 2]})
+    got = {key: sorted(idx.tolist())
+           for key, idx in agg.row_groups(batch, ["k", "j"])}
+    assert got == {("a", 1): [0, 3], (None, 1): [1], ("b", 1): [2],
+                   (None, 2): [4]}

@@ -186,3 +186,39 @@ def test_encode_values_canonical_float():
     # a regular float is untouched
     pi, = encode_values([3.141592653589793])
     assert pi == struct.pack("<d", 3.141592653589793)
+
+
+def _nan_with(bits: int, dtype=np.float64):
+    return np.frombuffer(int(bits).to_bytes(8, "little"),
+                         dtype=np.float64)[0].astype(dtype)
+
+
+@pytest.mark.parametrize("values", [
+    np.array([0, 1, -1, 127, -128], dtype=np.int8),
+    np.array([0, 300, -300, 32767, -32768], dtype=np.int16),
+    np.array([0, 70000, -70000, 2**31 - 1, -2**31], dtype=np.int32),
+    np.array([0, 5, -5, 2**63 - 1, -2**63], dtype=np.int64),
+    np.array([True, False, True]),
+    np.array([0.0, -0.0, 1.5, np.inf, -np.inf, np.nan,
+              _nan_with(0xFFF8000000000000, np.float32)], dtype=np.float32),
+    np.array([0.0, -0.0, 3.141592653589793, np.nan,
+              _nan_with(0x7FF8DEADBEEF0001), _nan_with(0xFFF8000000000000),
+              _nan_with(0x7FF0000000000001)]),
+    np.array(["", "a", "bb", "ccc", "dd", "é"], dtype=object),
+    np.array([1, "a", 2.5, b"xy", True], dtype=object),
+], ids=["int8", "int16", "int32", "int64", "bool", "float32", "float64",
+        "strings", "mixed"])
+def test_key_groups_match_per_value_encoding(values):
+    """The numeric fast path yields byte-identical groups to encoding
+    each value: sign-extended integers, canonical f64 bits (-0.0 and
+    every NaN payload folded), per-value bytes for everything else."""
+    import pandas as pd
+
+    from datasketches_rust_spark.hashing import (_grouped_by_length,
+                                                 encode_values, key_groups)
+
+    want = [(g.tolist(), m.tobytes())
+            for g, m in _grouped_by_length(encode_values(values))]
+    for form in (values, pd.Series(values)):
+        got = [(g.tolist(), m.tobytes()) for g, m in key_groups(form)]
+        assert got == want

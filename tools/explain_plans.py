@@ -54,6 +54,30 @@ def _id_below(plan: str, lower: str, upper: str) -> bool:
     return first(lower, float("inf")) < first(upper, -1)
 
 
+_PYTHON_NODES = ("EvalPython", "MapInArrow", "MapInPandas", "InPandas")
+
+
+def _binary_into_python(df) -> list[str]:
+    """Binary columns that a Python node of ``df``'s physical plan takes
+    as input (its children's output), as "node: column"."""
+    found, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        kids = [node.children().apply(i)
+                for i in range(node.children().size())]
+        if any(t in node.nodeName() for t in _PYTHON_NODES):
+            for kid in kids:
+                out = kid.output()
+                for i in range(out.size()):
+                    attr = out.apply(i)
+                    if attr.dataType().typeName() == "binary":
+                        found.append(f"{node.nodeName()}: {attr.name()}")
+        stack += kids
+    return found
+
+
 def audit(name: str, df, checks: dict[str, bool],
           execute: bool = False) -> list[str]:
     if execute:
@@ -1406,6 +1430,45 @@ def main() -> None:
         "no Python UDF in the plan":
             lambda p: "EvalPython" not in p,
     })
+
+    # 56. sketch aggregates: one Python pass on each side of one exchange
+    #     (no Sort, no per-group pandas node); probes close over the
+    #     collected blob instead of joining it onto every probe row
+    from datasketches_rust_spark import agg
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    est = agg.estimate_udf("theta", as_long=True, lg_k=16)
+    glob = agg.sketch_agg(li, [], "l_partkey", "theta", lg_k=16)
+    failures += audit("sketch_agg (global theta)",
+                      glob.select(est("sketch")), {
+        "one exchange, to a single partition":
+            lambda p: _n_nodes(p, "Exchange") == 1
+            and "Arguments: SinglePartition" in p,
+        "no Sort, no FlatMapGroupsInPandas":
+            lambda p: _n_nodes(p, "Sort") == 0
+            and "FlatMapGroupsInPandas" not in p,
+        "partial and merge are one MapInArrow pass each":
+            lambda p: _n_nodes(p, "MapInArrow") == 2,
+    })
+    grp = agg.sketch_agg(li, ["l_returnflag"], "l_partkey", "theta",
+                         lg_k=16)
+    failures += audit("sketch_agg (grouped theta)",
+                      grp.select("l_returnflag", est("sketch")), {
+        "one exchange, hash-partitioned on the key":
+            lambda p: _n_nodes(p, "Exchange") == 1
+            and re.search(r"hashpartitioning\(l_returnflag#\d+", p),
+        "no Sort, no FlatMapGroupsInPandas":
+            lambda p: _n_nodes(p, "Sort") == 0
+            and "FlatMapGroupsInPandas" not in p,
+    })
+    for name in ("bloom_semijoin_parts", "contamination_check_bloom"):
+        df = Q.QUERIES[name](spark, SF_DIR)
+        binary_in = _binary_into_python(df)
+        failures += audit(name, df, {
+            "no BroadcastNestedLoopJoin (blob not joined onto rows)":
+                lambda p: "BroadcastNestedLoopJoin" not in p,
+            f"no binary column enters a Python node {binary_in}":
+                lambda p, b=binary_in: not b,
+        })
 
     print(f"\n{'=' * 70}")
     if failures:
