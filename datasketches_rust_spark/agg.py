@@ -25,6 +25,12 @@ Execution shape (scale rationale):
      partition holds and emits the serialized union. Finishers
      (``estimate_udf`` and friends) run on that one row per key.
 
+One way in, one way out. Every writer — the partial pass, the SQL
+builders of ``register_sql_udfs`` and the streaming state operators —
+updates a sketch through ``_Kind.update_arrow``: the column's non-null
+values, typed by ``column_values``. Every reader is an Arrow UDF on
+``sketch_udf``, which needs only the sketch kind and the seed (the config
+travels in the blob) and deserializes each distinct blob once per batch.
 Probes (``bloom_contains_udf``, ``countmin_estimate_udf``) close over one
 collected sketch blob instead of joining it onto every probe row: the
 blob ships once per task inside the UDF.
@@ -72,6 +78,10 @@ class _Kind:
         self.build = build
         self.update = update
         self.deserialize = deserialize
+
+    def update_arrow(self, sk, arr: pa.Array) -> None:
+        """Update ``sk`` with the non-null values of ``arr``."""
+        self.update(sk, column_values(arr.drop_null()))
 
 
 def column_values(arr: pa.Array):
@@ -141,45 +151,54 @@ def _tdigest_update(sk: TDigest, values) -> None:
     sk.update_values(np.asarray(values, dtype=np.float64))
 
 
+_FAMILIES = {"theta": (ThetaSketch, _theta_update),
+             "hll": (HllSketch, _hll_update),
+             "cpc": (CpcSketch, _cpc_update),
+             "bloom": (BloomFilter, _bloom_update),
+             "countmin": (CountMinSketch, _countmin_update),
+             "freqitems": (FrequentItemsSketch, _freq_update),
+             "tdigest": (TDigest, _tdigest_update)}
+
+
+def sketch_reader(kind: str, seed: int = DEFAULT_SEED) -> Callable:
+    """blob -> sketch of ``kind``. The sketch's config travels in the
+    blob; the hashed families check ``seed`` against it."""
+    if kind not in _FAMILIES:
+        raise ValueError(f"unknown sketch kind {kind!r}")
+    cls = _FAMILIES[kind][0]
+    if kind in ("freqitems", "tdigest"):
+        return cls.deserialize
+    return lambda b: cls.deserialize(b, seed)
+
+
 def sketch_kind(kind: str, **kw) -> _Kind:
+    """The build/update/deserialize driver of ``kind``. Options: ``seed``;
+    ``lg_k`` (theta, hll: 12; cpc: 11); ``num_bits`` and ``num_hashes``
+    (bloom); ``num_hashes`` and ``num_buckets`` (countmin);
+    ``max_map_size`` (freqitems: 256); ``k`` (tdigest: 200). Any other
+    option raises TypeError."""
     seed = kw.pop("seed", DEFAULT_SEED)
-    if kind == "theta":
-        lg_k = kw.pop("lg_k", 12)
-        return _Kind(lambda: ThetaSketch(lg_k=lg_k, seed=seed),
-                     _theta_update,
-                     lambda b: ThetaSketch.deserialize(b, seed))
-    if kind == "hll":
-        lg_k = kw.pop("lg_k", 12)
-        return _Kind(lambda: HllSketch(lg_k=lg_k, seed=seed),
-                     _hll_update,
-                     lambda b: HllSketch.deserialize(b, seed))
-    if kind == "cpc":
-        lg_k = kw.pop("lg_k", 11)
-        return _Kind(lambda: CpcSketch(lg_k=lg_k, seed=seed),
-                     _cpc_update,
-                     lambda b: CpcSketch.deserialize(b, seed))
-    if kind == "bloom":
-        num_bits = kw.pop("num_bits")
-        num_hashes = kw.pop("num_hashes")
-        return _Kind(lambda: BloomFilter(num_bits, num_hashes, seed),
-                     _bloom_update,
-                     lambda b: BloomFilter.deserialize(b, seed))
-    if kind == "countmin":
+    read = sketch_reader(kind, seed)
+    if kind in ("theta", "hll", "cpc"):
+        lg_k = kw.pop("lg_k", 11 if kind == "cpc" else 12)
+        cls = _FAMILIES[kind][0]
+        build = lambda: cls(lg_k=lg_k, seed=seed)  # noqa: E731
+    elif kind == "bloom":
+        num_bits, num_hashes = kw.pop("num_bits"), kw.pop("num_hashes")
+        build = lambda: BloomFilter(num_bits, num_hashes, seed)  # noqa: E731
+    elif kind == "countmin":
         nh, nb = kw.pop("num_hashes"), kw.pop("num_buckets")
-        return _Kind(lambda: CountMinSketch(nh, nb, seed),
-                     _countmin_update,
-                     lambda b: CountMinSketch.deserialize(b, seed))
-    if kind == "freqitems":
+        build = lambda: CountMinSketch(nh, nb, seed)  # noqa: E731
+    elif kind == "freqitems":
         m = kw.pop("max_map_size", 256)
-        return _Kind(lambda: FrequentItemsSketch(m),
-                     _freq_update,
-                     FrequentItemsSketch.deserialize)
-    if kind == "tdigest":
+        build = lambda: FrequentItemsSketch(m)  # noqa: E731
+    else:
         k = kw.pop("k", 200)
-        return _Kind(lambda: TDigest(k=k),
-                     _tdigest_update,
-                     TDigest.deserialize)
-    raise ValueError(f"unknown sketch kind {kind!r}")
+        build = lambda: TDigest(k=k)  # noqa: E731
+    if kw:
+        raise TypeError(f"unknown {kind} sketch option(s): "
+                        f"{', '.join(sorted(kw))}")
+    return _Kind(build, _FAMILIES[kind][1], read)
 
 
 def _merge_two(kind_name: str, a, b):
@@ -257,7 +276,7 @@ def sketch_agg(df: DataFrame, key_cols: list[str], value_col: str,
             if not key_cols:
                 if () not in slots:
                     slots[()] = knd.build()
-                knd.update(slots[()], column_values(v.drop_null()))
+                knd.update_arrow(slots[()], v)
                 continue
             valid = v.is_valid().to_numpy(zero_copy_only=False)
             vals = column_values(v.drop_null())
@@ -273,17 +292,18 @@ def sketch_agg(df: DataFrame, key_cols: list[str], value_col: str,
     partials = keyed.mapInArrow(
         partial_pass, _blob_schema(keyed, key_cols, SKETCH_COL))
     return merge_sketch_col(partials, key_cols, kind,
-                            salt_buckets=salt_buckets, **sketch_kw)
+                            salt_buckets=salt_buckets,
+                            seed=sketch_kw.get("seed", DEFAULT_SEED))
 
 
 def merge_sketch_col(df: DataFrame, key_cols: list[str], kind: str,
                      sketch_col: str = SKETCH_COL, salt_buckets: int = 0,
-                     **sketch_kw) -> DataFrame:
+                     seed: int = DEFAULT_SEED) -> DataFrame:
     """Merge a binary sketch column down to one sketch per key: one
     exchange (by key; to a single partition for a global merge), then one
     Python pass that folds every partial of each key its partition holds.
     ``salt_buckets`` > 1 puts a salted merge level before a global one."""
-    knd = sketch_kind(kind, **dict(sketch_kw))
+    read = sketch_reader(kind, seed)
     blobs = df.select(*key_cols, sketch_col)
     schema = _blob_schema(blobs, key_cols, sketch_col)
 
@@ -292,7 +312,7 @@ def merge_sketch_col(df: DataFrame, key_cols: list[str], kind: str,
         for batch in batches:
             key_fields = list(batch.schema)[:len(key_cols)]
             for *key, blob in zip(*(c.to_pylist() for c in batch.columns)):
-                sk = knd.deserialize(blob)
+                sk = read(blob)
                 key = _fold_key(key)
                 prev = slots.get(key)
                 slots[key] = sk if prev is None else \
@@ -323,51 +343,88 @@ def sketch_blob(df: DataFrame, value_col: str, kind: str,
 
 
 # ---------------------------------------------------------------------------
-# finishers (sketch bytes -> scalars), as vectorized pandas UDFs
+# readers (sketch bytes -> values), as Arrow UDFs. The config travels in
+# the blob, so a reader needs only the kind and the seed.
 # ---------------------------------------------------------------------------
 
-def estimate_udf(kind: str, as_long: bool = False, **sketch_kw):
-    """pandas UDF: sketch bytes -> cardinality estimate.
+def _sketch_groups(reads: list, blobs: list, valid: np.ndarray):
+    """(row indices, sketches) for every distinct tuple of ``blobs`` (one
+    Arrow column per reader in ``reads``) over the rows where ``valid``;
+    each distinct blob is deserialized once."""
+    names = [f"b{j}" for j in range(len(blobs))]
+    cache: dict = {}
+    for key, idx in row_groups(pa.record_batch(blobs, names), names):
+        idx = idx[valid[idx]]
+        if not len(idx):
+            continue
+        for j, b in enumerate(key):
+            if (j, b) not in cache:
+                cache[j, b] = reads[j](b)
+        yield idx, [cache[j, b] for j, b in enumerate(key)]
+
+
+def sketch_udf(ret, fn: Callable, *kinds: str, seed: int = DEFAULT_SEED):
+    """arrow UDF: (one blob column per ``kinds`` entry, then argument
+    columns) -> ``fn(sketches..., argument values...)``.
+
+    Each distinct blob of an Arrow batch is deserialized once, and ``fn``
+    gets the null-free argument values (``column_values``) of all rows
+    holding the same blobs, so a probe hashes them in one call; it
+    returns one result per value, or one result for all those rows when
+    there are no arguments. A null blob or a null argument gives null."""
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    reads = [sketch_reader(k, seed) for k in kinds]
+    out_type = to_arrow_type(ret)
+
+    @arrow_udf(ret)
+    def _udf(*cols: pa.Array) -> pa.Array:
+        args = cols[len(reads):]
+        valid = np.logical_and.reduce(
+            [c.is_valid().to_numpy(zero_copy_only=False) for c in cols])
+        out = [None] * len(valid)
+        for idx, sks in _sketch_groups(reads, list(cols[:len(reads)]),
+                                       valid):
+            res = fn(*sks, *(column_values(a.take(idx)) for a in args))
+            for i, r in zip(idx, res if args else [res] * len(idx)):
+                out[i] = r
+        return pa.array(out, type=out_type)
+
+    return _udf
+
+
+def _estimate_finish(as_long: bool):
+    """(return type, estimate -> value): bigint rounded, else double."""
+    if as_long:
+        return LongType(), lambda e: int(round(e))
+    return DoubleType(), float
+
+
+def estimate_udf(kind: str, as_long: bool = False, seed: int = DEFAULT_SEED):
+    """arrow UDF: sketch bytes -> cardinality estimate.
 
     ``as_long=True`` rounds to bigint — used for exact-mode parity queries
     (theta is exact until >k retained, tests/theta_sketch_test.rs:24-36,
     so at k > NDV the rounded estimate equals COUNT(DISTINCT))."""
-    from pyspark.sql.functions import pandas_udf
-    knd = sketch_kind(kind, **dict(sketch_kw))
+    ret, finish = _estimate_finish(as_long)
+    return sketch_udf(ret, lambda sk: finish(sk.estimate()), kind,
+                      seed=seed)
 
-    ret = LongType() if as_long else DoubleType()
 
-    @pandas_udf(ret)
-    def _udf(blobs: pd.Series) -> pd.Series:
-        ests = [knd.deserialize(bytes(b)).estimate() for b in blobs]
-        if as_long:
-            return pd.Series([int(round(e)) for e in ests], dtype="int64")
-        return pd.Series(ests, dtype="float64")
-
-    return _udf
+_THETA_SET_OPS = ("union", "intersect", "a_not_b")
 
 
 def theta_set_op_udf(op: str, seed: int = DEFAULT_SEED, as_long: bool = False):
-    """pandas UDF: (sketch_a, sketch_b) -> estimate of union/intersection/
+    """arrow UDF: (sketch_a, sketch_b) -> estimate of union/intersection/
     a_not_b (theta/intersection.rs:64-196 semantics; a_not_b per the
     sibling DataSketches AnotB operator)."""
-    from pyspark.sql.functions import pandas_udf
-
-    ret = LongType() if as_long else DoubleType()
-
-    @pandas_udf(ret)
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = []
-        for ba, bb in zip(a, b):
-            sa = ThetaSketch.deserialize(bytes(ba), seed)
-            sb = ThetaSketch.deserialize(bytes(bb), seed)
-            res = getattr(sa, "union" if op == "union" else
-                          "intersect" if op == "intersect" else "a_not_b")(sb)
-            e = res.estimate()
-            out.append(int(round(e)) if as_long else e)
-        return pd.Series(out, dtype="int64" if as_long else "float64")
-
-    return _udf
+    if op not in _THETA_SET_OPS:
+        raise ValueError(f"theta set op {op!r} is not one of "
+                         f"{', '.join(_THETA_SET_OPS)}")
+    ret, finish = _estimate_finish(as_long)
+    return sketch_udf(ret, lambda a, b: finish(getattr(a, op)(b).estimate()),
+                      "theta", "theta", seed=seed)
 
 
 def _probe_udf(ret, dtype, probe):
@@ -386,15 +443,24 @@ def _probe_udf(ret, dtype, probe):
     return _udf
 
 
+def _countmin_probe(cm: CountMinSketch, values) -> np.ndarray:
+    return cm.estimate_keys(encode_values(values)) if len(values) else []
+
+
+def _bloom_probe(bf: BloomFilter, values) -> np.ndarray:
+    hits = np.zeros(len(values), dtype=bool)
+    for grp, mat in key_groups(values):
+        hits[grp] = bf.contains_keys(mat)
+    return hits
+
+
 def countmin_estimate_udf(blob: bytes, seed: int = DEFAULT_SEED):
     """arrow UDF: item -> frequency estimate (long) in the count-min
     sketch ``blob``. The blob is closed over (shipped once per task) and
     deserialized once per Arrow batch."""
-    def probe(values):
-        cm = CountMinSketch.deserialize(blob, seed)
-        return cm.estimate_keys(encode_values(values)) if len(values) \
-            else []
-    return _probe_udf(LongType(), np.int64, probe)
+    read = sketch_reader("countmin", seed)
+    return _probe_udf(LongType(), np.int64,
+                      lambda values: _countmin_probe(read(blob), values))
 
 
 def bloom_contains_udf(blob: bytes, seed: int = DEFAULT_SEED):
@@ -404,73 +470,61 @@ def bloom_contains_udf(blob: bytes, seed: int = DEFAULT_SEED):
     exact semi-join kills the false positives. The blob is closed over
     (shipped once per task) and deserialized once per Arrow batch."""
     from pyspark.sql.types import BooleanType
-
-    def probe(values):
-        bf = BloomFilter.deserialize(blob, seed)
-        hits = np.zeros(len(values), dtype=bool)
-        for grp, mat in key_groups(values):
-            hits[grp] = bf.contains_keys(mat)
-        return hits
-    return _probe_udf(BooleanType(), bool, probe)
+    read = sketch_reader("bloom", seed)
+    return _probe_udf(BooleanType(), bool,
+                      lambda values: _bloom_probe(read(blob), values))
 
 
-def tdigest_quantile_udf(quantile: float, k: int = 200):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(DoubleType())
-    def _udf(blobs: pd.Series) -> pd.Series:
-        return pd.Series([TDigest.deserialize(bytes(b)).quantile(quantile)
-                          for b in blobs])
-
-    return _udf
+def tdigest_quantile_udf(quantile: float):
+    """arrow UDF: tdigest bytes -> the ``quantile`` estimate."""
+    return sketch_udf(DoubleType(), lambda td: float(td.quantile(quantile)),
+                      "tdigest")
 
 
 def tdigest_stats_udf():
-    """pandas UDF: tdigest bytes -> struct(min, max, total_weight) — these
+    """arrow UDF: tdigest bytes -> struct(min, max, total_weight) — these
     three are exact (tdigest tracks true min/max/weight), hence
     oracle-checkable against SQL MIN/MAX/COUNT."""
-    from pyspark.sql.functions import pandas_udf
     schema = StructType([StructField("min_val", DoubleType()),
                          StructField("max_val", DoubleType()),
                          StructField("total_w", LongType())])
-
-    @pandas_udf(schema)
-    def _udf(blobs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in blobs:
-            td = TDigest.deserialize(bytes(b))
-            rows.append((td.min_val, td.max_val, int(td.total_weight())))
-        return pd.DataFrame(rows, columns=["min_val", "max_val", "total_w"])
-
-    return _udf
+    return sketch_udf(schema, lambda td: (td.min_val, td.max_val,
+                                          int(td.total_weight())),
+                      "tdigest")
 
 
 def freq_topk_explode(df: DataFrame, key_cols: list[str], k: int,
-                      sketch_col: str = SKETCH_COL,
-                      max_map_size: int = 256) -> DataFrame:
+                      sketch_col: str = SKETCH_COL) -> DataFrame:
     """Explode a frequent-items sketch column into top-k rows per key:
-    DataFrame[key..., item string, est long, lb long, ub long]."""
+    DataFrame[key..., item string, est long, lb long, ub long]. One
+    ``mapInArrow`` pass over the rows where they are (each row already
+    holds one key); a null sketch gives no rows."""
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StringType
-    fields = [df.schema[c] for c in key_cols] if key_cols else []
-    schema = StructType(fields + [
+    reads = [sketch_reader("freqitems")]
+    schema = StructType([df.schema[c] for c in key_cols] + [
         StructField("item", StringType()), StructField("est", LongType()),
         StructField("lb", LongType()), StructField("ub", LongType())])
+    arrow_schema = to_arrow_schema(schema)
 
-    def explode_group(pdf: pd.DataFrame):
-        out = []
-        for _, row in pdf.iterrows():
-            fs = FrequentItemsSketch.deserialize(bytes(row[sketch_col]))
-            for item, est, lb, ub in fs.frequent_items()[:k]:
-                out.append((*[row[c] for c in key_cols], str(item),
-                            int(est), int(lb), int(ub)))
-        return pd.DataFrame(out, columns=[*key_cols, "item", "est", "lb", "ub"])
+    def explode(batches):
+        for batch in batches:
+            blobs = batch.column(len(key_cols))
+            src, top = [], []
+            for idx, (fs,) in _sketch_groups(
+                    reads, [blobs],
+                    blobs.is_valid().to_numpy(zero_copy_only=False)):
+                items = fs.frequent_items()[:k]
+                src += [i for i in idx for _ in items]
+                top += [t for _ in idx for t in items]
+            rows = pa.array(src, type=pa.int64())
+            cols = [batch.column(j).take(rows) for j in range(len(key_cols))]
+            cols.append(pa.array([str(t[0]) for t in top], type=pa.string()))
+            cols += [pa.array([int(t[j]) for t in top], type=pa.int64())
+                     for j in (1, 2, 3)]
+            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
-    if key_cols:
-        return df.groupBy(*key_cols).applyInPandas(explode_group, schema)
-    # global: the merged sketch column has exactly one row; mapInPandas
-    # explodes it without another shuffle
-    return df.mapInPandas(lambda it: (explode_group(pdf) for pdf in it
-                                      if not pdf.empty), schema)
+    return df.select(*key_cols, sketch_col).mapInArrow(explode, schema)
 
 
 def register_sql_udfs(spark, lg_k: int = 16, seed: int = DEFAULT_SEED,
@@ -481,13 +535,14 @@ def register_sql_udfs(spark, lg_k: int = 16, seed: int = DEFAULT_SEED,
     """Expose the sketch surface to plain ``spark.sql()`` users:
 
     - ``theta/hll/cpc/tdigest/freq/countmin/bloom_sketch_agg`` —
-      grouped-agg pandas UDAFs (values -> serialized sketch bytes),
-      usable directly in SQL ``GROUP BY``. Convenience surface ONLY: a
-      grouped-agg UDAF materializes each group on one worker with no
-      partial aggregation, so the SCALE path for 10^12-row tables
-      remains ``sketch_agg``'s map-side-combine partials + salted
-      treeReduce. For bounded-group dashboards and ad-hoc SQL this is
-      the ergonomic form.
+      grouped-agg Arrow UDFs (values -> serialized sketch bytes), usable
+      directly in SQL ``GROUP BY``. Each updates its sketch exactly as
+      ``sketch_agg`` does, so the blobs are byte-identical. Convenience
+      surface ONLY: a grouped-agg UDF materializes each group on one
+      worker with no partial aggregation, so the SCALE path for
+      10^12-row tables remains ``sketch_agg``'s map-side-combine partials
+      + salted treeReduce. For bounded-group dashboards and ad-hoc SQL
+      this is the ergonomic form.
     - ``theta_estimate / hll_estimate / cpc_estimate`` (bytes -> double)
       and ``theta_estimate_long`` (rounded bigint for exact-mode parity)
       — the sketch config travels inside the serialized blob, so the
@@ -495,33 +550,30 @@ def register_sql_udfs(spark, lg_k: int = 16, seed: int = DEFAULT_SEED,
     - blob consumers for the value families: ``tdigest_quantile(blob,
       rank) -> double``, ``freq_estimate(blob, item) -> bigint``,
       ``countmin_estimate(blob, item) -> bigint``, ``bloom_contains(
-      blob, item) -> boolean``. Each Arrow batch deserializes a blob
-      once (cached per distinct blob within the batch) — the common
-      shape is one merged sketch probed by many items.
+      blob, item) -> boolean``, on the same probe kernels as
+      ``countmin_estimate_udf`` / ``bloom_contains_udf``. Each Arrow
+      batch deserializes each distinct blob once — the common shape is
+      one merged sketch probed by many items. A null blob or item gives
+      null, never the '' item's answer.
 
     Idempotent: re-registration overwrites (Spark keeps the latest).
     """
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-    from pyspark.sql.types import BinaryType, BooleanType
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.types import BooleanType
 
     def _builder(kd):
-        @pandas_udf(BinaryType(), PandasUDFType.GROUPED_AGG)
-        def _agg(v: pd.Series) -> bytes:
+        @arrow_udf(BinaryType())
+        def _agg(v: pa.Array) -> bytes:
             sk = kd.build()
-            kd.update(sk, v.dropna())
+            kd.update_arrow(sk, v)
             return bytes(sk.serialize())
 
         return _agg
 
-    for kind in ("theta", "hll", "cpc"):
-        spark.udf.register(f"{kind}_sketch_agg",
-                           _builder(sketch_kind(kind, lg_k=lg_k, seed=seed)))
-        spark.udf.register(f"{kind}_estimate",
-                           estimate_udf(kind, seed=seed))
-    spark.udf.register("theta_estimate_long",
-                       estimate_udf("theta", as_long=True, seed=seed))
-
-    value_kinds = {
+    builders = {
+        "theta": sketch_kind("theta", lg_k=lg_k, seed=seed),
+        "hll": sketch_kind("hll", lg_k=lg_k, seed=seed),
+        "cpc": sketch_kind("cpc", lg_k=lg_k, seed=seed),
         "tdigest": sketch_kind("tdigest", k=tdigest_k),
         "freq": sketch_kind("freqitems", max_map_size=freq_max_map_size),
         "countmin": sketch_kind("countmin", num_hashes=countmin_hashes,
@@ -529,85 +581,20 @@ def register_sql_udfs(spark, lg_k: int = 16, seed: int = DEFAULT_SEED,
         "bloom": sketch_kind("bloom", num_bits=bloom_bits,
                              num_hashes=bloom_hashes, seed=seed),
     }
-    for name, kd in value_kinds.items():
+    for name, kd in builders.items():
         spark.udf.register(f"{name}_sketch_agg", _builder(kd))
+    for kind in ("theta", "hll", "cpc"):
+        spark.udf.register(f"{kind}_estimate", estimate_udf(kind, seed=seed))
+    spark.udf.register("theta_estimate_long",
+                       estimate_udf("theta", as_long=True, seed=seed))
 
-    def _blob_cache(deser):
-        cache: dict[bytes, object] = {}
-
-        def get(b):
-            key = bytes(b)
-            sk = cache.get(key)
-            if sk is None:
-                sk = cache[key] = deser(key)
-            return sk
-
-        return get
-
-    # NULL semantics match Spark builtins: NULL in -> NULL out. A NULL
-    # item must be checked BEFORE encoding — encode_values maps None to
-    # b'', which is also the empty string's encoding, so skipping the
-    # check would silently return the '' item's value. Nullable results
-    # travel as pandas extension dtypes (Float64/Int64/boolean).
-
-    @pandas_udf(DoubleType())
-    def _tdigest_quantile(blobs: pd.Series, ranks: pd.Series) -> pd.Series:
-        get = _blob_cache(value_kinds["tdigest"].deserialize)
-        return pd.Series(
-            [None if b is None or pd.isna(q) else get(b).quantile(float(q))
-             for b, q in zip(blobs, ranks)], dtype="Float64")
-
-    @pandas_udf(LongType())
-    def _freq_estimate(blobs: pd.Series, items: pd.Series) -> pd.Series:
-        get = _blob_cache(value_kinds["freq"].deserialize)
-        return pd.Series(
-            [None if b is None or pd.isna(i) else int(get(b).estimate(i))
-             for b, i in zip(blobs, items)], dtype="Int64")
-
-    def _probe_by_blob(blobs, items, probe, out):
-        """Group row indices by blob, vectorize the probe per blob;
-        NULL blob/item rows stay None in ``out``."""
-        keys = encode_values(items)
-        by_blob: dict[bytes, list[int]] = {}
-        for i, b in enumerate(blobs):
-            # pd.isna, not `is None`: a NULL numeric item arrives as NaN
-            # through Arrow, a NULL string as None
-            if b is not None and not pd.isna(items.iloc[i]):
-                by_blob.setdefault(bytes(b), []).append(i)
-        for key, idxs in by_blob.items():
-            vals = probe(key, [keys[i] for i in idxs])
-            for j, i in enumerate(idxs):
-                out[i] = vals[j]
-        return out
-
-    @pandas_udf(LongType())
-    def _countmin_estimate(blobs: pd.Series, items: pd.Series) -> pd.Series:
-        get = _blob_cache(value_kinds["countmin"].deserialize)
-        out = _probe_by_blob(
-            blobs, items,
-            lambda key, ks: [int(v) for v in get(key).estimate_keys(ks)],
-            [None] * len(blobs))
-        return pd.Series(out, dtype="Int64")
-
-    @pandas_udf(BooleanType())
-    def _bloom_contains(blobs: pd.Series, items: pd.Series) -> pd.Series:
-        from datasketches_rust_spark.hashing import _grouped_by_length
-
-        get = _blob_cache(value_kinds["bloom"].deserialize)
-
-        def probe(key, ks):
-            sk = get(key)
-            vals = [None] * len(ks)
-            for grp, mat in _grouped_by_length(ks):
-                hits = sk.contains_keys(mat)
-                for j, g in enumerate(grp):
-                    vals[int(g)] = bool(hits[j])
-            return vals
-
-        out = _probe_by_blob(blobs, items, probe, [None] * len(blobs))
-        return pd.Series(out, dtype="boolean")
-
-    spark.udf.register("tdigest_quantile", _tdigest_quantile)
-    spark.udf.register("freq_estimate", _freq_estimate)
-    spark.udf.register("countmin_estimate", _countmin_estimate)
-    spark.udf.register("bloom_contains", _bloom_contains)
+    readers = {
+        "tdigest_quantile": (DoubleType(), "tdigest", lambda td, qs: [
+            float(td.quantile(float(q))) for q in qs]),
+        "freq_estimate": (LongType(), "freqitems", lambda fs, items: [
+            int(fs.estimate(i)) for i in items]),
+        "countmin_estimate": (LongType(), "countmin", _countmin_probe),
+        "bloom_contains": (BooleanType(), "bloom", _bloom_probe),
+    }
+    for name, (ret, kind, fn) in readers.items():
+        spark.udf.register(name, sketch_udf(ret, fn, kind, seed=seed))

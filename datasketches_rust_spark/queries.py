@@ -80,7 +80,7 @@ def q_top_suppliers_by_revenue(spark, sf_dir):
 def q_theta_distinct_parts_by_flag(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     sk = agg.sketch_agg(li, ["l_returnflag"], "l_partkey", "theta", lg_k=16)
-    est = agg.estimate_udf("theta", as_long=True, lg_k=16)
+    est = agg.estimate_udf("theta", as_long=True)
     return sk.select("l_returnflag", est("sketch").alias("distinct_parts"))
 
 
@@ -90,8 +90,8 @@ def q_theta_union_custkeys(spark, sf_dir):
     a = agg.sketch_agg(orders, [], "o_custkey", "theta", lg_k=16)
     b = agg.sketch_agg(cust, [], "c_custkey", "theta", lg_k=16)
     both = a.unionByName(b)
-    merged = agg.merge_sketch_col(both, [], "theta", lg_k=16)
-    est = agg.estimate_udf("theta", as_long=True, lg_k=16)
+    merged = agg.merge_sketch_col(both, [], "theta")
+    est = agg.estimate_udf("theta", as_long=True)
     return merged.select(est("sketch").alias("distinct_custkeys"))
 
 
@@ -151,7 +151,7 @@ def q_hll_distinct_orders(spark, sf_dir):
     """HLL estimate — approximate, no SQL oracle (pytest tolerance)."""
     li = _t(spark, sf_dir, "lineitem")
     sk = agg.sketch_agg(li, [], "l_orderkey", "hll", lg_k=14)
-    est = agg.estimate_udf("hll", lg_k=14)
+    est = agg.estimate_udf("hll")
     return sk.select(F.round(est("sketch"), 0).alias("approx_orders"))
 
 
@@ -161,14 +161,14 @@ def q_cpc_distinct_orders(spark, sf_dir):
     oracle; pytest tolerance bands in tests/test_cpc.py."""
     li = _t(spark, sf_dir, "lineitem")
     sk = agg.sketch_agg(li, [], "l_orderkey", "cpc", lg_k=12)
-    est = agg.estimate_udf("cpc", lg_k=12)
+    est = agg.estimate_udf("cpc")
     return sk.select(F.round(est("sketch"), 0).alias("approx_orders"))
 
 
 def q_freq_top_event_types(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     sk = agg.sketch_agg(ev, [], "event_type", "freqitems", max_map_size=256)
-    top = agg.freq_topk_explode(sk, [], k=5, max_map_size=256)
+    top = agg.freq_topk_explode(sk, [], k=5)
     return top.select("item", "est")
 
 
@@ -1366,23 +1366,13 @@ def q_bloom_stats(spark, sf_dir):
     part = _t(spark, sf_dir, "part")
     sk = agg.sketch_agg(part, [], "p_partkey", "bloom",
                         num_bits=1 << 15, num_hashes=7)
-    from pyspark.sql.functions import pandas_udf
-
     schema = StructType([StructField("bits_used", LongType()),
                          StructField("load_factor", DoubleType()),
                          StructField("est_fpp", DoubleType())])
-
-    @pandas_udf(schema)
-    def stats(blobs: pd.Series) -> pd.DataFrame:
-        from datasketches_rust_spark.sketches.bloom import BloomFilter
-        rows = []
-        for b in blobs:
-            bf = BloomFilter.deserialize(bytes(b))
-            rows.append((bf.bits_used(), bf.load_factor(),
-                         bf.estimated_fpp()))
-        return pd.DataFrame(rows, columns=["bits_used", "load_factor",
-                                           "est_fpp"])
-
+    stats = agg.sketch_udf(schema, lambda bf: (bf.bits_used(),
+                                               bf.load_factor(),
+                                               bf.estimated_fpp()),
+                           "bloom")
     return sk.select(stats("sketch").alias("s")).select("s.*")
 
 
@@ -1390,7 +1380,7 @@ def q_hll_users_by_type(spark, sf_dir):
     """Grouped HLL (per-event-type distinct users) — rows-only."""
     ev = _t(spark, sf_dir, "events")
     sk = agg.sketch_agg(ev, ["event_type"], "user_id", "hll", lg_k=12)
-    est = agg.estimate_udf("hll", lg_k=12)
+    est = agg.estimate_udf("hll")
     return sk.select("event_type", F.round(est("sketch"), 0).alias(
         "approx_users"))
 
@@ -3143,9 +3133,9 @@ def q_theta_monthly_rollup(spark, sf_dir):
         orders.withColumn("day", F.col("o_orderdate").cast("date")),
         ["day"], "o_custkey", "theta", lg_k=16)
     daily = daily.withColumn("month", F.date_format("day", "yyyy-MM"))
-    monthly = agg.merge_sketch_col(daily, ["month"], "theta", lg_k=16)
+    monthly = agg.merge_sketch_col(daily, ["month"], "theta")
     n_days = daily.groupBy("month").agg(F.count("*").alias("n_days"))
-    est = agg.estimate_udf("theta", as_long=True, lg_k=16)
+    est = agg.estimate_udf("theta", as_long=True)
     return (monthly.join(n_days, "month")
             .select("month", "n_days",
                     est("sketch").alias("distinct_custs")))
@@ -4786,7 +4776,7 @@ def q_join_size_estimates(spark, sf_dir):
          _t(spark, sf_dir, "lineitem"), "l_suppkey",
          _t(spark, sf_dir, "supplier"), "s_suppkey"),
     ]
-    est = agg.estimate_udf("theta", as_long=True, lg_k=16)
+    est = agg.estimate_udf("theta", as_long=True)
     inter = agg.theta_set_op_udf("intersect", as_long=True)
     out = None
     for name, la, ka, lb, kb in specs:

@@ -29,11 +29,19 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.streaming.state import GroupStateTimeout
+from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
+                               IntegerType, LongType, StringType,
+                               StructField, StructType, TimestampType)
 
 from datasketches_rust_spark.config import DedupConfig
 from datasketches_rust_spark.functions.text import (exact_jaccard_udf,
                                                     minhash_struct_udf)
+from datasketches_rust_spark.hashing import DEFAULT_SEED
 
 
 def interval_join_streams(left: DataFrame, right: DataFrame,
@@ -172,12 +180,53 @@ def sketch_stream(stream_df: DataFrame, key_cols: list[str], value_col: str,
 
 
 def read_merged_sketches(spark, state_dir: str, key_cols: list[str],
-                         kind: str, **sketch_kw) -> DataFrame:
+                         kind: str, seed: int = DEFAULT_SEED) -> DataFrame:
     """Fold all appended partials down to one sketch per key."""
     from datasketches_rust_spark import agg
     partials = spark.read.parquet(os.path.join(state_dir, "partials")) \
         .drop("batch_id")
-    return agg.merge_sketch_col(partials, key_cols, kind, **sketch_kw)
+    return agg.merge_sketch_col(partials, key_cols, kind, seed=seed)
+
+
+_SKETCH_STATE = StructType([StructField("sketch", BinaryType()),
+                            StructField("rows_seen", LongType())])
+
+
+def _sketch_state_step(kd, state, frames, value_col: str,
+                       value_type: pa.DataType):
+    """The one load-or-build / update / store step of the sketch state
+    operators. Loads the group's sketch and row count from ``state`` (or
+    builds an empty sketch), updates it with every frame's ``value_col``
+    and stores it back. Each frame's column is turned back into the
+    field's Arrow type first: pandas holds a bigint column with a null as
+    floats, which hash differently; as Arrow, the values enter the sketch
+    exactly as in ``agg.sketch_agg``. A timed-out state is loaded and
+    removed. Returns (sketch, rows seen)."""
+    if state.exists:
+        blob, rows_seen = state.get
+        sk = kd.deserialize(bytes(blob))
+    else:
+        sk, rows_seen = kd.build(), 0
+    if state.hasTimedOut:
+        state.remove()
+        return sk, rows_seen
+    for pdf in frames:
+        kd.update_arrow(sk, pa.Array.from_pandas(pdf[value_col],
+                                                 type=value_type))
+        rows_seen += len(pdf)
+    state.update((bytes(sk.serialize()), rows_seen))
+    return sk, rows_seen
+
+
+def _epoch_ms(ts: pd.Timestamp, tz: str) -> int:
+    """Epoch milliseconds of ``ts``. Window bounds and event times reach
+    the operators as tz-NAIVE pandas Timestamps rendered in the Spark
+    session time zone ``tz``, but Timestamp.timestamp() reads naive
+    values as UTC: under a non-UTC session the timeout would shift by
+    the offset and finalize windows hours early or late."""
+    if ts.tzinfo is None:
+        ts = ts.tz_localize(tz)
+    return int(ts.timestamp() * 1000)
 
 
 def stateful_sketch_estimates(stream_df: DataFrame, key_cols: list[str],
@@ -202,45 +251,31 @@ def stateful_sketch_estimates(stream_df: DataFrame, key_cols: list[str],
 
     ``kind``: theta | hll | cpc (the estimate-capable kinds).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (BinaryType, DoubleType, LongType,
-                                   StructField, StructType)
     from datasketches_rust_spark import agg
 
     if kind not in ("theta", "hll", "cpc"):
         raise ValueError(f"kind {kind!r} has no running estimate")
     kd = agg.sketch_kind(kind, **sketch_kw)
-    key_fields = [stream_df.schema[k] for k in key_cols]
-    out_fields = key_fields + [StructField("estimate", DoubleType()),
-                               StructField("rows_seen", LongType())]
+    value_type = to_arrow_type(stream_df.schema[value_col].dataType)
+    out_fields = [stream_df.schema[k] for k in key_cols] + [
+        StructField("estimate", DoubleType()),
+        StructField("rows_seen", LongType())]
     if emit_sketch:
         out_fields.append(StructField("sketch", BinaryType()))
-    out_schema = StructType(out_fields)
-    state_schema = StructType([StructField("sketch", BinaryType()),
-                               StructField("rows_seen", LongType())])
 
     def fn(key, pdfs, state):
-        if state.exists:
-            blob, rows_seen = state.get
-            sk = kd.deserialize(bytes(blob))
-        else:
-            sk, rows_seen = kd.build(), 0
-        for pdf in pdfs:
-            kd.update(sk, pdf[value_col].dropna())
-            rows_seen += len(pdf)
-        blob = bytearray(sk.serialize())
-        state.update((blob, rows_seen))
-        row = dict(zip(key_cols, key))
-        row["estimate"] = float(sk.estimate())
-        row["rows_seen"] = rows_seen
+        sk, rows_seen = _sketch_state_step(kd, state, pdfs, value_col,
+                                           value_type)
+        row = dict(zip(key_cols, key), estimate=float(sk.estimate()),
+                   rows_seen=rows_seen)
         if emit_sketch:
-            row["sketch"] = blob
+            row["sketch"] = state.get[0]
         yield pd.DataFrame([row])
 
     return (stream_df.groupBy(*key_cols)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "Update", GroupStateTimeout.NoTimeout))
+            .applyInPandasWithState(fn, StructType(out_fields),
+                                    _SKETCH_STATE, "Update",
+                                    GroupStateTimeout.NoTimeout))
 
 
 _DUR_US = {"microsecond": 1, "millisecond": 1000, "second": 10**6,
@@ -268,11 +303,6 @@ def streaming_sessions(stream_df: DataFrame, key_cols: list[str],
     backward if needed, never regressing last); events later than the
     watermark allowance are dropped by the engine upstream — the
     inherent streaming-sessionization contract."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (LongType, StructField, StructType,
-                                   TimestampType)
-
     gap_us = _duration_us(gap)
     key_fields = [stream_df.schema[k] for k in key_cols]
     out_schema = StructType(
@@ -284,15 +314,8 @@ def streaming_sessions(stream_df: DataFrame, key_cols: list[str],
                                StructField("last_us", LongType()),
                                StructField("n", LongType())])
 
-    # same tz discipline as windowed_sketch_estimates: naive pandas
-    # timestamps render in the session tz, but int64/timestamp() treat
-    # naive as UTC — localize before computing the timeout epoch
     session_tz = stream_df.sparkSession.conf.get(
         "spark.sql.session.timeZone")
-
-    def _epoch_ms(us: int) -> int:
-        ts = pd.Timestamp(us * 1000)  # ns, naive
-        return int(ts.tz_localize(session_tz).timestamp() * 1000)
 
     def _row(key, start_us, last_us, n) -> dict:
         row = dict(zip(key_cols, key))
@@ -329,7 +352,8 @@ def streaming_sessions(stream_df: DataFrame, key_cols: list[str],
                 last_us = max(last_us, t)
                 start_us = min(start_us, t)
         state.update((start_us, last_us, n))
-        state.setTimeoutTimestamp(_epoch_ms(last_us + gap_us))
+        state.setTimeoutTimestamp(
+            _epoch_ms(pd.Timestamp((last_us + gap_us) * 1000), session_tz))
         if closed:
             yield pd.DataFrame(closed)
 
@@ -338,83 +362,6 @@ def streaming_sessions(stream_df: DataFrame, key_cols: list[str],
             .applyInPandasWithState(fn, out_schema, state_schema,
                                     "Update",
                                     GroupStateTimeout.EventTimeTimeout))
-
-
-def windowed_quantiles(stream_df: DataFrame, key_cols: list[str],
-                       ts_col: str, value_col: str,
-                       window_duration: str = "1 hour",
-                       watermark: str = "10 minutes",
-                       quantiles: tuple = (0.5, 0.95, 0.99),
-                       k: int = 200,
-                       slide: str | None = None) -> DataFrame:
-    """Event-time windowed QUANTILES — the observability metric shape
-    (p50/p95/p99 per window): one t-digest of engine-managed state per
-    (window, key), updated each micro-batch with running rows
-    (``final=false``), watermark-finalized at EventTimeTimeout. The
-    built-in windowed agg offers only percentile_approx recomputed per
-    trigger; the t-digest state is MERGEABLE, bounded (~k centroids
-    regardless of window volume), and the same blob the batch engine
-    checkpoints. Output: window_start, window_end, key..., n, one
-    column per requested quantile (p50, p95, ...), final."""
-    import pandas as pd
-    from pyspark.sql.types import (BooleanType, DoubleType, LongType,
-                                   StructField, StructType,
-                                   TimestampType, BinaryType)
-    from datasketches_rust_spark import agg
-
-    kd = agg.sketch_kind("tdigest", k=k)
-    qnames = [f"p{q * 100:g}".replace(".", "_") for q in quantiles]
-    key_fields = [stream_df.schema[c] for c in key_cols]
-    out_schema = StructType(
-        [StructField("window_start", TimestampType()),
-         StructField("window_end", TimestampType())]
-        + key_fields
-        + [StructField("n", LongType())]
-        + [StructField(qn, DoubleType()) for qn in qnames]
-        + [StructField("final", BooleanType())])
-    state_schema = StructType([StructField("sketch", BinaryType()),
-                               StructField("n", LongType())])
-
-    session_tz = stream_df.sparkSession.conf.get(
-        "spark.sql.session.timeZone")
-
-    def _epoch_ms(ts) -> int:
-        if ts.tzinfo is None:
-            ts = ts.tz_localize(session_tz)
-        return int(ts.timestamp() * 1000)
-
-    def fn(key, pdfs, state):
-        win = key[0]
-        start, end = win["start"], win["end"]
-
-        def row(sk, n, final):
-            r = dict(zip(key_cols, key[1:]))
-            r.update(window_start=start, window_end=end, n=n, final=final)
-            for q, qn in zip(quantiles, qnames):
-                r[qn] = float(sk.quantile(q))
-            return pd.DataFrame([r])
-
-        if state.hasTimedOut:
-            blob, n = state.get
-            sk = kd.deserialize(bytes(blob))
-            state.remove()
-            yield row(sk, n, True)
-            return
-        if state.exists:
-            blob, n = state.get
-            sk = kd.deserialize(bytes(blob))
-        else:
-            sk, n = kd.build(), 0
-        for pdf in pdfs:
-            kd.update(sk, pdf[value_col].dropna())
-            n += len(pdf)
-        state.update((bytearray(sk.serialize()), n))
-        state.setTimeoutTimestamp(_epoch_ms(end))
-        yield row(sk, n, False)
-
-    return _windowed_state_apply(stream_df, key_cols, ts_col, fn,
-                                 out_schema, state_schema,
-                                 window_duration, watermark, slide)
 
 
 def _duration_us(s: str) -> int:
@@ -454,82 +401,89 @@ def windowed_sketch_estimates(stream_df: DataFrame, key_cols: list[str],
     (the built-in agg can't carry a mergeable binary accumulator).
     Output: window_start, window_end, key..., estimate, rows_seen, final.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
-                                   LongType, StructField, StructType,
-                                   TimestampType)
     from datasketches_rust_spark import agg
 
     if kind not in ("theta", "hll", "cpc"):
         raise ValueError(f"kind {kind!r} has no running estimate")
-    kd = agg.sketch_kind(kind, **sketch_kw)
-    key_fields = [stream_df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [StructField("window_start", TimestampType()),
-         StructField("window_end", TimestampType())]
-        + key_fields
-        + [StructField("estimate", DoubleType()),
-           StructField("rows_seen", LongType()),
-           StructField("final", BooleanType())])
-    state_schema = StructType([StructField("sketch", BinaryType()),
-                               StructField("rows_seen", LongType())])
-
-    # window bounds arrive in fn as tz-NAIVE pandas Timestamps rendered
-    # in the Spark session timezone, but Timestamp.timestamp() interprets
-    # naive values as UTC — under a non-UTC session tz the timeout epoch
-    # would shift by the offset, finalizing windows hours early/late.
-    # Capture the session tz here and localize before epoch conversion.
-    session_tz = stream_df.sparkSession.conf.get(
-        "spark.sql.session.timeZone")
-
-    def _epoch_ms(ts) -> int:
-        if ts.tzinfo is None:
-            ts = ts.tz_localize(session_tz)
-        return int(ts.timestamp() * 1000)
-
-    def fn(key, pdfs, state):
-        # the struct group key arrives as a mapping with the window fields
-        win = key[0]
-        start, end = win["start"], win["end"]
-        if state.hasTimedOut:
-            # watermark passed window end: emit the closing row, evict
-            blob, rows_seen = state.get
-            sk = kd.deserialize(bytes(blob))
-            row = dict(zip(key_cols, key[1:]))
-            row.update(window_start=start, window_end=end,
-                       estimate=float(sk.estimate()),
-                       rows_seen=rows_seen, final=True)
-            state.remove()
-            yield pd.DataFrame([row])
-            return
-        if state.exists:
-            blob, rows_seen = state.get
-            sk = kd.deserialize(bytes(blob))
-        else:
-            sk, rows_seen = kd.build(), 0
-        for pdf in pdfs:
-            kd.update(sk, pdf[value_col].dropna())
-            rows_seen += len(pdf)
-        state.update((bytearray(sk.serialize()), rows_seen))
-        # the window closes when the event-time watermark passes its end
-        state.setTimeoutTimestamp(_epoch_ms(end))
-        row = dict(zip(key_cols, key[1:]))
-        row.update(window_start=start, window_end=end,
-                   estimate=float(sk.estimate()),
-                   rows_seen=rows_seen, final=False)
-        yield pd.DataFrame([row])
-
-    return _windowed_state_apply(stream_df, key_cols, ts_col, fn,
-                                 out_schema, state_schema,
-                                 window_duration, watermark, slide)
+    return _windowed_sketch_apply(
+        stream_df, key_cols, ts_col, value_col,
+        agg.sketch_kind(kind, **sketch_kw),
+        [StructField("estimate", DoubleType()),
+         StructField("rows_seen", LongType())],
+        lambda sk, n: [{"estimate": float(sk.estimate()), "rows_seen": n}],
+        window_duration, watermark, slide)
 
 
-def _windowed_state_apply(stream_df, key_cols, ts_col, fn, out_schema,
-                          state_schema, window_duration, watermark,
-                          slide):
-    """Shared (window, key)-grouped applyInPandasWithState plumbing for
-    the windowed operators (sketch estimates, top-k).
+def windowed_quantiles(stream_df: DataFrame, key_cols: list[str],
+                       ts_col: str, value_col: str,
+                       window_duration: str = "1 hour",
+                       watermark: str = "10 minutes",
+                       quantiles: tuple = (0.5, 0.95, 0.99),
+                       k: int = 200,
+                       slide: str | None = None) -> DataFrame:
+    """Event-time windowed QUANTILES — the observability metric shape
+    (p50/p95/p99 per window): one t-digest of engine-managed state per
+    (window, key), updated each micro-batch with running rows
+    (``final=false``), watermark-finalized at EventTimeTimeout. The
+    built-in windowed agg offers only percentile_approx recomputed per
+    trigger; the t-digest state is MERGEABLE, bounded (~k centroids
+    regardless of window volume), and the same blob the batch engine
+    checkpoints. Output: window_start, window_end, key..., n, one
+    column per requested quantile (p50, p95, ...), final."""
+    from datasketches_rust_spark import agg
+
+    qnames = [f"p{q * 100:g}".replace(".", "_") for q in quantiles]
+    return _windowed_sketch_apply(
+        stream_df, key_cols, ts_col, value_col,
+        agg.sketch_kind("tdigest", k=k),
+        [StructField("n", LongType())]
+        + [StructField(qn, DoubleType()) for qn in qnames],
+        lambda sk, n: [{"n": n, **{qn: float(sk.quantile(q))
+                                   for q, qn in zip(quantiles, qnames)}}],
+        window_duration, watermark, slide)
+
+
+def windowed_topk(stream_df: DataFrame, key_cols: list[str],
+                  ts_col: str, item_col: str,
+                  window_duration: str = "1 hour",
+                  watermark: str = "10 minutes", k: int = 5,
+                  max_map_size: int = 256,
+                  slide: str | None = None) -> DataFrame:
+    """Event-time windowed TOP-K items — the trending-items analytics
+    shape: one Misra-Gries frequent-items sketch of engine-managed
+    state per (window, key); every micro-batch emits the running top-k
+    (``final=false``, rank 1..k), and when the watermark passes the
+    window end the closing top-k is emitted (``final=true``) and the
+    state evicted. EXACT (not approximate) whenever a window holds
+    fewer than 0.75*max_map_size distinct items — the sketch only
+    purges above that load. State per open window is one bounded
+    sketch blob regardless of stream volume. Ties on estimate order by
+    item string, so output ranks are deterministic.
+    Output: window_start, window_end, key..., rank, item, est, final.
+    """
+    from datasketches_rust_spark import agg
+
+    return _windowed_sketch_apply(
+        stream_df, key_cols, ts_col, item_col,
+        agg.sketch_kind("freqitems", max_map_size=max_map_size),
+        [StructField("rank", IntegerType()),
+         StructField("item", StringType()),
+         StructField("est", LongType())],
+        lambda sk, _n: [{"rank": i + 1, "item": str(it), "est": int(est)}
+                        for i, (it, est, _lb, _ub)
+                        in enumerate(sk.frequent_items()[:k])],
+        window_duration, watermark, slide)
+
+
+def _windowed_sketch_apply(stream_df, key_cols, ts_col, value_col, kd,
+                           fields, rows_of, window_duration, watermark,
+                           slide):
+    """The windowed sketch operators' shared body: one sketch of state
+    per (window, key), updated with ``value_col`` every micro-batch. Each
+    update emits ``rows_of(sketch, rows_seen)`` (dicts over ``fields``)
+    with ``final=false``; when the watermark passes the window end the
+    state times out, the closing rows are emitted with ``final=true``
+    and the state is evicted.
 
     applyInPandasWithState groups on resolved columns, not the window()
     grouping expression — materialize the window struct as a projection
@@ -541,7 +495,30 @@ def _windowed_state_apply(stream_df, key_cols, ts_col, fn, out_schema,
     column derived from an already-watermarked timestamp inherits the
     event-time tag and Spark rejects streams with two event-time
     columns."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    out_schema = StructType(
+        [StructField("window_start", TimestampType()),
+         StructField("window_end", TimestampType())]
+        + [stream_df.schema[c] for c in key_cols] + fields
+        + [StructField("final", BooleanType())])
+    value_type = to_arrow_type(stream_df.schema[value_col].dataType)
+    session_tz = stream_df.sparkSession.conf.get(
+        "spark.sql.session.timeZone")
+
+    def fn(key, pdfs, state):
+        # the struct group key arrives as a mapping with the window fields
+        win = key[0]
+        final = state.hasTimedOut
+        sk, rows_seen = _sketch_state_step(kd, state, pdfs, value_col,
+                                           value_type)
+        if not final:
+            # the window closes when the event-time watermark passes its end
+            state.setTimeoutTimestamp(_epoch_ms(win["end"], session_tz))
+        base = dict(zip(key_cols, key[1:]), window_start=win["start"],
+                    window_end=win["end"], final=final)
+        rows = [{**base, **r} for r in rows_of(sk, rows_seen)]
+        if rows:
+            yield pd.DataFrame(rows)
+
     if slide is None:
         windowed = stream_df.withColumn(
             "__win", F.window(F.col(ts_col), window_duration))
@@ -564,89 +541,6 @@ def _windowed_state_apply(stream_df, key_cols, ts_col, fn, out_schema,
                     .drop("__s"))
     wdf = windowed.withWatermark(ts_col, watermark)
     return (wdf.groupBy("__win", *[F.col(k) for k in key_cols])
-            .applyInPandasWithState(fn, out_schema, state_schema,
+            .applyInPandasWithState(fn, out_schema, _SKETCH_STATE,
                                     "Update",
                                     GroupStateTimeout.EventTimeTimeout))
-
-
-def windowed_topk(stream_df: DataFrame, key_cols: list[str],
-                  ts_col: str, item_col: str,
-                  window_duration: str = "1 hour",
-                  watermark: str = "10 minutes", k: int = 5,
-                  max_map_size: int = 256,
-                  slide: str | None = None) -> DataFrame:
-    """Event-time windowed TOP-K items — the trending-items analytics
-    shape: one Misra-Gries frequent-items sketch of engine-managed
-    state per (window, key); every micro-batch emits the running top-k
-    (``final=false``, rank 1..k), and when the watermark passes the
-    window end the closing top-k is emitted (``final=true``) and the
-    state evicted. EXACT (not approximate) whenever a window holds
-    fewer than 0.75*max_map_size distinct items — the sketch only
-    purges above that load. State per open window is one bounded
-    sketch blob regardless of stream volume. Ties on estimate order by
-    item string, so output ranks are deterministic.
-    Output: window_start, window_end, key..., rank, item, est, final.
-    """
-    import pandas as pd
-    from pyspark.sql.types import (BooleanType, IntegerType, LongType,
-                                   StringType, StructField, StructType,
-                                   TimestampType)
-    from datasketches_rust_spark import agg
-
-    kd = agg.sketch_kind("freqitems", max_map_size=max_map_size)
-    key_fields = [stream_df.schema[c] for c in key_cols]
-    out_schema = StructType(
-        [StructField("window_start", TimestampType()),
-         StructField("window_end", TimestampType())]
-        + key_fields
-        + [StructField("rank", IntegerType()),
-           StructField("item", StringType()),
-           StructField("est", LongType()),
-           StructField("final", BooleanType())])
-    from pyspark.sql.types import BinaryType
-    state_schema = StructType([StructField("sketch", BinaryType())])
-
-    session_tz = stream_df.sparkSession.conf.get(
-        "spark.sql.session.timeZone")
-
-    def _epoch_ms(ts) -> int:
-        if ts.tzinfo is None:
-            ts = ts.tz_localize(session_tz)
-        return int(ts.timestamp() * 1000)
-
-    def fn(key, pdfs, state):
-        win = key[0]
-        start, end = win["start"], win["end"]
-
-        def rows(sk, final):
-            base = dict(zip(key_cols, key[1:]))
-            recs = [{**base, "window_start": start, "window_end": end,
-                     "rank": i + 1, "item": str(it), "est": int(est),
-                     "final": final}
-                    for i, (it, est, _lb, _ub)
-                    in enumerate(sk.frequent_items()[:k])]
-            return pd.DataFrame(recs) if recs else None
-
-        if state.hasTimedOut:
-            (blob,) = state.get
-            sk = kd.deserialize(bytes(blob))
-            state.remove()
-            out = rows(sk, True)
-            if out is not None:
-                yield out
-            return
-        if state.exists:
-            sk = kd.deserialize(bytes(state.get[0]))
-        else:
-            sk = kd.build()
-        for pdf in pdfs:
-            kd.update(sk, pdf[item_col].dropna())
-        state.update((bytearray(sk.serialize()),))
-        state.setTimeoutTimestamp(_epoch_ms(end))
-        out = rows(sk, False)
-        if out is not None:
-            yield out
-
-    return _windowed_state_apply(stream_df, key_cols, ts_col, fn,
-                                 out_schema, state_schema,
-                                 window_duration, watermark, slide)

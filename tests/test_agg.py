@@ -15,7 +15,7 @@ def lineitem(spark, sf_smoke_dir):
 def test_theta_exact_mode_global(spark, lineitem):
     exact = lineitem.select(F.countDistinct("l_partkey")).first()[0]
     sk = agg.sketch_agg(lineitem, [], "l_partkey", "theta", lg_k=16)
-    est = sk.select(agg.estimate_udf("theta", as_long=True, lg_k=16)(
+    est = sk.select(agg.estimate_udf("theta", as_long=True)(
         "sketch").alias("e")).first()["e"]
     assert est == exact
 
@@ -26,13 +26,13 @@ def test_theta_grouped_and_salted(spark, lineitem):
     sk = agg.sketch_agg(lineitem, ["l_returnflag"], "l_partkey", "theta",
                         lg_k=16)
     got = {r["l_returnflag"]: r["e"] for r in sk.select(
-        "l_returnflag", agg.estimate_udf("theta", as_long=True, lg_k=16)(
+        "l_returnflag", agg.estimate_udf("theta", as_long=True)(
             "sketch").alias("e")).collect()}
     assert got == exact
     # salted global tree-reduce gives the same answer
     sk2 = agg.sketch_agg(lineitem, [], "l_partkey", "theta", lg_k=16,
                          salt_buckets=4)
-    est2 = sk2.select(agg.estimate_udf("theta", as_long=True, lg_k=16)(
+    est2 = sk2.select(agg.estimate_udf("theta", as_long=True)(
         "sketch").alias("e")).first()["e"]
     assert est2 == lineitem.select(F.countDistinct("l_partkey")).first()[0]
 
@@ -40,7 +40,7 @@ def test_theta_grouped_and_salted(spark, lineitem):
 def test_hll_estimation_accuracy(spark, lineitem):
     exact = lineitem.select(F.countDistinct("l_orderkey")).first()[0]
     sk = agg.sketch_agg(lineitem, [], "l_orderkey", "hll", lg_k=12)
-    est = sk.select(agg.estimate_udf("hll", lg_k=12)("sketch").alias(
+    est = sk.select(agg.estimate_udf("hll")("sketch").alias(
         "e")).first()["e"]
     assert abs(est - exact) / exact < 0.05
 
@@ -51,7 +51,7 @@ def test_freqitems_exact_topk(spark, sf_smoke_dir):
         F.desc("count"), "event_type").collect()
     sk = agg.sketch_agg(events, [], "event_type", "freqitems",
                         max_map_size=256)
-    got = agg.freq_topk_explode(sk, [], k=10, max_map_size=256).collect()
+    got = agg.freq_topk_explode(sk, [], k=10).collect()
     # distinct event types << 0.75*256 => sketch is exact
     assert {(r["item"], r["est"]) for r in got} == \
         {(r["event_type"], r["count"]) for r in exact[:10]}
@@ -328,3 +328,134 @@ def test_row_groups_one_group_per_key():
            for key, idx in agg.row_groups(batch, ["k", "j"])}
     assert got == {("a", 1): [0, 3], (None, 1): [1], ("b", 1): [2],
                    (None, 2): [4]}
+
+
+def test_sketch_kind_rejects_unknown_options(spark):
+    """A misspelled option raises instead of silently building the
+    default config (``lgk=16`` used to build lg_k 12)."""
+    with pytest.raises(TypeError, match="lgk"):
+        agg.sketch_kind("theta", lgk=16)
+    with pytest.raises(TypeError, match="lgk"):
+        agg.sketch_agg(spark.range(10), [], "id", "theta", lgk=16)
+
+
+def test_theta_set_op_rejects_unknown_op():
+    """Any op other than union/intersect/a_not_b fails at plan time
+    instead of computing a_not_b."""
+    with pytest.raises(ValueError, match="a_not_b"):
+        agg.theta_set_op_udf("union_all")
+
+
+_WRITER_KW = {"theta": {"lg_k": 12}, "hll": {"lg_k": 12},
+              "cpc": {"lg_k": 12},
+              "bloom": {"num_bits": 1 << 16, "num_hashes": 7},
+              "countmin": {"num_hashes": 5, "num_buckets": 1024}}
+
+
+@pytest.fixture(scope="module")
+def nullable_cols(spark):
+    """1000 distinct keys in each of a bigint, a double and a string
+    column, plus one all-null row, in one partition (one Arrow batch)."""
+    rows = [(k * 7 - 3000, k / 8 - 40.0, f"s{k}") for k in range(1000)]
+    rows.insert(500, (None, None, None))
+    return spark.createDataFrame(rows, "i bigint, f double, s string") \
+        .coalesce(1)
+
+
+def _streamed_blob(spark, df, col, kind, tmp_path):
+    """The theta/hll/cpc blob ``stateful_sketch_estimates`` emits for
+    ``df[col]`` read as a one-file stream."""
+    from datasketches_rust_spark.streaming import stateful_sketch_estimates
+    src, sink = str(tmp_path / f"{kind}_{col}_src"), []
+    rows = df.select(F.lit(1).alias("g"), col)
+    rows.write.parquet(src)
+    stream = spark.readStream.schema(rows.schema).parquet(src)
+    out = stateful_sketch_estimates(stream, ["g"], col, kind=kind,
+                                    emit_sketch=True, **_WRITER_KW[kind])
+    q = (out.writeStream.outputMode("update")
+         .foreachBatch(lambda b, _: sink.extend(b.collect()))
+         .option("checkpointLocation", str(tmp_path / f"{kind}_{col}_ck"))
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(180)
+    (row,) = sink
+    return bytes(row["sketch"])
+
+
+@pytest.mark.parametrize("kind", sorted(_WRITER_KW))
+def test_sql_builders_match_sketch_agg(spark, nullable_cols, kind):
+    """The SQL ``*_sketch_agg`` builders write the blob ``sketch_agg``
+    writes, byte for byte, over nullable bigint, double and string
+    columns: a null in an integer batch must not turn its values into
+    doubles."""
+    from datasketches_rust_spark.agg import register_sql_udfs
+    register_sql_udfs(spark, lg_k=12)
+    nullable_cols.createOrReplaceTempView("writers_v")
+    for col in ("i", "f", "s"):
+        want = agg.sketch_blob(nullable_cols, col, kind, **_WRITER_KW[kind])
+        got = spark.sql(f"SELECT {kind}_sketch_agg({col}) AS b "
+                        "FROM writers_v").collect()[0]["b"]
+        assert bytes(got) == want, col
+
+
+@pytest.mark.parametrize("kind", ["cpc", "hll", "theta"])
+def test_stateful_operator_matches_sketch_agg(spark, nullable_cols, kind,
+                                              tmp_path):
+    """``stateful_sketch_estimates(..., emit_sketch=True)`` emits the blob
+    ``sketch_agg`` writes over the same rows, byte for byte."""
+    for col in ("i", "f", "s"):
+        want = agg.sketch_blob(nullable_cols, col, kind, **_WRITER_KW[kind])
+        assert _streamed_blob(spark, nullable_cols, col, kind,
+                              tmp_path) == want, col
+
+
+def test_sql_and_batch_theta_blobs_union(spark, nullable_cols):
+    """A SQL-built and a ``sketch_agg``-built theta sketch of the same
+    bigint column union to its 1000 distinct keys (not 1999)."""
+    from datasketches_rust_spark.agg import register_sql_udfs
+    register_sql_udfs(spark, lg_k=12)
+    nullable_cols.createOrReplaceTempView("union_v")
+    sql_blob = spark.sql("SELECT theta_sketch_agg(i) AS a FROM union_v")
+    both = sql_blob.crossJoin(
+        agg.sketch_agg(nullable_cols, [], "i", "theta", lg_k=12)
+        .withColumnRenamed("sketch", "b"))
+    union = agg.theta_set_op_udf("union", as_long=True)
+    assert both.select(union("a", "b").alias("n")).collect()[0]["n"] == 1000
+
+
+def test_sql_probes_with_null_item(spark, nullable_cols):
+    """SQL ``bloom_contains`` / ``countmin_estimate`` find every key of a
+    batch that also holds a null item, and give null for the null."""
+    from datasketches_rust_spark.agg import register_sql_udfs
+    register_sql_udfs(spark)
+    bloom = agg.sketch_blob(nullable_cols, "i", "bloom",
+                            **_WRITER_KW["bloom"])
+    cm = agg.sketch_blob(nullable_cols, "i", "countmin",
+                         **_WRITER_KW["countmin"])
+    blobs = spark.createDataFrame([(bloom, cm)], "b binary, c binary")
+    nullable_cols.crossJoin(blobs).coalesce(1) \
+        .createOrReplaceTempView("probe_v")
+    rows = spark.sql("SELECT i, bloom_contains(b, i) AS hit, "
+                     "countmin_estimate(c, i) AS n FROM probe_v").collect()
+    assert len(rows) == 1001
+    assert sum(r["hit"] is True for r in rows) == 1000
+    assert sum(r["n"] is not None and r["n"] >= 1 for r in rows) == 1000
+    (null_row,) = [r for r in rows if r["i"] is None]
+    assert null_row["hit"] is None and null_row["n"] is None
+
+
+def test_finishers_null_blob(spark):
+    """A null blob (a left join's unmatched key) finishes as null."""
+    vals = spark.createDataFrame([("a", 1.0), ("a", 2.0)],
+                                 "k string, v double")
+    keys = spark.createDataFrame([("a",), ("b",)], "k string")
+    theta = keys.join(agg.sketch_agg(vals, ["k"], "v", "theta"), "k", "left")
+    td = keys.join(agg.sketch_agg(vals, ["k"], "v", "tdigest"), "k", "left")
+    got = {r["k"]: r["e"] for r in theta.select(
+        "k", agg.estimate_udf("theta", as_long=True)("sketch").alias("e"))
+        .collect()}
+    assert got == {"a": 2, "b": None}
+    got = {r["k"]: (r["s"], r["q"]) for r in td.select(
+        "k", agg.tdigest_stats_udf()("sketch").alias("s"),
+        agg.tdigest_quantile_udf(0.5)("sketch").alias("q")).collect()}
+    assert got["b"] == (None, None)
+    assert tuple(got["a"][0]) == (1.0, 2.0, 2)

@@ -219,7 +219,7 @@ class TestSpark:
         from datasketches_rust_spark import agg
         ev = spark.read.parquet(f"{sf_correct_dir}/events.parquet")
         sk = agg.sketch_agg(ev, [], "user_id", "cpc", lg_k=11)
-        est = agg.estimate_udf("cpc", lg_k=11)
+        est = agg.estimate_udf("cpc")
         got = sk.select(est("sketch").alias("e")).collect()[0]["e"]
         truth = duckdb.sql(
             f"select count(distinct user_id) from "
@@ -232,7 +232,7 @@ class TestSpark:
         from datasketches_rust_spark import agg
         ev = spark.read.parquet(f"{sf_correct_dir}/events.parquet")
         sk = agg.sketch_agg(ev, ["event_type"], "user_id", "cpc", lg_k=11)
-        est = agg.estimate_udf("cpc", lg_k=11)
+        est = agg.estimate_udf("cpc")
         got = {r["event_type"]: r["e"] for r in
                sk.select("event_type", est("sketch").alias("e")).collect()}
         truth = dict(duckdb.sql(

@@ -85,8 +85,8 @@ def test_sketch_stream_merge(spark, sf_correct_dir, tmp_path):
     q.awaitTermination(300)
 
     from datasketches_rust_spark import agg
-    merged = read_merged_sketches(spark, state, [], "theta", lg_k=16)
-    est = merged.select(agg.estimate_udf("theta", as_long=True, lg_k=16)(
+    merged = read_merged_sketches(spark, state, [], "theta")
+    est = merged.select(agg.estimate_udf("theta", as_long=True)(
         "sketch").alias("e")).first()["e"]
     exact = li.select(F.countDistinct("l_partkey")).first()[0]
     assert est == exact

@@ -57,6 +57,23 @@ def _id_below(plan: str, lower: str, upper: str) -> bool:
 _PYTHON_NODES = ("EvalPython", "MapInArrow", "MapInPandas", "InPandas")
 
 
+def _n_python_nodes(plan: str) -> int:
+    """Count the Python nodes (UDF evaluation, map and grouped passes) in
+    ``plan``, as ``_n_nodes`` counts one node name."""
+    return sum(_n_nodes(plan, op) for op in (
+        "ArrowEvalPython", "BatchEvalPython", "MapInArrow", "MapInPandas",
+        "FlatMapGroupsInPandas", "ArrowAggregatePython",
+        "AggregateInPandas"))
+
+
+def _eval_types(plan: str) -> list[int]:
+    """The eval type of every Python UDF node of ``plan`` (the last value
+    of its Arguments line): 200/202 are pandas UDFs, 250/252 Arrow UDFs."""
+    return [int(t) for t in re.findall(
+        r"^\(\d+\) \w*(?:EvalPython|AggregatePython)\n"
+        r"(?:.+\n)*?Arguments: .*, (\d+)$", plan, re.M)]
+
+
 def _binary_into_python(df) -> list[str]:
     """Binary columns that a Python node of ``df``'s physical plan takes
     as input (its children's output), as "node: column"."""
@@ -1436,7 +1453,7 @@ def main() -> None:
     #     collected blob instead of joining it onto every probe row
     from datasketches_rust_spark import agg
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    est = agg.estimate_udf("theta", as_long=True, lg_k=16)
+    est = agg.estimate_udf("theta", as_long=True)
     glob = agg.sketch_agg(li, [], "l_partkey", "theta", lg_k=16)
     failures += audit("sketch_agg (global theta)",
                       glob.select(est("sketch")), {
@@ -1468,6 +1485,48 @@ def main() -> None:
                 lambda p: "BroadcastNestedLoopJoin" not in p,
             f"no binary column enters a Python node {binary_in}":
                 lambda p, b=binary_in: not b,
+        })
+
+    # 56b. one Arrow path into and out of every sketch blob: the SQL
+    #      builder is an Arrow grouped agg, the top-k explode maps the
+    #      merged rows where they are, and the sketch_queries classes keep
+    #      their exchange and Python-node counts with no pandas UDF left
+    agg.register_sql_udfs(spark)
+    li.createOrReplaceTempView("li_sketch_sql")
+    sql_agg = spark.sql("SELECT l_returnflag, theta_sketch_agg(l_partkey) "
+                        "AS s FROM li_sketch_sql GROUP BY l_returnflag")
+    failures += audit("register_sql_udfs builder (theta_sketch_agg)",
+                      sql_agg, {
+        "plans as ArrowAggregatePython with an Arrow UDF (eval type 252)":
+            lambda p: _n_nodes(p, "ArrowAggregatePython") == 1
+            and _eval_types(p) == [252],
+        "no AggregateInPandas": lambda p: "AggregateInPandas" not in p,
+    })
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    top = agg.freq_topk_explode(
+        agg.sketch_agg(ev, ["event_type"], "user_id", "freqitems"),
+        ["event_type"], 3)
+    failures += audit("freq_topk_explode (grouped)", top, {
+        "adds no Exchange (the merge's one only)":
+            lambda p: _n_nodes(p, "Exchange") == 1,
+        "no FlatMapGroupsInPandas, no MapInPandas":
+            lambda p: "FlatMapGroupsInPandas" not in p
+            and "MapInPandas" not in p,
+    })
+    # (Exchange, Python nodes) of each class, as when its readers were
+    # pandas UDFs
+    sketch_plan_counts = {
+        "theta_distinct_parts_by_flag": (1, 3), "hll_distinct_orders": (1, 3),
+        "cpc_distinct_orders": (1, 3), "freq_top_event_types": (1, 3),
+        "countmin_event_counts": (1, 1), "tdigest_price_quantiles": (1, 3),
+        "bloom_semijoin_parts": (2, 2)}
+    for name, (n_ex, n_py) in sketch_plan_counts.items():
+        failures += audit(name, Q.QUERIES[name](spark, SF_DIR), {
+            f"{n_ex} Exchange, {n_py} Python nodes":
+                lambda p, e=n_ex, y=n_py: _n_nodes(p, "Exchange") == e
+                and _n_python_nodes(p) == y,
+            "every Python UDF is an Arrow UDF (no eval type 200/202)":
+                lambda p: all(t >= 250 for t in _eval_types(p)),
         })
 
     print(f"\n{'=' * 70}")
