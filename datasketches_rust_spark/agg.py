@@ -224,11 +224,11 @@ def _fold_key(key: tuple) -> tuple:
 
 def _emit(slots: dict, key_fields: list[pa.Field],
           sketch_col: str) -> pa.RecordBatch:
-    """One row per (key, sketch) slot."""
+    """One row per (key, sketch) slot; a None slot is a null blob."""
     cols = [pa.array([key[i] for key in slots], type=f.type)
             for i, f in enumerate(key_fields)]
-    cols.append(pa.array([bytes(sk.serialize()) for sk in slots.values()],
-                         type=pa.binary()))
+    cols.append(pa.array([None if sk is None else bytes(sk.serialize())
+                          for sk in slots.values()], type=pa.binary()))
     return pa.RecordBatch.from_arrays(
         cols, names=[f.name for f in key_fields] + [sketch_col])
 
@@ -248,10 +248,10 @@ def row_groups(batch: pa.RecordBatch, key_cols: list[str]):
         yield key, flat[offsets[j]:offsets[j + 1]]
 
 
-def _blob_schema(df: DataFrame, key_cols: list[str],
-                 sketch_col: str) -> StructType:
+def _blob_schema(df: DataFrame, key_cols: list[str], sketch_col: str,
+                 nullable: bool = False) -> StructType:
     return StructType([df.schema[c] for c in key_cols]
-                      + [StructField(sketch_col, BinaryType(), False)])
+                      + [StructField(sketch_col, BinaryType(), nullable)])
 
 
 def sketch_agg(df: DataFrame, key_cols: list[str], value_col: str,
@@ -302,21 +302,26 @@ def merge_sketch_col(df: DataFrame, key_cols: list[str], kind: str,
     """Merge a binary sketch column down to one sketch per key: one
     exchange (by key; to a single partition for a global merge), then one
     Python pass that folds every partial of each key its partition holds.
-    ``salt_buckets`` > 1 puts a salted merge level before a global one."""
+    ``salt_buckets`` > 1 puts a salted merge level before a global one.
+    Null blobs are skipped, as ``sketch_udf`` skips them: a key whose
+    blobs are all null merges to a null blob."""
     read = sketch_reader(kind, seed)
     blobs = df.select(*key_cols, sketch_col)
-    schema = _blob_schema(blobs, key_cols, sketch_col)
+    schema = _blob_schema(blobs, key_cols, sketch_col,
+                          blobs.schema[sketch_col].nullable)
 
     def merge_pass(batches):
         slots: dict = {}
         for batch in batches:
             key_fields = list(batch.schema)[:len(key_cols)]
             for *key, blob in zip(*(c.to_pylist() for c in batch.columns)):
-                sk = read(blob)
                 key = _fold_key(key)
                 prev = slots.get(key)
-                slots[key] = sk if prev is None else \
-                    _merge_two(kind, prev, sk)
+                sk = None if blob is None else read(blob)
+                if prev is None:
+                    slots[key] = sk
+                elif sk is not None:
+                    slots[key] = _merge_two(kind, prev, sk)
         if slots:
             yield _emit(slots, key_fields, sketch_col)
 

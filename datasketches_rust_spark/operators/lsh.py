@@ -1,35 +1,51 @@
 """LSH candidate-pair generation — the one big shuffle of the dedup
 pipeline, so everything here is shaped around shuffle hygiene.
 
-TWO formulations, chosen by band-keyspace size:
+ONE formulation serves every banded modality: MinHash text and caption
+bands (``candidate_pairs``), SimHash pigeonhole slices of image and video
+phashes (operators/visual.py), audio slice triples on clip codes and the
+audio-frame near tier (pipeline_audio.py), hyperplane bands of
+embeddings and IVF cells of ``semantic_dedup`` (operators/similarity.py):
 
-candidate_pairs (MinHash bands, ~2^64 keyspace — bucket keys near-unique):
-  explode(bands)            -- narrow, stays in the scan stage
-  repartition(band_key)     -- THE one band exchange (16-byte raw rows),
-                               reused by both consumers below
-  window over band_key      -- count(*)/min(__id) give bucket size + rep
-                               with NO join and NO second exchange (a
-                               standalone sizes groupBy shuffles ~data-
-                               sized partials — near-unique keys defeat
-                               map-side combine, measured ~900 MB per
-                               2M-image trial; a co-located sizes JOIN
-                               builds data-sized hash maps — measured
-                               7.4 GB of spill)
-  hot rows  -> star edges   -- row-level emission around the bucket min
-  cold rows -> local pairs  -- exchange-free collect per bucket (bounded
-                               by max_bucket_size) + JVM pair expression
-  groupBy (id_a, id_b)      -- dedups pairs across bands AND evaluates the
-                               >= min_band_matches prefilter via one
-                               folded weight column (star edges = _STAR_W)
+  repartition(band_key)    -- THE one band exchange: only (__id,
+                              band_key [, payload]) rows, 16-24 bytes
+  mapInArrow bucket pass   -- per partition, in numpy: drop rows whose
+                              id or key is null, lexsort by (band_key,
+                              __id), find the bucket bounds, then emit
+    hot bucket  (> max_bucket_size ids) -> star events around its min id
+    cold bucket (2 .. max_bucket_size)  -> every i < j pair
+                              in Arrow batches of at most
+                              spark.sql.execution.arrow.maxRecordsPerBatch
+                              rows (Python holds one partition's band rows,
+                              never its whole pair set)
+  groupBy (id_a, id_b)     -- callers dedup pairs across bands; the
+                              ``pair_candidates`` dedup also evaluates the
+                              >= min_band_matches prefilter via one folded
+                              weight column (star edges = _STAR_W)
 
-bucketed_pair_events (small keyspaces, e.g. SimHash pigeonhole bands with
-2^16 x bands keys — see operators/visual.py): one repartition(band_key)
-exchange feeds sizes (exchange-free aggregate, tiny result), a co-located
-sizes join (build side = keyspace-sized, a few MB), row-level star-edge
-emission for hot rows (streaming, no member list ever materialized), and
-a bounded collect_list + JVM higher-order pair expression for cold rows.
-A plain groupBy-sizes here would emit up to |keyspace| map-side partial
-rows PER TASK — measured 470 MB of partials for 79 MB of band data.
+A bucket is a set of ids: duplicate (__id, band_key) rows count once.
+``max_bucket_size`` 0 makes every bucket cold (exact pairwise candidates).
+
+Why one Python pass and not a JVM plan: two JVM shapes came before it,
+one per band-keyspace regime, each avoiding a measured failure. A
+standalone sizes groupBy shuffles data-sized partials when keys are
+near-unique (~900 MB per 2M-image trial) and emits up to |keyspace|
+map-side partial rows per task on small keyspaces (470 MB of partials
+for 79 MB of band data); a co-located sizes JOIN on near-unique keys
+builds data-sized hash maps (7.4 GB of spill at 2M images). So MinHash
+bands ran a WINDOW shape (count/min over partition by band_key on one
+exchange, read twice through ReusedExchange, then collect_list +
+array_sort + a JVM pair expression per bucket) and small keyspaces ran a
+sizes-JOIN shape. Both sort or hash every band row at least twice. The
+bucket pass needs no sizes at all — one partition-local lexsort yields
+sizes, representatives and pairs — and it has neither failure mode: it
+adds no shuffle and builds nothing keyspace- or data-sized beyond the
+partition's own rows. Measured on the benchmark's text_dedup_skewed
+workload (seed 901, local[4] on a 4-core VM, 230,400 band rows, 4,292
+candidates), one traced run each: the LSH layer's task time fell from
+4.43 s (window shape) to 1.30 s, its shuffle read from 2.95 to 1.51 MB;
+video_dedup's phash banding layer fell from 3.03 to 1.32 task-s
+(sizes-JOIN shape). Candidate sets are identical.
 
 Hot-bucket degrade (star topology): a bucket larger than
 ``max_bucket_size`` would contribute O(size^2) pairs — and for a near-dup
@@ -45,90 +61,162 @@ cold-bucket evidence).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from typing import Iterator
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from datasketches_rust_spark.config import DedupConfig
 
-# star-edge weight in candidate_pairs' folded prefilter column: must
+# star-edge weight in pair_candidates' folded prefilter column: must
 # exceed any possible cold-collision count (<= num_bands, typically 32)
 # and any sane min_band_matches; sums of it stay far from i64 overflow
 _STAR_W = 1 << 30
 
+# Spark's default spark.sql.execution.arrow.maxRecordsPerBatch, used when
+# the session sets no limit: a partition's pair set must never be one batch
+_DEFAULT_BATCH_ROWS = 10_000
+
 
 def explode_bands(df: DataFrame, id_col: str, bands_col: str) -> DataFrame:
     """(__id, band_key) rows. The band index is already mixed into the key
-    by sketches/minhash.band_hashes, so the single long IS the whole join
-    key — band rows stay 16 bytes of payload through both LSH shuffles."""
+    by sketches/minhash.band_hashes, so the single long IS the whole
+    bucket key — band rows stay 16 bytes of payload through the band
+    exchange."""
     return df.select(
         F.col(id_col).alias("__id"),
         F.explode(F.col(bands_col)).alias("band_key"))
 
 
-def _pairs_expr(members_col: str, fields: list[str]) -> Column:
-    """All ordered pairs (i < j) from a SORTED array<struct> column, as an
-    array of named structs — pure JVM higher-order functions, no Python.
-    Struct order = first field = id, so id_a < id_b holds by
-    construction."""
-    names = [n for f in fields for n in (f"'{f}_a', x.{f}",)] + \
-            [n for f in fields for n in (f"'{f}_b', y.{f}",)]
-    return F.expr(
-        f"flatten(transform({members_col}, (x, i) -> "
-        f"transform(slice({members_col}, i + 2, "
-        f"size({members_col}) - i - 1), "
-        f"y -> named_struct({', '.join(names)}))))")
+def _triangle_root(t: np.ndarray) -> np.ndarray:
+    """j with j(j-1)/2 <= t < j(j+1)/2: the column of pair index ``t``
+    when a bucket's pairs are numbered (0,1), (0,2), (1,2), (0,3), ...
+    Float sqrt, then one exact integer correction each way."""
+    j = ((1 + np.sqrt(8 * t.astype(np.float64) + 1)) // 2).astype(np.int64)
+    j -= j * (j - 1) // 2 > t
+    j += (j + 1) * j // 2 <= t
+    return j
+
+
+def _event_positions(keys: np.ndarray, cap: int, batch_rows: int
+                     ) -> Iterator[tuple[np.ndarray, np.ndarray, int]]:
+    """(positions a, positions b, hot flag) chunks of at most
+    ``batch_rows`` events over rows sorted by (key, id) with no duplicate
+    (key, id). Hot buckets (cap > 0 and more than ``cap`` rows) give
+    (first, other) per member after the first; cold buckets of 2+ rows
+    give every (i, j), i < j."""
+    n = len(keys)
+    if n < 2:
+        return
+    starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+    sizes = np.diff(np.r_[starts, n])
+    hot = sizes > cap if cap > 0 else np.zeros(len(sizes), bool)
+
+    if hot.any():
+        first = np.zeros(n, bool)
+        first[starts] = True
+        b = np.flatnonzero(np.repeat(hot, sizes) & ~first)
+        a = np.repeat(starts, sizes)[b]
+        for lo in range(0, len(b), batch_rows):
+            yield a[lo:lo + batch_rows], b[lo:lo + batch_rows], 1
+
+    cold = ~hot & (sizes >= 2)
+    cs, cz = starts[cold], sizes[cold]
+    off = np.r_[0, np.cumsum(cz * (cz - 1) // 2)]
+    for lo in range(0, int(off[-1]), batch_rows):
+        p = np.arange(lo, min(lo + batch_rows, off[-1]), dtype=np.int64)
+        bk = np.searchsorted(off, p, side="right") - 1
+        t = p - off[bk]
+        j = _triangle_root(t)
+        yield cs[bk] + t - j * (j - 1) // 2, cs[bk] + j, 0
+
+
+def _bucket_pass(batches: Iterator[pa.RecordBatch], cap: int,
+                 batch_rows: int, payload: str | None
+                 ) -> Iterator[pa.RecordBatch]:
+    """The bucket kernel over one partition's (__id, band_key [, payload])
+    rows: [id_a, id_b, __hot (, payload_a, payload_b)] event batches."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    tbl = pa.Table.from_batches(batches)
+    keep = pc.and_(pc.is_valid(tbl.column("__id")),
+                   pc.is_valid(tbl.column("band_key")))
+    if not pc.all(keep).as_py():
+        tbl = tbl.filter(keep)
+    ids = tbl.column("__id").to_numpy()
+    keys = tbl.column("band_key").to_numpy()
+    sort_keys = (ids, keys)
+    if payload:
+        pcol = tbl.column(payload)
+        pay = pcol.fill_null(0).to_numpy()
+        pay_null = pcol.is_null().to_numpy() if pcol.null_count else None
+        # the smallest payload is the one a duplicate (id, key) keeps
+        sort_keys = (pay,) + sort_keys
+    order = np.lexsort(sort_keys)
+    ids, keys = ids[order], keys[order]
+    uniq = np.r_[True, (keys[1:] != keys[:-1]) | (ids[1:] != ids[:-1])]
+    if not uniq.all():
+        order, ids, keys = order[uniq], ids[uniq], keys[uniq]
+    id_type = tbl.schema.field("__id").type
+    names = ["id_a", "id_b", "__hot"]
+    if payload:
+        pay_type = tbl.schema.field(payload).type
+        pay = pay[order]
+        if pay_null is not None:
+            pay_null = pay_null[order]
+        names += [f"{payload}_a", f"{payload}_b"]
+
+    for a, b, flag in _event_positions(keys, cap, batch_rows):
+        cols = [pa.array(ids[a], type=id_type),
+                pa.array(ids[b], type=id_type),
+                pa.array(np.full(len(a), flag, np.int32))]
+        if payload:
+            cols += [pa.array(pay[p], type=pay_type,
+                              mask=None if pay_null is None else pay_null[p])
+                     for p in (a, b)]
+        yield pa.RecordBatch.from_arrays(cols, names=names)
 
 
 def bucketed_pair_events(ex: DataFrame, max_bucket_size: int,
                          payload: str | None = None) -> DataFrame:
-    """Shared single-exchange candidate generation over (__id, band_key
-    [, payload]) rows — see module docstring for the plan shape.
+    """Candidate events over (__id, band_key [, payload]) rows: one band
+    exchange and one Arrow bucket pass (see the module docstring).
 
     Returns [id_a, id_b, __hot (, payload_a, payload_b)] — one row per
     band collision (NOT deduped across bands; callers aggregate), with
-    hot buckets degraded to star edges around their min-id member.
+    hot buckets degraded to star edges around their min-id member
+    (``__hot`` 1; cold pairs 0). id_a < id_b always. Rows whose id or
+    band key is null never pair.
     """
-    cols = ["__id"] + ([payload] if payload else [])
-    exr = ex.repartition("band_key")
-
-    star = None
-    if max_bucket_size > 0:
-        agg = [F.count("*").alias("__n"), F.min("__id").alias("__rep")]
-        if payload:
-            agg.append(F.min_by(F.col(payload), F.col("__id"))
-                       .alias("__rep_p"))
-        sizes = exr.groupBy("band_key").agg(*agg)
-        j = exr.join(sizes, "band_key")
-
-        rep_first = F.col("__rep") < F.col("__id")
-        star_cols = [F.least("__id", "__rep").alias("id_a"),
-                     F.greatest("__id", "__rep").alias("id_b"),
-                     F.lit(1).alias("__hot")]
-        if payload:
-            star_cols += [
-                F.when(rep_first, F.col("__rep_p"))
-                .otherwise(F.col(payload)).alias(f"{payload}_a"),
-                F.when(rep_first, F.col(payload))
-                .otherwise(F.col("__rep_p")).alias(f"{payload}_b")]
-        star = (j.where((F.col("__n") > max_bucket_size)
-                        & (F.col("__id") != F.col("__rep")))
-                .select(*star_cols))
-        cold = j.where(F.col("__n") <= max_bucket_size)
-    else:
-        cold = exr  # cap disabled: no sizes pass at all
-    members = (cold.groupBy("band_key")
-               .agg(F.array_sort(F.collect_list(F.struct(*cols)))
-                    .alias("__m")))
-    pair_cols = [F.col("__p.__id_a").alias("id_a"),
-                 F.col("__p.__id_b").alias("id_b"),
-                 F.lit(0).alias("__hot")]
+    cols = ["__id", "band_key"] + ([payload] if payload else [])
+    fields = [StructField("id_a", ex.schema["__id"].dataType, False),
+              StructField("id_b", ex.schema["__id"].dataType, False),
+              StructField("__hot", IntegerType(), False)]
     if payload:
-        pair_cols += [F.col(f"__p.{payload}_a"), F.col(f"__p.{payload}_b")]
-    pairs = (members
-             .where(F.size("__m") >= 2)  # most buckets are singletons —
-             # drop them before the higher-order pair expression evaluates
-             .select(F.explode(_pairs_expr("__m", cols)).alias("__p"))
-             .select(*pair_cols))
-    return pairs.unionByName(star) if star is not None else pairs
+        pf = ex.schema[payload]
+        fields += [StructField(f"{payload}_a", pf.dataType, pf.nullable),
+                   StructField(f"{payload}_b", pf.dataType, pf.nullable)]
+    batch_rows = int(ex.sparkSession.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch",
+        str(_DEFAULT_BATCH_ROWS)))
+    if batch_rows <= 0:
+        batch_rows = _DEFAULT_BATCH_ROWS
+
+    def bucket_pass(batches):
+        return _bucket_pass(batches, max_bucket_size, batch_rows, payload)
+
+    return (ex.select(*cols).repartition("band_key")
+            .mapInArrow(bucket_pass, StructType(fields)))
+
+
+# pair_candidates reaches the kernel through its own name: a caller may
+# swap the public attribute (a tracing wrapper that materializes the
+# events it returns), and the text path must not run through that swap
+_pair_events = bucketed_pair_events
 
 
 def candidate_pairs(df: DataFrame, cfg: DedupConfig, id_col: str,
@@ -143,92 +231,24 @@ def candidate_pairs(df: DataFrame, cfg: DedupConfig, id_col: str,
     count capped bands).
     """
     ex = explode_bands(df, id_col, bands_col)
-    min_nb = max(getattr(cfg, "min_band_matches", 1), 1)
-    return window_pair_candidates(ex, cfg.max_bucket_size, min_nb)
+    min_nb = getattr(cfg, "min_band_matches", 1)
+    return pair_candidates(ex, cfg.max_bucket_size, min_nb)
 
 
-def window_pair_candidates(ex: DataFrame, max_bucket_size: int,
-                           min_band_matches: int = 1) -> DataFrame:
-    """The near-unique-keyspace (window) formulation over an already-
-    exploded ``(__id, band_key)`` table — the shared core of
-    ``candidate_pairs`` (MinHash 2^64 keys) and of any other banding
-    whose keyspace is too large for the sizes-JOIN shape (e.g.
-    hyperplane LSH at >= ~20 bits/band in operators/similarity.py,
-    where the occupied-key count approaches the row count and a
-    keyspace-sized build side stops being small). See the module
-    docstring for the two-shape doctrine; semantics are identical to
-    ``bucketed_pair_events`` + the caller-side prefilter."""
-    min_nb = max(min_band_matches, 1)
-
-    if max_bucket_size > 0:
-        # ONE band exchange for everything. Bucket size and representative
-        # come from an unbounded WINDOW (count/min over partition by
-        # band_key) instead of a groupBy + join/broadcast: with
-        # near-unique keys a standalone sizes groupBy gains nothing from
-        # map-side combine (partials ~= data — measured ~900 MB of
-        # shuffled partials per 2M-image trial in the r2 shape), a
-        # co-located sizes JOIN builds data-sized hash maps (measured
-        # 7.4 GB of spill), and Catalyst defeats naive exchange sharing
-        # across join subtrees (anti-join pushdown below the repartition
-        # + per-consumer inferred-isnotnull filters de-canonicalize the
-        # copies — verified in-plan). The window formulation has no join
-        # at all, so its two consumers (star rows, cold rows) are
-        # canonically identical up to the post-window filter and the
-        # repartition exchange is genuinely reused (ReusedExchange /
-        # shared shuffle stage under AQE). Cost: one partition-local sort
-        # of 16-byte rows per consumer; hot buckets buffer (and spill)
-        # bucket_size x 16 B in the window frame, which replaces the r2
-        # shape's extra 900 MB exchange + two more cache scans + explodes.
-        exr = ex.repartition("band_key")
-        w = Window.partitionBy("band_key")
-        sized = exr.select(
-            "__id", "band_key",
-            F.count("*").over(w).alias("__n"),
-            F.min("__id").over(w).alias("__rep"))
-        # star edges qualify unconditionally, cold collisions count 1
-        # each toward the >= min_band_matches prefilter: folding both
-        # into ONE weight column (star weight >> any possible cold band
-        # count) drops the second aggregate column the (id_a, id_b)
-        # dedup shuffle used to carry (~100 MB per 2M-image trial).
-        # __rep is the bucket min, so id_a = __rep < __id always holds.
-        star = (sized.where((F.col("__n") > max_bucket_size)
-                            & (F.col("__id") != F.col("__rep")))
-                .select(F.col("__rep").alias("id_a"),
-                        F.col("__id").alias("id_b"),
-                        F.lit(_STAR_W).alias("__w")))
-        # cold pairs: partition-local collect per bucket (bounded by
-        # max_bucket_size) + JVM higher-order pair expression — the
-        # groupBy runs exchange-free on the window's co-partitioned,
-        # already-sorted output
-        members = (sized.where(F.col("__n") <= max_bucket_size)
-                   .groupBy("band_key")
-                   .agg(F.array_sort(
-                        F.collect_list(F.struct(F.col("__id"))))
-                        .alias("__m")))
-        events = (members
-                  .where(F.size("__m") >= 2)  # most buckets are singletons
-                  .select(F.explode(_pairs_expr("__m", ["__id"]))
-                          .alias("__p"))
-                  .select(F.col("__p.__id_a").alias("id_a"),
-                          F.col("__p.__id_b").alias("id_b"),
-                          F.lit(1).alias("__w"))
-                  .unionByName(star))
-    else:
-        # cap disabled: plain band self-join, no sizes pass at all
-        a = ex.alias("a")
-        b = ex.alias("b")
-        events = (a.join(b, ["band_key"])
-                  .where(F.col("a.__id") < F.col("b.__id"))
-                  .select(F.col("a.__id").alias("id_a"),
-                          F.col("b.__id").alias("id_b"),
-                          F.lit(1).alias("__w")))
-
-    # ONE shuffle dedups pairs AND evaluates the prefilter: a true pair at
-    # the jaccard threshold co-buckets in many cold bands, a false
-    # candidate in ~1; star edges carry _STAR_W so they pass any min_nb.
-    return (events.groupBy("id_a", "id_b")
-            .agg(F.sum("__w").alias("__w"))
-            .where(F.col("__w") >= min_nb)
+def pair_candidates(ex: DataFrame, max_bucket_size: int,
+                    min_band_matches: int = 1) -> DataFrame:
+    """DataFrame[id_a, id_b] — the bucket pass's events over an already-
+    exploded ``(__id, band_key)`` table, deduped across bands by ONE
+    (id_a, id_b) aggregate that also evaluates the prefilter: a true pair
+    at the jaccard threshold co-buckets in many cold bands, a false
+    candidate in ~1. Star edges and cold collisions fold into one weight
+    column (star weight _STAR_W >> any possible cold band count), so the
+    dedup shuffle carries a single aggregate column."""
+    w = F.when(F.col("__hot") == 1, F.lit(_STAR_W)).otherwise(F.lit(1))
+    return (_pair_events(ex, max_bucket_size)
+            .groupBy("id_a", "id_b")
+            .agg(F.sum(w).alias("__w"))
+            .where(F.col("__w") >= max(min_band_matches, 1))
             .select("id_a", "id_b"))
 
 

@@ -20,12 +20,6 @@ from pyspark.sql.types import ArrayType, LongType
 
 from datasketches_rust_spark.hashing import murmur3_x64_128
 
-# bits-per-band at which hyperplane band keys stop being a "small
-# keyspace" (sizes-JOIN build side = num_bands * 2^w keys; at w >= 20
-# that is >= num_bands x 1M keys — data-sized, so candidate generation
-# switches to the MinHash window formulation; operators/lsh docstring)
-_WINDOW_FORM_BITS = 20
-
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -139,52 +133,25 @@ def _band_candidates(df: DataFrame, id_col: str, vec_col: str, dim: int,
     caller). Dedup + the >=min_band_matches prefilter happen in one
     groupBy on the id pair.
 
-    Hot-bucket guard, chosen by band-keyspace size (the operators/lsh
-    two-shape doctrine): at the default low-threshold parameters the
-    keys live in a SMALL keyspace (2^(nbits/num_bands) x num_bands)
-    and candidate generation routes through
-    operators/lsh.bucketed_pair_events — the single-exchange
-    small-keyspace shape whose sizes-JOIN build side is keyspace-sized.
-    At selective near-dup parameters (>= _WINDOW_FORM_BITS bits per
-    band) the occupied-key count approaches the row count, a
-    keyspace-sized build side stops being small, and candidate
-    generation routes through lsh.window_pair_candidates — the MinHash
-    window formulation (one reused band exchange, sizes from a window,
-    no join). Either way buckets over ``max_bucket_size`` degrade
-    to star edges around their min-id member instead of O(size^2) pairs
-    (a crawl-scale cluster of near-identical embeddings lands its whole
-    population in the same bucket of EVERY band; the downstream exact
-    verify keeps star edges between true dups and rejects hash
-    coincidences, so connected components still recover the cluster).
-    Star edges bypass min_band_matches — capped buckets were never
-    counted. Set max_bucket_size=0 to restore exact pairwise candidates.
+    Hot-bucket guard: candidate generation is operators/lsh's one bucket
+    pass (one band exchange, one Arrow pass; lsh.pair_candidates), the
+    same for small keyspaces (the default low-threshold parameters,
+    2^(nbits/num_bands) x num_bands keys) and for selective near-dup
+    parameters whose occupied keys approach the row count. Buckets over
+    ``max_bucket_size`` degrade to star edges around their min-id member
+    instead of O(size^2) pairs (a crawl-scale cluster of near-identical
+    embeddings lands its whole population in the same bucket of EVERY
+    band; the downstream exact verify keeps star edges between true dups
+    and rejects hash coincidences, so connected components still recover
+    the cluster). Star edges bypass min_band_matches — capped buckets
+    were never counted. Set max_bucket_size=0 to restore exact pairwise
+    candidates.
     """
+    from datasketches_rust_spark.operators.lsh import pair_candidates
     bands = hyperplane_bands_udf(dim, nbits, num_bands, seed)
     keyed = df.select(F.col(id_col).alias("__id"),
                       F.explode(bands(F.col(vec_col))).alias("band_key"))
-    if max_bucket_size > 0 and nbits // num_bands >= _WINDOW_FORM_BITS:
-        from datasketches_rust_spark.operators.lsh import \
-            window_pair_candidates
-        pairs = window_pair_candidates(keyed, max_bucket_size,
-                                       min_band_matches)
-    elif max_bucket_size > 0:
-        from datasketches_rust_spark.operators.lsh import \
-            bucketed_pair_events
-        ev = bucketed_pair_events(keyed, max_bucket_size)
-        pairs = (ev.groupBy("id_a", "id_b")
-                 .agg(F.sum(1 - F.col("__hot")).alias("__nb"),
-                      F.max("__hot").alias("__star"))
-                 .where((F.col("__star") == 1)
-                        | (F.col("__nb") >= min_band_matches))
-                 .select("id_a", "id_b"))
-    else:
-        a = keyed.select(F.col("__id").alias("id_a"), "band_key")
-        b = keyed.select(F.col("__id").alias("id_b"), "band_key")
-        pairs = (a.join(b, "band_key")
-                 .where(F.col("id_a") < F.col("id_b"))
-                 .groupBy("id_a", "id_b").count()
-                 .where(F.col("count") >= min_band_matches)
-                 .select("id_a", "id_b"))
+    pairs = pair_candidates(keyed, max_bucket_size, min_band_matches)
     if symmetric:
         pairs = pairs.unionByName(
             pairs.select(F.col("id_b").alias("id_a"),
@@ -471,8 +438,8 @@ def semantic_dedup(df: DataFrame, threshold: float, nlist: int = 8,
     Scale shape: clustering IS the method's all-pairs guard — nlist
     grows with n (the paper uses ~n/10^4 clusters) so cells stay
     bounded, and the within-cell pairing routes through
-    bucketed_pair_events (cells are a small keyspace, the sizes-JOIN
-    shape) where cells over ``max_cell_size`` degrade to star edges
+    bucketed_pair_events (the one bucket pass of operators/lsh, cells as
+    band keys) where cells over ``max_cell_size`` degrade to star edges
     around the min-id member instead of O(size^2) pairs — the exact
     verify keeps true-dup star edges and CC reconnects the group. Only
     (id, cell) rows enter the pairing exchange; vectors re-join once

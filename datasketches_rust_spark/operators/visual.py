@@ -62,11 +62,11 @@ def simhash_pairs(df: DataFrame, id_col: str, fp_col: str,
     # Single-exchange bucketed candidate generation shared with the text
     # LSH (operators/lsh.bucketed_pair_events). This matters doubly here:
     # the band keyspace is only 2^(64/num_bands) x num_bands keys (262144
-    # at 4 bands), so the former groupBy-sizes hot guard emitted up to
-    # |keyspace| MAP-SIDE partial rows PER TASK — measured 470 MB of
-    # partials for 79 MB of raw band rows at 1M images x 64 tasks. Now the
-    # one exchange carries the raw 24-byte rows and sizes/star/pair-gen
-    # all run co-located on it.
+    # at 4 bands), so a groupBy-sizes hot guard emits up to |keyspace|
+    # MAP-SIDE partial rows PER TASK — measured 470 MB of partials for
+    # 79 MB of raw band rows at 1M images x 64 tasks. The one exchange
+    # carries the raw 24-byte rows, and one Arrow pass per partition
+    # finds sizes, stars and pairs from a single sort.
     ex = simhash_bands(df, id_col, fp_col, num_bands)
     cand = bucketed_pair_events(ex, max_bucket_size, payload=fp_col)
     # Hamming filter FIRST, distinct second: with w-bit band keys the band

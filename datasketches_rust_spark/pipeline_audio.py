@@ -1,8 +1,8 @@
 """Audio-axis near-dup pipeline: WAV decode -> (64-bit sign code +
 8x8 spectral-shape feature) in ONE pass (sketches/audiofp.py) ->
-pigeonhole banding on the code (operators/lsh.bucketed_pair_events,
-the small-keyspace sizes-JOIN shape) -> JVM dot-product verify on the
-features -> connected components. Completes the modality set next to
+pigeonhole banding on the code (operators/lsh.bucketed_pair_events:
+one band exchange, one Arrow bucket pass) -> JVM dot-product verify on
+the features -> connected components. Completes the modality set next to
 text (MinHash/LSH), image (phash), and embedding (cosine-LSH/IVF)
 dedup.
 
@@ -10,10 +10,10 @@ Scale discipline, inherited from the image/text axes:
 - decode + FFT run ONCE per clip in an Arrow-batched mapInPandas at
   the scan; the bytes column never travels past it.
 - candidate generation shuffles (id, band_key, afp) rows — 24 bytes —
-  through ONE band_key exchange; the triple-slice keyspace (see
+  through ONE band_key exchange (the triple-slice keyspace: see
   AUDIO_SLICE_TRIPLES for the measured entropy ladder that chose it)
-  is small, so this is the sizes-JOIN shape (operators/lsh.py
-  docstring), with hot buckets star-degraded.
+  into the one bucket pass of operators/lsh.py, with hot buckets
+  star-degraded.
 - the 256-byte feature vectors do NOT ride the band shuffle: the
   Hamming prefilter (bit_count(xor) <= 12, whole-stage codegen) and
   pair-distinct run on 16-byte id pairs first, and features join back
@@ -47,9 +47,10 @@ AUDIO_VERIFY_COSINE = 0.95    # dup >= 0.9997, distinct <= 0.876
 # ring combos at strides 1/2/3), arrived at by measurement up the
 # entropy ladder:
 # - single 8-bit slices (one segment's band bits) carry ~6 effective
-#   bits: buckets hit 4.6k members at 60k clips and the 573M pair
-#   events OOM the per-bucket arrays (bucketed_pair_events
-#   materializes ~size^2/2 structs per bucket row before exploding).
+#   bits: buckets hit 4.6k members at 60k clips and 573M pair events.
+#   That OOMed the JVM pair shape of the time, which built a bucket's
+#   ~size^2/2 pair structs in one array; the bucket pass now emits
+#   pairs in Arrow batches, but 573M events is still the volume wall.
 # - PAIR keys (16-bit) fix 60k (max bucket 499, 26M events at hot-cap
 #   256) but the cap must scale with n to hold recall — measured at
 #   240k: cap 256 drops coverage to 0.9229 (pipeline recall 0.926),

@@ -420,6 +420,20 @@ def q_dedup_against_index(spark, sf_dir):
                     (-F.col("m.neg")).cast("long").alias("best_index_id")))
 
 
+def _pairs_expr(members_col: str, fields: list[str]):
+    """All ordered pairs (i < j) from a SORTED array<struct> column, as an
+    array of named structs — pure JVM higher-order functions, no Python.
+    Struct order = first field = id, so id_a < id_b holds by
+    construction."""
+    names = [f"'{f}_a', x.{f}" for f in fields] + \
+            [f"'{f}_b', y.{f}" for f in fields]
+    return F.expr(
+        f"flatten(transform({members_col}, (x, i) -> "
+        f"transform(slice({members_col}, i + 2, "
+        f"size({members_col}) - i - 1), "
+        f"y -> named_struct({', '.join(names)}))))")
+
+
 NGRAM_DF_CAP = 100_000  # > any fixture doc count -> oracle stays exact
 
 
@@ -450,7 +464,6 @@ def q_ngram_jaccard_pairs(spark, sf_dir, df_cap: int = NGRAM_DF_CAP):
     higher-order expression. Doc sizes need no aggregate at all: the
     gram array is already distinct per doc, so n = size(grams) is a
     pure map over a second pruned scan."""
-    from datasketches_rust_spark.operators.lsh import _pairs_expr
     docs = _t(spark, sf_dir, "documents")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     grams = F.array_distinct(F.transform(
@@ -501,7 +514,6 @@ def q_containment_dup_pairs(spark, sf_dir, df_cap: int = NGRAM_DF_CAP):
     Jaccard-safe: dropping a shared gram only lowers the measured
     intersection, so no false positives; with the default cap above
     fixture df the DuckDB oracle is exactly equal."""
-    from datasketches_rust_spark.operators.lsh import _pairs_expr
     docs = _t(spark, sf_dir, "documents")
     grams = F.expr(
         "array_distinct(transform("

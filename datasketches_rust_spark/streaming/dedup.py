@@ -35,8 +35,9 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
-                               IntegerType, LongType, StringType,
-                               StructField, StructType, TimestampType)
+                               IntegerType, LongType, NumericType,
+                               StringType, StructField, StructType,
+                               TimestampType)
 
 from datasketches_rust_spark.config import DedupConfig
 from datasketches_rust_spark.functions.text import (exact_jaccard_udf,
@@ -191,17 +192,34 @@ def read_merged_sketches(spark, state_dir: str, key_cols: list[str],
 _SKETCH_STATE = StructType([StructField("sketch", BinaryType()),
                             StructField("rows_seen", LongType())])
 
+_NULL_FLAG = "__null"
+
+
+def _null_free(df: DataFrame, value_col: str) -> DataFrame:
+    """``df`` with a numeric ``value_col``'s nulls replaced by 0 and
+    recorded in a boolean ``__null`` column, for the trip through pandas:
+    pandas holds a bigint column that has a null as float64 (values
+    above 2^53 round) and a double column's NaN the same as its null.
+    ``_sketch_state_step`` puts the nulls back from the flag."""
+    v = F.col(value_col)
+    t = df.schema[value_col].dataType
+    filled = F.coalesce(v, F.lit(0).cast(t)) \
+        if isinstance(t, NumericType) else v
+    return (df.withColumn(_NULL_FLAG, v.isNull())
+            .withColumn(value_col, filled))
+
 
 def _sketch_state_step(kd, state, frames, value_col: str,
                        value_type: pa.DataType):
     """The one load-or-build / update / store step of the sketch state
     operators. Loads the group's sketch and row count from ``state`` (or
     builds an empty sketch), updates it with every frame's ``value_col``
-    and stores it back. Each frame's column is turned back into the
-    field's Arrow type first: pandas holds a bigint column with a null as
-    floats, which hash differently; as Arrow, the values enter the sketch
-    exactly as in ``agg.sketch_agg``. A timed-out state is loaded and
-    removed. Returns (sketch, rows seen)."""
+    and stores it back. The frames come from ``_null_free``: each
+    frame's null-free column is turned back into the field's Arrow type
+    with the ``__null`` flag as its mask, so the values (NaN and longs
+    above 2^53 included) enter the sketch exactly as in
+    ``agg.sketch_agg``. A timed-out state is loaded and removed. Returns
+    (sketch, rows seen)."""
     if state.exists:
         blob, rows_seen = state.get
         sk = kd.deserialize(bytes(blob))
@@ -211,8 +229,9 @@ def _sketch_state_step(kd, state, frames, value_col: str,
         state.remove()
         return sk, rows_seen
     for pdf in frames:
-        kd.update_arrow(sk, pa.Array.from_pandas(pdf[value_col],
-                                                 type=value_type))
+        kd.update_arrow(sk, pa.array(
+            pdf[value_col].to_numpy(), type=value_type, from_pandas=False,
+            mask=pdf[_NULL_FLAG].to_numpy(bool)))
         rows_seen += len(pdf)
     state.update((bytes(sk.serialize()), rows_seen))
     return sk, rows_seen
@@ -272,7 +291,7 @@ def stateful_sketch_estimates(stream_df: DataFrame, key_cols: list[str],
             row["sketch"] = state.get[0]
         yield pd.DataFrame([row])
 
-    return (stream_df.groupBy(*key_cols)
+    return (_null_free(stream_df, value_col).groupBy(*key_cols)
             .applyInPandasWithState(fn, StructType(out_fields),
                                     _SKETCH_STATE, "Update",
                                     GroupStateTimeout.NoTimeout))
@@ -539,7 +558,7 @@ def _windowed_sketch_apply(stream_df, key_cols, ts_col, value_col, kd,
                         F.timestamp_micros(F.col("__s") + F.lit(w_us))
                         .alias("end")))
                     .drop("__s"))
-    wdf = windowed.withWatermark(ts_col, watermark)
+    wdf = _null_free(windowed, value_col).withWatermark(ts_col, watermark)
     return (wdf.groupBy("__win", *[F.col(k) for k in key_cols])
             .applyInPandasWithState(fn, out_schema, _SKETCH_STATE,
                                     "Update",

@@ -401,11 +401,15 @@ def test_sql_builders_match_sketch_agg(spark, nullable_cols, kind):
 def test_stateful_operator_matches_sketch_agg(spark, nullable_cols, kind,
                                               tmp_path):
     """``stateful_sketch_estimates(..., emit_sketch=True)`` emits the blob
-    ``sketch_agg`` writes over the same rows, byte for byte."""
+    ``sketch_agg`` writes over the same rows, byte for byte — also for a
+    bigint above 2^53 next to a null (pandas would hold it as a rounded
+    float) and a double NaN (pandas would read it as null)."""
+    extra = spark.createDataFrame([(2**53 + 1, float("nan"), "nan")],
+                                  nullable_cols.schema)
+    rows = nullable_cols.unionByName(extra).coalesce(1)
     for col in ("i", "f", "s"):
-        want = agg.sketch_blob(nullable_cols, col, kind, **_WRITER_KW[kind])
-        assert _streamed_blob(spark, nullable_cols, col, kind,
-                              tmp_path) == want, col
+        want = agg.sketch_blob(rows, col, kind, **_WRITER_KW[kind])
+        assert _streamed_blob(spark, rows, col, kind, tmp_path) == want, col
 
 
 def test_sql_and_batch_theta_blobs_union(spark, nullable_cols):
@@ -441,6 +445,30 @@ def test_sql_probes_with_null_item(spark, nullable_cols):
     assert sum(r["n"] is not None and r["n"] >= 1 for r in rows) == 1000
     (null_row,) = [r for r in rows if r["i"] is None]
     assert null_row["hit"] is None and null_row["n"] is None
+
+
+@pytest.mark.parametrize("keyed", [True, False])
+def test_merge_skips_null_blobs(spark, keyed):
+    """An outer join leaves null blobs; merging them skips the nulls as
+    the readers do, and a key whose blobs are all null merges to null."""
+    vals = spark.createDataFrame([("a", 1.0), ("a", 2.0), ("c", 3.0)],
+                                 "k string, v double")
+    keys = spark.createDataFrame([("a",), ("b",), ("c",)], "k string")
+    sk = agg.sketch_agg(vals, ["k"], "v", "theta")
+    joined = keys.join(sk.where(F.col("k") != "c"), "k", "full_outer")
+    joined = joined.unionByName(sk)  # "a": two blobs, "c": one, "b": null
+    est = agg.estimate_udf("theta", as_long=True)
+    if keyed:
+        merged = agg.merge_sketch_col(joined, ["k"], "theta")
+        got = {r["k"]: r["e"] for r in merged.select(
+            "k", est("sketch").alias("e")).collect()}
+        assert got == {"a": 2, "b": None, "c": 1}
+        return
+    merged = agg.merge_sketch_col(joined.select("sketch"), [], "theta")
+    assert merged.select(est("sketch")).collect()[0][0] == 3
+    nulls = joined.where(F.col("k") == "b").select("sketch")
+    (row,) = agg.merge_sketch_col(nulls, [], "theta").collect()
+    assert row["sketch"] is None
 
 
 def test_finishers_null_blob(spark):

@@ -136,14 +136,14 @@ class TestEmbeddingHotBucket:
 
 
 class TestCandidatePlanShape:
-    def test_single_band_exchange_reused(self, spark):
-        """candidate_pairs must materialize exactly ONE band exchange:
-        the window formulation's two consumers (star rows, cold rows)
-        are canonically identical below the window, so the second reads
-        a ReusedExchange. Asserted AQE-off because AQE resolves reuse at
-        runtime (plan-only check, no job runs); the r2 shape measured
-        ~900 MB/2M-image trial of extra sizes partials that this
-        eliminates."""
+    def test_one_band_exchange_one_arrow_pass(self, spark):
+        """candidate_pairs plans exactly ONE band exchange
+        (REPARTITION_BY_COL on band_key), ONE MapInArrow bucket pass that
+        takes only (__id, band_key), and no Window or join: sizes,
+        representatives and pairs all come from the pass's one
+        partition-local sort. Asserted AQE-off (plan only, no job)."""
+        import re
+
         from datasketches_rust_spark.operators.lsh import candidate_pairs
         cfg = DedupConfig()
         rows = [(i, [100 + i, 200 + i, 300 + (i % 3)]) for i in range(20)]
@@ -155,15 +155,39 @@ class TestCandidatePlanShape:
                     ._jdf.queryExecution().executedPlan().toString())
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        import re
-        mats = [ln for ln in plan.splitlines()
-                if re.search(r"Exchange hashpartitioning\(band_key#\d+L, "
-                             r"\d+\), REPARTITION_BY_COL", ln)
-                and "ReusedExchange" not in ln]
-        assert len(mats) == 1, plan
-        assert "ReusedExchange" in plan, plan
-        assert not re.search(r"SortMergeJoin|ShuffledHashJoin|"
-                             r"BroadcastHashJoin", plan), plan
+        band_ex = re.findall(r"Exchange hashpartitioning\(band_key#\d+L, "
+                             r"\d+\), REPARTITION_BY_COL", plan)
+        assert len(band_ex) == 1, plan
+        assert len(re.findall(r"Exchange ", plan)) == 2, plan  # + dedup
+        arrow = re.findall(r"MapInArrow \w+\(([^)]*)\)", plan)
+        assert len(arrow) == 1, plan
+        assert re.fullmatch(r"__id#\d+L, band_key#\d+L", arrow[0]), plan
+        assert "Window" not in plan and "ReusedExchange" not in plan, plan
+        assert not re.search(r"Join|CartesianProduct", plan), plan
+
+
+@pytest.mark.parametrize("path", ["cap512", "cap0", "payload"])
+def test_null_ids_and_keys_never_pair(spark, path):
+    """Rows with a null id or a null band key are dropped inside the
+    bucket pass, on every path: the default cap, cap 0 (every bucket
+    cold) and the payload path the Hamming callers use."""
+    from datasketches_rust_spark.operators.lsh import (bucketed_pair_events,
+                                                       candidate_pairs,
+                                                       explode_bands)
+    rows = [(1, [10, 20]), (2, [10, 21]), (None, [10, 22]),
+            (None, [10, 23]), (3, [None, 24]), (4, [None, 25])]
+    df = spark.createDataFrame(rows, "id long, bands array<long>")
+    if path == "payload":
+        ex = explode_bands(df, "id", "bands").withColumn(
+            "fp", F.coalesce(F.col("__id"), F.lit(-1)) * 10)
+        got = {tuple(r) for r in
+               bucketed_pair_events(ex, 512, payload="fp").collect()}
+        assert got == {(1, 2, 0, 10, 20)}
+        return
+    cfg = DedupConfig(max_bucket_size=512 if path == "cap512" else 0,
+                      min_band_matches=1)
+    got = {tuple(r) for r in candidate_pairs(df, cfg, "id").collect()}
+    assert got == {(1, 2)}
 
 
 class TestSimhashHotBucket:

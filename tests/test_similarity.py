@@ -269,15 +269,10 @@ def test_semantic_dedup_matches_numpy(spark, emb, emb_np):
 
 
 def test_cosine_pairs_lsh_window_form(spark):
-    """Selective (near-dup) hyperplane parameters route candidate
-    generation through the MinHash WINDOW formulation (>= 20 bits per
-    band -> occupied keys ~ rows, a keyspace-sized sizes-JOIN build
-    side stops being small — the operators/lsh two-shape doctrine,
-    r5). Pins: (1) the two shapes return IDENTICAL pairs on the same
-    parameters, (2) recall/precision 1.0 vs numpy brute force for
-    planted near-dups at threshold 0.9, (3) the plan routing really
-    switches on _WINDOW_FORM_BITS (window form plans a Window over
-    band_key; sizes-JOIN form plans a join)."""
+    """Selective (near-dup) hyperplane parameters — 384 bits in 16 bands,
+    24 bits per band, so occupied band keys approach the row count —
+    through the one LSH bucket pass: recall/precision 1.0 vs numpy brute
+    force for planted near-dups at threshold 0.9."""
     import pandas as pd
     import datasketches_rust_spark.operators.similarity as S
 
@@ -292,23 +287,9 @@ def test_cosine_pairs_lsh_window_form(spark):
                         "embedding": [r.astype(np.float32) for r in base]})
     emb = spark.createDataFrame(pdf)
 
-    win = S.cosine_pairs_lsh(emb, threshold=0.9, nbits=384,
-                             num_bands=16, dim=64)
-    assert "windowspecdefinition(band_key" in \
-        win._jdf.queryExecution().optimizedPlan().toString() or \
-        "Window" in win._jdf.queryExecution().executedPlan().toString()
-    got_w = {(r.id_a, r.id_b) for r in win.collect()}
-
-    old = S._WINDOW_FORM_BITS
-    try:
-        S._WINDOW_FORM_BITS = 99  # force the sizes-JOIN shape
-        sj = S.cosine_pairs_lsh(emb, threshold=0.9, nbits=384,
-                                num_bands=16, dim=64)
-        got_s = {(r.id_a, r.id_b) for r in sj.collect()}
-    finally:
-        S._WINDOW_FORM_BITS = old
-
-    assert got_w == got_s
+    got_w = {(r.id_a, r.id_b) for r in
+             S.cosine_pairs_lsh(emb, threshold=0.9, nbits=384,
+                                num_bands=16, dim=64).collect()}
 
     bn = base / np.linalg.norm(base, axis=1, keepdims=True)
     cc = bn @ bn.T

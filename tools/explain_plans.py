@@ -177,33 +177,33 @@ def main() -> None:
         "BroadcastHashJoin used": r"BroadcastHashJoin",
     })
 
-    # 5. LSH candidate generation: single shared band exchange + window
-    #    sizes (no join anywhere in the candidate plan)
+    # 5. LSH candidate generation: one band exchange into one Arrow
+    #    bucket pass (no window, no join anywhere in the candidate plan)
     from datasketches_rust_spark.operators.lsh import candidate_pairs
     cands = candidate_pairs(sigs, cfg, "doc_id")
 
-    def _band_exchanges_reusable(p: str) -> bool:
-        # the two consumers' REPARTITION_BY_COL band exchanges must carry
-        # the identical 2-column (__id, band_key) input — the canonical-
-        # equality precondition for runtime exchange reuse (the actual
-        # ReusedExchange node is asserted AQE-off in
-        # tests/test_scale_hazards.py, since AQE resolves reuse at
-        # runtime, not in this static plan)
-        ids = [m.start() for m in re.finditer(r"REPARTITION_BY_COL", p)]
-        if not ids:
-            return False
-        inputs = re.findall(
+    def _one_band_exchange(p: str) -> bool:
+        # formatted plans print each node's Arguments; the band exchange
+        # is the only REPARTITION_BY_COL and it carries (__id, band_key)
+        return len(re.findall(
             r"Input \[2\]: \[__id#\d+L, band_key#\d+L\]\nArguments: "
             r"hashpartitioning\(band_key#\d+L, \d+\), REPARTITION_BY_COL",
-            p)
-        return len(inputs) == len(ids)
+            p)) == 1 == len(re.findall(r"REPARTITION_BY_COL", p))
+
+    def _one_bucket_pass(p: str) -> bool:
+        # exactly one MapInArrow node, fed only (__id, band_key)
+        return _n_nodes(p, "MapInArrow") == 1 and re.search(
+            r"\(\d+\) MapInArrow\n"
+            r"Input \[2\]: \[__id#\d+L, band_key#\d+L\]", p) is not None
 
     failures += audit("lsh candidate_pairs", cands, {
-        "window computes bucket sizes (no sizes join/exchange)":
-            r"windowspecdefinition\(band_key",
-        "band exchanges identical (reuse precondition)":
-            _band_exchanges_reusable,
-        "no join in the candidate plan (window + local pairs)":
+        "exactly one band exchange (REPARTITION_BY_COL, __id + band_key)":
+            _one_band_exchange,
+        "one MapInArrow bucket pass over (__id, band_key) only":
+            _one_bucket_pass,
+        "no Window (bucket sizes come from the pass's own sort)":
+            lambda p: "Window" not in p,
+        "no join in the candidate plan":
             lambda p: not re.search(r"SortMergeJoin|ShuffledHashJoin|"
                                     r"BroadcastHashJoin|NestedLoop", p),
     })

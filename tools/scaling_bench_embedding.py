@@ -9,10 +9,12 @@ exchange with the 4096 hot-bucket star degrade, vectors re-joined
 once for the exact-cosine verify) — at the NEAR-DUP operating point a
 100 TB dedup deployment would use: threshold 0.9, 384 bits x 16 bands
 (24 bits/band). At >= 20 bits per band the occupied band keys are
-near-unique, so candidate generation routes through the MinHash
-WINDOW formulation (operators/lsh.window_pair_candidates — the r5
-two-shape routing; equivalence + recall 1.0 pinned by
-tests/test_similarity.py::test_cosine_pairs_lsh_window_form). The
+near-unique; candidate generation is the one LSH bucket pass
+(operators/lsh.pair_candidates; recall 1.0 pinned by
+tests/test_similarity.py::test_cosine_pairs_lsh_window_form).
+SCALING_r05_embedding.json was measured on the window shape that pass
+replaced (BASELINE.md, "Artifacts measured on superseded LSH
+shapes"). The
 query's own low-threshold default (0.45, 4-bit bands) is the WRONG
 operating point to measure at corpus scale: every 16-key band bucket
 holds ~n/16 members, star-degrades, and planted-pair recall collapses
