@@ -44,8 +44,7 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     from pyspark.storagelevel import StorageLevel
     from datasketches_rust_spark.cache import release_tracked
 
-    sym = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-           .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))))
+    sym = _symmetric_edges(edges, src, dst)
     # serialized storage (pyspark's MEMORY_AND_DISK is the serialized
     # variant; the JVM localCheckpoint default is the DESER one): the
     # checkpoint is re-read 1-2x per round (own + msgs legs), and
@@ -139,6 +138,19 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
 
     return labels.select(F.col("v").alias(id_col),
                          F.col("label").alias("cluster_id"))
+
+
+def _symmetric_edges(edges: DataFrame, src: str = "id_a",
+                    dst: str = "id_b") -> DataFrame:
+    """DataFrame[s, d] — both directions of every edge from ONE pass
+    over ``edges``. A union of the two directions would run the edge
+    plan once per union leg: exchange reuse shares only the shuffles, so
+    everything above the last exchange (a Python verify UDF, say) would
+    be evaluated twice."""
+    s, d = F.col(src), F.col(dst)
+    return edges.select(F.inline(F.array(
+        F.struct(s.alias("s"), d.alias("d")),
+        F.struct(d.alias("s"), s.alias("d")))))
 
 
 def assign_clusters(items: DataFrame, edges_fn, id_col: str = "id"

@@ -2,13 +2,15 @@
 pipeline, so everything here is shaped around shuffle hygiene.
 
 ONE formulation serves every banded modality: MinHash text and caption
-bands (``candidate_pairs``), SimHash pigeonhole slices of image and video
-phashes (operators/visual.py), audio slice triples on clip codes and the
-audio-frame near tier (pipeline_audio.py), hyperplane bands of
+bands (``candidate_pairs``), every 64-bit code through the one
+Hamming-code pair operator operators/visual.simhash_pairs (pigeonhole
+slices of image and video phashes and caption SimHashes, slice triples
+of audio clip codes and the audio-frame near tier), hyperplane bands of
 embeddings and IVF cells of ``semantic_dedup`` (operators/similarity.py):
 
   repartition(band_key)    -- THE one band exchange: only (__id,
-                              band_key [, payload]) rows, 16-24 bytes
+                              band_key, *payload) rows, 16 bytes plus
+                              the payload
   mapInArrow bucket pass   -- per partition, in numpy: drop rows whose
                               id or key is null, lexsort by (band_key,
                               __id), find the bucket bounds, then emit
@@ -21,7 +23,9 @@ embeddings and IVF cells of ``semantic_dedup`` (operators/similarity.py):
   groupBy (id_a, id_b)     -- callers dedup pairs across bands; the
                               ``pair_candidates`` dedup also evaluates the
                               >= min_band_matches prefilter via one folded
-                              weight column (star edges = _STAR_W)
+                              weight column (star edges = _STAR_W), and
+                              ``simhash_pairs`` gates on Hamming distance
+                              before its distinct
 
 A bucket is a set of ids: duplicate (__id, band_key) rows count once.
 ``max_bucket_size`` 0 makes every bucket cold (exact pairwise candidates).
@@ -135,10 +139,11 @@ def _event_positions(keys: np.ndarray, cap: int, batch_rows: int
 
 
 def _bucket_pass(batches: Iterator[pa.RecordBatch], cap: int,
-                 batch_rows: int, payload: str | None
+                 batch_rows: int, payload: tuple[str, ...]
                  ) -> Iterator[pa.RecordBatch]:
-    """The bucket kernel over one partition's (__id, band_key [, payload])
-    rows: [id_a, id_b, __hot (, payload_a, payload_b)] event batches."""
+    """The bucket kernel over one partition's (__id, band_key, *payload)
+    rows: [id_a, id_b, __hot, (p_a, p_b for p in payload)] event
+    batches."""
     batches = [b for b in batches if b.num_rows]
     if not batches:
         return
@@ -149,57 +154,52 @@ def _bucket_pass(batches: Iterator[pa.RecordBatch], cap: int,
         tbl = tbl.filter(keep)
     ids = tbl.column("__id").to_numpy()
     keys = tbl.column("band_key").to_numpy()
-    sort_keys = (ids, keys)
-    if payload:
-        pcol = tbl.column(payload)
-        pay = pcol.fill_null(0).to_numpy()
-        pay_null = pcol.is_null().to_numpy() if pcol.null_count else None
-        # the smallest payload is the one a duplicate (id, key) keeps
-        sort_keys = (pay,) + sort_keys
-    order = np.lexsort(sort_keys)
+    pays = []  # (values with nulls as 0, null mask or None, Arrow type)
+    for p in payload:
+        c = tbl.column(p)
+        pays.append((c.fill_null(0).to_numpy(),
+                     c.is_null().to_numpy() if c.null_count else None,
+                     c.type))
+    # the lowest payload tuple is the one a duplicate (id, key) keeps
+    order = np.lexsort(tuple(v for v, _, _ in reversed(pays)) + (ids, keys))
     ids, keys = ids[order], keys[order]
     uniq = np.r_[True, (keys[1:] != keys[:-1]) | (ids[1:] != ids[:-1])]
     if not uniq.all():
         order, ids, keys = order[uniq], ids[uniq], keys[uniq]
+    pays = [(v[order], None if m is None else m[order], t)
+            for v, m, t in pays]
     id_type = tbl.schema.field("__id").type
-    names = ["id_a", "id_b", "__hot"]
-    if payload:
-        pay_type = tbl.schema.field(payload).type
-        pay = pay[order]
-        if pay_null is not None:
-            pay_null = pay_null[order]
-        names += [f"{payload}_a", f"{payload}_b"]
+    names = ["id_a", "id_b", "__hot"] + [f"{p}_{s}" for p in payload
+                                         for s in "ab"]
 
     for a, b, flag in _event_positions(keys, cap, batch_rows):
         cols = [pa.array(ids[a], type=id_type),
                 pa.array(ids[b], type=id_type),
                 pa.array(np.full(len(a), flag, np.int32))]
-        if payload:
-            cols += [pa.array(pay[p], type=pay_type,
-                              mask=None if pay_null is None else pay_null[p])
-                     for p in (a, b)]
+        cols += [pa.array(v[p], type=t, mask=None if m is None else m[p])
+                 for v, m, t in pays for p in (a, b)]
         yield pa.RecordBatch.from_arrays(cols, names=names)
 
 
 def bucketed_pair_events(ex: DataFrame, max_bucket_size: int,
-                         payload: str | None = None) -> DataFrame:
-    """Candidate events over (__id, band_key [, payload]) rows: one band
+                         payload: tuple[str, ...] = ()) -> DataFrame:
+    """Candidate events over (__id, band_key, *payload) rows: one band
     exchange and one Arrow bucket pass (see the module docstring).
 
-    Returns [id_a, id_b, __hot (, payload_a, payload_b)] — one row per
-    band collision (NOT deduped across bands; callers aggregate), with
-    hot buckets degraded to star edges around their min-id member
+    Returns [id_a, id_b, __hot, (p_a, p_b for p in payload)] — one row
+    per band collision (NOT deduped across bands; callers aggregate),
+    with hot buckets degraded to star edges around their min-id member
     (``__hot`` 1; cold pairs 0). id_a < id_b always. Rows whose id or
-    band key is null never pair.
+    band key is null never pair. Of duplicate (__id, band_key) rows the
+    one with the lowest payload tuple stays.
     """
-    cols = ["__id", "band_key"] + ([payload] if payload else [])
     fields = [StructField("id_a", ex.schema["__id"].dataType, False),
               StructField("id_b", ex.schema["__id"].dataType, False),
               StructField("__hot", IntegerType(), False)]
-    if payload:
-        pf = ex.schema[payload]
-        fields += [StructField(f"{payload}_a", pf.dataType, pf.nullable),
-                   StructField(f"{payload}_b", pf.dataType, pf.nullable)]
+    for p in payload:
+        pf = ex.schema[p]
+        fields += [StructField(f"{p}_{s}", pf.dataType, pf.nullable)
+                   for s in "ab"]
     batch_rows = int(ex.sparkSession.conf.get(
         "spark.sql.execution.arrow.maxRecordsPerBatch",
         str(_DEFAULT_BATCH_ROWS)))
@@ -209,7 +209,7 @@ def bucketed_pair_events(ex: DataFrame, max_bucket_size: int,
     def bucket_pass(batches):
         return _bucket_pass(batches, max_bucket_size, batch_rows, payload)
 
-    return (ex.select(*cols).repartition("band_key")
+    return (ex.select("__id", "band_key", *payload).repartition("band_key")
             .mapInArrow(bucket_pass, StructType(fields)))
 
 

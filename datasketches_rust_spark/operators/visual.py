@@ -1,45 +1,77 @@
-"""Visual / fingerprint-space near-dup operators.
+"""Visual / fingerprint-space near-dup operators: the one Hamming-code
+pair operator.
 
 SimHash pair detection via pigeonhole Hamming bands: fingerprints within
 ``max_hamming`` bit flips agree exactly on at least one of
 (max_hamming + 1) bands (sketches/simhash.py:hamming_bands), so the
-candidate join is an equality self-join on the packed band key — the
-same shuffle shape as the MinHash LSH join — followed by an exact popcount
-verify. Recall is exactly 1.0 by the pigeonhole argument; no probabilistic
-misses.
+candidate generation is the equality bucketing on the packed band key —
+the same one-exchange bucket pass as the MinHash LSH — followed by an
+exact popcount verify. Recall is exactly 1.0 by the pigeonhole argument;
+no probabilistic misses.
 
-The image pipeline feeds phash-derived fingerprints through this; the text
-pipeline can feed caption SimHashes (q_simhash_near_docs).
+Every 64-bit code modality pairs through ``simhash_pairs``: image phashes
+(pipeline_images), caption SimHashes (q_simhash_near_docs), video frame
+phashes with their (video, frame) payload (pipeline_video), and audio
+clip and frame codes with their 8-bit slice-triple layout
+(pipeline_audio).
 """
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import DataFrame, functions as F
+
+# (slice width in bits, combos): a band key packs the slices a combo
+# names, the combo index in the high bits
+BandLayout = tuple[int, Sequence[tuple[int, ...]]]
+
+
+def pigeonhole_layout(max_hamming: int) -> BandLayout:
+    """max_hamming + 1 single-slice bands, rounded up to a divisor of 64
+    (recall stays 1.0, a few more candidates get verified): codes within
+    max_hamming bits agree exactly on at least one slice."""
+    num_bands = next(b for b in (1, 2, 4, 8, 16, 32, 64)
+                     if b > max_hamming)
+    return 64 // num_bands, tuple((i,) for i in range(num_bands))
 
 
 def simhash_bands(df: DataFrame, id_col: str, fp_col: str,
-                  num_bands: int) -> DataFrame:
-    """Explode a 64-bit fingerprint into single-long band keys —
-    JVM-side bit slicing (shiftright + mask), no Python. The band index
-    is packed into the key's high bits ((idx << width) | slice, injective
-    since slice < 2^width), so one long is the whole join key and band
-    rows carry 16 bytes of payload through the self-join shuffle."""
-    width = 64 // num_bands
-    mask = (1 << width) - 1
-    bands = F.array(*[
-        F.shiftrightunsigned(F.col(fp_col), i * width).bitwiseAND(mask)
-        + F.lit(i << width if num_bands > 1 else 0)
-        for i in range(num_bands)])
-    return (df.select(F.col(id_col).alias("__id"), F.col(fp_col),
-                      F.explode(bands).alias("band_key")))
+                  layout: BandLayout, payload: Sequence[str] = ()
+                  ) -> DataFrame:
+    """Explode a 64-bit code into single-long band keys — JVM-side bit
+    slicing (shiftright + mask), no Python. Slice s is bits
+    [s * width, (s + 1) * width); combo ``ci`` packs its slices low to
+    high and puts ``ci`` above them, ``(ci << (width * len(combo))) |
+    slices``, injective since the slices fit below. One long is the
+    whole bucket key, so band rows carry 16 bytes plus the code and
+    ``payload`` through the band exchange."""
+    width, combos = layout
+    fp = F.col(fp_col)
+    slices = [F.shiftrightunsigned(fp, s * width).bitwiseAND((1 << width) - 1)
+              for s in range(64 // width)]
+    keys = [sum((F.shiftleft(slices[s], width * j)
+                 for j, s in enumerate(combo)),
+                F.lit(ci << (width * len(combo))))
+            for ci, combo in enumerate(combos)]
+    return df.select(F.col(id_col).alias("__id"), fp, *payload,
+                     F.explode(F.array(*keys)).alias("band_key"))
 
 
 def simhash_pairs(df: DataFrame, id_col: str, fp_col: str,
-                  max_hamming: int = 3,
-                  max_bucket_size: int = 4096) -> DataFrame:
-    """DataFrame[id_a, id_b, hamming] — all pairs within max_hamming bits.
-    Exact recall via pigeonhole banding (num_bands = max_hamming + 1 must
-    divide 64) for cold buckets.
+                  max_hamming: int = 3, max_bucket_size: int = 4096,
+                  payload: Sequence[str] = (),
+                  layout: BandLayout | None = None) -> DataFrame:
+    """DataFrame[id_a, id_b, hamming, (p_a, p_b for p in payload)] —
+    every pair of codes within max_hamming bits that shares a band
+    bucket, deduped across bands; id_a < id_b.
+
+    ``payload`` columns ride the band exchange with the code, so callers
+    read each side's attributes off the pair rows instead of joining
+    them back by id. ``layout`` is the band layout (see simhash_bands);
+    the default, pigeonhole_layout(max_hamming), gives exact recall for
+    cold buckets. A coarser layout (audio's 8-bit slice triples) trades
+    recall for fewer, more selective buckets.
 
     Hot buckets (> max_bucket_size members) degrade to a star topology
     around their min-id representative — the same guard as the text LSH
@@ -53,22 +85,18 @@ def simhash_pairs(df: DataFrame, id_col: str, fp_col: str,
     (restores unconditional exact pairwise recall)."""
     from datasketches_rust_spark.operators.lsh import bucketed_pair_events
 
-    num_bands = max_hamming + 1
-    if 64 % num_bands:
-        # round up to the next divisor of 64 — recall stays 1.0, a few
-        # more candidates get verified
-        num_bands = next(b for b in (4, 8, 16, 32, 64)
-                         if b >= num_bands)
     # Single-exchange bucketed candidate generation shared with the text
     # LSH (operators/lsh.bucketed_pair_events). This matters doubly here:
     # the band keyspace is only 2^(64/num_bands) x num_bands keys (262144
     # at 4 bands), so a groupBy-sizes hot guard emits up to |keyspace|
     # MAP-SIDE partial rows PER TASK — measured 470 MB of partials for
     # 79 MB of raw band rows at 1M images x 64 tasks. The one exchange
-    # carries the raw 24-byte rows, and one Arrow pass per partition
+    # carries the raw band rows, and one Arrow pass per partition
     # finds sizes, stars and pairs from a single sort.
-    ex = simhash_bands(df, id_col, fp_col, num_bands)
-    cand = bucketed_pair_events(ex, max_bucket_size, payload=fp_col)
+    ex = simhash_bands(df, id_col, fp_col,
+                       layout or pigeonhole_layout(max_hamming), payload)
+    cand = bucketed_pair_events(ex, max_bucket_size,
+                                payload=(fp_col, *payload))
     # Hamming filter FIRST, distinct second: with w-bit band keys the band
     # buckets yield ~n^2/2^w birthday collisions (tens of millions at
     # 10^6 rows), so (a) the popcount must be JVM-side bit_count(xor) in
@@ -80,5 +108,6 @@ def simhash_pairs(df: DataFrame, id_col: str, fp_col: str,
     return (cand
             .withColumn("hamming", ham)
             .where(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming")
+            .select("id_a", "id_b", "hamming",
+                    *[f"{p}_{s}" for p in payload for s in "ab"])
             .distinct())

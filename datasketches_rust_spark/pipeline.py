@@ -67,20 +67,20 @@ def dedup_pairs(df: DataFrame, cfg: DedupConfig, id_col: str,
     built here and cached.
     """
     if sigs is None:
-        # The signature table is read by the bucket-size guard and both
-        # sides of the LSH self-join — persist it so the signature UDF
-        # runs exactly once per input row. At 10^12-row scale this is the
-        # per-partition signature table the north_star checkpoints to
-        # Iceberg; MEMORY_AND_DISK spills gracefully. Tracked (cache.py):
-        # released at the next CC/pipeline invocation, after consumers
-        # have materialized, instead of leaking for the session lifetime.
-        # Only (id, bands) is cached: candidate generation joins on the
-        # band keys alone, and the verify stage recomputes shingle sets
-        # from the raw text — caching the 128-long sig array would put
-        # ~1 KB/row of never-read payload through the cache write AND
-        # through every subtree scan that re-reads this table. Callers
-        # that need sig (checkpointing, sketch queries) call
-        # minhash_signatures directly.
+        # Persisted so the signature UDF runs exactly once per input
+        # row. Uncached, the optimizer infers ``size(bands) > 0 AND
+        # isnotnull(bands)`` from the band explode and pushes it below
+        # ensure_parallelism's round-robin repartition, where it needs
+        # the UDF's output: the plan then evaluates MinHash in two
+        # ArrowEvalPython nodes, one under the filter and one above the
+        # repartition (tests/test_pipeline.py pins one). Tracked
+        # (cache.py): released at the next CC/pipeline invocation, after
+        # consumers have materialized. Only (id, bands) is cached: the
+        # verify stage recomputes shingle sets from the raw text, and
+        # the 128-long sig array would put ~1 KB/row of never-read
+        # payload through the cache. Callers that need sig
+        # (checkpointing, sketch queries) call minhash_signatures
+        # directly.
         from datasketches_rust_spark.cache import track
         sigs = track(minhash_signatures(df, cfg, id_col, text_col)
                      .select(id_col, "bands"))

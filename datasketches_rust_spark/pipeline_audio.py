@@ -1,7 +1,8 @@
 """Audio-axis near-dup pipeline: WAV decode -> (64-bit sign code +
 8x8 spectral-shape feature) in ONE pass (sketches/audiofp.py) ->
-pigeonhole banding on the code (operators/lsh.bucketed_pair_events:
-one band exchange, one Arrow bucket pass) -> JVM dot-product verify on
+slice-triple banding on the code (operators/visual.simhash_pairs, the
+one Hamming-code pair operator: one band exchange, one Arrow bucket
+pass, JVM Hamming gate, pair dedup) -> JVM dot-product verify on
 the features -> connected components. Completes the modality set next to
 text (MinHash/LSH), image (phash), and embedding (cosine-LSH/IVF)
 dedup.
@@ -13,7 +14,7 @@ Scale discipline, inherited from the image/text axes:
   through ONE band_key exchange (the triple-slice keyspace: see
   AUDIO_SLICE_TRIPLES for the measured entropy ladder that chose it)
   into the one bucket pass of operators/lsh.py, with hot buckets
-  star-degraded.
+  star-degraded (simhash_pairs with AUDIO_BAND_LAYOUT).
 - the 256-byte feature vectors do NOT ride the band shuffle: the
   Hamming prefilter (bit_count(xor) <= 12, whole-stage codegen) and
   pair-distinct run on 16-byte id pairs first, and features join back
@@ -70,6 +71,9 @@ AUDIO_SLICE_TRIPLES = (
     [(i, (i + 1) % 8, (i + 2) % 8) for i in range(8)]
     + [(i, (i + 2) % 8, (i + 4) % 8) for i in range(8)]
     + [(i, (i + 3) % 8, (i + 6) % 8) for i in range(8)])
+# 8-bit slices of the code, keyed in triples (operators/visual
+# simhash_bands: combo index in bits 24+)
+AUDIO_BAND_LAYOUT = (8, AUDIO_SLICE_TRIPLES)
 
 # Hot-bucket cap: with triple keys no 240k bucket reaches it (max
 # bucket < 256 measured); it guards pathological skew (e.g. a corpus
@@ -114,34 +118,14 @@ def audio_sketch_table(clips: DataFrame, id_col: str = "clip_id",
     return sk
 
 
-def _audio_bands(sk: DataFrame, id_col: str,
-                 combos: list[tuple[int, int, int]] | None = None
-                 ) -> DataFrame:
-    """Explode the 64-bit code into triple-slice band keys (default:
-    the clip pipeline's 24 ring combos) — JVM bit slicing, injective
-    via the combo index in the key's high bits."""
-    combos = combos if combos is not None else AUDIO_SLICE_TRIPLES
-    slices = [F.shiftrightunsigned(F.col("afp"), 8 * b)
-              .bitwiseAND(F.lit(255)) for b in range(8)]
-    keys = [(F.lit(ci << 24) + slices[a]
-             + F.shiftleft(slices[b], 8)
-             + F.shiftleft(slices[c], 16))
-            for ci, (a, b, c) in enumerate(combos)]
-    return sk.select(F.col(id_col).alias("__id"), F.col("afp"),
-                     F.explode(F.array(*keys)).alias("band_key"))
-
-
 def audio_edges(sk: DataFrame, id_col: str = "clip_id",
                 max_bucket_size: int = AUDIO_MAX_BUCKET) -> DataFrame:
     """DataFrame[id_a, id_b] — verified near-dup clip pairs from a
     sketch table (audio_sketch_table output)."""
-    from datasketches_rust_spark.operators.lsh import bucketed_pair_events
+    from datasketches_rust_spark.operators.visual import simhash_pairs
 
-    ex = _audio_bands(sk, id_col)
-    cand = bucketed_pair_events(ex, max_bucket_size, payload="afp")
-    ham = F.bit_count(F.col("afp_a").bitwiseXOR(F.col("afp_b")))
-    pairs = (cand.where(ham <= AUDIO_PREFILTER_HAMMING)
-             .select("id_a", "id_b").distinct())
+    pairs = simhash_pairs(sk, id_col, "afp", AUDIO_PREFILTER_HAMMING,
+                          max_bucket_size, layout=AUDIO_BAND_LAYOUT)
     fa = sk.select(F.col(id_col).alias("id_a"),
                    F.col("feat").alias("__fa"))
     fb = sk.select(F.col(id_col).alias("id_b"),
@@ -265,13 +249,13 @@ AUDIO_FRAME_BUCKET_CAP = 32   # near-tier star cap (per band bucket)
 # chances and needs only half — measured end-to-end on the ladder
 # (AUDIO_FRAMES_LADDER_r04.json): recall 1.0 / 1.0 / 0.9994 / 0.99622
 # at 4k/15k/60k/240k (target >= 0.99) for 3.2x less band volume and
-# 2.5x lower wall at 240k; the 24-combo form (pass
-# combos=AUDIO_SLICE_TRIPLES) buys 0.9996 at 240k for that cost.
+# 2.5x lower wall at 240k; the 24-combo form (AUDIO_BAND_LAYOUT) buys
+# 0.9996 at 240k for that cost.
 # Adversarial 3-flip placements that defeat all 8 consecutive triples
 # exist (flips at slice distance 3) but are rare under the measured
 # 0-5 random flips, and a single frame miss costs 1 vote, not the
 # pair.
-AUDIO_FRAME_SLICE_COMBOS = AUDIO_SLICE_TRIPLES[:8]
+AUDIO_FRAME_BAND_LAYOUT = (8, AUDIO_SLICE_TRIPLES[:8])
 
 
 def _code_match_table(frames: DataFrame) -> DataFrame:
@@ -280,22 +264,18 @@ def _code_match_table(frames: DataFrame) -> DataFrame:
     AUDIO_FRAME_HAMMING pairs from triple-slice banding of the
     DISTINCT code table (near tier). ``frames`` must have columns
     (__c clip, fcode)."""
-    from datasketches_rust_spark.operators.lsh import bucketed_pair_events
+    from datasketches_rust_spark.operators.visual import simhash_pairs
 
     clip_df = (frames.select("__c", "fcode").distinct()
                .groupBy("fcode").agg(F.count("*").alias("__ncl")))
     info = (clip_df.where(F.col("__ncl") <= AUDIO_FRAME_CODE_DF_CAP)
             .select("fcode"))
-    # near tier: distinct informative codes, clip-ladder triple keys
-    d2 = info.select(F.col("fcode").alias("__code"),
-                     F.col("fcode").alias("afp"))
-    ex = _audio_bands(d2, "__code", combos=AUDIO_FRAME_SLICE_COMBOS)
-    cand = bucketed_pair_events(ex, AUDIO_FRAME_BUCKET_CAP,
-                                payload="afp")
-    ham = F.bit_count(F.col("afp_a").bitwiseXOR(F.col("afp_b")))
-    near = (cand.where(ham <= AUDIO_FRAME_HAMMING)
-            .select(F.col("id_a").alias("c1"),
-                    F.col("id_b").alias("c2")).distinct())
+    # near tier: distinct informative codes (each its own id), banded
+    # with the clip ladder's triple keys
+    near = (simhash_pairs(info, "fcode", "fcode", AUDIO_FRAME_HAMMING,
+                          AUDIO_FRAME_BUCKET_CAP,
+                          layout=AUDIO_FRAME_BAND_LAYOUT)
+            .select(F.col("id_a").alias("c1"), F.col("id_b").alias("c2")))
     ident = info.select(F.col("fcode").alias("c1"),
                         F.col("fcode").alias("c2"))
     return (near

@@ -1,8 +1,8 @@
 """Video-axis near-dup pipeline — the 5th modality: container split ->
 per-frame decode + DCT phash in one Arrow pass -> frame-level phash
-banding (the image axis' simhash_pairs, unchanged) -> FRAME-OVERLAP
-VOTE (videos sharing >= min_frame_matches near-dup frames) ->
-connected components.
+banding (operators/visual.simhash_pairs, the image axis' operator) ->
+FRAME-OVERLAP VOTE (videos sharing >= min_frame_matches near-dup
+frames) -> connected components.
 
 Temporal voting is what distinguishes video dedup from running image
 dedup per frame: a single shared frame (channel intro/outro — the
@@ -14,13 +14,13 @@ a wide margin (sources/video.py).
 
 Scale shape: bytes die at the frame-sketch scan (the one Arrow pass:
 split + magic-sniff decode + phash, exploding 1 video row -> n_frames
-16-byte sketch rows); frame ids are xxhash64(video_id, frame_idx)
-longs, so the frame-level banding shuffles the same 16-byte rows as
-the image axis; the vote is a (va, vb)-keyed count-distinct aggregate
-over frame-pair edges (bounded by matched frames, never frames^2); CC
-is one job per round. The frame-id -> video-id map rides WITH the
-frame rows into the pair generation (simhash_pairs' payload column),
-so no post-hoc fid->vid join is needed.
+sketch rows), and the scan runs once: nothing is cached or counted.
+Frame ids are xxhash64(video_id, frame_idx) longs, and each frame's
+(video id, frame_idx) rides WITH its band rows through the pair
+generation as simhash_pairs' payload, so the vote reads both sides'
+videos off the frame pairs — no frame-id -> video-id join. The vote is
+a (va, vb)-keyed count-distinct aggregate over frame-pair edges
+(bounded by matched frames, never frames^2); CC is one job per round.
 """
 
 from __future__ import annotations
@@ -86,38 +86,24 @@ def video_edges(videos: DataFrame, id_col: str = "video_id",
     near-dup frames. id_col must be LONG here: assign_clusters, the
     caller in video_cluster_assignments, maps string ids to longs
     first."""
-    from datasketches_rust_spark.cache import track
     from datasketches_rust_spark.operators.visual import simhash_pairs
 
-    fr = video_frame_sketches(videos, id_col)
-    frames = fr.select(
+    frames = video_frame_sketches(videos, id_col).select(
         F.xxhash64(F.col(id_col), F.col("frame_idx")).alias("__fid"),
         F.col("phash"),
         F.col(id_col).alias("__v"), F.col("frame_idx").alias("__k"))
-    frames = track(frames)
-    frames.count()  # materialize: 3 consumers in simhash_pairs + 2 maps
-    fpairs = simhash_pairs(frames.select("__fid", "phash"),
-                           "__fid", "phash",
-                           max_hamming=VIDEO_FRAME_HAMMING)
-    # frame-id -> (video, frame_idx) rejoin, once per side (the ANN
-    # id-only/rejoin-once pattern; the map is the cached sketch table)
-    ma = frames.select(F.col("__fid").alias("id_a"),
-                       F.col("__v").alias("__va"),
-                       F.col("__k").alias("__ka"))
-    mb = frames.select(F.col("__fid").alias("id_b"),
-                       F.col("__v").alias("__vb"),
-                       F.col("__k").alias("__kb"))
-    va, vb = F.col("__va"), F.col("__vb")
-    return (fpairs.select("id_a", "id_b")
-            .join(ma, "id_a").join(mb, "id_b")
-            .where(va != vb)
+    fpairs = simhash_pairs(frames, "__fid", "phash",
+                           max_hamming=VIDEO_FRAME_HAMMING,
+                           payload=("__v", "__k"))
+    va, vb = F.col("__v_a"), F.col("__v_b")
+    return (fpairs.where(va != vb)
             .select(F.least(va, vb).alias("id_a"),
                     F.greatest(va, vb).alias("id_b"),
                     # vote = distinct matched frames of the SMALLER
                     # video (a frame matching several frames of the
                     # other video is ONE match)
-                    F.when(va < vb, F.col("__ka"))
-                    .otherwise(F.col("__kb")).alias("__kk"))
+                    F.when(va < vb, F.col("__k_a"))
+                    .otherwise(F.col("__k_b")).alias("__kk"))
             .groupBy("id_a", "id_b")
             .agg(F.count_distinct("__kk").alias("__n"))
             .where(F.col("__n") >= min_frame_matches)

@@ -546,13 +546,11 @@ def q_containment_dup_pairs(spark, sf_dir, df_cap: int = NGRAM_DF_CAP):
 
 def q_simhash_near_docs(spark, sf_dir):
     """SimHash hamming<=3 candidate pairs — no SQL oracle (pytest)."""
-    from datasketches_rust_spark.cache import track
     from datasketches_rust_spark.operators.visual import simhash_pairs
     from datasketches_rust_spark.pipeline import ensure_parallelism
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     sim = simhash_udf(CFG)
-    fps = track(
-        docs.select("doc_id", sim(F.lower(F.col("text"))).alias("fp")))
+    fps = docs.select("doc_id", sim(F.lower(F.col("text"))).alias("fp"))
     return simhash_pairs(fps, "doc_id", "fp", max_hamming=CFG.simhash_hamming)
 
 

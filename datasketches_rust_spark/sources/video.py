@@ -1,9 +1,9 @@
 """Deterministic synthetic video fixture (the video axis of the
 multimodal dedup surface).
 
-Container format is the repo's honest STUB (multimodal.frame_sample's
-'<u4'-length-prefixed concatenated frames — real deployments swap the
-splitter for pyav/ffmpeg, no such lib in-sandbox); the FRAMES are real:
+Container format is the repo's honest STUB: '<u4'-length-prefixed
+concatenated frames, split by pipeline_video.video_frame_sketches (real
+deployments swap the splitter for pyav/ffmpeg); the FRAMES are real:
 PNG (lossless, sources/codec.py) or the deterministic fake-JPEG lossy
 codec, decoded by magic sniffing. Schema: (video_id string, bytes
 binary, n_frames int). Fully seeded, embarrassingly parallel (shared

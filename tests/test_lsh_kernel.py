@@ -47,7 +47,7 @@ def _run(rows, cap, batch_rows, payload=False, chunks=1):
     step = max(1, -(-len(rows) // chunks))
     batches = [whole.slice(lo, step) for lo in range(0, len(rows), step)]
     out = list(_bucket_pass(iter(batches), cap, batch_rows,
-                            "p" if payload else None))
+                            ("p",) if payload else ()))
     assert all(0 < b.num_rows <= batch_rows for b in out)
     got = Counter()
     for b in out:
@@ -102,6 +102,24 @@ def test_duplicate_rows_count_once():
     assert got == Counter({(1, 2, 0, 4, 7): 1})
 
 
+def test_payload_tuple_rides_and_lowest_tuple_wins():
+    """Several payload columns come out as p_a, p_b per column, in order;
+    of duplicate (id, key) rows the lowest payload tuple stays (the
+    first column decides, the second breaks its ties)."""
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array([1, 1, 1, 2], pa.int64()),
+         pa.array([5, 5, 5, 5], pa.int64()),
+         pa.array([7, 3, 3, 9], pa.int64()),
+         pa.array([0, 8, 6, 4], pa.int32())],
+        names=["__id", "band_key", "v", "k"])
+    (out,) = _bucket_pass(iter([rb]), 512, 100, ("v", "k"))
+    assert out.schema.names == ["id_a", "id_b", "__hot", "v_a", "v_b",
+                                "k_a", "k_b"]
+    assert out.schema.field("k_a").type == pa.int32()
+    assert set(zip(*(c.to_pylist() for c in out.columns))) == {
+        (1, 2, 0, 3, 9, 6, 4)}
+
+
 def test_cold_bucket_spans_batches():
     """One cold bucket of 10 ids has 45 pairs: with 7-row batches they
     come out in 7 batches, each pair once, and a second bucket's pairs
@@ -119,7 +137,7 @@ def test_null_payload_passes_through():
     rb = pa.RecordBatch.from_arrays([ids, keys, pay],
                                     names=["__id", "band_key", "p"])
     for cap, hot in ((0, 0), (2, 1)):
-        (out,) = _bucket_pass(iter([rb]), cap, 100, "p")
+        (out,) = _bucket_pass(iter([rb]), cap, 100, ("p",))
         got = set(zip(*(c.to_pylist() for c in out.columns)))
         if hot:
             assert got == {(1, 2, 1, None, 20), (1, 3, 1, None, None)}
@@ -129,11 +147,11 @@ def test_null_payload_passes_through():
 
 
 def test_empty_and_all_null_partitions_emit_nothing():
-    assert list(_bucket_pass(iter([]), 4, 10, None)) == []
+    assert list(_bucket_pass(iter([]), 4, 10, ())) == []
     rb = pa.RecordBatch.from_arrays(
         [pa.array([None, None], pa.int64()), pa.array([1, 1], pa.int64())],
         names=["__id", "band_key"])
-    assert list(_bucket_pass(iter([rb]), 4, 10, None)) == []
+    assert list(_bucket_pass(iter([rb]), 4, 10, ())) == []
 
 
 def test_triangle_root_exact():

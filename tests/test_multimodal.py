@@ -1,14 +1,11 @@
-"""Multimodal plumbing tests: decode/feature/resize/frame-sample through
-real mapInPandas stages (codecs stubbed per task spec, plumbing real)."""
+"""Multimodal plumbing tests: image decode/feature extraction through a
+real mapInPandas stage, and the audio decode routes (real WAV codec,
+raw-PCM fallback)."""
 
 import numpy as np
 import pytest
 
-from datasketches_rust_spark.multimodal import (audio_features,
-                                                frame_sample, image_features,
-                                                pack_fake_video,
-                                                resize_images)
-from datasketches_rust_spark.sources.codec import decode_png
+from datasketches_rust_spark.multimodal import _decode_audio, image_features
 from datasketches_rust_spark.sources.images import images_spark_df
 
 
@@ -31,37 +28,13 @@ def test_image_features(spark, images):
         assert r["phash"] == stored[r["image_id"]]
 
 
-def test_resize_images(spark, images):
-    out = resize_images(images, 8).collect()
-    assert len(out) == 60
-    for r in out[:5]:
-        px = decode_png(bytes(r["bytes"]))
-        assert px.shape == (8, 8, 3)
-        assert r["fmt"] == "png"
-
-
-def test_audio_features_stub(spark):
+def test_audio_features_stub():
+    """Headerless payloads fall back to raw int16 PCM at 16 kHz."""
     pcm = (np.sin(np.linspace(0, 100, 16000)) * 20000).astype("<i2")
-    df = spark.createDataFrame([("clip1", bytearray(pcm.tobytes()))],
-                               "clip_id string, bytes binary")
-    row = audio_features(df).first()
-    assert row["sample_rate"] == 16000
-    assert row["n_samples"] == 16000
-    assert 0.3 < row["rms"] < 0.7
-
-
-def test_frame_sample_stub(spark):
-    rng = np.random.default_rng(3)
-    frames = [rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-              for _ in range(25)]
-    buf = pack_fake_video(frames)
-    df = spark.createDataFrame([("vid1", bytearray(buf))],
-                               "video_id string, bytes binary")
-    out = frame_sample(df, every_n=10).collect()
-    assert [r["frame_idx"] for r in sorted(out, key=lambda r: r["frame_idx"])] \
-        == [0, 10, 20]
-    px = decode_png(bytes(out[0]["bytes"]))
-    assert px.shape == (16, 16, 3)
+    x, sr = _decode_audio(pcm.tobytes())
+    assert sr == 16000
+    assert x.size == 16000
+    assert 0.3 < np.sqrt(np.mean(x ** 2)) < 0.7
 
 
 class TestWavCodec:
@@ -123,17 +96,15 @@ class TestWavCodec:
         assert abs(np.sqrt((y ** 2).mean()) - np.sqrt((x ** 2).mean())) < 0.01
 
 
-def test_audio_features_real_wav(spark):
-    """audio_features must route RIFF payloads through the REAL decoder:
+def test_audio_features_real_wav():
+    """_decode_audio must route RIFF payloads through the REAL decoder:
     sample_rate comes from the wav header, not the 16 kHz raw fallback."""
     from datasketches_rust_spark.multimodal import encode_wav
     sr = 44100
     t = np.linspace(0, 0.5, sr // 2, endpoint=False)
     wav = encode_wav(0.5 * np.sin(2 * np.pi * 440 * t), sr)
-    df = spark.createDataFrame([("clipw", bytearray(wav))],
-                               "clip_id string, bytes binary")
-    row = audio_features(df).first()
-    assert row["sample_rate"] == sr
-    assert row["n_samples"] == sr // 2
+    x, sr_got = _decode_audio(wav)
+    assert sr_got == sr
+    assert x.size == sr // 2
     # RMS of a 0.5-amplitude sine = 0.5/sqrt(2)
-    assert abs(row["rms"] - 0.5 / np.sqrt(2)) < 0.01
+    assert abs(np.sqrt(np.mean(x ** 2)) - 0.5 / np.sqrt(2)) < 0.01

@@ -67,3 +67,32 @@ def test_jaccard_column_sane(spark, docs_df):
     rows = dedup_pairs(docs_df, CFG, "doc_id", "text").collect()
     for r in rows:
         assert CFG.jaccard_threshold <= r["jaccard"] <= 1.0
+
+
+def test_text_edge_plan_evaluates_each_udf_once(spark, docs_df):
+    """The plan connected components checkpoints evaluates MinHash once
+    (the signature cache keeps the optimizer's inferred explode filter
+    from running the UDF a second time below the round-robin
+    repartition) and the exact-Jaccard verify once (both edge
+    directions come from one pass, not one union leg each). AQE is off
+    for the whole build, the signature cache's count included, so every
+    subtree prints once in one tree; earlier tests' signature caches are
+    released first, so this build does not reuse one planned with AQE."""
+    import re
+
+    from datasketches_rust_spark.cache import release_tracked
+    from datasketches_rust_spark.operators.connected_components import \
+        _symmetric_edges
+    release_tracked()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        edges = dedup_pairs(docs_df, CFG, "doc_id", "text")
+        plan = (_symmetric_edges(edges.select("id_a", "id_b"))
+                ._jdf.queryExecution().executedPlan().toString())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    udfs = re.findall(r"ArrowEvalPython \[\w+\(([^\]]*)\]", plan)
+    assert len([u for u in udfs if u.startswith("lower(text#")]) == 1, plan
+    assert len([u for u in udfs if u.startswith("__ta#")]) == 1, plan
+    assert len(udfs) == 2, plan

@@ -181,13 +181,40 @@ def test_null_ids_and_keys_never_pair(spark, path):
         ex = explode_bands(df, "id", "bands").withColumn(
             "fp", F.coalesce(F.col("__id"), F.lit(-1)) * 10)
         got = {tuple(r) for r in
-               bucketed_pair_events(ex, 512, payload="fp").collect()}
+               bucketed_pair_events(ex, 512, payload=("fp",)).collect()}
         assert got == {(1, 2, 0, 10, 20)}
         return
     cfg = DedupConfig(max_bucket_size=512 if path == "cap512" else 0,
                       min_band_matches=1)
     got = {tuple(r) for r in candidate_pairs(df, cfg, "id").collect()}
     assert got == {(1, 2)}
+
+
+@pytest.mark.parametrize("layout", ["pigeonhole", "audio"])
+def test_band_layout_keys(spark, layout):
+    """simhash_bands packs combo ci as (ci << (width * len(combo))) |
+    slices, low slice first: the pigeonhole single slices of the image
+    and video phashes and the audio 8-bit slice triples, bit for bit."""
+    from datasketches_rust_spark.operators.visual import (pigeonhole_layout,
+                                                          simhash_bands)
+    from datasketches_rust_spark.pipeline_audio import AUDIO_BAND_LAYOUT
+    width, combos = (pigeonhole_layout(3) if layout == "pigeonhole"
+                     else AUDIO_BAND_LAYOUT)
+    fps = [0, -1, 0x1234ABCD5678EF01, -0x7EDCBA9876543210]
+
+    def key(fp, ci, combo):
+        sl = [((fp & (2**64 - 1)) >> (s * width)) & ((1 << width) - 1)
+              for s in combo]
+        return (ci << (width * len(combo))) | sum(
+            v << (width * j) for j, v in enumerate(sl))
+
+    df = spark.createDataFrame([(i, fp) for i, fp in enumerate(fps)],
+                               "id long, fp long")
+    got = sorted((r["__id"], r["band_key"]) for r in
+                 simhash_bands(df, "id", "fp", (width, combos)).collect())
+    want = sorted((i, key(fp, ci, c)) for i, fp in enumerate(fps)
+                  for ci, c in enumerate(combos))
+    assert got == want
 
 
 class TestSimhashHotBucket:

@@ -72,3 +72,28 @@ def test_pipeline_recall_precision_and_hard_negative(spark):
     merged = [c for c in singles_t if len(gc[g[c]]) > 1]
     assert not merged
     assert VIDEO_MIN_FRAME_MATCHES > 1  # one shared frame never connects
+
+
+def test_video_edges_plan_one_decode_no_cache_no_rejoin(spark):
+    """Each frame's (video, frame_idx) rides the band exchange as the
+    pair operator's payload: one frame-decode pass, no cached frame
+    table, and no join (the vote reads both videos off the frame
+    pairs; nothing maps frame ids back to videos)."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from datasketches_rust_spark.pipeline_video import video_edges
+    vids, _ = video_spark_df(spark, 40, seed=1, partitions=2)
+    vids = vids.localCheckpoint()  # the fixture's own synthesis pass
+    edges = video_edges(vids.withColumn("__lid", F.xxhash64("video_id"))
+                        .select("__lid", "bytes"), "__lid")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        plan = edges._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(re.findall(r"MapInPandas ", plan)) == 1, plan
+    assert "InMemoryTableScan" not in plan, plan
+    assert "Join" not in plan, plan

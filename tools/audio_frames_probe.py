@@ -42,10 +42,10 @@ def main() -> None:
 
     from datasketches_rust_spark.config import spark_session
     from datasketches_rust_spark.operators.lsh import bucketed_pair_events
+    from datasketches_rust_spark.operators.visual import simhash_bands
     from datasketches_rust_spark.pipeline_audio import (
-        AUDIO_FRAME_BUCKET_CAP, AUDIO_FRAME_SLICE_COMBOS, _audio_bands,
-        _code_match_table, audio_frame_cluster_assignments,
-        audio_frame_sketches)
+        AUDIO_FRAME_BAND_LAYOUT, AUDIO_FRAME_BUCKET_CAP, _code_match_table,
+        audio_frame_cluster_assignments, audio_frame_sketches)
     from datasketches_rust_spark.sources.audio import audio_frames_spark_df
 
     levels = [int(a) for a in sys.argv[1:]] or [15_000, 60_000, 240_000]
@@ -67,14 +67,12 @@ def main() -> None:
         # NEAR-tier band events over the distinct-code table, counted
         # BEFORE the Hamming gate — the volume whose growth vs n is
         # the sub-quadratic verdict
-        d2 = (frames.select("fcode").distinct()
-              .select(F.col("fcode").alias("__code"),
-                      F.col("fcode").alias("afp")))
+        codes = frames.select("fcode").distinct()
         cand_events = bucketed_pair_events(
-            _audio_bands(d2, "__code",
-                         combos=AUDIO_FRAME_SLICE_COMBOS),
+            simhash_bands(codes, "fcode", "fcode",
+                          AUDIO_FRAME_BAND_LAYOUT),
             AUDIO_FRAME_BUCKET_CAP,
-            payload="afp").count()
+            payload=("fcode",)).count()
 
         # vote-join cardinality (frames x matched codes x clips/code,
         # every factor df-capped) — the exact-tier volume

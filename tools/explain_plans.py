@@ -1068,8 +1068,9 @@ def main() -> None:
     })
 
     # 49. video_edges: bytes die at the frame-sketch scan (never in any
-    #     exchange); the frame sketch table is cached (decode+phash ran
-    #     once across simhash_pairs' subtrees and both id-map rejoins)
+    #     exchange); decode+phash runs in one node, and each frame's
+    #     (video, frame_idx) rides the band exchange as simhash_pairs'
+    #     payload, so no join maps frame ids back to videos
     from datasketches_rust_spark.pipeline_video import video_edges
     from datasketches_rust_spark.sources.video import video_spark_df
     vvids, _ = video_spark_df(spark, 200, seed=1, partitions=4)
@@ -1078,8 +1079,11 @@ def main() -> None:
         .select("__lid", "bytes"), "__lid")
     failures += audit("video_edges", vv, {
         "bytes never in any exchange": _never_shuffled("bytes"),
-        "frame sketch table served from cache":
-            lambda p: "InMemoryTableScan" in p,
+        "one frame-decode node (MapInPandas over the bytes)":
+            lambda p: len(re.findall(r"^Input \[\d+\]: \[__vid#\d+L, __b#",
+                                     p, re.M)) == 1,
+        "no join keyed on __fid (no join at all)":
+            lambda p: "Join" not in p,
         "temporal vote is an aggregate (count_distinct of frames)":
             lambda p: "count(distinct" in p.lower()
             or "HashAggregate" in p,

@@ -44,8 +44,8 @@ def main() -> None:
 
     from datasketches_rust_spark.config import spark_session
     from datasketches_rust_spark.operators.lsh import bucketed_pair_events
-    from datasketches_rust_spark.operators.visual import (simhash_bands,
-                                                          simhash_pairs)
+    from datasketches_rust_spark.operators.visual import (
+        pigeonhole_layout, simhash_bands, simhash_pairs)
     from datasketches_rust_spark.pipeline_video import (
         VIDEO_FRAME_HAMMING, video_cluster_assignments, video_edges,
         video_frame_sketches)
@@ -73,10 +73,10 @@ def main() -> None:
         # band-candidate events BEFORE the Hamming gate — the raw
         # volume the 4-band pigeonhole banding emits (simhash_pairs
         # evaluates the popcount on exactly these rows)
-        num_bands = VIDEO_FRAME_HAMMING + 1
-        ex = simhash_bands(frames, "__fid", "phash", num_bands)
+        ex = simhash_bands(frames, "__fid", "phash",
+                           pigeonhole_layout(VIDEO_FRAME_HAMMING))
         band_events = bucketed_pair_events(ex, 4096,
-                                           payload="phash").count()
+                                           payload=("phash",)).count()
 
         # Hamming survivors (frame-level near-dup pairs)
         fpairs = simhash_pairs(frames, "__fid", "phash",
