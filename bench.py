@@ -34,31 +34,22 @@ def main() -> None:
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) \
         if "sf" in sf_dir else -1.0
 
-    # Self-heal the box before measuring: after heavy JVM/page churn the
-    # kernel's compaction threads (kcompactd/khugepaged) inflate EVERY
+    # Wait for a quiet box before measuring: after heavy JVM/page churn
+    # the kernel's compaction threads (kcompactd/khugepaged) inflate EVERY
     # query up to ~2x (observed 22.7s total -> 50s at load ~10, and a
-    # 22.3s -> 28.3s distortion at load 3.9 — BELOW the old >4 trigger,
-    # so the heal is now unconditional: one-shot compaction returns
-    # quickly on a healthy box, and the settle loop only waits while
-    # load is actually elevated). Best-effort and silent on failure.
-    try:
-        with open("/proc/sys/vm/compact_memory", "w") as f:
-            f.write("1")
-        # churn episodes outlast the old 150 s deadline (a run that
-        # started at load 4.5 measured 4x-degraded THROUGHOUT — the
-        # kernel threads never settled mid-run), so wait up to 10 min
-        # and say so loudly if the box still isn't quiet: a flagged
-        # measurement is recoverable, a silently-degraded one poisons
-        # the round artifact.
-        deadline = time.time() + 600
-        while time.time() < deadline and os.getloadavg()[0] > 2:
-            time.sleep(10)
-        if os.getloadavg()[0] > 2:
-            print(f"WARNING: loadavg {os.getloadavg()[0]:.1f} > 2 after "
-                  "compaction settle — timings may be inflated",
-                  file=sys.stderr)
-    except OSError:
-        pass
+    # 22.3s -> 28.3s distortion at load 3.9). The bench only waits and
+    # warns: it changes no setting of the host it measures. Churn
+    # episodes outlast 150 s (a run that started at load 4.5 measured
+    # 4x-degraded THROUGHOUT), so wait up to 10 min and say so loudly if
+    # the box still isn't quiet: a flagged measurement is recoverable, a
+    # silently-degraded one poisons the round artifact.
+    deadline = time.time() + 600
+    while time.time() < deadline and os.getloadavg()[0] > 2:
+        time.sleep(10)
+    if os.getloadavg()[0] > 2:
+        print(f"WARNING: loadavg {os.getloadavg()[0]:.1f} > 2 after "
+              "a 10 min settle wait — timings may be inflated",
+              file=sys.stderr)
 
     from datasketches_rust_spark.config import DedupConfig, spark_session
     from datasketches_rust_spark import queries as Q
@@ -69,7 +60,7 @@ def main() -> None:
     # image pipeline is 63 jobs with AQE vs 14 without at sf0.1, pure
     # local-mode artifact. Engine default keeps AQE on (runtime
     # coalescing + skew splits are part of the cluster-scale story);
-    # same discipline as tools/scaling_bench.py.
+    # perfbench/run.py and tools/scaling.py run with AQE off too.
     os.environ.setdefault("SPARK_GRAFT_AQE", "false")
     # match the scaling bench's executor sizing: two full-size pipeline
     # passes (warm + timed) overflow the default 8g block manager and the
@@ -84,7 +75,8 @@ def main() -> None:
     # sketch/join/codec operators cost ~10-15 s once per session and
     # otherwise land entirely on whichever query runs first. A long-lived
     # cluster amortizes these; the bench measures the engine, not session
-    # bootstrap (same cold/warm discipline as tools/scaling_bench.py).
+    # bootstrap (perfbench/run.py likewise times only after a warm-up
+    # cycle).
     from datasketches_rust_spark.pipeline import cluster_assignments
     from datasketches_rust_spark.pipeline_images import \
         image_cluster_assignments
@@ -97,8 +89,7 @@ def main() -> None:
         # best of N timed executions: run-to-run variance on this box's
         # serialized page-fault path is ~20-30% (observed up to ~80% on
         # the image pipeline across a long session), and the metric is
-        # sustained engine throughput, not a single draw (same rule as
-        # tools/scaling_bench.py's best-warm-trial). The two pipeline
+        # sustained engine throughput, not a single draw. The two pipeline
         # queries get a third draw — they dominate the total and carry
         # the most draw-to-draw spread.
         best = float("inf")

@@ -226,14 +226,6 @@ def murmur128_bytes_list(keys: list[bytes], seed: int = DEFAULT_SEED
     return h1, h2
 
 
-def xxhash64_bytes_list(keys: list[bytes], seed: int = 0) -> np.ndarray:
-    """xxhash64 for variable-length byte keys."""
-    out = np.empty(len(keys), dtype=np.uint64)
-    for grp, mat in _grouped_by_length(keys):
-        out[grp] = xxhash64_matrix(mat, seed)
-    return out
-
-
 def encode_values(values) -> list[bytes]:
     """Canonical byte encodings for hashable column values, following the
     reference's hash_value conventions (hash_value/mod.rs:24-73):

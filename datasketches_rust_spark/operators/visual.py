@@ -6,8 +6,9 @@ SimHash pair detection via pigeonhole Hamming bands: fingerprints within
 (max_hamming + 1) bands (sketches/simhash.py:hamming_bands), so the
 candidate generation is the equality bucketing on the packed band key —
 the same one-exchange bucket pass as the MinHash LSH — followed by an
-exact popcount verify. Recall is exactly 1.0 by the pigeonhole argument;
-no probabilistic misses.
+exact popcount verify. With the default pigeonhole layout, recall in cold
+buckets is exactly 1.0 by the pigeonhole argument; a coarser layout (the
+audio slice triples) or a star-degraded hot bucket can miss pairs.
 
 Every 64-bit code modality pairs through ``simhash_pairs``: image phashes
 (pipeline_images), caption SimHashes (q_simhash_near_docs), video frame
@@ -48,7 +49,9 @@ def simhash_bands(df: DataFrame, id_col: str, fp_col: str,
     ``payload`` through the band exchange."""
     width, combos = layout
     fp = F.col(fp_col)
-    slices = [F.shiftrightunsigned(fp, s * width).bitwiseAND((1 << width) - 1)
+    # all 64 bits are -1 as a long: (1 << 64) - 1 is no long literal
+    mask = (1 << width) - 1 if width < 64 else -1
+    slices = [F.shiftrightunsigned(fp, s * width).bitwiseAND(mask)
               for s in range(64 // width)]
     keys = [sum((F.shiftleft(slices[s], width * j)
                  for j, s in enumerate(combo)),

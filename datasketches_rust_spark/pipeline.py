@@ -7,7 +7,8 @@ Stages (SURVEY.md §7 step 4 spine):
                   hashes -> 128-perm MinHash -> 32x4 LSH band keys per doc
                   (coupon-precompute discipline: hash each shingle once,
                   reuse across all permutations — hll/mod.rs:167-173).
-  2. candidates : LSH band self-join (operators/lsh.py) with hot-bucket cap.
+  2. candidates : LSH candidates from one band exchange and one Arrow
+                  bucket pass (operators/lsh.py), hot buckets capped.
   3. verify     : exact shingle-set Jaccard on candidate pairs (the
                   "confirm" pass; analog of theta intersection semantics,
                   theta/intersection.rs:142-155) — keep pairs >= threshold.

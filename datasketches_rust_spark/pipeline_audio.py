@@ -163,7 +163,7 @@ def audio_cluster_assignments(clips: DataFrame, cfg: DedupConfig
 # simhash banding -> temporal vote >= k distinct matched frames ->
 # CC):
 #   - candidate volume is LINEAR-BOUNDED by construction (the ladder
-#     in tools/audio_frames_probe.py measures it): matching is
+#     of tools/scaling.py --axis audio_frames measures it): matching is
 #     two-tier over CODES, not frames. The exact tier is an inverted
 #     index on the full 64-bit code restricted to INFORMATIVE codes
 #     (clip-df <= AUDIO_FRAME_CODE_DF_CAP — the text LSH's hot-gram

@@ -1453,8 +1453,8 @@ def q_audio_frame_dedup_clusters(spark, sf_dir):
     lose — pinned) and shared-3-note-intro hard negatives (which the
     quorum must reject). Rows-only (binary decode has no SQL oracle);
     recall = precision = 1.0 vs planted truth pytest-gated
-    (tests/test_audio_frames.py); candidate-volume ladder in
-    tools/audio_frames_probe.py."""
+    (tests/test_audio_frames.py); candidate-volume ladder:
+    tools/scaling.py --axis audio_frames --sizes 1,4."""
     from datasketches_rust_spark.pipeline_audio import \
         audio_frame_cluster_assignments
     from datasketches_rust_spark.sources.audio import audio_frames_spark_df

@@ -121,11 +121,6 @@ def jaccard_estimate(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
     return float(np.mean(sig_a == sig_b))
 
 
-def jaccard_estimate_matrix(sigs_a: np.ndarray, sigs_b: np.ndarray) -> np.ndarray:
-    """(N, P) x (N, P) -> (N,) pairwise estimates, vectorized."""
-    return (sigs_a == sigs_b).mean(axis=1)
-
-
 def band_hashes(sigs: np.ndarray, bands: int, rows: int,
                 seed: int = DEFAULT_SEED) -> np.ndarray:
     """LSH band keys: (n_docs, bands) int64. Band j's key summarizes

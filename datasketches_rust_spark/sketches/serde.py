@@ -64,12 +64,6 @@ def unpack_header(buf: bytes, expect_family: int, expect_version: int,
     return _HDR.size
 
 
-def read_seed_hash(buf: bytes) -> int:
-    if len(buf) < _HDR.size:
-        raise SketchDecodeError("insufficient data for header")
-    return _HDR.unpack_from(buf, 0)[3]
-
-
 def need(buf: bytes, offset: int, nbytes: int) -> None:
     if len(buf) < offset + nbytes:
         raise SketchDecodeError(

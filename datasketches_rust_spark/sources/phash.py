@@ -90,13 +90,3 @@ def phash_batch(pixel_list: list[np.ndarray]) -> np.ndarray:
         out[start:start + m] = np.packbits(
             bits, axis=1, bitorder="little").view(np.int64).ravel()
     return out
-
-
-def phash_byte_ngrams(phashes: np.ndarray, n: int = 2) -> list[list[bytes]]:
-    """phash -> byte n-grams (north_star: 'phash-derived byte n-grams feed
-    batched MinHash'): the 8 bytes of the hash, positional n-grams."""
-    out = []
-    for p in np.asarray(phashes, dtype=np.int64).view(np.uint64):
-        b = int(p).to_bytes(8, "little")
-        out.append([bytes([i]) + b[i:i + n] for i in range(8 - n + 1)])
-    return out

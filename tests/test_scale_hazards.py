@@ -190,23 +190,26 @@ def test_null_ids_and_keys_never_pair(spark, path):
     assert got == {(1, 2)}
 
 
-@pytest.mark.parametrize("layout", ["pigeonhole", "audio"])
+@pytest.mark.parametrize("layout", ["pigeonhole", "audio", "one_band"])
 def test_band_layout_keys(spark, layout):
     """simhash_bands packs combo ci as (ci << (width * len(combo))) |
     slices, low slice first: the pigeonhole single slices of the image
-    and video phashes and the audio 8-bit slice triples, bit for bit."""
+    and video phashes, the audio 8-bit slice triples and the one 64-bit
+    band of max_hamming=0 (the key is the code itself), bit for bit."""
     from datasketches_rust_spark.operators.visual import (pigeonhole_layout,
                                                           simhash_bands)
     from datasketches_rust_spark.pipeline_audio import AUDIO_BAND_LAYOUT
-    width, combos = (pigeonhole_layout(3) if layout == "pigeonhole"
-                     else AUDIO_BAND_LAYOUT)
+    width, combos = {"pigeonhole": pigeonhole_layout(3),
+                     "audio": AUDIO_BAND_LAYOUT,
+                     "one_band": pigeonhole_layout(0)}[layout]
     fps = [0, -1, 0x1234ABCD5678EF01, -0x7EDCBA9876543210]
 
     def key(fp, ci, combo):
         sl = [((fp & (2**64 - 1)) >> (s * width)) & ((1 << width) - 1)
               for s in combo]
-        return (ci << (width * len(combo))) | sum(
+        k = (ci << (width * len(combo))) | sum(
             v << (width * j) for j, v in enumerate(sl))
+        return k - 2**64 if k >= 2**63 else k   # as a signed long
 
     df = spark.createDataFrame([(i, fp) for i, fp in enumerate(fps)],
                                "id long, fp long")
@@ -215,6 +218,16 @@ def test_band_layout_keys(spark, layout):
     want = sorted((i, key(fp, ci, c)) for i, fp in enumerate(fps)
                   for ci, c in enumerate(combos))
     assert got == want
+
+
+def test_simhash_pairs_exact_codes_only(spark):
+    """max_hamming=0 bands on the whole code: only identical codes pair."""
+    from datasketches_rust_spark.operators.visual import simhash_pairs
+    df = spark.createDataFrame([(1, -42), (2, -42), (3, -41)],
+                               "id long, fp long")
+    got = [tuple(r) for r in
+           simhash_pairs(df, "id", "fp", max_hamming=0).collect()]
+    assert got == [(1, 2, 0)]
 
 
 class TestSimhashHotBucket:
