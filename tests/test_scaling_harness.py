@@ -2,7 +2,6 @@
 errors it raises for a ladder it cannot run. No level is started."""
 
 import importlib.util
-import math
 import sys
 from pathlib import Path
 
@@ -52,7 +51,7 @@ def test_size_steps_growth_of_every_count():
     assert g["input_rows"] == pytest.approx(4.0)
     assert g["job_cpu_s"] == pytest.approx(4.0)
     assert g["cc.rows_out"] == pytest.approx(4.0)
-    assert math.isclose(g["visual.band_events"], 173240 / 24730)
+    assert g["visual.band_events"] == pytest.approx(173240 / 24730)
 
 
 def test_level_record_keeps_the_ladder_figures():
