@@ -23,12 +23,29 @@ S = _load_scaling()
 
 
 def test_core_steps_speedup_and_inflation():
-    levels = [{"cores": 1, "job_s": 5.48, "job_cpu_s": 5.48},
-              {"cores": 4, "job_s": 3.78, "job_cpu_s": 8.38}]
+    levels = [{"round": 0, "cores": 1, "job_s": 5.48, "job_cpu_s": 5.48},
+              {"round": 0, "cores": 4, "job_s": 3.78, "job_cpu_s": 8.38}]
     (step,) = S.core_steps(levels)
     assert step["cores"] == [1, 4]
-    assert step["speedup"] == pytest.approx(5.48 / 3.78)
-    assert step["cpu_inflation"] == pytest.approx(8.38 / 5.48)
+    assert step["speedup"]["median"] == pytest.approx(5.48 / 3.78)
+    assert step["cpu_inflation"]["median"] == pytest.approx(8.38 / 5.48)
+
+
+def test_core_steps_pair_levels_within_each_round():
+    # the box slows down between rounds: each round's step still compares
+    # its own two levels, so the drift does not reach the ratios
+    levels = [{"round": r, "cores": c, "job_s": w * k, "job_cpu_s": cpu * k}
+              for r, k in enumerate((1.0, 2.0, 1.5))
+              for c, w, cpu in ((1, 6.0, 6.0), (2, 4.0, 7.0), (4, 3.0, 9.0))]
+    s12, s24 = S.core_steps(levels)
+    assert s12["cores"] == [1, 2] and s24["cores"] == [2, 4]
+    assert s12["speedup"]["runs"] == pytest.approx([1.5] * 3)
+    assert s24["cpu_inflation"]["runs"] == pytest.approx([9 / 7] * 3)
+
+
+def test_spread():
+    assert S.spread([1.3, 1.5, 1.2]) == {"median": 1.3, "min": 1.2,
+                                         "max": 1.5, "runs": [1.3, 1.5, 1.2]}
 
 
 def test_growth_per_4x():

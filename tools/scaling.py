@@ -2,7 +2,7 @@
 N -> 4N cores or N -> 4N rows, measured on the box it runs on.
 
     python3 tools/scaling.py --axis text --cores 1,4
-    python3 tools/scaling.py --axis video --sizes 1,4 [--seed 901]
+    python3 tools/scaling.py --axis video --sizes 1,4
 
 Axes: ``text``, ``image`` and ``video`` run perfbench's
 ``text_dedup_skewed``, ``image_dedup`` and ``video_dedup`` workloads;
@@ -15,16 +15,19 @@ the levels run one after another, never two at once.
 
 - ``--cores C1,C2,...``: the child pins itself to the first C of this
   process's CPUs (run.py sizes ``local[C]`` from its affinity) and runs
-  the workload at its perfbench size, untraced. Each level reports
+  the workload at its perfbench size, untraced. The ladder runs ROUNDS
+  times in turn (1,4,1,4,...), so a drift of the box's CPU speed over
+  minutes lands on both levels alike. Each level run reports
   ``job_cpu_s``, ``job_s``, ``setup_s`` and the steal share; each step
-  reports the wall ``speedup`` job_s(C) / job_s(C') and the
-  ``cpu_inflation`` job_cpu_s(C') / job_cpu_s(C). Steal slows the wall
-  clock and not the CPU clock, so it cannot pass for poor scaling.
+  reports, per round and as median and range over the rounds, the wall
+  ``speedup`` job_s(C) / job_s(C') and the ``cpu_inflation``
+  job_cpu_s(C') / job_cpu_s(C). Steal slows the wall clock and not the
+  CPU clock, so it cannot pass for poor scaling.
 - ``--sizes S1,S2,...``: every size constant of the workload times S,
   on all of this process's CPUs, one traced run (``--trace 1``) per
-  level. Each level reports the rows out of every layer, band events,
-  LSH candidates and pair recall; each step reports the growth of each
-  per 4x rows.
+  level. More rows means more clusters of the same shape. Each level
+  reports the rows out of every layer, band events, LSH candidates and
+  pair recall; each step reports the growth of each per 4x rows.
 
 Times follow perfbench's protocol: the median CPU seconds of whole
 cycles after one warm-up cycle, over the driver, the Spark JVM and its
@@ -42,6 +45,7 @@ import json
 import math
 import os
 import platform
+import statistics
 import sys
 from concurrent.futures import ProcessPoolExecutor
 from multiprocessing import get_context
@@ -56,7 +60,8 @@ import workloads as W  # noqa: E402  (run.py reads workloads.WORKLOADS)
 
 PKG = W.PKG
 SECONDS = 6             # timed seconds per level: BENCHMARK.json's run_seconds
-DEFAULT_SEED = 901
+SEED = 901
+ROUNDS = 3              # alternating runs of a core ladder
 
 
 class LadderError(ValueError):
@@ -105,29 +110,6 @@ class AudioFrameDedup(W.DedupWorkload):
         return {"input_rows": self.input_rows, "dup_rate": self.DUP_RATE}
 
 
-_GOLDEN = np.uint64(0x9E3779B97F4A7C15)
-
-
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    with np.errstate(over="ignore"):
-        z = x + _GOLDEN
-        z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        return z ^ (z >> np.uint64(31))
-
-
-def gaussian_rows(ids: np.ndarray, key: int, dim: int) -> np.ndarray:
-    """(len(ids), dim) standard normals, a pure function of (key, id):
-    two uniforms per dimension from splitmix64 of a counter, then
-    Box-Muller. Any row is computable alone, with no sequential RNG."""
-    ctr = (ids.astype(np.uint64)[:, None] * np.uint64(2 * dim)
-           + np.arange(2 * dim, dtype=np.uint64))
-    bits = _splitmix64(ctr ^ _splitmix64(np.uint64(key)))
-    u = np.maximum((bits >> np.uint64(11)).astype(np.float64) / 2.0 ** 53,
-                   1e-16)
-    return np.sqrt(-2.0 * np.log(u[:, :dim])) * np.cos(2 * np.pi * u[:, dim:])
-
-
 class EmbeddingDedup(W.DedupWorkload):
     """Embedding dedup at a near-dup operating point: ``cosine_pairs_lsh``
     (threshold 0.9, 384 hyperplane bits in 16 bands of 24) for the edges,
@@ -158,11 +140,12 @@ class EmbeddingDedup(W.DedupWorkload):
     rows_in = {"lsh": W.INPUT, "verify": "lsh", "cc": "verify"}
 
     def generate(self, seed: int) -> pd.DataFrame:
+        rng = np.random.default_rng(seed)
         ids = np.arange(self.N_VECTORS, dtype=np.int64)
-        vecs = gaussian_rows(ids, 2 * seed, self.DIM)
+        vecs = rng.standard_normal((self.N_VECTORS, self.DIM))
         dup = ids % self.DUP_EVERY == 1
-        vecs[dup] = vecs[ids[dup] - 1] + self.NOISE * gaussian_rows(
-            ids[dup], 2 * seed + 1, self.DIM)
+        vecs[dup] = vecs[ids[dup] - 1] + self.NOISE * rng.standard_normal(
+            (int(dup.sum()), self.DIM))
         return pd.DataFrame({"vec_id": ids,
                              "embedding": list(vecs.astype(np.float32)),
                              "cluster_id": np.where(dup, ids - 1, ids)})
@@ -187,7 +170,7 @@ class EmbeddingDedup(W.DedupWorkload):
 
 # axis -> (workload class, the size constants a --sizes level multiplies)
 AXES = {
-    "text": (W.TextDedupSkewed, ("N_DOCS", "COPIES")),
+    "text": (W.TextDedupSkewed, ("N_DOCS", "TEMPLATES")),
     "image": (W.ImageDedup, ("N_IMAGES",)),
     "video": (W.VideoDedup, ("N_VIDEOS",)),
     "audio_frames": (AudioFrameDedup, ("N_CLIPS",)),
@@ -220,12 +203,25 @@ def growth_per_4x(lo: float, hi: float, factor: float) -> float | None:
     return (hi / lo) ** (math.log(4) / math.log(factor))
 
 
+def spread(xs: list[float]) -> dict:
+    """One figure over the rounds: its median, its range and every run."""
+    return {"median": statistics.median(xs), "min": min(xs),
+            "max": max(xs), "runs": xs}
+
+
 def core_steps(levels: list[dict]) -> list[dict]:
-    """Wall speedup and CPU inflation between consecutive core levels."""
-    return [{"cores": [a["cores"], b["cores"]],
-             "speedup": a["job_s"] / b["job_s"],
-             "cpu_inflation": b["job_cpu_s"] / a["job_cpu_s"]}
-            for a, b in zip(levels, levels[1:])]
+    """Wall speedup and CPU inflation between consecutive core levels of
+    each round, with their spread over the rounds."""
+    rounds = {}
+    for rec in levels:
+        rounds.setdefault(rec["round"], []).append(rec)
+    first = rounds[min(rounds)]
+    return [{"cores": [first[i]["cores"], first[i + 1]["cores"]],
+             "speedup": spread([r[i]["job_s"] / r[i + 1]["job_s"]
+                                for r in rounds.values()]),
+             "cpu_inflation": spread([r[i + 1]["job_cpu_s"] / r[i]["job_cpu_s"]
+                                      for r in rounds.values()])}
+            for i in range(len(first) - 1)]
 
 
 def size_steps(levels: list[dict]) -> list[dict]:
@@ -268,8 +264,8 @@ def level_record(describe: dict, result: dict, scale: int) -> dict:
     return rec
 
 
-def _run_level(axis: str, cpus: list[int], scale: int, trace: int,
-               seed: int) -> tuple[int, str]:
+def _run_level(axis: str, cpus: list[int], scale: int,
+               trace: int) -> tuple[int, str]:
     """One level, in a fresh process: pin to ``cpus``, register the
     axis' workload with its sizes times ``scale`` under its perfbench
     name, run perfbench once; return its exit code and stdout."""
@@ -280,16 +276,14 @@ def _run_level(axis: str, cpus: list[int], scale: int, trace: int,
         a: getattr(base, a) * scale for a in sizes})
     out = io.StringIO()
     with contextlib.redirect_stdout(out):
-        rc = run.main(["--workload", base.name, "--seed", str(seed),
+        rc = run.main(["--workload", base.name, "--seed", str(SEED),
                        "--seconds", str(SECONDS), "--trace", str(trace)])
     return rc, out.getvalue()
 
 
-def run_level(axis: str, cpus: list[int], scale: int, trace: int,
-              seed: int) -> dict:
+def run_level(axis: str, cpus: list[int], scale: int, trace: int) -> dict:
     with ProcessPoolExecutor(1, mp_context=get_context("spawn")) as pool:
-        rc, out = pool.submit(_run_level, axis, cpus, scale, trace,
-                              seed).result()
+        rc, out = pool.submit(_run_level, axis, cpus, scale, trace).result()
     lines = [json.loads(ln) for ln in out.splitlines() if ln.startswith("{")]
     if rc != 0 or len(lines) != 2:
         raise RuntimeError(f"{axis} level (cores {len(cpus)}, scale "
@@ -315,7 +309,6 @@ def main(argv=None) -> int:
     ladder = ap.add_mutually_exclusive_group(required=True)
     ladder.add_argument("--cores", help="core counts, e.g. 1,4")
     ladder.add_argument("--sizes", help="size multipliers, e.g. 1,4")
-    ap.add_argument("--seed", type=int, default=DEFAULT_SEED)
     args = ap.parse_args(argv)
     cpus = sorted(os.sched_getaffinity(0))
     try:
@@ -327,21 +320,25 @@ def main(argv=None) -> int:
         ap.error(str(e))
 
     records = []
-    for level in levels:
-        print(f"scaling: {args.axis} {'cores' if args.cores else 'size x'}"
-              f"{level}", file=sys.stderr, flush=True)
-        if args.cores:
-            records.append(run_level(args.axis, cpus[:level], 1, 0,
-                                     args.seed))
-        else:
-            records.append(run_level(args.axis, cpus, level, 1, args.seed))
+    for rnd in range(ROUNDS if args.cores else 1):
+        for level in levels:
+            print(f"scaling: {args.axis} "
+                  f"{'cores' if args.cores else 'size x'}{level}",
+                  file=sys.stderr, flush=True)
+            if args.cores:
+                rec = run_level(args.axis, cpus[:level], 1, 0)
+                records.append({"round": rnd, **rec})
+            else:
+                records.append(run_level(args.axis, cpus, level, 1))
     report = {
         "axis": args.axis, "workload": AXES[args.axis][0].name,
         "ladder": "cores" if args.cores else "sizes", "box": box(),
         "protocol": (
             "tools/scaling.py: one perfbench/run.py run per level "
             f"(--seconds {SECONDS}, --trace {0 if args.cores else 1}), "
-            "levels one after another in fresh processes; times are the "
+            "levels one after another in fresh processes"
+            f"{f', the core ladder {ROUNDS} times in turn' if args.cores else ''}"
+            "; times are the "
             "median CPU seconds (job_cpu_s) and wall seconds (job_s) of "
             "whole cycles after one warm-up cycle, not a best warm trial"),
         "levels": records,
