@@ -320,7 +320,8 @@ def main(argv=None) -> int:
         ap.error(str(e))
 
     records = []
-    for rnd in range(ROUNDS if args.cores else 1):
+    rounds = ROUNDS if args.cores else 1
+    for rnd in range(rounds):
         for level in levels:
             print(f"scaling: {args.axis} "
                   f"{'cores' if args.cores else 'size x'}{level}",
@@ -337,10 +338,11 @@ def main(argv=None) -> int:
             "tools/scaling.py: one perfbench/run.py run per level "
             f"(--seconds {SECONDS}, --trace {0 if args.cores else 1}), "
             "levels one after another in fresh processes"
-            f"{f', the core ladder {ROUNDS} times in turn' if args.cores else ''}"
-            "; times are the "
-            "median CPU seconds (job_cpu_s) and wall seconds (job_s) of "
-            "whole cycles after one warm-up cycle, not a best warm trial"),
+            + (f", the core ladder {rounds} times in turn" if rounds > 1
+               else "")
+            + "; times are the median CPU seconds (job_cpu_s) and wall "
+            "seconds (job_s) of whole cycles after one warm-up cycle, not a "
+            "best warm trial"),
         "levels": records,
         "steps": core_steps(records) if args.cores else size_steps(records),
     }
