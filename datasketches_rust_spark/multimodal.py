@@ -34,22 +34,25 @@ DECODED_META_SCHEMA = ("image_id string, w int, h int, fmt string, "
 def image_features(images: DataFrame) -> DataFrame:
     """Decode + per-channel feature extraction, one Arrow batch at a time.
     Input needs (image_id, bytes, fmt); output DECODED_META_SCHEMA."""
-    from datasketches_rust_spark.sources.phash import phash64
+    from datasketches_rust_spark.sources.phash import phash_batch
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
+            rows, pix = [], []
             for r in pdf.itertuples():
                 px = decode_image(bytes(r.bytes), r.fmt)
                 gray = px.mean(axis=2)
+                pix.append(px)
                 rows.append((r.image_id, px.shape[1], px.shape[0], r.fmt,
                              float(px[..., 0].mean()),
                              float(px[..., 1].mean()),
                              float(px[..., 2].mean()),
-                             float(gray.std()), phash64(px)))
-            yield pd.DataFrame(rows, columns=[
+                             float(gray.std())))
+            out = pd.DataFrame(rows, columns=[
                 "image_id", "w", "h", "fmt", "mean_r", "mean_g", "mean_b",
-                "std_gray", "phash"])
+                "std_gray"])
+            out["phash"] = phash_batch(pix)
+            yield out
 
     return images.select("image_id", "bytes", "fmt").mapInPandas(
         run, schema=DECODED_META_SCHEMA)

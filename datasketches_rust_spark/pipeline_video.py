@@ -12,9 +12,10 @@ Measured on the fixture: dup pairs share >= 6 of 8 frames, hard
 negatives exactly 1, random distinct <= 1 — the >= 4 threshold sits in
 a wide margin (sources/video.py).
 
-Scale shape: bytes die at the frame-sketch scan (the one Arrow pass:
-split + magic-sniff decode + phash, exploding 1 video row -> n_frames
-sketch rows), and the scan runs once: nothing is cached or counted.
+Scale shape: bytes die at the frame-sketch scan (the one mapInArrow
+pass: split + magic-sniff decode + phash_batch over chunks of frames,
+exploding 1 video row -> n_frames sketch rows), and the scan runs
+once: nothing is cached or counted.
 Frame ids are xxhash64(video_id, frame_idx) longs, and each frame's
 (video id, frame_idx) rides WITH its band rows through the pair
 generation as simhash_pairs' payload, so the vote reads both sides'
@@ -25,10 +26,11 @@ a (va, vb)-keyed count-distinct aggregate over frame-pair edges
 
 from __future__ import annotations
 
+from itertools import islice
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 VIDEO_FRAME_HAMMING = 3    # per-frame near-dup gate (the image axis')
@@ -45,37 +47,52 @@ def _decode_frame(buf: bytes) -> np.ndarray:
     return decode_jpeg(buf)
 
 
+def _split_frames(bufs: list[bytes | None]
+                  ) -> Iterator[tuple[int, int, bytes]]:
+    """(row, frame_idx, frame bytes) of every non-empty frame in a list
+    of '<u4'-length-prefixed containers. A null container has no frames;
+    an empty entry keeps its frame_idx but yields nothing."""
+    for row, buf in enumerate(bufs):
+        pos, idx = 0, 0
+        while buf is not None and pos + 4 <= len(buf):
+            ln = int.from_bytes(buf[pos:pos + 4], "little")
+            frame = buf[pos + 4:pos + 4 + ln]
+            if frame:
+                yield row, idx, frame
+            pos += 4 + ln
+            idx += 1
+
+
+def _frame_sketch_pass(batches: Iterator[pa.RecordBatch]
+                       ) -> Iterator[pa.RecordBatch]:
+    """(__vid, __b) batches -> (__vid, frame_idx, phash) batches: each
+    batch's frames are split, decoded and phashed in chunks of at most
+    phash._CHUNK frames, so no more than one chunk is ever decoded."""
+    from datasketches_rust_spark.sources.phash import _CHUNK, phash_batch
+
+    for batch in batches:
+        frames = _split_frames(batch.column("__b").to_pylist())
+        while chunk := list(islice(frames, _CHUNK)):
+            rows, idxs, bufs = zip(*chunk)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("__vid").take(pa.array(rows, pa.int32())),
+                 pa.array(idxs, pa.int32()),
+                 pa.array(phash_batch([_decode_frame(f) for f in bufs]),
+                          pa.int64())],
+                names=["__vid", "frame_idx", "phash"])
+
+
 def video_frame_sketches(videos: DataFrame, id_col: str = "video_id",
                          bytes_col: str = "bytes") -> DataFrame:
     """DataFrame[video_id, frame_idx, phash] — split + decode + phash
-    in ONE Arrow pass; the bytes column never travels past it."""
-    from datasketches_rust_spark.sources.phash import phash64
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids, idxs, phs = [], [], []
-            # itertuples mangles dunder-prefixed names — index columns
-            for vid, raw in zip(pdf["__vid"], pdf["__b"]):
-                buf = bytes(raw)
-                pos, idx = 0, 0
-                while pos + 4 <= len(buf):
-                    ln = int(np.frombuffer(buf, "<u4", 1, pos)[0])
-                    frame = buf[pos + 4:pos + 4 + ln]
-                    if frame:
-                        vids.append(vid)
-                        idxs.append(idx)
-                        phs.append(phash64(_decode_frame(frame)))
-                    pos += 4 + ln
-                    idx += 1
-            yield pd.DataFrame({"__vid": vids, "frame_idx": idxs,
-                                "phash": np.array(phs, dtype=np.int64)})
-
+    in ONE Arrow pass; the bytes column never travels past it. A null
+    bytes value, like an empty one, has no frames."""
     id_type = dict(videos.dtypes)[id_col]
     return (videos.select(F.col(id_col).alias("__vid"),
                           F.col(bytes_col).alias("__b"))
-            .mapInPandas(
-                run,
-                schema=f"__vid {id_type}, frame_idx int, phash long")
+            .mapInArrow(
+                _frame_sketch_pass,
+                f"__vid {id_type}, frame_idx int, phash long")
             .withColumnRenamed("__vid", id_col))
 
 

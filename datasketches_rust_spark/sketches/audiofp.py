@@ -44,6 +44,14 @@ F_HI = 3600.0
 BAND_EDGES = np.linspace(F_LO, F_HI, N_BANDS + 1)
 
 
+def _sign_codes(bits: np.ndarray) -> np.ndarray:
+    """(..., N_SEGMENTS, N_BANDS) sign matrices -> (...) int64 codes,
+    bit i = cell i of the segment-major matrix."""
+    flat = bits.reshape(*bits.shape[:-2], 64).astype(np.uint64)
+    return (flat << np.arange(64, dtype=np.uint64)).sum(
+        axis=-1).astype(np.int64)
+
+
 def band_energies(pcm: np.ndarray, sr: int) -> np.ndarray:
     """(N_SEGMENTS, N_BANDS) spectral energy matrix of a mono clip."""
     pcm = np.asarray(pcm, dtype=np.float64)
@@ -72,16 +80,12 @@ def audio_sketch(pcm: np.ndarray, sr: int
     verification cosine = plain dot product.
     """
     e = band_energies(pcm, sr)
-    bits = (e > e.mean(axis=0, keepdims=True)).reshape(-1)
-    v = np.uint64(0)
-    for i in range(64):
-        if bits[i]:
-            v |= np.uint64(1) << np.uint64(i)
+    code = _sign_codes(e > e.mean(axis=0, keepdims=True))
     shape = e / (e.sum(axis=1, keepdims=True) + 1e-30)
     feat = shape.reshape(-1)
     nrm = np.linalg.norm(feat)
     feat = (feat / nrm if nrm > 0 else feat).astype(np.float32)
-    return int(v.astype(np.int64)), feat
+    return int(code), feat
 
 
 def audio_fingerprint64(pcm: np.ndarray, sr: int) -> int:
@@ -150,7 +154,4 @@ def audio_frame_codes(pcm: np.ndarray, sr: int) -> np.ndarray:
         frames = np.lib.stride_tricks.sliding_window_view(
             pcm, flen)[starts]
     e = frame_band_energies(frames, sr)
-    bits = (e > e.mean(axis=1, keepdims=True)).reshape(len(frames), 64)
-    codes = (bits.astype(np.uint64)
-             << np.arange(64, dtype=np.uint64)).sum(axis=1)
-    return codes.astype(np.int64)
+    return _sign_codes(e > e.mean(axis=1, keepdims=True))

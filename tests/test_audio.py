@@ -72,6 +72,24 @@ def test_empty_and_silent_clips():
     assert f == 0 and not np.any(np.isnan(ft))
 
 
+def test_fingerprint_matches_bit_loop():
+    """The packed code is the segment-major sign matrix with bit i =
+    cell i: the values a 64-step shift loop gives."""
+    from datasketches_rust_spark.multimodal import _decode_audio
+    fps = []
+    for r in generate_clips(50, seed=42)[0].itertuples():
+        pcm, sr = _decode_audio(bytes(r.bytes))
+        e = band_energies(pcm, sr)
+        bits = (e > e.mean(axis=0, keepdims=True)).reshape(-1)
+        v = np.uint64(0)
+        for i in range(64):
+            if bits[i]:
+                v |= np.uint64(1) << np.uint64(i)
+        fps.append(audio_fingerprint64(pcm, sr))
+        assert fps[-1] == int(v.astype(np.int64))
+    assert min(fps) < 0 < max(fps)  # the sign bit is exercised
+
+
 def test_pipeline_recall_precision_and_kernel_parity(spark):
     from datasketches_rust_spark.multimodal import _decode_audio
     from datasketches_rust_spark.pipeline_audio import (

@@ -158,15 +158,21 @@ class TestImagePipeline:
 
 
 def test_phash_batch_matches_scalar():
-    """Batched DCT/median/bit-pack is bit-identical to the scalar
-    reference across image shapes (including non-multiples of 32)."""
-    from datasketches_rust_spark.sources.phash import phash_batch
+    """Batched gray/DCT/median/bit-pack is bit-identical to the scalar
+    reference across image shapes (including non-multiples of 32), and
+    across a chunk boundary where stacked 32-px frames and per-image
+    shapes interleave."""
+    from datasketches_rust_spark.sources.phash import _CHUNK, phash_batch
     rng = np.random.default_rng(3)
     imgs = [rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
             for h, w in [(32, 32), (64, 64), (48, 40), (100, 70), (33, 65)]
             for _ in range(3)]
-    want = np.array([phash64(p) for p in imgs], dtype=np.int64)
-    assert np.array_equal(phash_batch(imgs), want)
+    mixed = [imgs[k % len(imgs)] if k % 97 == 0
+             else rng.integers(0, 256, (32, 32, 3), dtype=np.uint8)
+             for k in range(_CHUNK + 200)]
+    for batch in (imgs, mixed):
+        want = np.array([phash64(p) for p in batch], dtype=np.int64)
+        assert np.array_equal(phash_batch(batch), want)
     assert phash_batch([]).size == 0
 
 

@@ -11,23 +11,31 @@ from datasketches_rust_spark.pipeline_video import (
     video_cluster_assignments,
     video_frame_sketches,
 )
+from datasketches_rust_spark.sources.codec import encode_png
 from datasketches_rust_spark.sources.phash import phash64
 from datasketches_rust_spark.sources.video import (
+    VIDEO_SCHEMA,
     _frames,
+    _pack,
     generate_videos,
     video_spark_df,
 )
 
 
 def test_frame_sketches_match_numpy_kernel(spark):
+    from datasketches_rust_spark.pipeline_video import _decode_frame
     local = generate_videos(30, seed=42)[0]
-    df = spark.createDataFrame(
-        local, schema="video_id string, bytes binary, n_frames int")
+    # an empty container entry yields no row; the next frame keeps its
+    # index
+    f0, f2 = (encode_png(f) for f in _frames(42, 7)[:2])
+    local.loc[len(local)] = ["vid_gap", _pack([f0, b"", f2]), 3]
+    df = spark.createDataFrame(local, schema=VIDEO_SCHEMA)
     got = defaultdict(dict)
     for r in video_frame_sketches(df).collect():
         got[r.video_id][r.frame_idx] = r.phash
-    from datasketches_rust_spark.pipeline_video import _decode_frame
-    for r in local.itertuples():
+    assert got.pop("vid_gap") == {0: phash64(_decode_frame(f0)),
+                                  2: phash64(_decode_frame(f2))}
+    for r in local[:-1].itertuples():
         buf = bytes(r.bytes)
         pos, idx = 0, 0
         while pos + 4 <= len(buf):
@@ -37,6 +45,16 @@ def test_frame_sketches_match_numpy_kernel(spark):
             pos += 4 + ln
             idx += 1
         assert len(got[r.video_id]) == r.n_frames
+
+    # a batch in which no video has a frame (empty, one empty entry,
+    # null): no rows, and the declared types
+    frameless = spark.createDataFrame(
+        [("a", b"", 0), ("b", _pack([b""]), 1), ("c", None, 0)],
+        schema=VIDEO_SCHEMA).coalesce(1)
+    out = video_frame_sketches(frameless)
+    assert out.collect() == []
+    assert out.dtypes == [("video_id", "string"), ("frame_idx", "int"),
+                          ("phash", "bigint")]
 
 
 def test_adjacent_frames_not_near_dups():
@@ -50,9 +68,12 @@ def test_adjacent_frames_not_near_dups():
 
 def test_pipeline_recall_precision_and_hard_negative(spark):
     vids, truth = video_spark_df(spark, 1000, seed=42)
-    got = video_cluster_assignments(vids).collect()
+    # a null bytes value has no frames: that video is a singleton
+    null = spark.createDataFrame([("vid_null", None, 0)], VIDEO_SCHEMA)
+    got = video_cluster_assignments(vids.unionByName(null)).collect()
     t = {r.video_id: r.cluster_id for r in truth.collect()}
     g = {r.video_id: r.cluster_id for r in got}
+    assert g.pop("vid_null") == "vid_null"
     assert set(t) == set(g)
     tc, gc = defaultdict(set), defaultdict(set)
     for k, v in t.items():
@@ -76,7 +97,8 @@ def test_pipeline_recall_precision_and_hard_negative(spark):
 
 def test_video_edges_plan_one_decode_no_cache_no_rejoin(spark):
     """Each frame's (video, frame_idx) rides the band exchange as the
-    pair operator's payload: one frame-decode pass, no cached frame
+    pair operator's payload: one frame-decode pass (an Arrow one over
+    the video id and bytes), no cached frame
     table, and no join (the vote reads both videos off the frame
     pairs; nothing maps frame ids back to videos)."""
     import re
@@ -94,6 +116,8 @@ def test_video_edges_plan_one_decode_no_cache_no_rejoin(spark):
         plan = edges._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert len(re.findall(r"MapInPandas ", plan)) == 1, plan
+    assert len(re.findall(r"MapInArrow \w+\(__vid#\d+L, __b#\d+\)",
+                          plan)) == 1, plan
+    assert "MapInPandas" not in plan, plan
     assert "InMemoryTableScan" not in plan, plan
     assert "Join" not in plan, plan

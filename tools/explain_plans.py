@@ -1079,7 +1079,7 @@ def main() -> None:
         .select("__lid", "bytes"), "__lid")
     failures += audit("video_edges", vv, {
         "bytes never in any exchange": _never_shuffled("bytes"),
-        "one frame-decode node (MapInPandas over the bytes)":
+        "one frame-decode node (MapInArrow over the bytes)":
             lambda p: len(re.findall(r"^Input \[\d+\]: \[__vid#\d+L, __b#",
                                      p, re.M)) == 1,
         "no join keyed on __fid (no join at all)":
