@@ -98,9 +98,9 @@ def test_pipeline_recall_precision_and_hard_negative(spark):
 def test_video_edges_plan_one_decode_no_cache_no_rejoin(spark):
     """Each frame's (video, frame_idx) rides the band exchange as the
     pair operator's payload: one frame-decode pass (an Arrow one over
-    the video id and bytes), no cached frame
-    table, and no join (the vote reads both videos off the frame
-    pairs; nothing maps frame ids back to videos)."""
+    the video id and bytes), no cached frame table, and no join (the
+    vote reads both videos off the frame pairs; nothing maps frame ids
+    back to videos)."""
     import re
 
     from pyspark.sql import functions as F
