@@ -532,11 +532,7 @@ def freq_topk_explode(df: DataFrame, key_cols: list[str], k: int,
     return df.select(*key_cols, sketch_col).mapInArrow(explode, schema)
 
 
-def register_sql_udfs(spark, lg_k: int = 16, seed: int = DEFAULT_SEED,
-                      tdigest_k: int = 200, freq_max_map_size: int = 256,
-                      countmin_hashes: int = 5, countmin_buckets: int = 1024,
-                      bloom_bits: int = 1 << 16,
-                      bloom_hashes: int = 7) -> None:
+def register_sql_udfs(spark, lg_k: int = 16, seed: int = DEFAULT_SEED) -> None:
     """Expose the sketch surface to plain ``spark.sql()`` users:
 
     - ``theta/hll/cpc/tdigest/freq/countmin/bloom_sketch_agg`` —
@@ -547,7 +543,9 @@ def register_sql_udfs(spark, lg_k: int = 16, seed: int = DEFAULT_SEED,
       worker with no partial aggregation, so the SCALE path for
       10^12-row tables remains ``sketch_agg``'s map-side-combine partials
       + salted treeReduce. For bounded-group dashboards and ad-hoc SQL
-      this is the ergonomic form.
+      this is the ergonomic form. theta/hll/cpc take ``lg_k``; the
+      others are fixed: tdigest k=200, freq max map 256, countmin 5
+      hashes x 1024 buckets, bloom 2^16 bits x 7 hashes.
     - ``theta_estimate / hll_estimate / cpc_estimate`` (bytes -> double)
       and ``theta_estimate_long`` (rounded bigint for exact-mode parity)
       — the sketch config travels inside the serialized blob, so the
@@ -579,12 +577,12 @@ def register_sql_udfs(spark, lg_k: int = 16, seed: int = DEFAULT_SEED,
         "theta": sketch_kind("theta", lg_k=lg_k, seed=seed),
         "hll": sketch_kind("hll", lg_k=lg_k, seed=seed),
         "cpc": sketch_kind("cpc", lg_k=lg_k, seed=seed),
-        "tdigest": sketch_kind("tdigest", k=tdigest_k),
-        "freq": sketch_kind("freqitems", max_map_size=freq_max_map_size),
-        "countmin": sketch_kind("countmin", num_hashes=countmin_hashes,
-                                num_buckets=countmin_buckets, seed=seed),
-        "bloom": sketch_kind("bloom", num_bits=bloom_bits,
-                             num_hashes=bloom_hashes, seed=seed),
+        "tdigest": sketch_kind("tdigest"),
+        "freq": sketch_kind("freqitems"),
+        "countmin": sketch_kind("countmin", num_hashes=5, num_buckets=1024,
+                                seed=seed),
+        "bloom": sketch_kind("bloom", num_bits=1 << 16, num_hashes=7,
+                             seed=seed),
     }
     for name, kd in builders.items():
         spark.udf.register(f"{name}_sketch_agg", _builder(kd))

@@ -21,10 +21,10 @@ from pyspark.storagelevel import StorageLevel
 _TRACKED: list[DataFrame] = []
 
 
-def track(df: DataFrame,
-          level: StorageLevel = StorageLevel.MEMORY_AND_DISK) -> DataFrame:
-    """persist() + register for deferred release."""
-    df = df.persist(level)
+def track(df: DataFrame) -> DataFrame:
+    """persist() (serialized MEMORY_AND_DISK) + register for deferred
+    release."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _TRACKED.append(df)
     return df
 

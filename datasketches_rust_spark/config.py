@@ -29,9 +29,7 @@ class DedupConfig:
     lsh_bands: int = 32         # b
     lsh_rows: int = 4           # r ; b*r must equal num_perm
     jaccard_threshold: float = 0.8
-    simhash_bits: int = 64
     simhash_hamming: int = 3    # max Hamming distance for visual near-dup
-    phash_ngram: int = 2        # byte n-gram width over phash bytes
     # LSH bucket cap: buckets above this degrade to a star topology around
     # their min-id representative (O(size) edges, component stays
     # connected) instead of the quadratic self-join — see operators/lsh.py
@@ -133,17 +131,8 @@ def spark_session(app: str = "datasketches-rust-spark", cpus: int | None = None,
         # default for a shuffle-heavy dedup job; zstd at level 1 compresses
         # the long-packed band/pair rows ~1.6-2x tighter than lz4 at
         # GB/s-class speeds
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"))
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.io.compression.zstd.level", "1")
-        .config("spark.io.compression.lz4.blockSize", "512k")
-        # scan-partition size: 128 MB default (the standard cluster value);
-        # override via env when a job wants scan task counts that divide
-        # the core count evenly (wave quantization: a 46-task CPU-heavy UDF
-        # stage on 32 cores wastes ~30% of the last wave)
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES",
-                               "134217728"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # page faults cost ~0.5 ms/4KiB on this kernel and the fault path
         # serializes under many-core load (98% sys time at local[32]).
@@ -161,7 +150,7 @@ def spark_session(app: str = "datasketches-rust-spark", cpus: int | None = None,
                 + " -XX:+UseTransparentHugePages -XX:+AlwaysPreTouch"
                 + f" -XX:ParallelGCThreads={max(2, cpus)}"
                 + f" -XX:ConcGCThreads={max(1, cpus // 4)}")
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.ui.enabled", "false")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

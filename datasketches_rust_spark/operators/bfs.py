@@ -31,23 +31,20 @@ class DepthExhausted(RuntimeError):
 
 
 def bfs_distances(edges: DataFrame, sources: DataFrame,
-                  id_col: str = "id", src: str = "id_a",
-                  dst: str = "id_b", dist_col: str = "dist",
-                  max_depth: int = 16) -> DataFrame:
+                  id_col: str = "id", max_depth: int = 16) -> DataFrame:
     """DataFrame[node, dist] — unweighted shortest-hop distance from the
     nearest row of ``sources`` (multi-source BFS; sources get dist 0).
-    Only nodes reachable from a source appear. Edges are treated as
-    undirected."""
+    Only nodes reachable from a source appear. Edges (id_a, id_b) are
+    treated as undirected."""
     from pyspark.storagelevel import StorageLevel
+    from datasketches_rust_spark.operators.connected_components import \
+        symmetric_edges
 
     lvl = StorageLevel.MEMORY_AND_DISK  # pyspark's SERIALIZED level
-    sym = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-           .union(edges.select(F.col(dst).alias("s"),
-                               F.col(src).alias("d"))))
-    sym = sym.localCheckpoint(storageLevel=lvl)
+    sym = symmetric_edges(edges).localCheckpoint(storageLevel=lvl)
 
     visited = (sources.select(F.col(id_col).alias("node")).distinct()
-               .withColumn(dist_col, F.lit(0))
+               .withColumn("dist", F.lit(0))
                .localCheckpoint(storageLevel=lvl))
     frontier = visited
 
@@ -55,7 +52,7 @@ def bfs_distances(edges: DataFrame, sources: DataFrame,
         nxt = (frontier.join(sym, frontier["node"] == sym["s"])
                .select(F.col("d").alias("node")).distinct()
                .join(visited.select("node"), "node", "left_anti")
-               .withColumn(dist_col, F.lit(depth))
+               .withColumn("dist", F.lit(depth))
                .localCheckpoint(storageLevel=lvl))
         if nxt.count() == 0:
             return visited

@@ -30,21 +30,20 @@ class ConvergenceError(RuntimeError):
     """Label propagation exhausted max_iter with labels still changing."""
 
 
-def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
-                         id_col: str = "id", src: str = "id_a",
-                         dst: str = "id_b", max_iter: int = 50,
+def connected_components(edges: DataFrame, id_col: str = "id",
+                         max_iter: int = 50,
                          shortcut_after: int = 6) -> DataFrame:
     """DataFrame[id, cluster_id] — cluster_id = min vertex id reachable.
 
-    edges: DataFrame[src, dst]. If ``vertices`` is None, only edge-touched
-    nodes are labeled — the scale-critical case: singletons (the vast
-    majority at 10^12 rows) never enter the iteration; use
-    ``assign_clusters`` to fold them back in with a single join.
+    edges: DataFrame[id_a, id_b]. Only edge-touched nodes are labeled —
+    the scale-critical case: singletons (the vast majority at 10^12
+    rows) never enter the iteration; use ``assign_clusters`` to fold
+    them back in with a single join.
     """
     from pyspark.storagelevel import StorageLevel
     from datasketches_rust_spark.cache import release_tracked
 
-    sym = _symmetric_edges(edges, src, dst)
+    sym = symmetric_edges(edges)
     # serialized storage (pyspark's MEMORY_AND_DISK is the serialized
     # variant; the JVM localCheckpoint default is the DESER one): the
     # checkpoint is re-read 1-2x per round (own + msgs legs), and
@@ -58,15 +57,11 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     # consumable garbage, as is any previous call's label table
     release_tracked()
 
-    # initial labels stay lazy: they derive from the checkpointed edge set
-    # (or a plain vertex scan), so materializing them separately would only
-    # add a job and its fixed per-task cost (measured ~0.11 CPU-s per
-    # Python task on a 4-core VM)
-    if vertices is None:
-        labels = None  # identity labels: round 1 reads them off sym directly
-    else:
-        labels = vertices.select(F.col(id_col).alias("v"),
-                                 F.col(id_col).alias("label"))
+    # initial labels stay lazy: identity labels that round 1 reads off
+    # the checkpointed edge set directly, so materializing them separately
+    # would only add a job and its fixed per-task cost (measured ~0.11
+    # CPU-s per Python task on a 4-core VM)
+    labels = None
 
     prev = None
     converged = False
@@ -140,14 +135,14 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
                          F.col("label").alias("cluster_id"))
 
 
-def _symmetric_edges(edges: DataFrame, src: str = "id_a",
-                    dst: str = "id_b") -> DataFrame:
-    """DataFrame[s, d] — both directions of every edge from ONE pass
-    over ``edges``. A union of the two directions would run the edge
-    plan once per union leg: exchange reuse shares only the shuffles, so
-    everything above the last exchange (a Python verify UDF, say) would
-    be evaluated twice."""
-    s, d = F.col(src), F.col(dst)
+def symmetric_edges(edges: DataFrame) -> DataFrame:
+    """DataFrame[s, d] — both directions of every (id_a, id_b) edge from
+    ONE pass over ``edges``; the one symmetrization of the graph
+    operators (CC, BFS, PageRank, k-core). A union of the two directions
+    would run the edge plan once per union leg: exchange reuse shares
+    only the shuffles, so everything above the last exchange (a Python
+    verify UDF, say) would be evaluated twice."""
+    s, d = F.col("id_a"), F.col("id_b")
     return edges.select(F.inline(F.array(
         F.struct(s.alias("s"), d.alias("d")),
         F.struct(d.alias("s"), s.alias("d")))))
@@ -167,7 +162,7 @@ def assign_clusters(items: DataFrame, edges_fn, id_col: str = "id"
     size. String ids take assign_clusters_string_ids."""
     if dict(items.dtypes)[id_col] == "string":
         return assign_clusters_string_ids(items, edges_fn, id_col)
-    cc = connected_components(edges_fn(items, id_col), None, id_col=id_col)
+    cc = connected_components(edges_fn(items, id_col), id_col)
     return _fold_in_singletons(items, cc, id_col)
 
 
@@ -193,8 +188,7 @@ def assign_clusters_string_ids(items: DataFrame, edges_fn,
     the ``__lid`` and two of its ids in the message."""
     lid = _id_hash(id_col)
     cc = connected_components(
-        edges_fn(items.withColumn("__lid", lid), "__lid"), None,
-        id_col="__lid")
+        edges_fn(items.withColumn("__lid", lid), "__lid"), "__lid")
     idmap = items.select(F.col(id_col), lid.alias("__lid"))
     members = (cc.join(idmap, "__lid")
                .select(F.col(id_col), F.col("cluster_id").alias("__cl")))

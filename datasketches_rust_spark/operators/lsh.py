@@ -219,8 +219,8 @@ def bucketed_pair_events(ex: DataFrame, max_bucket_size: int,
 _pair_events = bucketed_pair_events
 
 
-def candidate_pairs(df: DataFrame, cfg: DedupConfig, id_col: str,
-                    bands_col: str = "bands") -> DataFrame:
+def candidate_pairs(df: DataFrame, cfg: DedupConfig, id_col: str
+                    ) -> DataFrame:
     """DataFrame[id_a, id_b] — unordered candidate pairs (id_a < id_b),
     distinct across bands.
 
@@ -230,9 +230,8 @@ def candidate_pairs(df: DataFrame, cfg: DedupConfig, id_col: str,
     any star edge (see module docstring for why the prefilter must not
     count capped bands).
     """
-    ex = explode_bands(df, id_col, bands_col)
-    min_nb = getattr(cfg, "min_band_matches", 1)
-    return pair_candidates(ex, cfg.max_bucket_size, min_nb)
+    ex = explode_bands(df, id_col, "bands")
+    return pair_candidates(ex, cfg.max_bucket_size, cfg.min_band_matches)
 
 
 def pair_candidates(ex: DataFrame, max_bucket_size: int,
@@ -252,12 +251,12 @@ def pair_candidates(ex: DataFrame, max_bucket_size: int,
             .select("id_a", "id_b"))
 
 
-def hot_bucket_stats(df: DataFrame, cfg: DedupConfig, id_col: str,
-                     bands_col: str = "bands") -> DataFrame:
+def hot_bucket_stats(df: DataFrame, cfg: DedupConfig, id_col: str
+                     ) -> DataFrame:
     """Metrics: per-band bucket-size distribution + number of capped
     (star-degraded) buckets. Feeds the pipeline's lineage/metrics
     checkpoint."""
-    ex = explode_bands(df, id_col, bands_col)
+    ex = explode_bands(df, id_col, "bands")
     sizes = ex.groupBy("band_key").count()
     return sizes.agg(
         F.count("*").alias("n_buckets"),

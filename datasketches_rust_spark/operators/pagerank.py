@@ -42,16 +42,17 @@ PAGERANK_DAMPING = 0.85
 PAGERANK_ITERS = 15
 
 
-def pagerank(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
-             damping: float = PAGERANK_DAMPING,
-             n_iter: int = PAGERANK_ITERS,
+def pagerank(edges: DataFrame, n_iter: int = PAGERANK_ITERS,
              checkpoint_every: int = 6) -> DataFrame:
-    """Rank nodes of the undirected graph given as an (src, dst) edge
+    """Rank nodes of the undirected graph given as an (id_a, id_b) edge
     list (each undirected edge once). Returns (u, r) with sum(r) ~ 1."""
     from datasketches_rust_spark import cache
-    sym = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-           .unionAll(
-               edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))))
+    from datasketches_rust_spark.operators.connected_components import \
+        symmetric_edges
+    # one pass over edges for both directions: the callers' edge plans
+    # are not checkpointed, and a two-leg union would run each one
+    # (exact-Jaccard verify UDF included) twice
+    sym = symmetric_edges(edges).toDF("u", "v")
     # track()ed, not bare-persisted: the returned ranks frame is lazy and
     # references adj, so this function cannot unpersist before returning —
     # the session cache registry releases it at the next pipeline/CC
@@ -65,7 +66,7 @@ def pagerank(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
     if n == 0:
         adj.unpersist()
         return sym.sparkSession.createDataFrame([], "u long, r double")
-    base = (1.0 - damping) / n
+    base = (1.0 - PAGERANK_DAMPING) / n
     ranks = adj.select("u", F.lit(1.0 / n).alias("r"))
     for i in range(n_iter):
         contribs = (adj.join(ranks, "u")
@@ -73,7 +74,7 @@ def pagerank(edges: DataFrame, src: str = "id_a", dst: str = "id_b",
                             (F.col("r") / F.col("deg")).alias("c")))
         ranks = (contribs.groupBy("u")
                  .agg((F.lit(base)
-                       + F.lit(damping) * F.sum("c")).alias("r")))
+                       + F.lit(PAGERANK_DAMPING) * F.sum("c")).alias("r")))
         if (i + 1) % checkpoint_every == 0 and (i + 1) < n_iter:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks

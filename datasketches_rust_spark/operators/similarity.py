@@ -123,15 +123,13 @@ def _infer_dim(df: DataFrame, vec_col: str) -> int:
 
 def _band_candidates(df: DataFrame, id_col: str, vec_col: str, dim: int,
                      nbits: int, num_bands: int, seed: int,
-                     min_band_matches: int = 1,
-                     symmetric: bool = False,
                      max_bucket_size: int = 4096) -> DataFrame:
-    """Id-only LSH candidate generation: the band exchange carries ONLY
-    (id, band_key) rows — never the embedding vectors (at 10^9 rows x 768
-    dims, shuffling vectors through the band join would multiply shuffle
-    bytes by ~2 x dim x bands; vectors are re-joined once afterwards by the
-    caller). Dedup + the >=min_band_matches prefilter happen in one
-    groupBy on the id pair.
+    """Id-only LSH candidate generation: DataFrame[id_a, id_b], id_a <
+    id_b. The band exchange carries ONLY (id, band_key) rows — never the
+    embedding vectors (at 10^9 rows x 768 dims, shuffling vectors
+    through the band join would multiply shuffle bytes by ~2 x dim x
+    bands; vectors are re-joined once afterwards by the caller). Pair
+    dedup happens in one groupBy on the id pair.
 
     Hot-bucket guard: candidate generation is operators/lsh's one bucket
     pass (one band exchange, one Arrow pass; lsh.pair_candidates), the
@@ -143,20 +141,14 @@ def _band_candidates(df: DataFrame, id_col: str, vec_col: str, dim: int,
     embeddings lands its whole population in the same bucket of EVERY
     band; the downstream exact verify keeps star edges between true dups
     and rejects hash coincidences, so connected components still recover
-    the cluster). Star edges bypass min_band_matches — capped buckets
-    were never counted. Set max_bucket_size=0 to restore exact pairwise
+    the cluster). Set max_bucket_size=0 to restore exact pairwise
     candidates.
     """
     from datasketches_rust_spark.operators.lsh import pair_candidates
     bands = hyperplane_bands_udf(dim, nbits, num_bands, seed)
     keyed = df.select(F.col(id_col).alias("__id"),
                       F.explode(bands(F.col(vec_col))).alias("band_key"))
-    pairs = pair_candidates(keyed, max_bucket_size, min_band_matches)
-    if symmetric:
-        pairs = pairs.unionByName(
-            pairs.select(F.col("id_b").alias("id_a"),
-                         F.col("id_a").alias("id_b")))
-    return pairs
+    return pair_candidates(keyed, max_bucket_size)
 
 
 def _exact_rerank_topk(cand: DataFrame, df: DataFrame, k: int,
@@ -198,11 +190,14 @@ def ann_lsh_topk(df: DataFrame, k: int, id_col: str = "vec_id",
     crawl-scale duplicate cluster quadratically."""
     if dim is None:
         dim = _infer_dim(df, vec_col)
-    cand = _band_candidates(df, id_col, vec_col, dim, nbits, num_bands,
-                            seed, symmetric=True,
-                            max_bucket_size=max_bucket_size) \
+    pairs = _band_candidates(df, id_col, vec_col, dim, nbits, num_bands,
+                             seed, max_bucket_size)
+    # both directions: each vector ranks its neighbors on either side
+    cand = (pairs.unionByName(
+        pairs.select(F.col("id_b").alias("id_a"),
+                     F.col("id_a").alias("id_b")))
         .select(F.col("id_a").alias("query_id"),
-                F.col("id_b").alias("neighbor_id"))
+                F.col("id_b").alias("neighbor_id")))
     return _exact_rerank_topk(cand, df, k, id_col, vec_col)
 
 
@@ -351,6 +346,24 @@ def ann_recall_report(df: DataFrame, k: int = 3, id_col: str = "vec_id",
             .orderBy("method"))
 
 
+def _exact_cosine_verify(cand: DataFrame, df: DataFrame, threshold: float,
+                         id_col: str, vec_col: str) -> DataFrame:
+    """The id-only candidate pairs (id_a, id_b) whose exact cosine is >=
+    threshold, with the cosine in ``__sim``: vectors and norms re-join
+    once per side (two broadcast-or-shuffle hash joins on the id key)."""
+    vecs = with_norm(df.select(F.col(id_col), F.col(vec_col)),
+                     vec_col, "__n")
+    va = vecs.select(F.col(id_col).alias("id_a"),
+                     F.col(vec_col).alias("__va"), F.col("__n").alias("__na"))
+    vb = vecs.select(F.col(id_col).alias("id_b"),
+                     F.col(vec_col).alias("__vb"), F.col("__n").alias("__nb"))
+    sim = (_dot(_as_double(F.col("__va")), _as_double(F.col("__vb")))
+           / F.greatest(F.col("__na") * F.col("__nb"), F.lit(1e-12)))
+    return (cand.join(va, "id_a").join(vb, "id_b")
+            .withColumn("__sim", sim)
+            .where(F.col("__sim") >= threshold))
+
+
 def cosine_pairs_lsh(df: DataFrame, threshold: float,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      nbits: int = 96, num_bands: int = 24,
@@ -377,19 +390,8 @@ def cosine_pairs_lsh(df: DataFrame, threshold: float,
     if dim is None:
         dim = _infer_dim(df, vec_col)
     cand = _band_candidates(df, id_col, vec_col, dim, nbits, num_bands,
-                            seed, symmetric=False,
-                            max_bucket_size=max_bucket_size)
-    vecs = with_norm(df.select(F.col(id_col), F.col(vec_col)),
-                     vec_col, "__n")
-    va = vecs.select(F.col(id_col).alias("id_a"),
-                     F.col(vec_col).alias("__va"), F.col("__n").alias("__na"))
-    vb = vecs.select(F.col(id_col).alias("id_b"),
-                     F.col(vec_col).alias("__vb"), F.col("__n").alias("__nb"))
-    sim = (_dot(_as_double(F.col("__va")), _as_double(F.col("__vb")))
-           / F.greatest(F.col("__na") * F.col("__nb"), F.lit(1e-12)))
-    out = (cand.join(va, "id_a").join(vb, "id_b")
-           .withColumn("__sim", sim)
-           .where(F.col("__sim") >= threshold))
+                            seed, max_bucket_size)
+    out = _exact_cosine_verify(cand, df, threshold, id_col, vec_col)
     if keep_sim:
         return out.select("id_a", "id_b", F.col("__sim").alias("sim"))
     return out.select("id_a", "id_b")
@@ -418,11 +420,14 @@ def ivf_home_udf(centroids: np.ndarray):
     return _udf
 
 
+SEMDEDUP_MAX_CELL = 4096    # semantic_dedup cells above this go star
+SEMDEDUP_KMEANS_ITERS = 8   # Lloyd iterations of its coarse quantizer
+
+
 def semantic_dedup(df: DataFrame, threshold: float, nlist: int = 8,
                    id_col: str = "vec_id", vec_col: str = "embedding",
-                   seed: int = 9001, centroids: np.ndarray | None = None,
-                   max_cell_size: int = 4096,
-                   max_iter: int = 8) -> DataFrame:
+                   seed: int = 9001, centroids: np.ndarray | None = None
+                   ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) — semantic dedup scoped by a KMeans
     partition of embedding space: every vector is assigned its nearest
     centroid's cell, candidate pairs exist only WITHIN a cell, pairs
@@ -439,7 +444,7 @@ def semantic_dedup(df: DataFrame, threshold: float, nlist: int = 8,
     grows with n (the paper uses ~n/10^4 clusters) so cells stay
     bounded, and the within-cell pairing routes through
     bucketed_pair_events (the one bucket pass of operators/lsh, cells as
-    band keys) where cells over ``max_cell_size`` degrade to star edges
+    band keys) where cells over SEMDEDUP_MAX_CELL degrade to star edges
     around the min-id member instead of O(size^2) pairs — the exact
     verify keeps true-dup star edges and CC reconnects the group. Only
     (id, cell) rows enter the pairing exchange; vectors re-join once
@@ -455,7 +460,7 @@ def semantic_dedup(df: DataFrame, threshold: float, nlist: int = 8,
         # so fewer Lloyd iterations than ANN's quantizer is the right
         # default — each iteration is a full Spark job
         centroids = train_ivf_centroids(df, nlist, vec_col, seed,
-                                        max_iter=max_iter)
+                                        max_iter=SEMDEDUP_KMEANS_ITERS)
     home = ivf_home_udf(centroids)
     asg = (df.select(F.col(id_col), home(F.col(vec_col)).alias("__h"))
            .select(id_col, F.col("__h.cell").alias("cell"),
@@ -473,21 +478,11 @@ def semantic_dedup(df: DataFrame, threshold: float, nlist: int = 8,
     asg.count()
     keyed = asg.select(F.col(id_col).alias("__id"),
                        F.col("cell").alias("band_key"))
-    cand = (bucketed_pair_events(keyed, max_cell_size)
+    cand = (bucketed_pair_events(keyed, SEMDEDUP_MAX_CELL)
             .select("id_a", "id_b"))
-    vecs = with_norm(df.select(F.col(id_col), F.col(vec_col)),
-                     vec_col, "__n")
-    va = vecs.select(F.col(id_col).alias("id_a"),
-                     F.col(vec_col).alias("__va"), F.col("__n").alias("__na"))
-    vb = vecs.select(F.col(id_col).alias("id_b"),
-                     F.col(vec_col).alias("__vb"), F.col("__n").alias("__nb"))
-    sim = (_dot(_as_double(F.col("__va")), _as_double(F.col("__vb")))
-           / F.greatest(F.col("__na") * F.col("__nb"), F.lit(1e-12)))
-    edges = (cand.join(va, "id_a").join(vb, "id_b")
-             .withColumn("__sim", sim)
-             .where(F.col("__sim") >= threshold)
+    edges = (_exact_cosine_verify(cand, df, threshold, id_col, vec_col)
              .select("id_a", "id_b"))
-    cc = connected_components(edges, None, id_col=id_col)
+    cc = connected_components(edges, id_col)
     members = cc.join(asg.select(id_col, "csim"), id_col)
     keep = (members.groupBy("cluster_id")
             .agg(F.min(F.struct("csim", id_col)).alias("__k"),
@@ -527,8 +522,7 @@ def embedding_dedup_keep_central(df: DataFrame, threshold: float,
         connected_components
     pairs = cosine_pairs_lsh(df, threshold, id_col=id_col, vec_col=vec_col,
                              dim=dim, keep_sim=True)
-    cc = connected_components(pairs.select("id_a", "id_b"), None,
-                              id_col=id_col)
+    cc = connected_components(pairs.select("id_a", "id_b"), id_col)
     centrality = (pairs.select(F.col("id_a").alias(id_col), "sim")
                   .unionByName(
                       pairs.select(F.col("id_b").alias(id_col), "sim"))

@@ -39,8 +39,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from datasketches_rust_spark.config import DedupConfig
-
 AUDIO_PREFILTER_HAMMING = 12  # cheap candidate cut; verify decides
 AUDIO_VERIFY_COSINE = 0.95    # dup >= 0.9997, distinct <= 0.876
 
@@ -81,8 +79,8 @@ AUDIO_BAND_LAYOUT = (8, AUDIO_SLICE_TRIPLES)
 # collapse) rather than shaping routine volume.
 AUDIO_MAX_BUCKET = 256
 
-def audio_sketch_table(clips: DataFrame, id_col: str = "clip_id",
-                       bytes_col: str = "bytes") -> DataFrame:
+def audio_sketch_table(clips: DataFrame, id_col: str = "clip_id"
+                       ) -> DataFrame:
     """DataFrame[id_col, afp, feat] — decode + FFT once per clip,
     tracked-persisted and materialized with one count() (the AQE
     fan-out hazard: the band self-join consumes this in multiple
@@ -108,7 +106,7 @@ def audio_sketch_table(clips: DataFrame, id_col: str = "clip_id",
 
     id_type = dict(clips.dtypes)[id_col]
     sk = (clips.select(F.col(id_col).alias("__aid"),
-                       F.col(bytes_col).alias("__b"))
+                       F.col("bytes").alias("__b"))
           .mapInPandas(
               run,
               schema=f"__aid {id_type}, afp long, feat array<float>")
@@ -118,14 +116,13 @@ def audio_sketch_table(clips: DataFrame, id_col: str = "clip_id",
     return sk
 
 
-def audio_edges(sk: DataFrame, id_col: str = "clip_id",
-                max_bucket_size: int = AUDIO_MAX_BUCKET) -> DataFrame:
+def audio_edges(sk: DataFrame, id_col: str = "clip_id") -> DataFrame:
     """DataFrame[id_a, id_b] — verified near-dup clip pairs from a
     sketch table (audio_sketch_table output)."""
     from datasketches_rust_spark.operators.visual import simhash_pairs
 
     pairs = simhash_pairs(sk, id_col, "afp", AUDIO_PREFILTER_HAMMING,
-                          max_bucket_size, layout=AUDIO_BAND_LAYOUT)
+                          AUDIO_MAX_BUCKET, layout=AUDIO_BAND_LAYOUT)
     fa = sk.select(F.col(id_col).alias("id_a"),
                    F.col("feat").alias("__fa"))
     fb = sk.select(F.col(id_col).alias("id_b"),
@@ -139,9 +136,8 @@ def audio_edges(sk: DataFrame, id_col: str = "clip_id",
             .select("id_a", "id_b"))
 
 
-def audio_cluster_assignments(clips: DataFrame, cfg: DedupConfig
-                              | None = None, id_col: str = "clip_id"
-                              ) -> DataFrame:
+def audio_cluster_assignments(clips: DataFrame,
+                              id_col: str = "clip_id") -> DataFrame:
     """DataFrame[clip_id, cluster_id] — cluster_id = min member
     clip_id; singletons map to themselves (never enter the iteration)."""
     from datasketches_rust_spark.operators.connected_components import \
@@ -207,8 +203,8 @@ AUDIO_FRAME_HAMMING = 3      # per-frame near-dup gate
 # frames); trimmed dups 8-11 matches vs quorum 4-6.
 
 
-def audio_frame_sketches(clips: DataFrame, id_col: str = "clip_id",
-                         bytes_col: str = "bytes") -> DataFrame:
+def audio_frame_sketches(clips: DataFrame,
+                         id_col: str = "clip_id") -> DataFrame:
     """DataFrame[id_col, frame_idx, fcode] — decode + framed FFT in ONE
     Arrow pass; bytes never travel past the scan (the video
     frame-sketch discipline)."""
@@ -232,7 +228,7 @@ def audio_frame_sketches(clips: DataFrame, id_col: str = "clip_id",
 
     id_type = dict(clips.dtypes)[id_col]
     return (clips.select(F.col(id_col).alias("__aid"),
-                         F.col(bytes_col).alias("__b"))
+                         F.col("bytes").alias("__b"))
             .mapInPandas(
                 run,
                 schema=f"__aid {id_type}, frame_idx int, fcode long")
@@ -284,9 +280,7 @@ def _code_match_table(frames: DataFrame) -> DataFrame:
             .unionAll(ident))
 
 
-def audio_frame_edges(clips: DataFrame, id_col: str = "clip_id",
-                      min_frame_matches: int = AUDIO_MIN_FRAME_MATCHES,
-                      quorum: float = AUDIO_FRAME_QUORUM) -> DataFrame:
+def audio_frame_edges(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
     """DataFrame[id_a, id_b] — clip pairs whose distinct matched
     INFORMATIVE frames reach the fractional quorum (see the constants'
     comment; id_col must be LONG — assign_clusters maps string ids to
@@ -320,8 +314,8 @@ def audio_frame_edges(clips: DataFrame, id_col: str = "clip_id",
              .groupBy(F.col("__c").alias("id_a"),
                       F.col("__cb").alias("id_b"))
              .agg(F.count_distinct("__k").alias("__n")))
-    need = F.greatest(F.lit(min_frame_matches),
-                      F.ceil(F.col("__nf") * quorum))
+    need = F.greatest(F.lit(AUDIO_MIN_FRAME_MATCHES),
+                      F.ceil(F.col("__nf") * AUDIO_FRAME_QUORUM))
     return (votes.join(nf, votes["id_a"] == nf["__cn"])
             .where(F.col("__n") >= need)
             .select("id_a", "id_b"))

@@ -1,8 +1,8 @@
 """Video-axis near-dup pipeline — the 5th modality: container split ->
 per-frame decode + DCT phash in one Arrow pass -> frame-level phash
 banding (operators/visual.simhash_pairs, the image axis' operator) ->
-FRAME-OVERLAP VOTE (videos sharing >= min_frame_matches near-dup
-frames) -> connected components.
+FRAME-OVERLAP VOTE (videos sharing >= VIDEO_MIN_FRAME_MATCHES
+near-dup frames) -> connected components.
 
 Temporal voting is what distinguishes video dedup from running image
 dedup per frame: a single shared frame (channel intro/outro — the
@@ -82,27 +82,26 @@ def _frame_sketch_pass(batches: Iterator[pa.RecordBatch]
                 names=["__vid", "frame_idx", "phash"])
 
 
-def video_frame_sketches(videos: DataFrame, id_col: str = "video_id",
-                         bytes_col: str = "bytes") -> DataFrame:
+def video_frame_sketches(videos: DataFrame,
+                         id_col: str = "video_id") -> DataFrame:
     """DataFrame[video_id, frame_idx, phash] — split + decode + phash
     in ONE Arrow pass; the bytes column never travels past it. A null
     bytes value, like an empty one, has no frames."""
     id_type = dict(videos.dtypes)[id_col]
     return (videos.select(F.col(id_col).alias("__vid"),
-                          F.col(bytes_col).alias("__b"))
+                          F.col("bytes").alias("__b"))
             .mapInArrow(
                 _frame_sketch_pass,
                 f"__vid {id_type}, frame_idx int, phash long")
             .withColumnRenamed("__vid", id_col))
 
 
-def video_edges(videos: DataFrame, id_col: str = "video_id",
-                min_frame_matches: int = VIDEO_MIN_FRAME_MATCHES
+def video_edges(videos: DataFrame, id_col: str = "video_id"
                 ) -> DataFrame:
-    """DataFrame[id_a, id_b] — video pairs sharing >= min_frame_matches
-    near-dup frames. id_col must be LONG here: assign_clusters, the
-    caller in video_cluster_assignments, maps string ids to longs
-    first."""
+    """DataFrame[id_a, id_b] — video pairs sharing >=
+    VIDEO_MIN_FRAME_MATCHES near-dup frames. id_col must be LONG here:
+    assign_clusters, the caller in video_cluster_assignments, maps
+    string ids to longs first."""
     from datasketches_rust_spark.operators.visual import simhash_pairs
 
     frames = video_frame_sketches(videos, id_col).select(
@@ -123,7 +122,7 @@ def video_edges(videos: DataFrame, id_col: str = "video_id",
                     .otherwise(F.col("__k_b")).alias("__kk"))
             .groupBy("id_a", "id_b")
             .agg(F.count_distinct("__kk").alias("__n"))
-            .where(F.col("__n") >= min_frame_matches)
+            .where(F.col("__n") >= VIDEO_MIN_FRAME_MATCHES)
             .select("id_a", "id_b"))
 
 

@@ -104,8 +104,12 @@ def checkpointed_cluster_assignments(spark: SparkSession, images: DataFrame,
                                      id_col: str = "image_id"
                                      ) -> tuple[DataFrame, dict]:
     """The resumable flagship: signatures and clusters checkpoint
-    separately, so a killed run resumes from the last completed stage
-    with identical results (keyed hashing => deterministic)."""
+    separately, with identical results on resume (keyed hashing =>
+    deterministic). A completed clusters checkpoint is replayed as is.
+    The signatures checkpoint feeds only the bucket metrics: the clusters
+    stage runs ``image_cluster_assignments`` on ``images``, which
+    computes the caption MinHash again in ``image_sketch_table``, so a
+    run killed between the two stages recomputes the signatures."""
     from datasketches_rust_spark.operators.lsh import hot_bucket_stats
     from datasketches_rust_spark.pipeline import minhash_signatures
     from datasketches_rust_spark.pipeline_images import \

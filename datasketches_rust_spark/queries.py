@@ -1477,23 +1477,21 @@ def q_image_contamination_check(spark, sf_dir):
     run on collision survivors only. Rows-only (phash has no SQL
     oracle); pinned vs an exact numpy all-pairs Hamming scan in
     tests/test_images_contamination.py."""
+    from datasketches_rust_spark.operators.visual import (pigeonhole_layout,
+                                                          simhash_bands)
     from datasketches_rust_spark.sources.images import images_spark_df
     imgs, _truth = images_spark_df(spark, 2000, seed=42)
     idx = F.substring("image_id", 5, 10).cast("long")
     corpus = imgs.where(idx % 10 != 0).select("image_id", "phash")
     ev = imgs.where(idx % 10 == 0).select(
         F.col("image_id").alias("eval_id"), F.col("phash").alias("ep"))
-
-    def bands(col, prefix):
-        return F.explode(F.array(*[
-            (F.shiftrightunsigned(col, 16 * i)
-             .bitwiseAND(F.lit(0xFFFF)) + F.lit(i << 16))
-            for i in range(4)])).alias(prefix)
-
-    cb = corpus.select("image_id", "phash", bands(F.col("phash"), "bk"))
-    eb = ev.select("eval_id", "ep", bands(F.col("ep"), "bk"))
+    layout = pigeonhole_layout(3)
+    cb = (simhash_bands(corpus, "image_id", "phash", layout)
+          .withColumnRenamed("__id", "image_id"))
+    eb = (simhash_bands(ev, "eval_id", "ep", layout)
+          .withColumnRenamed("__id", "eval_id"))
     ham = F.bit_count(F.col("phash").bitwiseXOR(F.col("ep")))
-    return (cb.join(F.broadcast(eb), "bk")
+    return (cb.join(F.broadcast(eb), "band_key")
             .where(ham <= 3)
             .groupBy("image_id")
             .agg(F.count_distinct("eval_id").alias("n_eval_matches")))
@@ -5800,12 +5798,13 @@ def q_dup_graph_kcore(spark, sf_dir):
     Edges-only, frontier-sized semi-joins throughout. Output:
     surviving nodes with their within-core degree."""
     from pyspark.storagelevel import StorageLevel
+    from datasketches_rust_spark.operators.connected_components import \
+        symmetric_edges
     docs = _t(spark, sf_dir, "documents")
     edges = (dedup_pairs(docs, CFG, "doc_id", "text")
              .select("id_a", "id_b")
              .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK))
-    sym = (edges.unionAll(edges.select(F.col("id_b").alias("id_a"),
-                                       F.col("id_a").alias("id_b"))))
+    sym = symmetric_edges(edges).toDF("id_a", "id_b")
     cur, prev_n = sym, sym.count()
     for _ in range(KCORE_MAX_ROUNDS):
         deg = cur.groupBy("id_a").agg(F.count("*").alias("d"))

@@ -69,26 +69,21 @@ def test_jaccard_column_sane(spark, docs_df):
         assert CFG.jaccard_threshold <= r["jaccard"] <= 1.0
 
 
-def test_text_edge_plan_evaluates_each_udf_once(spark, docs_df):
-    """The plan connected components checkpoints evaluates MinHash once
-    (the signature cache keeps the optimizer's inferred explode filter
-    from running the UDF a second time below the round-robin
-    repartition) and the exact-Jaccard verify once (both edge
-    directions come from one pass, not one union leg each). AQE is off
-    for the whole build, the signature cache's count included, so every
-    subtree prints once in one tree; earlier tests' signature caches are
-    released first, so this build does not reuse one planned with AQE."""
+def _assert_text_udfs_once(spark, docs_df, build):
+    """``build`` over the text dedup edges evaluates MinHash once and the
+    exact-Jaccard verify once. AQE is off for the whole build, the
+    signature cache's count included, so every subtree prints once in
+    one tree; earlier tests' signature caches are released first, so
+    this build does not reuse one planned with AQE."""
     import re
 
     from datasketches_rust_spark.cache import release_tracked
-    from datasketches_rust_spark.operators.connected_components import \
-        _symmetric_edges
     release_tracked()
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         edges = dedup_pairs(docs_df, CFG, "doc_id", "text")
-        plan = (_symmetric_edges(edges.select("id_a", "id_b"))
+        plan = (build(edges.select("id_a", "id_b"))
                 ._jdf.queryExecution().executedPlan().toString())
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
@@ -96,3 +91,24 @@ def test_text_edge_plan_evaluates_each_udf_once(spark, docs_df):
     assert len([u for u in udfs if u.startswith("lower(text#")]) == 1, plan
     assert len([u for u in udfs if u.startswith("__ta#")]) == 1, plan
     assert len(udfs) == 2, plan
+
+
+def test_text_edge_plan_evaluates_each_udf_once(spark, docs_df):
+    """The plan connected components checkpoints evaluates MinHash once
+    (the signature cache keeps the optimizer's inferred explode filter
+    from running the UDF a second time below the round-robin
+    repartition) and the exact-Jaccard verify once (both edge
+    directions come from one pass, not one union leg each)."""
+    from datasketches_rust_spark.operators.connected_components import \
+        symmetric_edges
+    _assert_text_udfs_once(spark, docs_df, symmetric_edges)
+
+
+def test_pagerank_adjacency_evaluates_each_udf_once(spark, docs_df):
+    """PageRank's adjacency takes both directions of an edge plan that is
+    not checkpointed (q_pagerank_dup_docs passes dedup_pairs straight
+    in) from one pass over it: a union leg per direction would run the
+    exact-Jaccard verify twice. With n_iter=0 the ranks plan is one scan
+    of the adjacency cache, whose plan prints once."""
+    from datasketches_rust_spark.operators.pagerank import pagerank
+    _assert_text_udfs_once(spark, docs_df, lambda e: pagerank(e, n_iter=0))
