@@ -12,15 +12,21 @@ Execution shape (scale rationale):
      each partition is reduced to one serialized sketch per group key
      **before any shuffle** (map-side combine). Nulls are dropped in
      Arrow and the kernels get a typed column, so an integer column stays
-     integer when a batch holds a null. What travels through the exchange
-     is O(#groups x #partitions) sketch blobs, never raw rows — the same
+     integer when a batch holds a null. What travels onward is
+     O(#groups x #partitions) sketch blobs, never raw rows — the same
      serialize/move/deserialize seam the reference acknowledges as its
      only process boundary (SURVEY.md §3.2 step 1).
-  2. (optional) SALTED INTERMEDIATE — for a global aggregate at very high
-     partition counts, the partials first merge in ``salt_buckets``
-     partitions, so no single reducer deserializes every partial.
-  3. FINAL — one exchange (``repartition(1)`` for a global aggregate,
-     ``repartition(*key_cols)`` for a grouped one), then one
+  2. A GLOBAL BLOB (``sketch_blob``, no group key) is ``RDD.aggregate``'s
+     shape: one job runs the partial pass, its <= P blobs are collected,
+     and the driver folds them and serializes once. Above
+     ``DRIVER_FAN_IN`` partitions the partials first merge in that many
+     salted partitions, so at most ``DRIVER_FAN_IN`` blobs reach the
+     driver. Query classes answering from whole-table sketches finish
+     on the driver from that blob.
+  3. LAZY FINAL (``merge_sketch_col``, grouped or a global frame that
+     stays in the plan, as streaming and composite plans need) — one
+     exchange (``repartition(*key_cols)``, or ``repartition(1)`` for a
+     global merge, after an optional ``salt_buckets`` level), then one
      ``mapInArrow`` pass that folds every partial of each key the
      partition holds and emits the serialized union. Finishers
      (``estimate_udf`` and friends) run on that one row per key.
@@ -254,16 +260,10 @@ def _blob_schema(df: DataFrame, key_cols: list[str], sketch_col: str,
                       + [StructField(sketch_col, BinaryType(), nullable)])
 
 
-def sketch_agg(df: DataFrame, key_cols: list[str], value_col: str,
-               kind: str, salt_buckets: int = 0, **sketch_kw) -> DataFrame:
-    """GroupBy-aggregate ``value_col`` into one sketch per key.
-
-    Returns DataFrame[key_cols..., sketch: binary]. ``key_cols`` may be
-    empty for a global aggregate. ``salt_buckets`` > 0 inserts the
-    treeReduce intermediate level. Null values are skipped; a key whose
-    values are all null gets an empty sketch.
-    """
-    knd = sketch_kind(kind, **dict(sketch_kw))
+def _partials(df: DataFrame, key_cols: list[str], value_col: str,
+              knd: _Kind) -> DataFrame:
+    """The partial pass: one serialized sketch per key per partition,
+    DataFrame[key_cols..., sketch: binary]."""
     keyed = df.select(*key_cols, F.col(value_col).alias("__v"))
 
     def partial_pass(batches):
@@ -289,24 +289,34 @@ def sketch_agg(df: DataFrame, key_cols: list[str], value_col: str,
         if slots:
             yield _emit(slots, key_fields, SKETCH_COL)
 
-    partials = keyed.mapInArrow(
-        partial_pass, _blob_schema(keyed, key_cols, SKETCH_COL))
+    return keyed.mapInArrow(partial_pass,
+                            _blob_schema(keyed, key_cols, SKETCH_COL))
+
+
+def sketch_agg(df: DataFrame, key_cols: list[str], value_col: str,
+               kind: str, salt_buckets: int = 0, **sketch_kw) -> DataFrame:
+    """GroupBy-aggregate ``value_col`` into one sketch per key.
+
+    Returns DataFrame[key_cols..., sketch: binary]. ``key_cols`` may be
+    empty for a global aggregate that stays in the plan (``sketch_blob``
+    fetches one to the driver in one job). ``salt_buckets`` > 0 inserts
+    the treeReduce intermediate level. Null values are skipped; a key
+    whose values are all null gets an empty sketch.
+    """
+    partials = _partials(df, key_cols, value_col,
+                         sketch_kind(kind, **dict(sketch_kw)))
     return merge_sketch_col(partials, key_cols, kind,
                             salt_buckets=salt_buckets,
                             seed=sketch_kw.get("seed", DEFAULT_SEED))
 
 
-def merge_sketch_col(df: DataFrame, key_cols: list[str], kind: str,
-                     sketch_col: str = SKETCH_COL, salt_buckets: int = 0,
-                     seed: int = DEFAULT_SEED) -> DataFrame:
-    """Merge a binary sketch column down to one sketch per key: one
-    exchange (by key; to a single partition for a global merge), then one
-    Python pass that folds every partial of each key its partition holds.
-    ``salt_buckets`` > 1 puts a salted merge level before a global one.
-    Null blobs are skipped, as ``sketch_udf`` skips them: a key whose
-    blobs are all null merges to a null blob."""
+def _merger(blobs: DataFrame, key_cols: list[str], kind: str,
+            sketch_col: str, seed: int) -> Callable:
+    """frame of ``blobs``' columns -> one ``mapInArrow`` pass that folds
+    every blob of each key its partition holds into one serialized
+    union. Null blobs are skipped; a key whose blobs are all null merges
+    to a null blob."""
     read = sketch_reader(kind, seed)
-    blobs = df.select(*key_cols, sketch_col)
     schema = _blob_schema(blobs, key_cols, sketch_col,
                           blobs.schema[sketch_col].nullable)
 
@@ -325,26 +335,70 @@ def merge_sketch_col(df: DataFrame, key_cols: list[str], kind: str,
         if slots:
             yield _emit(slots, key_fields, sketch_col)
 
-    if key_cols:
-        return blobs.repartition(*key_cols).mapInArrow(merge_pass, schema)
-    if salt_buckets > 1:
-        blobs = (blobs.withColumn("__salt",
+    return lambda frame: frame.mapInArrow(merge_pass, schema)
+
+
+def _salted(blobs: DataFrame, salt_buckets: int, merge: Callable
+            ) -> DataFrame:
+    """The salted intermediate level of a global merge: the blobs of
+    partition p merge in partition ``p % salt_buckets``, so at most
+    ``salt_buckets`` blobs come out."""
+    return merge(blobs.withColumn("__salt",
                                   F.spark_partition_id() % salt_buckets)
-                 .repartition(salt_buckets, "__salt").drop("__salt")
-                 .mapInArrow(merge_pass, schema))
-    return blobs.repartition(1).mapInArrow(merge_pass, schema)
+                 .repartition(salt_buckets, "__salt").drop("__salt"))
+
+
+def merge_sketch_col(df: DataFrame, key_cols: list[str], kind: str,
+                     sketch_col: str = SKETCH_COL, salt_buckets: int = 0,
+                     seed: int = DEFAULT_SEED) -> DataFrame:
+    """Merge a binary sketch column down to one sketch per key: one
+    exchange (by key; to a single partition for a global merge), then one
+    Python pass that folds every partial of each key its partition holds.
+    ``salt_buckets`` > 1 puts a salted merge level before a global one.
+    Null blobs are skipped, as ``sketch_udf`` skips them: a key whose
+    blobs are all null merges to a null blob."""
+    blobs = df.select(*key_cols, sketch_col)
+    merge = _merger(blobs, key_cols, kind, sketch_col, seed)
+    if key_cols:
+        return merge(blobs.repartition(*key_cols))
+    if salt_buckets > 1:
+        blobs = _salted(blobs, salt_buckets, merge)
+    return merge(blobs.repartition(1))
+
+
+# at most this many partial blobs reach the driver in ``sketch_blob``:
+# 64 theta sketches at lg_k 16 are well under 100 MB
+DRIVER_FAN_IN = 64
+
+
+def _num_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s physical plan. It plans ``df``'s own
+    query execution, which a later ``df.collect()`` reuses, so no second
+    planning and no job (an adaptive plan runs the stages below its
+    last exchange here instead of in the collect)."""
+    return df._jdf.queryExecution().executedPlan().execute() \
+        .getNumPartitions()
 
 
 def sketch_blob(df: DataFrame, value_col: str, kind: str,
                 **sketch_kw) -> bytes:
     """The global sketch of ``value_col`` as bytes on the driver; an empty
-    sketch when ``df`` has no rows. Fetched with ``collect()``, never a
-    limit (``first``/``head``/``take``): a limit stops reading the Python
-    merge pass before its output ends, and Spark kills that worker."""
-    rows = sketch_agg(df, [], value_col, kind, **sketch_kw).collect()
-    if rows:
-        return bytes(rows[0][0])
-    return bytes(sketch_kind(kind, **sketch_kw).build().serialize())
+    sketch when ``df`` has no rows. One Spark job: the partial pass's
+    blobs are collected and folded on the driver, in partition order.
+    Above ``DRIVER_FAN_IN`` partitions they first merge in that many
+    salted partitions. Fetched with ``collect()``, never a limit
+    (``first``/``head``/``take``): a limit stops reading the Python pass
+    before its output ends, and Spark kills that worker."""
+    knd = sketch_kind(kind, **dict(sketch_kw))
+    blobs = _partials(df, [], value_col, knd)
+    if _num_partitions(blobs) > DRIVER_FAN_IN:
+        blobs = _salted(blobs, DRIVER_FAN_IN, _merger(
+            blobs, [], kind, SKETCH_COL, sketch_kw.get("seed", DEFAULT_SEED)))
+    sk = None
+    for (blob,) in blobs.collect():
+        part = knd.deserialize(blob)
+        sk = part if sk is None else _merge_two(kind, sk, part)
+    return bytes((knd.build() if sk is None else sk).serialize())
 
 
 # ---------------------------------------------------------------------------
@@ -473,11 +527,17 @@ def bloom_contains_udf(blob: bytes, seed: int = DEFAULT_SEED):
     ``blob`` (no false negatives, bloom/sketch.rs:71-78). Typical use:
     collect one bloom blob and pre-filter a huge fact table before an
     exact semi-join kills the false positives. The blob is closed over
-    (shipped once per task) and deserialized once per Arrow batch."""
+    (shipped once per task) and deserialized once per Arrow batch.
+
+    Marked nondeterministic so that the optimizer never copies the probe:
+    constraint inference would otherwise carry ``probe(k)`` across the
+    semi-join's ``k = key`` onto the build side, probing the keys the
+    filter was built from."""
     from pyspark.sql.types import BooleanType
     read = sketch_reader("bloom", seed)
     return _probe_udf(BooleanType(), bool,
-                      lambda values: _bloom_probe(read(blob), values))
+                      lambda values: _bloom_probe(read(blob), values)
+                      ).asNondeterministic()
 
 
 def tdigest_quantile_udf(quantile: float):

@@ -51,9 +51,10 @@ def simhash_bands(df: DataFrame, id_col: str, fp_col: str,
     fp = F.col(fp_col)
     # all 64 bits are -1 as a long: (1 << 64) - 1 is no long literal
     mask = (1 << width) - 1 if width < 64 else -1
-    slices = [F.shiftrightunsigned(fp, s * width).bitwiseAND(mask)
-              for s in range(64 // width)]
-    keys = [sum((F.shiftleft(slices[s], width * j)
+    # a shift by 0 is the bare column: no no-op term per row
+    slices = [(F.shiftrightunsigned(fp, s * width) if s else fp)
+              .bitwiseAND(mask) for s in range(64 // width)]
+    keys = [sum((F.shiftleft(slices[s], width * j) if j else slices[s]
                  for j, s in enumerate(combo)),
                 F.lit(ci << (width * len(combo))))
             for ci, combo in enumerate(combos)]

@@ -12,8 +12,15 @@ sorting columns by name).
 
 from __future__ import annotations
 
+import math
+import os
+from decimal import ROUND_HALF_UP, Decimal
+
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
+                               StructField, StructType)
 
 from datasketches_rust_spark import agg
 from datasketches_rust_spark.config import DedupConfig
@@ -36,8 +43,68 @@ from datasketches_rust_spark.functions.text import (  # noqa: E402
     PII_EMAIL_RE, PII_IP_RE, PII_PHONE_RE, pii_columns)
 
 
+# inferred table schemas by table version (``_table_version``)
+_SCHEMAS: dict = {}
+
+
+def _table_version(path: str) -> tuple | None:
+    """``path`` plus (name, size, mtime_ns) of every file under it, walked
+    recursively; None for a path that is not a local file or directory,
+    whose schema is never cached."""
+    if "://" in path and not path.startswith("file://"):
+        return None
+    local = path.removeprefix("file://")
+    if os.path.isfile(local):
+        st = os.stat(local)
+        return path, (("", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(local):
+        return None
+    files = []
+    for root, _, names in os.walk(local):
+        for n in names:
+            st = os.stat(os.path.join(root, n))
+            files.append((os.path.relpath(os.path.join(root, n), local),
+                          st.st_size, st.st_mtime_ns))
+    return path, tuple(sorted(files))
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Table ``name`` of ``sf_dir``. Its schema is inferred once per
+    table version: inference is a one-task Spark job per read, and a
+    rewritten table (any file added, removed, resized or touched) is
+    inferred again."""
+    path = f"{sf_dir}/{name}.parquet"
+    version = _table_version(path)
+    schema = _SCHEMAS.get(version)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if version is not None:
+        _SCHEMAS[version] = df.schema
+    return df
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple],
+                 schema: StructType) -> DataFrame:
+    """A small driver-side result as a frame: a LocalTableScan built over
+    Arrow, so reading it starts no job and no Python worker (a
+    ``createDataFrame`` of a row list is an RDD scan)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.Table.from_arrays([pa.array(c, type=f.type)
+                              for c, f in zip(cols, arrow)], schema=arrow),
+        schema)
+
+
+def _round_half_up(x: float) -> float:
+    """``x`` rounded to a whole number as Spark's ``F.round(x, 0)`` rounds
+    a double: half away from zero on its decimal form (Python's
+    ``round`` rounds half to even); NaN and infinities stay."""
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal(1), ROUND_HALF_UP))
 
 
 # ---------------------------------------------------------------------------
@@ -84,39 +151,44 @@ def q_theta_distinct_parts_by_flag(spark, sf_dir):
     return sk.select("l_returnflag", est("sketch").alias("distinct_parts"))
 
 
-def q_theta_union_custkeys(spark, sf_dir):
+def _sketch(df: DataFrame, value_col: str, kind: str, **sketch_kw):
+    """The global sketch of ``value_col`` on the driver: one Spark job
+    (``agg.sketch_blob``)."""
+    return agg.sketch_reader(kind)(
+        agg.sketch_blob(df, value_col, kind, **sketch_kw))
+
+
+def _long_result(spark: SparkSession, name: str, estimate: float
+                 ) -> DataFrame:
+    """One bigint column ``name``: ``estimate`` rounded as
+    ``agg.estimate_udf(as_long=True)`` rounds it."""
+    return _local_frame(spark, [(int(round(estimate)),)],
+                        StructType([StructField(name, LongType())]))
+
+
+def _theta_status_pair(spark, sf_dir):
+    """Theta sketches of the customers with an open and with a fulfilled
+    order, on the driver."""
     orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    a = agg.sketch_agg(orders, [], "o_custkey", "theta", lg_k=16)
-    b = agg.sketch_agg(cust, [], "c_custkey", "theta", lg_k=16)
-    both = a.unionByName(b)
-    merged = agg.merge_sketch_col(both, [], "theta")
-    est = agg.estimate_udf("theta", as_long=True)
-    return merged.select(est("sketch").alias("distinct_custkeys"))
+    return [_sketch(orders.where(F.col("o_orderstatus") == status),
+                    "o_custkey", "theta", lg_k=16) for status in "OF"]
+
+
+def q_theta_union_custkeys(spark, sf_dir):
+    a = _sketch(_t(spark, sf_dir, "orders"), "o_custkey", "theta", lg_k=16)
+    b = _sketch(_t(spark, sf_dir, "customer"), "c_custkey", "theta",
+                lg_k=16)
+    return _long_result(spark, "distinct_custkeys", a.union(b).estimate())
 
 
 def q_theta_intersect_custkeys(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
-    a = agg.sketch_agg(orders.where(F.col("o_orderstatus") == "O"),
-                       [], "o_custkey", "theta", lg_k=16)
-    b = agg.sketch_agg(orders.where(F.col("o_orderstatus") == "F"),
-                       [], "o_custkey", "theta", lg_k=16)
-    op = agg.theta_set_op_udf("intersect", as_long=True)
-    return (a.select(F.col("sketch").alias("sa"))
-            .crossJoin(b.select(F.col("sketch").alias("sb")))
-            .select(op("sa", "sb").alias("custkeys_in_both")))
+    a, b = _theta_status_pair(spark, sf_dir)
+    return _long_result(spark, "custkeys_in_both", a.intersect(b).estimate())
 
 
 def q_theta_anotb_custkeys(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
-    a = agg.sketch_agg(orders.where(F.col("o_orderstatus") == "O"),
-                       [], "o_custkey", "theta", lg_k=16)
-    b = agg.sketch_agg(orders.where(F.col("o_orderstatus") == "F"),
-                       [], "o_custkey", "theta", lg_k=16)
-    op = agg.theta_set_op_udf("a_not_b", as_long=True)
-    return (a.select(F.col("sketch").alias("sa"))
-            .crossJoin(b.select(F.col("sketch").alias("sb")))
-            .select(op("sa", "sb").alias("custkeys_only_o")))
+    a, b = _theta_status_pair(spark, sf_dir)
+    return _long_result(spark, "custkeys_only_o", a.a_not_b(b).estimate())
 
 
 # ---------------------------------------------------------------------------
@@ -147,29 +219,33 @@ def q_theta_jaccard_event_types(spark, sf_dir):
                      / union("sa", "sb")).alias("jaccard")))
 
 
+def _approx_orders(spark, sf_dir, kind: str, lg_k: int) -> DataFrame:
+    sk = _sketch(_t(spark, sf_dir, "lineitem"), "l_orderkey", kind,
+                 lg_k=lg_k)
+    return _local_frame(spark, [(_round_half_up(sk.estimate()),)],
+                        StructType([StructField("approx_orders",
+                                                DoubleType())]))
+
+
 def q_hll_distinct_orders(spark, sf_dir):
     """HLL estimate — approximate, no SQL oracle (pytest tolerance)."""
-    li = _t(spark, sf_dir, "lineitem")
-    sk = agg.sketch_agg(li, [], "l_orderkey", "hll", lg_k=14)
-    est = agg.estimate_udf("hll")
-    return sk.select(F.round(est("sketch"), 0).alias("approx_orders"))
+    return _approx_orders(spark, sf_dir, "hll", 14)
 
 
 def q_cpc_distinct_orders(spark, sf_dir):
     """CPC (FM85) estimate — approximate, merged partials use the ICON
     estimator (sketches/cpc.py; cpc/estimator.rs:91-97), so no SQL
     oracle; pytest tolerance bands in tests/test_cpc.py."""
-    li = _t(spark, sf_dir, "lineitem")
-    sk = agg.sketch_agg(li, [], "l_orderkey", "cpc", lg_k=12)
-    est = agg.estimate_udf("cpc")
-    return sk.select(F.round(est("sketch"), 0).alias("approx_orders"))
+    return _approx_orders(spark, sf_dir, "cpc", 12)
 
 
 def q_freq_top_event_types(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    sk = agg.sketch_agg(ev, [], "event_type", "freqitems", max_map_size=256)
-    top = agg.freq_topk_explode(sk, [], k=5)
-    return top.select("item", "est")
+    fs = _sketch(_t(spark, sf_dir, "events"), "event_type", "freqitems",
+                 max_map_size=256)
+    return _local_frame(
+        spark, [(str(t[0]), int(t[1])) for t in fs.frequent_items()[:5]],
+        StructType([StructField("item", StringType()),
+                    StructField("est", LongType())]))
 
 
 def q_countmin_event_counts(spark, sf_dir):
@@ -181,24 +257,32 @@ def q_countmin_event_counts(spark, sf_dir):
     return types.select("item", cm_est("item").alias("est"))
 
 
+def _price_digest(spark, sf_dir):
+    """The t-digest of lineitem prices on the driver, and whether it holds
+    any price (an empty table answers SQL's nulls)."""
+    td = _sketch(_t(spark, sf_dir, "lineitem"), "l_extendedprice",
+                 "tdigest")
+    return td, td.total_weight() > 0
+
+
 def q_tdigest_price_stats(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    sk = agg.sketch_agg(li, [], "l_extendedprice", "tdigest")
-    stats = agg.tdigest_stats_udf()
-    return (sk.select(stats("sketch").alias("s"))
-            .select(F.col("s.min_val").alias("min_price"),
-                    F.col("s.max_val").alias("max_price"),
-                    F.col("s.total_w").alias("n_prices")))
+    td, some = _price_digest(spark, sf_dir)
+    return _local_frame(
+        spark, [(td.min_val if some else None, td.max_val if some else None,
+                 int(td.total_weight()))],
+        StructType([StructField("min_price", DoubleType()),
+                    StructField("max_price", DoubleType()),
+                    StructField("n_prices", LongType())]))
 
 
 def q_tdigest_price_quantiles(spark, sf_dir):
     """Approximate quantiles — no SQL oracle (pytest tolerance)."""
-    li = _t(spark, sf_dir, "lineitem")
-    sk = agg.sketch_agg(li, [], "l_extendedprice", "tdigest")
-    return sk.select(
-        agg.tdigest_quantile_udf(0.25)("sketch").alias("q25"),
-        agg.tdigest_quantile_udf(0.50)("sketch").alias("q50"),
-        agg.tdigest_quantile_udf(0.95)("sketch").alias("q95"))
+    td, some = _price_digest(spark, sf_dir)
+    return _local_frame(
+        spark, [tuple(float(td.quantile(q)) if some else None
+                      for q in (0.25, 0.50, 0.95))],
+        StructType([StructField(c, DoubleType())
+                    for c in ("q25", "q50", "q95")]))
 
 
 def q_bloom_semijoin_parts(spark, sf_dir):
@@ -210,7 +294,10 @@ def q_bloom_semijoin_parts(spark, sf_dir):
     blob = agg.sketch_blob(dim, "p_partkey", "bloom",
                            num_bits=1 << 17, num_hashes=7)
     probe = agg.bloom_contains_udf(blob)
-    filtered = (li.where(F.col("l_returnflag") == "R")
+    # the probe is nondeterministic to the optimizer, so the semi-join's
+    # null-key filter would stay above it: state it below for the scan
+    filtered = (li.where((F.col("l_returnflag") == "R")
+                         & F.col("l_partkey").isNotNull())
                 .where(probe(F.col("l_partkey"))))
     exact = filtered.join(F.broadcast(dim),
                           filtered.l_partkey == dim.p_partkey, "left_semi")
@@ -609,8 +696,10 @@ def q_bpe_learned_merges(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     learned = learn_bpe_merges(docs, num_merges=32)
     rows = [(i + 1, a, b, c) for i, (a, b, c) in enumerate(learned)]
-    return spark.createDataFrame(
-        rows, "rank int, left string, right string, pair_count long")
+    return _local_frame(spark, rows, StructType([
+        StructField("rank", IntegerType()), StructField("left", StringType()),
+        StructField("right", StringType()),
+        StructField("pair_count", LongType())]))
 
 
 def q_doc_fingerprint_md5(spark, sf_dir):
@@ -1371,19 +1460,13 @@ def q_bloom_stats(spark, sf_dir):
     """Bloom stats surface (bloom/sketch.rs:263-306): bits_used / load /
     estimated fpp for a filter over part keys. Deterministic given the
     fixed seed, but not SQL-expressible -> rows-only."""
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-    part = _t(spark, sf_dir, "part")
-    sk = agg.sketch_agg(part, [], "p_partkey", "bloom",
-                        num_bits=1 << 15, num_hashes=7)
-    schema = StructType([StructField("bits_used", LongType()),
-                         StructField("load_factor", DoubleType()),
-                         StructField("est_fpp", DoubleType())])
-    stats = agg.sketch_udf(schema, lambda bf: (bf.bits_used(),
-                                               bf.load_factor(),
-                                               bf.estimated_fpp()),
-                           "bloom")
-    return sk.select(stats("sketch").alias("s")).select("s.*")
+    bf = _sketch(_t(spark, sf_dir, "part"), "p_partkey", "bloom",
+                 num_bits=1 << 15, num_hashes=7)
+    return _local_frame(
+        spark, [(bf.bits_used(), bf.load_factor(), bf.estimated_fpp())],
+        StructType([StructField("bits_used", LongType()),
+                    StructField("load_factor", DoubleType()),
+                    StructField("est_fpp", DoubleType())]))
 
 
 def q_hll_users_by_type(spark, sf_dir):
@@ -10279,8 +10362,8 @@ def q_revenue_autocorr(spark, sf_dir):
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     daily = (o.groupBy(F.to_date("o_orderdate").alias("day"))
              .agg(F.sum(cents).alias("cents")))
-    lags = spark.createDataFrame([(l,) for l in AUTOCORR_LAGS],
-                                 "lag int")
+    lags = _local_frame(spark, [(l,) for l in AUTOCORR_LAGS],
+                        StructType([StructField("lag", IntegerType())]))
     a = (daily.crossJoin(F.broadcast(lags))
          .select("lag", F.col("day"), F.col("cents").alias("x")))
     b = daily.select(F.col("day").alias("bday"),

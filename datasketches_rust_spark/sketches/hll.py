@@ -9,10 +9,10 @@ uint8 registers are both simpler and faster (SURVEY.md §2.2 rationale), so:
 
 - coupon math follows hll/mod.rs:160-247: murmur128 -> slot from h1's low
   lg_k bits, value = leading-zero-count(h2) capped + 1,
-- update = vectorized candidate screen + exact sequential HIP over
+- update = vectorized candidate screen + exact in-order HIP over
   register-raising events (hll/estimator.rs:25-47: accum += k/(kxq0+kxq1),
-  then move the old register's 2^-v mass to the new one; raises are
-  O(k log n) over a sketch's lifetime, so the scalar loop is bounded),
+  then move the old register's 2^-v mass to the new one), as sequential
+  numpy folds that add in the per-item loop's order,
 - union = register-wise max for equal lg_k (hll/union.rs:449-464), fold-max
   downsample when lg_k differs (hll/union.rs:491-513); the result is
   out-of-order, which switches estimate() to the composite estimator
@@ -73,10 +73,6 @@ def _harmonic(n: int) -> float:
 
 def _bitmap_estimate(k: int, num_set: int) -> float:
     return k * (_harmonic(k) - _harmonic(k - num_set))
-
-
-def _inv_pow2(v: int) -> float:
-    return 1.0 if v == 0 else 2.0 ** (-float(v))
 
 
 def _cubic_interpolate(xs, ys, x: float) -> float:
@@ -153,36 +149,59 @@ class HllSketch:
         return 1 << self.lg_k
 
     def update_coupons(self, slots: np.ndarray, values: np.ndarray) -> "HllSketch":
-        """Register max-update with exact in-order HIP accounting: the
-        vectorized screen keeps only rows that would raise a register
-        against the batch-start state; the scalar loop re-checks against
-        the running state so within-batch duplicates behave exactly like
-        the reference's per-item loop."""
+        """Register max-update with exact in-order HIP accounting, bit
+        for bit the reference's per-item loop. A vectorized screen keeps
+        the rows that would raise a register against the batch-start
+        state; a running max per slot (in input order) keeps the ones
+        that raise it against the running state. Each raise moves its
+        slot's 2^-v mass from the old value to the new one, and the HIP
+        and kxq sums are sequential folds (``np.add.accumulate``) over
+        those moves in input order, as the loop adds them."""
         cand = np.nonzero(values > self.regs[slots])[0]
         if cand.size == 0:
             return self
-        regs = self.regs
-        kf = float(self.k)
-        ooo = self.out_of_order
-        hip, kxq0, kxq1 = self.hip_accum, self.kxq0, self.kxq1
-        c_slots = slots[cand]
-        c_values = values[cand]
-        for s, v in zip(c_slots.tolist(), c_values.tolist()):
-            old = regs[s]
-            if v <= old:
-                continue
-            if not ooo:
-                hip += kf / (kxq0 + kxq1)
-            if old < 32:
-                kxq0 -= _inv_pow2(old)
-            else:
-                kxq1 -= _inv_pow2(old)
-            if v < 32:
-                kxq0 += _inv_pow2(v)
-            else:
-                kxq1 += _inv_pow2(v)
-            regs[s] = v
-        self.hip_accum, self.kxq0, self.kxq1 = hip, kxq0, kxq1
+        c_slots = slots[cand].astype(np.int64)
+        c_values = values[cand].astype(np.int64)
+        # stable sort by slot; slot * 64 + value orders a slot's values
+        # above every lower slot's (values <= 63), so one running max
+        # over the sorted keys is each slot's running max
+        order = np.argsort(c_slots, kind="stable")
+        s_slots = c_slots[order]
+        key = s_slots * 64 + c_values[order]
+        run = np.maximum.accumulate(key)
+        first = np.ones(len(key), dtype=bool)
+        first[1:] = s_slots[1:] != s_slots[:-1]
+        raise_s = first.copy()
+        raise_s[1:] |= key[1:] > run[:-1]
+        # old value of each raise: the slot's previous raise, or the
+        # batch-start register for its first
+        old_s = np.where(first, self.regs[s_slots],
+                         np.roll(run, 1) - s_slots * 64)
+        r_pos = np.sort(order[raise_s])  # raises, in input order
+        new = c_values[r_pos]
+        old = np.empty(len(c_values), dtype=np.int64)
+        old[order] = old_s
+        old = old[r_pos]
+        # each raise is two moves per sum: - 2^-old, then + 2^-new, on
+        # kxq0 for values < 32 and kxq1 otherwise (a 0.0 move elsewhere
+        # leaves a sum's bits alone)
+        moves = np.empty((2, 2 * len(new)))
+        for j, (v, sign) in enumerate(((old, -1.0), (new, 1.0))):
+            w = sign * np.ldexp(1.0, -v)
+            lo = v < 32
+            moves[0, j::2] = np.where(lo, w, 0.0)
+            moves[1, j::2] = np.where(lo, 0.0, w)
+        kxq0 = np.add.accumulate(np.concatenate(([self.kxq0], moves[0])))
+        kxq1 = np.add.accumulate(np.concatenate(([self.kxq1], moves[1])))
+        if not self.out_of_order:
+            gain = float(self.k) / (kxq0[:-1:2] + kxq1[:-1:2])
+            self.hip_accum = float(np.add.accumulate(
+                np.concatenate(([self.hip_accum], gain)))[-1])
+        self.kxq0, self.kxq1 = float(kxq0[-1]), float(kxq1[-1])
+        last = np.ones(len(key), dtype=bool)
+        last[:-1] = first[1:]
+        self.regs[s_slots[last]] = (run[last] - s_slots[last] * 64) \
+            .astype(self.regs.dtype)
         return self
 
     def update_keys(self, data: np.ndarray) -> "HllSketch":

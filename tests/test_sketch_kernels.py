@@ -399,3 +399,49 @@ class TestSimHash:
         b2 = hamming_bands(np.array([fp2]), 4)
         # distance 3 <= num_bands-1 => at least one band equal
         assert (b1 == b2).any()
+
+
+def _hll_update_loop(sk: HllSketch, slots, values) -> None:
+    """The per-item HLL update (hll/estimator.rs:25-47), one coupon at a
+    time: the reference for the vectorized ``update_coupons``."""
+    kf = float(sk.k)
+    for s, v in zip(slots.tolist(), values.tolist()):
+        old = int(sk.regs[s])
+        if v <= old:
+            continue
+        if not sk.out_of_order:
+            sk.hip_accum += kf / (sk.kxq0 + sk.kxq1)
+        if old < 32:
+            sk.kxq0 -= 2.0 ** -old
+        else:
+            sk.kxq1 -= 2.0 ** -old
+        if v < 32:
+            sk.kxq0 += 2.0 ** -v
+        else:
+            sk.kxq1 += 2.0 ** -v
+        sk.regs[s] = v
+
+
+@pytest.mark.parametrize("case", range(30))
+def test_hll_update_coupons_matches_per_item_loop(case):
+    """update_coupons leaves registers, HIP accumulator and both kxq sums
+    bit-identical to the per-item loop, over random sizes and batch
+    splits, values up to the cap (63, the kxq1 side) and out-of-order
+    sketches (no HIP)."""
+    rng = np.random.default_rng(1000 + case)
+    lg_k = int(rng.integers(4, 15))
+    n = int(rng.integers(1, 40_000))
+    slots = rng.integers(0, 1 << lg_k, n)
+    values = np.minimum(rng.geometric(0.5, n), 63).astype(np.uint8)
+    values[rng.random(n) < 0.01] = rng.integers(30, 64)
+    ooo = case % 5 == 4
+    got = HllSketch(lg_k=lg_k, out_of_order=ooo)
+    want = HllSketch(lg_k=lg_k, out_of_order=ooo)
+    cuts = np.sort(rng.integers(0, n + 1, int(rng.integers(0, 4))))
+    for s, v in zip(np.split(slots, cuts), np.split(values, cuts)):
+        got.update_coupons(s, v)
+        _hll_update_loop(want, s, v)
+    assert np.array_equal(got.regs, want.regs)
+    assert (got.hip_accum, got.kxq0, got.kxq1) == \
+        (want.hip_accum, want.kxq0, want.kxq1)
+    assert got.serialize() == want.serialize()

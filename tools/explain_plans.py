@@ -66,6 +66,25 @@ def _n_python_nodes(plan: str) -> int:
         "AggregateInPandas"))
 
 
+def _python_under(plan: str, op: str) -> int:
+    """Python nodes in the subtrees below every ``op`` node of ``plan``'s
+    tree section (a node's subtree is the lines after it that sit
+    further right)."""
+    n, col = 0, None
+    for line in plan.split("\n\n")[0].splitlines():
+        at = re.search(r"\w", line)
+        if at is None:
+            continue
+        if col is not None and at.start() <= col:
+            col = None
+        if col is None:
+            if re.search(rf"\b{op} \(\d+\)", line):
+                col = at.start()
+        elif any(p in line for p in _PYTHON_NODES):
+            n += 1
+    return n
+
+
 def _eval_types(plan: str) -> list[int]:
     """The eval type of every Python UDF node of ``plan`` (the last value
     of its Arguments line): 200/202 are pandas UDFs, 250/252 Arrow UDFs."""
@@ -1489,12 +1508,16 @@ def main() -> None:
                 lambda p: "BroadcastNestedLoopJoin" not in p,
             f"no binary column enters a Python node {binary_in}":
                 lambda p, b=binary_in: not b,
+            "no Python node under the BroadcastExchange (the probe is "
+            "not copied onto the build side)":
+                lambda p: _python_under(p, "BroadcastExchange") == 0,
         })
 
     # 56b. one Arrow path into and out of every sketch blob: the SQL
     #      builder is an Arrow grouped agg, the top-k explode maps the
-    #      merged rows where they are, and the sketch_queries classes keep
-    #      their exchange and Python-node counts with no pandas UDF left
+    #      merged rows where they are, the sketch_queries classes that
+    #      stay lazy keep their exchange and Python-node counts with no
+    #      pandas UDF left, and the ones finished on the driver plan none
     agg.register_sql_udfs(spark)
     li.createOrReplaceTempView("li_sketch_sql")
     sql_agg = spark.sql("SELECT l_returnflag, theta_sketch_agg(l_partkey) "
@@ -1517,13 +1540,12 @@ def main() -> None:
             lambda p: "FlatMapGroupsInPandas" not in p
             and "MapInPandas" not in p,
     })
-    # (Exchange, Python nodes) of each class, as when its readers were
-    # pandas UDFs
+    # (Exchange, Python nodes) of each class that keeps a lazy plan, as
+    # when its readers were pandas UDFs; the bloom probe runs once, on the
+    # probe side only
     sketch_plan_counts = {
-        "theta_distinct_parts_by_flag": (1, 3), "hll_distinct_orders": (1, 3),
-        "cpc_distinct_orders": (1, 3), "freq_top_event_types": (1, 3),
-        "countmin_event_counts": (1, 1), "tdigest_price_quantiles": (1, 3),
-        "bloom_semijoin_parts": (2, 2)}
+        "theta_distinct_parts_by_flag": (1, 3),
+        "countmin_event_counts": (1, 1), "bloom_semijoin_parts": (2, 1)}
     for name, (n_ex, n_py) in sketch_plan_counts.items():
         failures += audit(name, Q.QUERIES[name](spark, SF_DIR), {
             f"{n_ex} Exchange, {n_py} Python nodes":
@@ -1531,6 +1553,16 @@ def main() -> None:
                 and _n_python_nodes(p) == y,
             "every Python UDF is an Arrow UDF (no eval type 200/202)":
                 lambda p: all(t >= 250 for t in _eval_types(p)),
+        })
+    # the classes that finish a global sketch on the driver return a
+    # local result: the sketch's one job has run, the frame plans none
+    for name in ("hll_distinct_orders", "cpc_distinct_orders",
+                 "freq_top_event_types", "tdigest_price_quantiles"):
+        failures += audit(name, Q.QUERIES[name](spark, SF_DIR), {
+            "LocalTableScan, 0 Exchange, 0 Python nodes":
+                lambda p: _n_nodes(p, "LocalTableScan") == 1
+                and _n_nodes(p, "Exchange") == 0
+                and _n_python_nodes(p) == 0,
         })
 
     print(f"\n{'=' * 70}")
