@@ -1,9 +1,9 @@
 """Column-level functions: text shingling/signatures (Arrow-vectorized
-pandas UDFs) and pure-Spark text analytics (JVM-side, codegen-friendly)."""
+pandas UDFs; the MinHash scan kernel is functions.text.minhash_kernel)
+and pure-Spark text analytics (JVM-side, codegen-friendly)."""
 
 from datasketches_rust_spark.functions.text import (
     exact_jaccard_udf,
-    minhash_struct_udf,
     simhash_udf,
     token_count_col,
     quality_cols,
@@ -13,7 +13,6 @@ from datasketches_rust_spark.functions.text import (
 
 __all__ = [
     "exact_jaccard_udf",
-    "minhash_struct_udf",
     "simhash_udf",
     "token_count_col",
     "quality_cols",

@@ -1,8 +1,9 @@
 """Text kernels: shingling, MinHash signatures, SimHash, analytics.
 
-The hot path (shingle -> murmur -> 128-perm MinHash -> band keys) runs as a
-single Arrow-batched pandas UDF per document batch — one Python crossing per
-~10k rows, all numpy inside (input_hint: "no per-row Python"). Pure-Spark
+The hot path (shingle -> murmur -> 128-perm MinHash -> band keys) is one
+kernel of the dedup scan's mapInArrow pass (scan.py) per document batch —
+one Python crossing per ~10k rows, all numpy inside, list columns built
+from the flat buffers (no per-row Python). Pure-Spark
 column expressions are used wherever built-ins suffice (token counts,
 quality ratios) so Catalyst keeps them in whole-stage codegen.
 """
@@ -11,13 +12,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StringType
 
 from datasketches_rust_spark.config import DedupConfig
 from datasketches_rust_spark.hashing import hash64_matrix
+from datasketches_rust_spark.scan import fixed_lists
 from datasketches_rust_spark.sketches import minhash as mh
 from datasketches_rust_spark.sketches import simhash as sh
 
@@ -80,38 +82,29 @@ def unique_shingle_sets(texts: "pd.Series", k: int, seed: int) -> list[np.ndarra
 
 
 # ---------------------------------------------------------------------------
-# pandas UDF factories (config is closed over -> broadcast with the task)
+# the MinHash scan kernel and pandas UDF factories (config closed over)
 # ---------------------------------------------------------------------------
 
-MINHASH_STRUCT = StructType([
-    StructField("sig", ArrayType(LongType()), False),
-    StructField("bands", ArrayType(LongType()), False),
-    StructField("n_shingles", LongType(), False),
-])
+MINHASH_FIELDS = "sig array<bigint>, bands array<bigint>, n_shingles bigint"
 
 
-def minhash_struct_udf(cfg: DedupConfig):
-    """pandas UDF: text -> struct(sig array<long>, bands array<long>,
-    n_shingles). One Arrow batch -> one segmented numpy pass
-    (shingle + murmur + 128 perms + band fold)."""
-    from pyspark.sql.functions import pandas_udf
-
+def minhash_kernel(cfg: DedupConfig):
+    """scan.sketch_pass kernel: a batch's ``__t`` texts -> MINHASH_FIELDS
+    (sig and bands as the bit patterns of the u64 values). One segmented
+    numpy pass per batch: shingle + murmur + num_perm perms + band fold."""
     k, seed = cfg.shingle_k, cfg.seed
     num_perm, bands, rows = cfg.num_perm, cfg.lsh_bands, cfg.lsh_rows
 
-    @pandas_udf(MINHASH_STRUCT)
-    def _udf(texts: pd.Series) -> pd.DataFrame:
-        flat, offsets = shingle_hashes_batch(texts, k, seed)
+    def minhash(batch):
+        flat, offsets = shingle_hashes_batch(
+            batch.column("__t").to_pylist(), k, seed)
         sigs = mh.signatures(flat, offsets, num_perm, seed)
-        bkeys = mh.band_hashes(sigs, bands, rows, seed)
-        sig_i64 = sigs.view(np.int64)  # bit-pattern preserving
-        return pd.DataFrame({
-            "sig": list(sig_i64),
-            "bands": list(bkeys),
-            "n_shingles": np.diff(offsets),
-        })
+        return None, {
+            "sig": fixed_lists(sigs.view(np.int64)),
+            "bands": fixed_lists(mh.band_hashes(sigs, bands, rows, seed)),
+            "n_shingles": pa.array(np.diff(offsets))}
 
-    return _udf
+    return minhash
 
 
 def simhash_udf(cfg: DedupConfig):

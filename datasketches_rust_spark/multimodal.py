@@ -1,6 +1,6 @@
 """Multimodal binary-column operators (image/audio/video as opaque
 ``binary`` columns + typed metadata; decode and feature extraction as
-Arrow-batched ``mapInPandas`` stages).
+one ``mapInArrow`` pass, scan.sketch_pass).
 
 What is REAL here: schemas, partitioning, UDF signatures, batch shapes,
 the PNG decode path (sources/codec.py), and the WAV/RIFF PCM audio codec
@@ -18,44 +18,47 @@ defaults to 10k records; at 1 MB images use ~256).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame
 
 from datasketches_rust_spark.sources.codec import decode_image
 
-DECODED_META_SCHEMA = ("image_id string, w int, h int, fmt string, "
-                       "mean_r double, mean_g double, mean_b double, "
-                       "std_gray double, phash long")
+IMAGE_FEATURES = ("w int, h int, fmt string, mean_r double, mean_g double, "
+                  "mean_b double, std_gray double, phash bigint")
+
+
+def decode_images(batch) -> list[np.ndarray]:
+    """The pixels of every (``bytes``, ``fmt``) row of an Arrow batch,
+    decoded per row (compressed buffers have no batch form)."""
+    return [decode_image(b, f) for b, f in zip(
+        batch.column("bytes").to_pylist(), batch.column("fmt").to_pylist())]
+
+
+def _image_features_kernel(batch):
+    """scan.sketch_pass kernel: decoded ``bytes`` -> IMAGE_FEATURES."""
+    from datasketches_rust_spark.sources.phash import phash_batch
+
+    pix = decode_images(batch)
+    stats = np.array([(px[..., 0].mean(), px[..., 1].mean(),
+                       px[..., 2].mean(), px.mean(axis=2).std())
+                      for px in pix])
+    return None, {
+        "w": pa.array([px.shape[1] for px in pix], pa.int32()),
+        "h": pa.array([px.shape[0] for px in pix], pa.int32()),
+        "fmt": batch.column("fmt"),
+        **{c: pa.array(stats[:, i]) for i, c in
+           enumerate(("mean_r", "mean_g", "mean_b", "std_gray"))},
+        "phash": pa.array(phash_batch(pix), pa.int64())}
 
 
 def image_features(images: DataFrame) -> DataFrame:
     """Decode + per-channel feature extraction, one Arrow batch at a time.
-    Input needs (image_id, bytes, fmt); output DECODED_META_SCHEMA."""
-    from datasketches_rust_spark.sources.phash import phash_batch
+    Input needs (image_id, bytes, fmt); output image_id + IMAGE_FEATURES."""
+    from datasketches_rust_spark.scan import sketch_pass
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows, pix = [], []
-            for r in pdf.itertuples():
-                px = decode_image(bytes(r.bytes), r.fmt)
-                gray = px.mean(axis=2)
-                pix.append(px)
-                rows.append((r.image_id, px.shape[1], px.shape[0], r.fmt,
-                             float(px[..., 0].mean()),
-                             float(px[..., 1].mean()),
-                             float(px[..., 2].mean()),
-                             float(gray.std())))
-            out = pd.DataFrame(rows, columns=[
-                "image_id", "w", "h", "fmt", "mean_r", "mean_g", "mean_b",
-                "std_gray"])
-            out["phash"] = phash_batch(pix)
-            yield out
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=DECODED_META_SCHEMA)
+    return sketch_pass(images, "image_id", ["bytes", "fmt"],
+                       _image_features_kernel, IMAGE_FEATURES)
 
 
 # ---------------------------------------------------------------------------
@@ -151,3 +154,8 @@ def _decode_audio(buf: bytes) -> tuple[np.ndarray, int]:
     if buf[:4] == b"RIFF":
         return decode_wav(buf)
     return _decode_audio_stub(buf)
+
+
+def decode_clips(batch) -> list[tuple[np.ndarray, int]]:
+    """(samples, sample rate) of every ``bytes`` row of an Arrow batch."""
+    return [_decode_audio(b) for b in batch.column("bytes").to_pylist()]

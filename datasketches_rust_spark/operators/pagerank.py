@@ -36,6 +36,7 @@ output grid.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 PAGERANK_DAMPING = 0.85
@@ -65,7 +66,9 @@ def pagerank(edges: DataFrame, n_iter: int = PAGERANK_ITERS,
     # parallelism before the iteration fan-out (persist+AQE hazard)
     if n == 0:
         adj.unpersist()
-        return sym.sparkSession.createDataFrame([], "u long, r double")
+        # over Arrow: a row list would plan a Python RDD scan and a job
+        return sym.sparkSession.createDataFrame(pa.table(
+            {"u": pa.array([], pa.int64()), "r": pa.array([], pa.float64())}))
     base = (1.0 - PAGERANK_DAMPING) / n
     ranks = adj.select("u", F.lit(1.0 / n).alias("r"))
     for i in range(n_iter):

@@ -3,7 +3,7 @@
 SimHash edges on top (sources/images.py + operators/visual.py).
 
 Stages (SURVEY.md §7 step 4 spine):
-  1. signatures : one Arrow-batched pandas UDF pass computes shingle
+  1. signatures : one mapInArrow pass (scan.py) computes shingle
                   hashes -> 128-perm MinHash -> 32x4 LSH band keys per doc
                   (coupon-precompute discipline: hash each shingle once,
                   reuse across all permutations — hll/mod.rs:167-173).
@@ -23,17 +23,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from datasketches_rust_spark.config import DedupConfig
-from datasketches_rust_spark.functions.text import (exact_jaccard_udf,
-                                                    minhash_struct_udf)
+from datasketches_rust_spark.functions.text import (MINHASH_FIELDS,
+                                                    exact_jaccard_udf,
+                                                    minhash_kernel)
 from datasketches_rust_spark.operators.connected_components import \
     assign_clusters
 from datasketches_rust_spark.operators.lsh import candidate_pairs
+from datasketches_rust_spark.scan import sketch_pass
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition up to the cluster's default parallelism when the scan
     yields fewer partitions (e.g. one small parquet file locally) — the
-    CPU-heavy signature UDF should use every core. At production scale the
+    CPU-heavy signature pass should use every core. At production scale the
     scan already has >> defaultParallelism partitions, so this is a no-op
     (no extra shuffle)."""
     if df.isStreaming:
@@ -46,15 +48,11 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
 
 def minhash_signatures(df: DataFrame, cfg: DedupConfig, id_col: str,
                        text_col: str) -> DataFrame:
-    """DataFrame[id, sig, bands, n_shingles]. Column-pruned: only id + text
-    are read from the scan."""
-    mh = minhash_struct_udf(cfg)
+    """DataFrame[id, sig, bands, n_shingles] — one Arrow pass over the
+    id and the lowered text, the only two columns read from the scan."""
     narrow = ensure_parallelism(df.select(F.col(id_col), F.col(text_col)))
-    return (narrow
-            .withColumn("__mh", mh(F.lower(F.col(text_col))))
-            .select(id_col, F.col("__mh.sig").alias("sig"),
-                    F.col("__mh.bands").alias("bands"),
-                    F.col("__mh.n_shingles").alias("n_shingles")))
+    return sketch_pass(narrow, id_col, [F.lower(text_col).alias("__t")],
+                       minhash_kernel(cfg), MINHASH_FIELDS)
 
 
 def dedup_pairs(df: DataFrame, cfg: DedupConfig, id_col: str,
@@ -64,33 +62,13 @@ def dedup_pairs(df: DataFrame, cfg: DedupConfig, id_col: str,
 
     ``sigs``: optional pre-materialized signature table [id, bands]
     (e.g. the image pipeline's fused one-scan sketch table, or a
-    checkpointed Iceberg signature table on re-runs). When omitted it is
-    built here and cached.
+    checkpointed signature table on re-runs). When omitted, the
+    MinHash pass runs inside the candidate job, uncached: its
+    MapInArrow output is opaque to the optimizer, so the band
+    explode's inferred filter stays above it and the pass runs once.
     """
     if sigs is None:
-        # Persisted so the signature UDF runs exactly once per input
-        # row. Uncached, the optimizer infers ``size(bands) > 0 AND
-        # isnotnull(bands)`` from the band explode and pushes it below
-        # ensure_parallelism's round-robin repartition, where it needs
-        # the UDF's output: the plan then evaluates MinHash in two
-        # ArrowEvalPython nodes, one under the filter and one above the
-        # repartition (tests/test_pipeline.py pins one). Tracked
-        # (cache.py): released at the next CC/pipeline invocation, after
-        # consumers have materialized. Only (id, bands) is cached: the
-        # verify stage recomputes shingle sets from the raw text, and
-        # the 128-long sig array would put ~1 KB/row of never-read
-        # payload through the cache. Callers that need sig
-        # (checkpointing, sketch queries) call minhash_signatures
-        # directly.
-        from datasketches_rust_spark.cache import track
-        sigs = track(minhash_signatures(df, cfg, id_col, text_col)
-                     .select(id_col, "bands"))
-        # materialize the cache in ONE full-parallelism job before the
-        # LSH subtrees fan out: concurrent AQE leaf stages first-touching
-        # a cold cache serialize on per-partition locks, with blocked
-        # consumer tasks occupying task slots (observed: every stage at
-        # N-1/N, machine idle)
-        sigs.count()
+        sigs = minhash_signatures(df, cfg, id_col, text_col)
     cands = candidate_pairs(sigs, cfg, id_col)
 
     texts = df.select(F.col(id_col), F.lower(F.col(text_col)).alias("__t"))

@@ -8,8 +8,8 @@ text (MinHash/LSH), image (phash), and embedding (cosine-LSH/IVF)
 dedup.
 
 Scale discipline, inherited from the image/text axes:
-- decode + FFT run ONCE per clip in an Arrow-batched mapInPandas at
-  the scan; the bytes column never travels past it.
+- decode + FFT run ONCE per clip in one mapInArrow pass at the scan
+  (scan.sketch_pass); the bytes column never travels past it.
 - candidate generation shuffles (id, band_key, afp) rows — 24 bytes —
   through ONE band_key exchange (the triple-slice keyspace: see
   AUDIO_SLICE_TRIPLES for the measured entropy ladder that chose it)
@@ -33,11 +33,12 @@ Scale discipline, inherited from the image/text axes:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+
+from datasketches_rust_spark.multimodal import decode_clips
+from datasketches_rust_spark.scan import fixed_lists, sketch_pass
 
 AUDIO_PREFILTER_HAMMING = 12  # cheap candidate cut; verify decides
 AUDIO_VERIFY_COSINE = 0.95    # dup >= 0.9997, distinct <= 0.876
@@ -79,39 +80,26 @@ AUDIO_BAND_LAYOUT = (8, AUDIO_SLICE_TRIPLES)
 # collapse) rather than shaping routine volume.
 AUDIO_MAX_BUCKET = 256
 
+def _clip_sketch_kernel(batch):
+    """scan.sketch_pass kernel: clip bytes -> (afp, feat)."""
+    from datasketches_rust_spark.sketches.audiofp import audio_sketch
+    sk = [audio_sketch(pcm, sr) for pcm, sr in decode_clips(batch)]
+    return None, {"afp": pa.array([fp for fp, _ in sk], pa.int64()),
+                  "feat": fixed_lists(np.stack([ft for _, ft in sk]))}
+
+
 def audio_sketch_table(clips: DataFrame, id_col: str = "clip_id"
                        ) -> DataFrame:
-    """DataFrame[id_col, afp, feat] — decode + FFT once per clip,
-    tracked-persisted and materialized with one count() (the AQE
-    fan-out hazard: the band self-join consumes this in multiple
-    subtrees; without the eager single-job materialization, concurrent
-    leaf stages serialize on per-partition cache locks while holding
-    task slots)."""
+    """DataFrame[id_col, afp, feat] — decode + FFT once per clip in one
+    Arrow pass, tracked-persisted and materialized with one count():
+    three plans read it (the band exchange's codes and both feature
+    rejoins of the verify), and without the eager single-job
+    materialization concurrent AQE leaf stages serialize on
+    per-partition cache locks while holding task slots."""
     from datasketches_rust_spark.cache import track
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from datasketches_rust_spark.multimodal import _decode_audio
-        from datasketches_rust_spark.sketches.audiofp import audio_sketch
-        for pdf in batches:
-            ids = pdf["__aid"].to_numpy()
-            fps = np.empty(len(pdf), dtype=np.int64)
-            feats = []
-            for j, buf in enumerate(pdf["__b"]):
-                pcm, sr = _decode_audio(bytes(buf))
-                fp, ft = audio_sketch(pcm, sr)
-                fps[j] = fp
-                feats.append(ft)
-            yield pd.DataFrame({"__aid": ids, "afp": fps,
-                                "feat": feats})
-
-    id_type = dict(clips.dtypes)[id_col]
-    sk = (clips.select(F.col(id_col).alias("__aid"),
-                       F.col("bytes").alias("__b"))
-          .mapInPandas(
-              run,
-              schema=f"__aid {id_type}, afp long, feat array<float>")
-          .withColumnRenamed("__aid", id_col))
-    sk = track(sk)
+    sk = track(sketch_pass(clips, id_col, ["bytes"], _clip_sketch_kernel,
+                           "afp bigint, feat array<float>"))
     sk.count()
     return sk
 
@@ -203,36 +191,24 @@ AUDIO_FRAME_HAMMING = 3      # per-frame near-dup gate
 # frames); trimmed dups 8-11 matches vs quorum 4-6.
 
 
+def _frame_code_kernel(batch):
+    """scan.sketch_pass kernel: clip bytes -> (frame_idx, fcode) rows,
+    one per frame."""
+    from datasketches_rust_spark.sketches.audiofp import audio_frame_codes
+    codes = [audio_frame_codes(pcm, sr) for pcm, sr in decode_clips(batch)]
+    return (pa.array(np.repeat(np.arange(len(codes)), list(map(len, codes)))),
+            {"frame_idx": pa.array(np.concatenate(
+                [np.arange(len(c), dtype=np.int32) for c in codes])),
+             "fcode": pa.array(np.concatenate(codes))})
+
+
 def audio_frame_sketches(clips: DataFrame,
                          id_col: str = "clip_id") -> DataFrame:
     """DataFrame[id_col, frame_idx, fcode] — decode + framed FFT in ONE
     Arrow pass; bytes never travel past the scan (the video
     frame-sketch discipline)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from datasketches_rust_spark.multimodal import _decode_audio
-        from datasketches_rust_spark.sketches.audiofp import (
-            audio_frame_codes)
-        for pdf in batches:
-            ids, idxs, codes = [], [], []
-            for cid, buf in zip(pdf["__aid"], pdf["__b"]):
-                pcm, sr = _decode_audio(bytes(buf))
-                cs = audio_frame_codes(pcm, sr)
-                ids.extend([cid] * len(cs))
-                idxs.extend(range(len(cs)))
-                codes.append(cs)
-            out = (np.concatenate(codes) if codes
-                   else np.empty(0, dtype=np.int64))
-            yield pd.DataFrame({"__aid": ids, "frame_idx": idxs,
-                                "fcode": out})
-
-    id_type = dict(clips.dtypes)[id_col]
-    return (clips.select(F.col(id_col).alias("__aid"),
-                         F.col("bytes").alias("__b"))
-            .mapInPandas(
-                run,
-                schema=f"__aid {id_type}, frame_idx int, fcode long")
-            .withColumnRenamed("__aid", id_col))
+    return sketch_pass(clips, id_col, ["bytes"], _frame_code_kernel,
+                       "frame_idx int, fcode bigint")
 
 
 AUDIO_MIN_FRAME_MATCHES = 4   # quorum floor (very short clips)
@@ -260,6 +236,8 @@ def _code_match_table(frames: DataFrame) -> DataFrame:
     AUDIO_FRAME_HAMMING pairs from triple-slice banding of the
     DISTINCT code table (near tier). ``frames`` must have columns
     (__c clip, fcode)."""
+    from datasketches_rust_spark.operators.connected_components import \
+        symmetric_edges
     from datasketches_rust_spark.operators.visual import simhash_pairs
 
     clip_df = (frames.select("__c", "fcode").distinct()
@@ -268,16 +246,12 @@ def _code_match_table(frames: DataFrame) -> DataFrame:
             .select("fcode"))
     # near tier: distinct informative codes (each its own id), banded
     # with the clip ladder's triple keys
-    near = (simhash_pairs(info, "fcode", "fcode", AUDIO_FRAME_HAMMING,
-                          AUDIO_FRAME_BUCKET_CAP,
-                          layout=AUDIO_FRAME_BAND_LAYOUT)
-            .select(F.col("id_a").alias("c1"), F.col("id_b").alias("c2")))
+    near = simhash_pairs(info, "fcode", "fcode", AUDIO_FRAME_HAMMING,
+                         AUDIO_FRAME_BUCKET_CAP,
+                         layout=AUDIO_FRAME_BAND_LAYOUT)
     ident = info.select(F.col("fcode").alias("c1"),
                         F.col("fcode").alias("c2"))
-    return (near
-            .unionAll(near.select(F.col("c2").alias("c1"),
-                                  F.col("c1").alias("c2")))
-            .unionAll(ident))
+    return symmetric_edges(near).toDF("c1", "c2").unionAll(ident)
 
 
 def audio_frame_edges(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:

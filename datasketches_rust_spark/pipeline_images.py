@@ -13,38 +13,20 @@ Scale notes: both the caption and the visual path shuffle (band_key,
 id) pairs — 16 bytes/row, the band index mixed into the key and string
 image ids mapped to xxhash64 longs for the whole internal pipeline.
 The heavy `bytes` column is never shuffled: phash is computed at scan time
-(a pandas UDF over the binary column) and only the 8-byte fingerprint
+(the caption MinHash's mapInArrow pass) and only the 8-byte fingerprint
 travels. Cluster ids come from connected components over the merged edges.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import LongType
 
 from datasketches_rust_spark.config import DedupConfig
 from datasketches_rust_spark.operators.connected_components import \
     assign_clusters
 from datasketches_rust_spark.operators.visual import simhash_pairs
 from datasketches_rust_spark.pipeline import dedup_pairs
-
-
-def phash_from_bytes_udf():
-    """pandas UDF: (bytes, fmt) -> phash long, decoding in the SCAN stage so
-    only the 8-byte fingerprint ever shuffles. Decode is per-row (variable-
-    length compressed buffers have no batch form); the DCT/median/bit-pack
-    run batched over the Arrow batch (sources/phash.phash_batch)."""
-    from pyspark.sql.functions import pandas_udf
-    from datasketches_rust_spark.sources.codec import decode_image
-    from datasketches_rust_spark.sources.phash import phash_batch
-
-    @pandas_udf(LongType())
-    def _udf(bufs: pd.Series, fmts: pd.Series) -> pd.Series:
-        pix = [decode_image(bytes(b), f) for b, f in zip(bufs, fmts)]
-        return pd.Series(phash_batch(pix), dtype="int64")
-
-    return _udf
 
 
 def image_sketch_table(images: DataFrame, cfg: DedupConfig,
@@ -55,37 +37,49 @@ def image_sketch_table(images: DataFrame, cfg: DedupConfig,
     The caption MinHash/LSH path and the visual phash path each need a
     full pass over the table; fusing them means the parquet row groups
     decompress once, the heavy `bytes` column is read once, and both
-    pandas UDFs ride the same Arrow batch through one python-worker
-    round-trip (Spark evaluates independent pandas UDFs in a projection
-    as a single ArrowEvalPython node). At 100 TB this halves the scan
-    bill; the cached result is the per-partition signature table the
-    north_star checkpoints to Iceberg.
+    kernels ride the same Arrow batch through one mapInArrow pass. At
+    100 TB this halves the scan bill; the cached result is the
+    per-partition signature table the north_star checkpoints.
 
-    phash comes from the columns: with `bytes` + `fmt` it is DERIVED
-    from the decoded pixels in the scan stage (the north_star mode);
-    otherwise the stored `phash` column is trusted (pre-sketched input,
-    e.g. a checkpointed signature table). The fixture stores
-    phash64(decoded) (FIXTURES F1), so both yield bit-identical
-    fingerprints there — pinned by tests/test_images.py."""
+    Cached because two plans read it (caption candidates, visual pairs),
+    and counted once so that their AQE leaf stages do not serialize on
+    per-partition cache locks while holding task slots.
+
+    Each sketch comes from the columns: with `bytes` + `fmt` the phash
+    is DERIVED from the decoded pixels in the scan stage (the north_star
+    mode); otherwise the stored `phash` column is trusted. A stored
+    `bands` column is trusted the same way; without one the bands come
+    from the lowered `caption` (plans/checkpoint.py stores the whole
+    table). The fixture stores phash64(decoded) (FIXTURES F1), so both
+    yield bit-identical fingerprints there — pinned by
+    tests/test_images.py."""
     from datasketches_rust_spark.cache import track
-    from datasketches_rust_spark.functions.text import minhash_struct_udf
+    from datasketches_rust_spark.functions.text import minhash_kernel
     from datasketches_rust_spark.pipeline import ensure_parallelism
+    from datasketches_rust_spark.scan import sketch_pass
 
-    from_bytes = {"bytes", "fmt"} <= set(images.columns)
-    mh = minhash_struct_udf(cfg)
-    in_cols = [id_col, "caption"] + (["bytes", "fmt"] if from_bytes
-                                     else ["phash"])
-    narrow = ensure_parallelism(images.select(*in_cols))
-    cols = [F.col(id_col),
-            mh(F.lower(F.col("caption"))).getField("bands").alias("bands")]
-    if from_bytes:
-        ph = phash_from_bytes_udf()
-        cols.append(ph(F.col("bytes"), F.col("fmt")).alias("phash"))
-    else:
-        cols.append(F.col("phash"))
-    sk = track(narrow.select(*cols))
-    # one full-parallelism job materializes the cache before consumers
-    # fan out (per-partition cache-lock hazard, see pipeline.dedup_pairs)
+    minhash = minhash_kernel(cfg)
+
+    def image_sketch(batch):
+        from datasketches_rust_spark.multimodal import decode_images
+        from datasketches_rust_spark.sources.phash import phash_batch
+
+        names = batch.schema.names
+        return None, {
+            "bands": minhash(batch)[1]["bands"] if "__t" in names
+            else batch.column("bands"),
+            "phash": pa.array(phash_batch(decode_images(batch)), pa.int64())
+            if "bytes" in names else batch.column("phash")}
+
+    have = set(images.columns)
+    inputs = (["bands"] if "bands" in have
+              else [F.lower("caption").alias("__t")])
+    inputs += ["bytes", "fmt"] if {"bytes", "fmt"} <= have else ["phash"]
+    narrow = ensure_parallelism(images.select(id_col, *inputs))
+    derive = {"__t", "bytes"} & set(narrow.columns)
+    sk = sketch_pass(narrow, id_col, narrow.columns[1:], image_sketch,
+                     "bands array<bigint>, phash bigint") if derive else narrow
+    sk = track(sk)
     sk.count()
     return sk
 

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from datasketches_rust_spark.config import DedupConfig
 
-WRITER_VERSION = 1
+WRITER_VERSION = 2  # 2: signatures is the fused (id, caption, bands, phash)
 
 
 def _meta_path(root: str, name: str) -> str:
@@ -106,20 +106,22 @@ def checkpointed_cluster_assignments(spark: SparkSession, images: DataFrame,
     """The resumable flagship: signatures and clusters checkpoint
     separately, with identical results on resume (keyed hashing =>
     deterministic). A completed clusters checkpoint is replayed as is.
-    The signatures checkpoint feeds only the bucket metrics: the clusters
-    stage runs ``image_cluster_assignments`` on ``images``, which
-    computes the caption MinHash again in ``image_sketch_table``, so a
-    run killed between the two stages recomputes the signatures."""
+    The signatures checkpoint is the fused sketch table plus the
+    caption, (id, caption, bands, phash): the clusters stage runs
+    ``image_cluster_assignments`` over it, which trusts the stored
+    bands and phash, so a fresh run computes the caption MinHash once
+    and a run killed between the two stages computes none."""
     from datasketches_rust_spark.operators.lsh import hot_bucket_stats
-    from datasketches_rust_spark.pipeline import minhash_signatures
-    from datasketches_rust_spark.pipeline_images import \
-        image_cluster_assignments
+    from datasketches_rust_spark.pipeline_images import (
+        image_cluster_assignments, image_sketch_table)
 
     stages = {}
 
     sigs, resumed_sigs = resume_or_compute(
         spark, root, "signatures", cfg,
-        lambda: minhash_signatures(images, cfg, id_col, "caption"))
+        lambda: image_sketch_table(images, cfg, id_col)
+        .join(images.select(id_col, "caption"), id_col)
+        .select(id_col, "caption", "bands", "phash"))
     stages["signatures_resumed"] = resumed_sigs
 
     bucket_metrics = {r: v for r, v in zip(
@@ -129,7 +131,7 @@ def checkpointed_cluster_assignments(spark: SparkSession, images: DataFrame,
 
     clusters, resumed_clusters = resume_or_compute(
         spark, root, "clusters", cfg,
-        lambda: image_cluster_assignments(images, cfg, id_col),
+        lambda: image_cluster_assignments(sigs, cfg, id_col),
         metrics=bucket_metrics)
     stages["clusters_resumed"] = resumed_clusters
     return clusters, stages

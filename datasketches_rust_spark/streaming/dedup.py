@@ -40,9 +40,9 @@ from pyspark.sql.types import (BinaryType, BooleanType, DoubleType,
                                TimestampType)
 
 from datasketches_rust_spark.config import DedupConfig
-from datasketches_rust_spark.functions.text import (exact_jaccard_udf,
-                                                    minhash_struct_udf)
+from datasketches_rust_spark.functions.text import exact_jaccard_udf
 from datasketches_rust_spark.hashing import DEFAULT_SEED
+from datasketches_rust_spark.pipeline import minhash_signatures
 
 
 def interval_join_streams(left: DataFrame, right: DataFrame,
@@ -114,12 +114,12 @@ def incremental_dedup_foreach_batch(cfg: DedupConfig, id_col: str,
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        mh = minhash_struct_udf(cfg)
-        sigs = (batch.select(F.col(id_col), F.lower(F.col(text_col))
-                             .alias("__t"))
-                .withColumn("__mh", mh(F.col("__t")))
+        texts = batch.select(F.col(id_col),
+                             F.lower(F.col(text_col)).alias("__t"))
+        sigs = (minhash_signatures(batch, cfg, id_col, text_col)
+                .join(texts, id_col)
                 .select(id_col, "__t",
-                        F.posexplode("__mh.bands")
+                        F.posexplode("bands")
                         .alias("band_idx", "band_key")))
         sigs = sigs.localCheckpoint()
 

@@ -68,3 +68,30 @@ def test_kill_and_restart_identical_clusters(spark, tmp_path):
 
     meta = read_meta(root, "clusters")
     assert meta["metrics"] == {} or "n_buckets" in meta["metrics"]
+
+
+def test_fresh_run_shingles_each_caption_once(spark, tmp_path, monkeypatch):
+    """A fresh checkpointed run computes the caption MinHash once: the
+    signatures checkpoint is the fused sketch table, and the clusters
+    stage reads its stored bands instead of shingling the captions
+    again. The counting wrapper rides the pickled scan kernel to the
+    workers, which report its rows through an accumulator (the verify
+    shingles through unique_shingle_sets, which the workers import
+    unwrapped)."""
+    from datasketches_rust_spark.functions import text
+
+    images, _ = images_spark_df(spark, 400, seed=42, partitions=4)
+    images = images.localCheckpoint()
+    rows = spark.sparkContext.accumulator(0)
+    shingle = text.shingle_hashes_batch
+
+    def counted(texts, k, seed):
+        rows.add(len(texts))
+        return shingle(texts, k, seed)
+
+    monkeypatch.setattr(text, "shingle_hashes_batch", counted)
+    clusters, stages = checkpointed_cluster_assignments(
+        spark, images, CFG, str(tmp_path / "fresh"))
+    assert len(clusters.collect()) == 400
+    assert stages == {"signatures_resumed": False, "clusters_resumed": False}
+    assert rows.value == 400

@@ -129,16 +129,6 @@ class TestImagePipeline:
         assert len(extra) <= 0.05 * max(len(cluster_pairs(truth)), 1), \
             f"{len(extra)} spurious pairs"
 
-    def test_phash_from_bytes_udf(self, spark):
-        from datasketches_rust_spark.pipeline_images import \
-            phash_from_bytes_udf
-        import pyspark.sql.functions as F
-        df, _ = images_spark_df(spark, 100, seed=7)
-        ph = phash_from_bytes_udf()
-        bad = df.withColumn("ph2", ph(F.col("bytes"), F.col("fmt"))) \
-                .where(F.col("ph2") != F.col("phash")).count()
-        assert bad == 0
-
     def test_sketch_table_bytes_equals_stored(self, spark):
         """image_sketch_table picks its phash source from the columns:
         DERIVED from pixels in the scan stage when bytes+fmt are present

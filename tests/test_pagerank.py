@@ -61,6 +61,26 @@ def test_pagerank_empty_edges(spark):
     assert pagerank(df, n_iter=3).collect() == []
 
 
+def test_pagerank_empty_result_starts_no_job(spark):
+    """An empty edge set ranks nothing: the (u, r) frame is a local
+    table, so collecting it starts no Spark job (a row-list
+    createDataFrame would plan a Python RDD scan)."""
+    import uuid
+
+    ranks = pagerank(spark.createDataFrame([], "id_a long, id_b long"))
+    assert ranks.dtypes == [("u", "bigint"), ("r", "double")]
+    sc = spark.sparkContext
+    group = f"pagerank-empty-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        assert ranks.collect() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_pagerank_one_exchange_per_iteration(spark):
     """The rank-join must reuse the adjacency cache's partitioning: each
     iteration adds exactly ONE Exchange (the contribution groupBy), so a

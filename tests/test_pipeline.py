@@ -69,16 +69,15 @@ def test_jaccard_column_sane(spark, docs_df):
         assert CFG.jaccard_threshold <= r["jaccard"] <= 1.0
 
 
-def _assert_text_udfs_once(spark, docs_df, build):
-    """``build`` over the text dedup edges evaluates MinHash once and the
-    exact-Jaccard verify once. AQE is off for the whole build, the
-    signature cache's count included, so every subtree prints once in
-    one tree; earlier tests' signature caches are released first, so
-    this build does not reuse one planned with AQE."""
+def _assert_text_udfs_once(spark, docs_df, build, caches=0):
+    """``build`` over the text dedup edges evaluates MinHash once, as one
+    MapInArrow pass over (doc_id, lower(text)), and the exact-Jaccard
+    verify once, as the plan's only ArrowEvalPython. Nothing on the edge
+    path is cached: the plan holds only ``build``'s own ``caches``
+    InMemoryTableScans. AQE is off for the whole build, so every subtree
+    prints once in one tree."""
     import re
 
-    from datasketches_rust_spark.cache import release_tracked
-    release_tracked()
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -87,18 +86,22 @@ def _assert_text_udfs_once(spark, docs_df, build):
                 ._jdf.queryExecution().executedPlan().toString())
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    passes = re.findall(r"MapInArrow (\w+)\(([^)]*)\)", plan)
+    minhash = [args for name, args in passes if name == "minhash"]
+    assert len(minhash) == 1, plan
+    assert re.fullmatch(r"doc_id#\d+L, __t#\d+", minhash[0]), plan
+    assert re.search(r"lower\(text#\d+\) AS __t#\d+", plan), plan
     udfs = re.findall(r"ArrowEvalPython \[\w+\(([^\]]*)\]", plan)
-    assert len([u for u in udfs if u.startswith("lower(text#")]) == 1, plan
-    assert len([u for u in udfs if u.startswith("__ta#")]) == 1, plan
-    assert len(udfs) == 2, plan
+    assert len(udfs) == 1 and udfs[0].startswith("__ta#"), plan
+    assert plan.count("InMemoryTableScan") == caches, plan
 
 
 def test_text_edge_plan_evaluates_each_udf_once(spark, docs_df):
     """The plan connected components checkpoints evaluates MinHash once
-    (the signature cache keeps the optimizer's inferred explode filter
-    from running the UDF a second time below the round-robin
-    repartition) and the exact-Jaccard verify once (both edge
-    directions come from one pass, not one union leg each)."""
+    (its MapInArrow output is opaque to the optimizer, so the inferred
+    explode filter cannot run the pass a second time below it) and the
+    exact-Jaccard verify once (both edge directions come from one pass,
+    not one union leg each)."""
     from datasketches_rust_spark.operators.connected_components import \
         symmetric_edges
     _assert_text_udfs_once(spark, docs_df, symmetric_edges)
@@ -111,4 +114,38 @@ def test_pagerank_adjacency_evaluates_each_udf_once(spark, docs_df):
     exact-Jaccard verify twice. With n_iter=0 the ranks plan is one scan
     of the adjacency cache, whose plan prints once."""
     from datasketches_rust_spark.operators.pagerank import pagerank
-    _assert_text_udfs_once(spark, docs_df, lambda e: pagerank(e, n_iter=0))
+    _assert_text_udfs_once(spark, docs_df, lambda e: pagerank(e, n_iter=0),
+                           caches=1)
+
+
+def test_minhash_signatures_match_numpy_kernel(spark):
+    """The Arrow MinHash pass equals the driver-side kernels row for row,
+    including a null text, an empty text and texts shorter than the
+    shingle size: null and empty have no shingles and keep the empty
+    signature (all bits set), a short text is one zero-padded shingle."""
+    import numpy as np
+
+    from datasketches_rust_spark.functions.text import shingle_hashes_batch
+    from datasketches_rust_spark.pipeline import minhash_signatures
+    from datasketches_rust_spark.sketches import minhash as mh
+
+    texts = [None, "", "ab", "a" * (CFG.shingle_k - 1),
+             "the quick brown fox jumps over the lazy dog",
+             "The Quick Brown Fox jumps over the lazy dog!"]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    got = {r.doc_id: r for r in
+           minhash_signatures(df, CFG, "doc_id", "text").collect()}
+    flat, offsets = shingle_hashes_batch(
+        [t.lower() if t is not None else None for t in texts],
+        CFG.shingle_k, CFG.seed)
+    sigs = mh.signatures(flat, offsets, CFG.num_perm, CFG.seed)
+    bands = mh.band_hashes(sigs, CFG.lsh_bands, CFG.lsh_rows, CFG.seed)
+    for i in range(len(texts)):
+        assert got[i].sig == sigs[i].view(np.int64).tolist(), i
+        assert got[i].bands == bands[i].tolist(), i
+        assert got[i].n_shingles == offsets[i + 1] - offsets[i], i
+    assert got[0].sig == got[1].sig == [-1] * CFG.num_perm
+    assert got[0].bands == got[1].bands
+    assert got[0].n_shingles == got[1].n_shingles == 0
+    assert got[2].n_shingles == got[3].n_shingles == 1

@@ -165,8 +165,9 @@ def main() -> None:
     failures += audit("minhash_signatures (documents)", sigs, {
         "scan reads only doc_id+text (column pruning)":
             lambda p: re.search(r"ReadSchema: struct<doc_id:bigint,text:string>", p),
-        "ArrowEvalPython (vectorized UDF, not BatchEval)":
-            r"ArrowEvalPython",
+        "one MapInArrow MinHash pass (no Python UDF node)":
+            lambda p: _n_nodes(p, "MapInArrow") == 1
+            and "EvalPython" not in p and "MapInPandas" not in p,
     })
 
     # 2. tpch_q1: pure whole-stage-codegen aggregation
@@ -210,21 +211,44 @@ def main() -> None:
             p)) == 1 == len(re.findall(r"REPARTITION_BY_COL", p))
 
     def _one_bucket_pass(p: str) -> bool:
-        # exactly one MapInArrow node, fed only (__id, band_key)
-        return _n_nodes(p, "MapInArrow") == 1 and re.search(
-            r"\(\d+\) MapInArrow\n"
-            r"Input \[2\]: \[__id#\d+L, band_key#\d+L\]", p) is not None
+        # two MapInArrow nodes: the MinHash scan pass under the bands
+        # and one bucket pass, fed only (__id, band_key)
+        return _n_nodes(p, "MapInArrow") == 2 and all(
+            len(re.findall(rf"\(\d+\) MapInArrow\nInput \[2\]: {i}", p)) == 1
+            for i in (r"\[__id#\d+L, band_key#\d+L\]",
+                      r"\[doc_id#\d+L, __t#\d+\]"))
 
     failures += audit("lsh candidate_pairs", cands, {
         "exactly one band exchange (REPARTITION_BY_COL, __id + band_key)":
             _one_band_exchange,
-        "one MapInArrow bucket pass over (__id, band_key) only":
+        "one MapInArrow bucket pass over (__id, band_key) only, above "
+        "the MinHash pass":
             _one_bucket_pass,
         "no Window (bucket sizes come from the pass's own sort)":
             lambda p: "Window" not in p,
         "no join in the candidate plan":
             lambda p: not re.search(r"SortMergeJoin|ShuffledHashJoin|"
                                     r"BroadcastHashJoin|NestedLoop", p),
+    })
+
+    # 5b. text edges as connected components reads them (id pairs only):
+    #     the MinHash pass runs inside the candidate job, uncached, and
+    #     the verify is the only Python UDF on the path
+    from datasketches_rust_spark.pipeline import dedup_pairs
+    tedges = dedup_pairs(docs, cfg, "doc_id", "text").select("id_a", "id_b")
+    failures += audit("text edges (dedup_pairs)", tedges, {
+        "no InMemoryTableScan (the signatures are not cached)":
+            lambda p: "InMemoryTableScan" not in p,
+        "no MapInPandas, and the one ArrowEvalPython is the verify over "
+        "(__ta, __tb), not the text scan":
+            lambda p: "MapInPandas" not in p
+            and _n_nodes(p, "ArrowEvalPython") == 1
+            and re.search(r"\(\d+\) ArrowEvalPython\nInput \[\d+\]: "
+                          r"\[[^\]]*__ta#\d+, [^\]]*__tb#", p) is not None,
+        "MinHash is one MapInArrow pass over (doc_id, __t)":
+            lambda p: len(re.findall(
+                r"\(\d+\) MapInArrow\nInput \[2\]: \[doc_id#\d+L, __t#\d+\]",
+                p)) == 1,
     })
 
     # 6. image pipeline: bytes never read (phash column suffices). The
@@ -253,7 +277,7 @@ def main() -> None:
     })
 
     # 6b. north_star mode: phash DERIVED from pixels — bytes may appear in
-    #     the scan + ArrowEvalPython stage but must never reach a shuffle
+    #     the scan + MapInArrow stage but must never reach a shuffle
     #     (only the 8-byte fingerprint shuffles)
     veb = _visual_edges(stored)
 
@@ -265,8 +289,8 @@ def main() -> None:
                        in ln)
     failures += audit("visual edges over image_sketch_table "
                       "(phash from bytes)", veb, {
-        "decode runs as ArrowEvalPython in the scan stage":
-            r"ArrowEvalPython",
+        "decode runs as MapInArrow in the scan stage":
+            r"\(\d+\) MapInArrow\nInput \[\d+\]: \[[^\]]*bytes#",
         "bytes column never reaches an Exchange":
             _bytes_never_shuffled,
     })
@@ -1313,7 +1337,7 @@ def main() -> None:
         "no cartesian / nested-loop join":
             lambda p: "CartesianProduct" not in p
             and "BroadcastNestedLoopJoin" not in p,
-        "vectorized ArrowEvalPython only (the cached minhash scan; "
+        "vectorized ArrowEvalPython only (the minhash scan; "
         "no row-at-a-time BatchEval)":
             lambda p: "BatchEvalPython" not in p,
     })
@@ -1434,7 +1458,7 @@ def main() -> None:
         "no cartesian / nested-loop join":
             lambda p: "CartesianProduct" not in p
             and "BroadcastNestedLoopJoin" not in p,
-        "vectorized ArrowEvalPython only (the cached minhash scan)":
+        "vectorized ArrowEvalPython only (the minhash scan)":
             lambda p: "BatchEvalPython" not in p,
     })
 
