@@ -97,11 +97,12 @@ def spark_session(app: str = "datasketches-rust-spark", cpus: int | None = None,
         # AQE stays on by default (runtime coalescing + skew-join splits
         # are part of the 100 TB story). SPARK_GRAFT_AQE=false exists for
         # local-mode measurement: AQE materializes every query stage as
-        # its own job, and each job's tasks carry a fixed cost (measured
-        # ~0.11 CPU-s per Python task on a 4-core VM, with the worker
-        # daemon's zip-directory cache) — sequential stages put that on
-        # the critical path. Skew is independently handled by the
-        # explicit hot-bucket star degrade.
+        # its own job, and each job carries a fixed cost (an empty 4-task
+        # mapInArrow job on a 4-core VM: ~0.003 CPU-s driver, 0.13-0.28
+        # JVM, 0.17-0.18 Python workers before the daemon froze its heap
+        # and 0.01 after, so the JVM's ~0.1 CPU-s per job is the floor)
+        # — sequential stages put that on the critical path. Skew is
+        # independently handled by the explicit hot-bucket star degrade.
         .config("spark.sql.adaptive.enabled",
                 os.environ.get("SPARK_GRAFT_AQE", "true"))
         # preload numpy/pandas/pyarrow + kernels in the daemon so forked

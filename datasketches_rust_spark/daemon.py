@@ -2,7 +2,7 @@
 
 Python workers are forked from the daemon process per task slot, and a
 forked worker is reused across tasks. Three costs would otherwise be paid
-before a UDF touches a row:
+before a UDF touches a row, and a fourth after it returns:
 
 - **Module import, once per worker.** A fresh worker imports
   numpy/pandas/pyarrow and this package on first UDF deserialization —
@@ -29,11 +29,23 @@ before a UDF touches a row:
   the daemon primes the stamps before it forks, so every worker starts
   with a warm cache. A rewritten or re-added archive (``addPyFile``) is
   still re-read, and directory finders are still invalidated as before.
+- **A full collection, once per task.** pyspark's daemon loop calls
+  ``gc.collect()`` in a reused worker after every task (``manager`` in
+  ``pyspark/daemon.py``: ``while True: code = worker(...); ...;
+  gc.collect()``). That walks every object the worker inherited from the
+  imports above, ~76,000 of them: 34-54 ms of CPU per task on a 4-core
+  VM, after the task has sent its result, so no task time shows it.
+  ``gc.freeze()`` just before ``manager()`` moves the preloaded heap to
+  the permanent generation, which collections skip: a worker then holds
+  ~230 collectable objects and its post-task collection takes ~0.1 ms.
+  An empty 4-task ``mapInArrow`` job's worker CPU went from 0.17-0.18
+  to 0.01 CPU-s. What a task allocates is collected as before.
 
 Enabled via ``spark.python.daemon.module=datasketches_rust_spark.daemon``
 in config.spark_session — a standard public Spark config.
 """
 
+import gc
 import importlib
 import os
 import zipimport
@@ -93,4 +105,7 @@ if __name__ == "__main__":
     _cache_zip_directories()
     # one read per archive here, so forked workers inherit warm stamps
     importlib.invalidate_caches()
+    # last, so everything above is frozen too; not at import, which
+    # would freeze the heap of any process that imports this module
+    gc.freeze()
     manager()

@@ -59,8 +59,9 @@ def connected_components(edges: DataFrame, id_col: str = "id",
 
     # initial labels stay lazy: identity labels that round 1 reads off
     # the checkpointed edge set directly, so materializing them separately
-    # would only add a job and its fixed per-task cost (measured ~0.11
-    # CPU-s per Python task on a 4-core VM)
+    # would only add a job and its fixed cost (an empty 4-task job on a
+    # 4-core VM: ~0.1 CPU-s in the JVM, 0.01 in Python workers whose
+    # heap the daemon froze, 0.17-0.18 before it did)
     labels = None
 
     prev = None

@@ -1,6 +1,8 @@
 """The worker daemon's zip-directory cache: ``importlib.invalidate_caches()``
 (called by pyspark.worker at the start of every task) must not re-read an
-unchanged archive, and must re-read one whose contents changed."""
+unchanged archive, and must re-read one whose contents changed. And its
+frozen heap: forked workers leave the preloaded modules out of the
+``gc.collect()`` pyspark runs after every task."""
 
 import importlib
 import os
@@ -95,3 +97,47 @@ def test_python_udf_job_on_cached_workers(spark):
         assert sorted(r["id"] for r in rows) == list(range(0, 2000, 2))
         assert {r["hook"] for r in rows} == {
             "_cache_zip_directories.<locals>.invalidate_caches"}
+
+
+def test_workers_start_with_frozen_heap(spark):
+    """Reused workers inherit the daemon's preloads frozen, so the
+    ``gc.collect()`` pyspark runs after every task does not walk them, and
+    a reference cycle a task drops is still collected. (The count of
+    unfrozen objects is not pinned: it grows with whatever earlier tasks
+    imported into the reused worker.)"""
+    def probe(batches):
+        import gc
+        import weakref
+
+        import numpy
+        import pandas
+        import pyarrow as pa
+
+        from datasketches_rust_spark import agg
+
+        class Node:
+            pass
+
+        for batch in batches:
+            node = Node()
+            node.self = node
+            ref = weakref.ref(node)
+            del node
+            gc.collect()
+            walked = {id(o) for o in gc.get_objects()}
+            preloads_walked = sum(id(vars(m)) in walked
+                                  for m in (numpy, pandas, pa, agg))
+            n = batch.num_rows
+            yield pa.record_batch({
+                "frozen": [gc.get_freeze_count()] * n,
+                "preloads_walked": [preloads_walked] * n,
+                "cycle_freed": [ref() is None] * n})
+
+    df = spark.range(0, 400, numPartitions=4).mapInArrow(
+        probe, "frozen long, preloads_walked long, cycle_freed boolean")
+    for _ in range(2):
+        rows = df.collect()
+        assert len(rows) == 400
+        assert min(r["frozen"] for r in rows) > 10_000
+        assert max(r["preloads_walked"] for r in rows) == 0
+        assert all(r["cycle_freed"] for r in rows)
