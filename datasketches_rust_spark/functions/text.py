@@ -129,6 +129,12 @@ def exact_jaccard_udf(cfg: DedupConfig):
     the true shingle-set overlap, the suffix/exact analog of the reference's
     theta intersection (theta/intersection.rs:142-155 — keep what's in both)
     via np.intersect1d on sorted-unique sets.
+
+    Marked nondeterministic so that the optimizer never copies the
+    verify: a ``jaccard >= threshold`` filter would otherwise be pushed
+    below the projection that keeps the column, and a plan that keeps
+    ``jaccard`` would run the UDF once for the filter and again for the
+    output.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -147,7 +153,7 @@ def exact_jaccard_udf(cfg: DedupConfig):
             out[i] = inter / (x.size + y.size - inter)
         return pd.Series(out)
 
-    return _udf
+    return _udf.asNondeterministic()
 
 
 # ---------------------------------------------------------------------------

@@ -452,7 +452,7 @@ def semantic_dedup(df: DataFrame, threshold: float, nlist: int = 8,
     sample at 10^9+ rows and rides the closure like a broadcast
     variable (pass ``centroids`` to reuse a checkpointed quantizer)."""
     from datasketches_rust_spark.operators.connected_components import \
-        connected_components
+        component_labels
     from datasketches_rust_spark.operators.lsh import bucketed_pair_events
     if centroids is None:
         # quantizer quality barely moves dedup recall (near-identical
@@ -470,7 +470,7 @@ def semantic_dedup(df: DataFrame, threshold: float, nlist: int = 8,
     # corpus — persist the small (id, cell, csim) table and materialize
     # it with one full-parallelism count() BEFORE consumers fan out
     # (per-partition cache-lock serialization otherwise; see CLAUDE.md).
-    # NOT track()ed yet: connected_components releases tracked caches
+    # NOT track()ed yet: component_labels releases tracked caches
     # when it checkpoints, and asg is consumed after that point —
     # registered for deferred release at the end instead.
     from pyspark.storagelevel import StorageLevel
@@ -482,7 +482,7 @@ def semantic_dedup(df: DataFrame, threshold: float, nlist: int = 8,
             .select("id_a", "id_b"))
     edges = (_exact_cosine_verify(cand, df, threshold, id_col, vec_col)
              .select("id_a", "id_b"))
-    cc = connected_components(edges, id_col)
+    cc = component_labels(edges, id_col)
     members = cc.join(asg.select(id_col, "csim"), id_col)
     keep = (members.groupBy("cluster_id")
             .agg(F.min(F.struct("csim", id_col)).alias("__k"),

@@ -26,7 +26,7 @@ Scale discipline, inherited from the image/text axes:
   after closure at 60k, 0.9981 at 240k, 1.0 at 2k; pair recall AND
   precision after closure are 1.0 at the 2k gate (verify margin dup
   >= 0.9997 vs colliding-distinct <= 0.876, threshold 0.95).
-- CC is one job per round; string clip ids ride as xxhash64 longs
+- CC is two jobs (driver finish); string clip ids ride as xxhash64 longs
   through the shuffle-heavy middle (connected_components.assign_clusters,
   the one cluster-assignment path of every modality).
 """

@@ -88,9 +88,9 @@ def image_edges(images: DataFrame, cfg: DedupConfig,
                 id_col: str) -> DataFrame:
     """DataFrame[id_a, id_b] — caption edges (MinHash/LSH/exact
     Jaccard) ∪ visual edges (phash Hamming <= cfg.simhash_hamming),
-    both read off the one fused sketch table. No distinct: min-label
-    propagation is idempotent to duplicate edges, so a pair found by
-    both paths just sends one redundant (tiny) message per round."""
+    both read off the one fused sketch table. No distinct: component
+    labeling is idempotent to duplicate edges, so a pair found by both
+    paths is just one more (tiny) edge."""
     sk = image_sketch_table(images, cfg, id_col)
     return (dedup_pairs(images, cfg, id_col, "caption",
                         sigs=sk.select(id_col, "bands"))

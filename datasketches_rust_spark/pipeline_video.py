@@ -21,7 +21,8 @@ Frame ids are xxhash64(video_id, frame_idx) longs, and each frame's
 generation as simhash_pairs' payload, so the vote reads both sides'
 videos off the frame pairs — no frame-id -> video-id join. The vote is
 a (va, vb)-keyed count-distinct aggregate over frame-pair edges
-(bounded by matched frames, never frames^2); CC is one job per round.
+(bounded by matched frames, never frames^2); CC is two jobs (driver
+finish, connected_components.component_labels).
 """
 
 from __future__ import annotations

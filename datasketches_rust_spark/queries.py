@@ -392,22 +392,24 @@ def q_dup_cluster_radius(spark, sf_dir):
 
     Scale shape: the verified pair list is checkpointed ONCE and feeds
     both connected components and the BFS (the expensive MinHash->LSH->
-    verify pipeline runs once, not per consumer); both iterations touch
-    only dup-graph nodes (singletons never enter), each BFS round is a
-    frontier-sized join, and rounds = max eccentricity (single digits —
-    the hot-bucket star degrade bounds within-bucket distances at 2).
-    The oracle reproduces the distances with a depth-capped recursive
-    CTE over the same exact-Jaccard edge set; both sides raise/diverge
-    loudly past depth 16 rather than reporting a truncated radius."""
+    verify pipeline runs once, not per consumer); both touch only
+    dup-graph nodes (singletons never enter). Components finish on the
+    driver while the edges fit it (component_labels: two jobs), each
+    BFS round is a frontier-sized join, and rounds = max eccentricity
+    (single digits — the hot-bucket star degrade bounds within-bucket
+    distances at 2). The oracle reproduces the distances with a
+    depth-capped recursive CTE over the same exact-Jaccard edge set;
+    both sides raise/diverge loudly past depth 16 rather than reporting
+    a truncated radius."""
     from pyspark.storagelevel import StorageLevel
     from datasketches_rust_spark.operators.bfs import bfs_distances
     from datasketches_rust_spark.operators.connected_components import (
-        connected_components)
+        component_labels)
     docs = _t(spark, sf_dir, "documents")
     edges = (dedup_pairs(docs, CFG, "doc_id", "text")
              .select("id_a", "id_b")
              .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK))
-    labels = connected_components(edges)  # (id, cluster_id), edge-touched
+    labels = component_labels(edges)  # (id, cluster_id), edge-touched
     reps = labels.where(F.col("id") == F.col("cluster_id")).select("id")
     dist = bfs_distances(edges, reps, id_col="id")
     return (labels.join(dist, labels["id"] == dist["node"])

@@ -107,6 +107,21 @@ def test_text_edge_plan_evaluates_each_udf_once(spark, docs_df):
     _assert_text_udfs_once(spark, docs_df, symmetric_edges)
 
 
+def test_kept_jaccard_is_verified_once(spark, docs_df):
+    """A plan that keeps dedup_pairs' ``jaccard`` column runs the
+    exact-Jaccard verify once: the threshold filter stays above the
+    projection that computes it, instead of being pushed below it with a
+    copy of the UDF."""
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        plan = (dedup_pairs(docs_df, CFG, "doc_id", "text")
+                ._jdf.queryExecution().executedPlan().toString())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_pagerank_adjacency_evaluates_each_udf_once(spark, docs_df):
     """PageRank's adjacency takes both directions of an edge plan that is
     not checkpointed (q_pagerank_dup_docs passes dedup_pairs straight
