@@ -21,7 +21,7 @@ text itself never passes through Python.
 
 The kernel is Spark-free so the DuckDB oracle side can replay the same
 semantics: verify via a WITH RECURSIVE + LATERAL SQL loop over the same
-committed MERGES (see queries.oracle for bpe_tokens_per_doc), which
+committed MERGES (see queries.dedup._bpe_oracle_sql), which
 hash-matches exactly.
 
 MERGES was trained once, deterministically (greedy most-frequent pair,

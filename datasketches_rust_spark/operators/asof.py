@@ -14,7 +14,7 @@ no second exchange for a dedupe aggregate (the value sort key makes
 same-timestamp right duplicates deterministic instead); skewed keys are
 ordinary AQE-splittable skew. pandas merge_asof is the unit-test oracle
 (tests/test_asof.py) and DuckDB's native ASOF JOIN is the driver oracle
-(queries.py).
+(queries/timeseries.py).
 """
 
 from __future__ import annotations

@@ -6,7 +6,7 @@ The hazard this module removes (r3 verdict "What's wrong #2"): a naive
 ``Window.orderBy(key)`` plans ``Exchange SinglePartition`` + a sort of
 the ENTIRE input on one reducer — correct, and a scale-killer the
 moment the ranked table is corpus-proportional. The distributed
-formulation (generalizing queries.q_stable_row_ids, which pioneered it
+formulation (generalizing queries.dedup.q_stable_row_ids, which pioneered it
 in this repo for row ids):
 
 1. one scalar pre-pass per rank group gets the sort-key range (lo, hi)

@@ -28,7 +28,7 @@ Scale shape
   ``r'(v) = (1-d)/N + d * sum_{u~v} r(u)/deg(u)``.
 
 The arithmetic is written so a fixed-iteration SQL unrolling computes
-the SAME expression tree (see queries._pagerank_oracle_sql): init
+the SAME expression tree (see queries.dedup._pagerank_oracle_sql): init
 ``1.0/N``, per-step ``base + d * sum(contrib)`` — cross-engine float
 sums differ only in addition order (~1e-14), absorbed by the round-7
 output grid.

@@ -510,24 +510,26 @@ def embedding_dedup_keep_central(df: DataFrame, threshold: float,
     Output: DataFrame[cluster_id, rep_id, cluster_size] for clusters
     with >= 2 members.
 
-    Scale shape: clusters come from connected components over the
-    LSH-verified pair list (edge-touched vertices only), and centrality
-    reuses the pair sims already computed by the verify stage — summed
-    per incident vertex with one groupBy — so NO vector re-shuffles
-    happen after the verify join. Rep selection is the same two
+    Scale shape: the LSH-verified pairs are checkpointed once with their
+    cosine, so the hyperplane projection, band pass, vector joins and
+    cosine run once. Component labels (edge-touched vertices only) and
+    the centrality read the checkpoint: each pair credits its sim to
+    both endpoints in one pass, summed with one groupBy, and no vector
+    re-shuffles after the verify join. Rep selection is the same two
     cluster-keyed partial aggregates as the image path (max centrality,
     then min id among the argmax), deterministic on float ties.
     """
+    from pyspark.storagelevel import StorageLevel
     from datasketches_rust_spark.operators.connected_components import \
-        connected_components
+        component_labels
     pairs = cosine_pairs_lsh(df, threshold, id_col=id_col, vec_col=vec_col,
-                             dim=dim, keep_sim=True)
-    cc = connected_components(pairs.select("id_a", "id_b"), id_col)
-    centrality = (pairs.select(F.col("id_a").alias(id_col), "sim")
-                  .unionByName(
-                      pairs.select(F.col("id_b").alias(id_col), "sim"))
-                  .groupBy(id_col)
-                  .agg(F.sum("sim").alias("__cent")))
+                             dim=dim, keep_sim=True).localCheckpoint(
+        storageLevel=StorageLevel.MEMORY_AND_DISK)
+    cc = component_labels(pairs.select("id_a", "id_b"), id_col)
+    centrality = (pairs.select(F.inline(F.array(
+        F.struct(F.col("id_a").alias(id_col), "sim"),
+        F.struct(F.col("id_b").alias(id_col), "sim"))))
+        .groupBy(id_col).agg(F.sum("sim").alias("__cent")))
     members = cc.join(centrality, id_col)
     best = (members.groupBy("cluster_id")
             .agg(F.max("__cent").alias("__best"),

@@ -4,10 +4,11 @@ The reference tests itself against golden binaries from other
 datasketches implementations (tests/common.rs:29-52, tests/test_data/).
 This module lets the same golden corpus gate OUR kernels: decode the
 committed `.sk` files into repo-native sketch objects and assert the
-reference's own bounds (tests/test_golden.py). The t-digest side is
-read-only (enough to consume the committed corpus); theta adds v3/v4
-writers and HLL an HLL8 writer, so sketches built here are readable by
-the Rust/Java/C++ implementations.
+reference's own bounds (tests/test_golden.py). Theta has v3/v4 writers,
+HLL an HLL8 writer and t-digest a v1 (f64) writer, so sketches built
+here are readable by the Rust/Java/C++ implementations (CPC's codec is
+cpc_compat.py; serde.py says which format each family's engine blobs
+use).
 
 Implemented formats (tdigest/sketch.rs:404-640, serialization.rs:18-27):
 
@@ -21,8 +22,7 @@ Implemented formats (tdigest/sketch.rs:404-640, serialization.rs:18-27):
   double: k f64, num u32, [(weight f64, mean f64)];
   float:  k f32, unused u32, num u16, [(weight f32, mean f32)].
 
-t-digest writing stays a non-goal (serde.py header note); decoding
-is enough to consume the reference's committed test corpus.
+``encode_tdigest`` writes the v1 f64 form.
 """
 
 from __future__ import annotations

@@ -1,17 +1,28 @@
-"""Fixed little-endian sketch wire format (our own, simplified).
+"""Sketch wire formats: which bytes the engine's blobs hold, per family,
+and the shared header and reading helpers.
 
-The reference ships Java/C++-compatible multi-version codecs
-(codec/family.rs:38-99, per-family serialization.rs). Cross-language wire
-compatibility is a non-goal here (SURVEY.md §2.1 serialize row); what we keep
-is the *discipline*: a tagged, versioned, seed-checked header so that a
-merge of incompatible sketch states fails loudly instead of silently
-corrupting — the same guarantees as codec/assert.rs + the seed-hash checks
-in theta/intersection.rs:81-87 and bloom/sketch.rs:314-318.
+The blobs the engine builds, merges and ships (``agg``, the streaming
+state) use, per family:
 
-Header (little-endian): magic u8 = 0xD5, family u8, version u8,
-seed_hash u16, then family-specific payload. Family IDs follow
-codec/family.rs:38-99 where one exists (THETA=3, HLL=7, FREQUENCY=10,
-COUNTMIN=18, TDIGEST=20, BLOOM=21); MINHASH=64 and SIMHASH=65 are ours.
+- Bloom (family 21), CountMin (family 18), frequent items (family 10):
+  the reference layout itself (bloom.py, countmin.py, frequencies.py).
+  Bloom and CountMin bytes equal the reference's; non-empty frequent
+  items differ in one flags byte that tags the item type
+  (tests/test_reference_goldens.py, against reference-written bytes).
+- Theta (3), HLL (7), CPC (16), t-digest (20): our own little-endian
+  format, with the header below. Reference bytes for them come from
+  the codecs in compat.py and cpc_compat.py, which read compact theta
+  v1-v4 and write v3/v4, read every HLL mode and write HLL8, and read
+  and write CPC and t-digest (tests/test_golden.py,
+  tests/test_cpc_compat.py).
+
+Header of our own format (little-endian): magic u8 = 0xD5, family u8,
+version u8, seed_hash u16, then the family's payload. Family IDs follow
+the reference (codec/family.rs:38-99). The header is tagged, versioned
+and seed-checked so that a merge of incompatible sketch states fails
+loudly instead of silently corrupting, as the reference's codec/assert.rs
+and seed-hash checks (theta/intersection.rs:81-87,
+bloom/sketch.rs:314-318) do.
 """
 
 from __future__ import annotations
@@ -28,8 +39,6 @@ FAMILY_CPC = 16
 FAMILY_COUNTMIN = 18
 FAMILY_TDIGEST = 20
 FAMILY_BLOOM = 21
-FAMILY_MINHASH = 64
-FAMILY_SIMHASH = 65
 
 _HDR = struct.Struct("<BBBH")
 

@@ -13,7 +13,8 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from datasketches_rust_spark.queries import _inflight_from_intervals, _med2
+from datasketches_rust_spark.queries.timeseries import (
+    _inflight_from_intervals, _med2)
 
 D = dt.date
 

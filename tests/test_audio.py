@@ -1,5 +1,6 @@
 """Audio axis: fingerprint invariances, Spark-vs-numpy kernel parity,
-and the pipeline recall/precision gate vs planted ground truth."""
+and the pipeline recall/precision gate vs planted ground truth, which
+gates the audio_dedup_clusters query class."""
 
 from collections import defaultdict
 

@@ -3,7 +3,8 @@ removes the clip-level pipeline's two documented limits): kernel
 alignment/invariance, the CAPABILITY pin (frame pipeline finds trimmed
 copies that clip-level edges provably miss), the shared-intro
 temporal-vote non-link, and the recall=precision gate on the planted
-2k frame-axis fixture."""
+2k frame-axis fixture, which gates the audio_frame_dedup_clusters query
+class."""
 
 from collections import defaultdict
 

@@ -1,6 +1,7 @@
 """BPE merge LEARNING: the local greedy loop must reproduce the
 committed mini-vocab from the corpus it was trained on, and the
-distributed loop must agree with the local one exactly."""
+distributed loop must agree with the local one exactly. They gate the
+bpe_learned_merges query class, which runs the same learner."""
 
 from __future__ import annotations
 

@@ -4,6 +4,7 @@ distributed rounds, string ids ride hashed longs, and an id-hash
 collision on an edge-touched id raises instead of silently merging two
 clusters."""
 
+import time
 import uuid
 
 import numpy as np
@@ -124,10 +125,7 @@ def test_component_labels_match_rounds(shapes, driver_edges, monkeypatch):
 
 def test_component_labels_long_chain(spark):
     """A 2,000-vertex chain finishes on the driver in two jobs, with
-    every vertex labeled by the chain's min. The rounds are not run on
-    it: the plan of their pointer-doubling rounds grows about fourfold a
-    round between lineage cuts, and a 500-vertex path already exhausts
-    a 3 GB driver heap."""
+    every vertex labeled by the chain's min."""
     edges = spark.createDataFrame(
         [(i + 1, i) if i % 2 else (i, i + 1) for i in range(1999)],
         "id_a long, id_b long")
@@ -135,6 +133,24 @@ def test_component_labels_long_chain(spark):
         spark, lambda: connected_components.component_labels(edges))
     assert len(jobs) == 2, jobs
     assert _labels(labels) == {i: 0 for i in range(2000)}
+
+
+def test_rounds_label_a_shuffled_path(spark, monkeypatch):
+    """The rounds leg labels a 1,000-vertex path whose ids are shuffled
+    along it as min_labels does. Its pointer-doubling rounds cut their
+    lineage every round: cut every 8 rounds, the plan grew about
+    fourfold a round, and a 500-vertex path exhausted a 3 GB driver."""
+    monkeypatch.setattr(connected_components, "DRIVER_EDGES", 0)
+    walk = np.random.default_rng(7).permutation(1000)
+    edges = spark.createDataFrame(
+        [(int(a), int(b)) for a, b in zip(walk[:-1], walk[1:])],
+        "id_a long, id_b long")
+    t0 = time.perf_counter()
+    got = _labels(connected_components.component_labels(edges))
+    print(f"rounds leg, shuffled 1,000-vertex path: "
+          f"{time.perf_counter() - t0:.1f} s")
+    verts, labels = connected_components.min_labels(walk[:-1], walk[1:])
+    assert got == dict(zip(verts.tolist(), labels.tolist()))
 
 
 @LEGS

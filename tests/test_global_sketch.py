@@ -12,6 +12,7 @@ import pytest
 
 from datasketches_rust_spark import agg
 from datasketches_rust_spark import queries as Q
+from datasketches_rust_spark.queries import _common
 from datasketches_rust_spark.sketches.hll import HllSketch
 
 
@@ -115,8 +116,8 @@ def test_round_half_up_matches_spark_round(spark):
           1e16 + 2, 123.4999, -7.5000001, 0.0, float("inf")]
     want = [r[0] for r in spark.createDataFrame(
         [(x,) for x in xs], "x double").select(F.round("x", 0)).collect()]
-    assert [Q._round_half_up(x) for x in xs] == want
-    assert math.isnan(Q._round_half_up(float("nan")))
+    assert [_common._round_half_up(x) for x in xs] == want
+    assert math.isnan(_common._round_half_up(float("nan")))
 
 
 def test_table_schema_inferred_once_per_version(spark, tmp_path):
@@ -126,13 +127,13 @@ def test_table_schema_inferred_once_per_version(spark, tmp_path):
     table.mkdir()
     pd.DataFrame({"a": [1, 2]}).to_parquet(table / "part-0.parquet")
     sf = str(tmp_path)
-    df, jobs = _jobs(spark, lambda: Q._t(spark, sf, "t"))
+    df, jobs = _jobs(spark, lambda: _common._t(spark, sf, "t"))
     assert df.columns == ["a"] and jobs
-    df, jobs = _jobs(spark, lambda: Q._t(spark, sf, "t"))
+    df, jobs = _jobs(spark, lambda: _common._t(spark, sf, "t"))
     assert df.columns == ["a"] and jobs == []
     pd.DataFrame({"b": ["x"], "c": [1.5]}).to_parquet(
         table / "part-0.parquet")
-    df = Q._t(spark, sf, "t")
+    df = _common._t(spark, sf, "t")
     assert df.columns == ["b", "c"]
     assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
-    assert Q._table_version("s3a://bucket/t.parquet") is None
+    assert _common._table_version("s3a://bucket/t.parquet") is None

@@ -5,6 +5,8 @@
 - dup-pair recall >= 0.99 vs ground truth for the full image pipeline
   (caption MinHash/LSH edges ∪ phash Hamming edges -> connected
   components).
+
+The recall gate is the gate of the image_dedup_clusters query class.
 """
 
 import numpy as np

@@ -175,6 +175,46 @@ def test_embedding_keep_central_matches_exact(spark, emb, emb_np):
     assert got == want and len(want) > 0
 
 
+def test_embedding_keep_central_runs_pair_plan_once(spark, emb,
+                                                    monkeypatch):
+    """The pair plan (hyperplane UDF, band pass, vector joins, cosine)
+    runs once, for the labels and the centrality both: each vector
+    goes through the hyperplane UDF once, and the components finish on
+    the driver, with no label-propagation round (a ``first()`` job)."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, LongType
+
+    from datasketches_rust_spark.operators import similarity
+    sc = spark.sparkContext
+    projected = sc.accumulator(0)
+    bands_udf = similarity.hyperplane_bands_udf
+
+    def counted(*args):
+        bands = bands_udf(*args).func
+
+        @pandas_udf(ArrayType(LongType()))
+        def _udf(vecs):
+            projected.add(len(vecs))
+            return bands(vecs)
+        return _udf
+    monkeypatch.setattr(similarity, "hyperplane_bands_udf", counted)
+    group = "keep-central-once"
+    sc.setJobGroup(group, group)
+    try:
+        rows = similarity.embedding_dedup_keep_central(
+            emb, threshold=0.45, dim=64).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = [tracker.getStageInfo(tracker.getJobInfo(j).stageIds[0]).name
+            for j in tracker.getJobIdsForGroup(group)]
+    assert rows
+    assert projected.value == emb.count()
+    assert not any(j.startswith("first at") for j in jobs), jobs
+
+
 def test_semantic_dedup_crafted_centroids(spark):
     """SemDeDup with explicit centroids and hand-computable expectations:
     cells scope candidates, exact cosine forms groups, the LEAST-central

@@ -1,5 +1,7 @@
 """Structured Streaming tests: exact dedup within watermark, incremental
-LSH dedup via foreachBatch + signature store, mergeable sketch state."""
+LSH dedup via foreachBatch + signature store, mergeable sketch state.
+test_windowed_quantiles gates the streaming_windowed_quantiles query
+class."""
 
 import os
 

@@ -1,6 +1,7 @@
 """Video axis: container round-trip, frame-sketch parity with the
 numpy kernel, temporal-vote semantics (intro-sharing negatives must not
-connect), and the pipeline recall/precision gate vs planted truth."""
+connect), and the pipeline recall/precision gate vs planted truth,
+which gates the video_dedup_clusters query class."""
 
 from collections import defaultdict
 

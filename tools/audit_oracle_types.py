@@ -76,7 +76,7 @@ def main() -> int:
                 # toPandas gives ns, DuckDB .df() gives us): equal
                 # instants, different raw int64s — a raw-value hash
                 # trips. Serialize such columns at the registry
-                # boundary instead (queries._iso_dates).
+                # boundary instead (queries._registry.iso_dates).
                 mism.append((c, str(sdf[c].dtype), str(odf[c].dtype)))
         dt = time.time() - t0
         if mism:

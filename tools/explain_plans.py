@@ -779,9 +779,7 @@ def main() -> None:
         # the join (parent) BEFORE its aggregate children, but detail
         # ids number leaves lowest — "below the join" = smaller id
         "aggregate below the join (vocab-first discipline)":
-            lambda p: min(int(m) for m in
-                          re.findall(r"\((\d+)\) HashAggregate", p))
-            < int(re.search(r"\((\d+)\) \w*HashJoin", p).group(1)),
+            lambda p: _id_below(p, "HashAggregate", r"\w*HashJoin"),
         "levenshtein evaluated JVM-side (no Python)":
             lambda p: "EvalPython" not in p,
         "part scan pruned to p_name only":
